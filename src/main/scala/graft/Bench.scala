@@ -63,9 +63,11 @@ object Bench {
     // lines per board (the r13 driver run's tail was 100% this flood, which
     // can push the parseable stdout JSON line out of a tail window). They
     // are expected-by-design here (we unpersist deliberately, recomputation
-    // is never needed), so silence the RDD loggers for the bench session.
+    // is never needed), so silence the one logger that emits them:
+    // RDD.unpersist logs under the concrete RDD class, and
+    // Dataset.localCheckpoint stages a MapPartitionsRDD.
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
     // Stable measurement order: sorted by name, so any downstream truncation
     // of the report never systematically hides the same trailing queries.
@@ -217,13 +219,15 @@ object Bench {
       // sf0.001 smoke run that clobbered the file) would flag every gate.
       // Config guard (round-14): a prior report measured under a different
       // session config re-bases globally — every band is stale by
-      // construction, not just the gates whose plans changed.
+      // construction, not just the gates whose plans changed. A report
+      // with no recorded config hash predates the guard: its config is
+      // unknown, so it counts as a mismatch too.
       val prevConf = "\"confighash\":\"([0-9a-f]+)\"".r
         .findFirstMatchIn(txt).map(_.group(1))
       if (!txt.contains("\"sf\":\"" + sfDir + "\"")) (Map.empty[String, Double], true)
-      else if (prevConf.exists(_ != confHash)) {
+      else if (!prevConf.contains(confHash)) {
         System.err.println(s"[bench] session config changed " +
-          s"(${prevConf.get} -> $confHash): re-basing all bands")
+          s"(${prevConf.getOrElse("unrecorded")} -> $confHash): re-basing all bands")
         (Map.empty[String, Double], true)
       } else {
         val q = nums("\"queries\":{")

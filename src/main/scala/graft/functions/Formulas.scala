@@ -217,17 +217,6 @@ object Formulas {
   // errors on BIGINT overflow, Java wraps — the arithmetic must never
   // overflow to be identical). ----
 
-  /** Count-min row hash — the cell of key `u` in sketch row `r` (3 rows ×
-    * 256 cells): disjoint bytes of ONE md5-backed [[strHash]] per key
-    * (31 bits — rows 0..2 consume bits 0..23, so 3 rows × 256 cells is
-    * the CEILING this hash supports; widening past 3 rows requires
-    * [[strHash62]]). Structured sequential ids alias a multiplicative
-    * hash — the HLL lesson; and one md5 serves all three rows. Width 256
-    * keeps the per-row collision mass at N/256 — the sketch error budget
-    * scales by widening, never by keying state. */
-  def cmsCell(d: Dialect, u: String, r: String): String =
-    cmsCellFromHash(d, s"(${cmsHash(d, u)})", r)
-
   /** HLL key hash — md5-backed single-fold [[strHash]] over the key's decimal
     * string (both engines accept CAST(x AS STRING) and md5 is
     * bit-identical everywhere): low 6 bits pick the register, the next
@@ -246,7 +235,9 @@ object Formulas {
     strHash(d, s"CAST($u AS STRING)")
 
   /** Count-min cell of row `r` from a precomputed hash COLUMN: disjoint
-    * bytes, width 256. */
+    * bytes, width 256. The hash has 31 bits and rows 0..2 consume bits
+    * 0..23, so 3 rows × 256 cells is the ceiling it supports; more rows
+    * need [[strHash62]]. */
   def cmsCellFromHash(d: Dialect, h: String, r: String): String =
     s"(${d.shiftRight(h, s"(8 * ($r))")} % 256)"
 

@@ -2,7 +2,10 @@ package graft.queries
 
 import graft.functions.{Dialect, DuckDialect, Formulas => F, SparkDialect}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Training-data pipeline operators (the beyond-parity north star of
   * SURVEY §7.7): deduplication (exact, MinHash+LSH, n-gram Jaccard with
@@ -2230,16 +2233,6 @@ object Pipeline {
       val k0 = autoCoarseCells(qz.count()).toString
       s.sql(body("graft_opq_xrot", k0))
     }
-
-  /** The learned butterfly relation on its own — the spec's inspection
-    * surface (scaled-orthogonality and lane-permutation pins). */
-  private[queries] def opqPairs(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "embeddings")
-    s.sql(s"""WITH ${quantCte(SparkDialect)},
-             |x AS (SELECT vec_id, posexplode(qv) AS (i, x) FROM qz),
-             |${ivfPqOpqCtes(SparkDialect, "x")}
-             |SELECT p, la, lb, a, b, j1, j2 FROM opq""".stripMargin)
-  }
 
   private def simIvfPqRotated: QueryDef = {
     val sel =
@@ -6177,14 +6170,9 @@ object Pipeline {
   def debugCdcChunkSql: String = corpusCdcChunk(SparkDialect)
   def debugEmbQuantizeSql: String = embQuantize(SparkDialect)
   def debugTfidfSql: String = tfidfSql(SparkDialect)
-  def debugPcaXSql: String =
-    s"""WITH ${quantCte(SparkDialect)}
-       |SELECT vec_id, posexplode(qv) AS (i, x) FROM qz""".stripMargin
   def chunkParams: (Int, Int) = (CHUNK, STRIDE)
   def debugTextNormalizeSql: String = textNormalize(SparkDialect)
-  def debugNgramSetSql: String = ngramSetSql(SparkDialect)
   def debugNgramPairsSql: String = ngramPairsSql(SparkDialect, "ngram_sets")
-  def debugMinhashSigSql: String = minhashSigSql(SparkDialect)
   // graft.Probe stage handles (n-gram pipeline profiling)
   def debugShingleExplodeSql: String = shingleExplode(SparkDialect)
   def debugNgramSetFromView: String =
@@ -6337,7 +6325,7 @@ object Pipeline {
   // measured divergence threshold 2/λmax ≈ 1/104 of the feature Gram
   // matrix, stable across sf0.001/0.01/0.1), QcRounds full-batch steps
   private val QcLrd = 192
-  private val QcRounds = 8
+  private[queries] val QcRounds = 8
 
   /** Classifier feature relation: hashed-unigram bucket counts + a bias
     * column (bkt = −1, cnt = 1 for every doc). Integer counts — the GD
@@ -6368,7 +6356,7 @@ object Pipeline {
     * divide) — bit-identical across engines, the kmeans ×1000 discipline.
     * `cc`/`yy` are the feature/label relations; `wp` the previous weights.
     */
-  private def qcRoundSql(d: Dialect, cc: String, yy: String, wp: String): String = {
+  private[queries] def qcRoundSql(d: Dialect, cc: String, yy: String, wp: String): String = {
     val idiv = if (d == SparkDialect) "div" else "//"
     val m = s"(n.n * $QcLrd)"
     s"""SELECT g.bkt, COALESCE(wp.w, CAST(0 AS BIGINT))
@@ -6394,24 +6382,8 @@ object Pipeline {
        |  FROM ($cc) cc JOIN ($wf) w ON cc.bkt = w.bkt
        |  GROUP BY cc.doc_id) p ON p.doc_id = yy.doc_id""".stripMargin
 
-  private val qcEmptyW = "SELECT CAST(NULL AS BIGINT) AS bkt, CAST(0 AS BIGINT) AS w WHERE 1 = 0"
+  private[queries] val qcEmptyW = "SELECT CAST(NULL AS BIGINT) AS bkt, CAST(0 AS BIGINT) AS w WHERE 1 = 0"
 
-  /** QUALITY-CLASSIFIER DISTILLATION: train a hashed-feature LINEAR PROBE
-    * (the fastText-style quality-filter move — distill a slow quality rule
-    * into a vocabulary-free linear model that scores at hash+dot cost)
-    * against the `n_chars > 150` quality label, with $QcRounds full-batch
-    * gradient-descent steps in EXACT integer fixed-point (micro-unit
-    * weights, floored-division updates — both engines bit-identical, no
-    * float ever SUMmed). Output = per-doc score, hard prediction at 0.5,
-    * and the label (measured: ≈0.90 accuracy vs ≈0.80 base rate at
-    * sf0.001-0.1).
-    *
-    * 100 TB shape: each round is two hash-partitioned aggregates (per-doc
-    * prediction, per-bucket gradient) + a broadcast of the ($DsirB+1)-row
-    * weight relation — model state is weights only, the kmeans/PCA/BPE
-    * driver-state precedent; the Spark side chains rounds with one
-    * localCheckpoint per round (65-row DF) so plans stay O(1).
-    */
   /** The oracle-side GD chain: w1..wN CTEs over the `qcc`/`qcy` relations
     * (which the caller must provide in the WITH prologue). Shared by the
     * batch gate and the streaming learned-filter oracle.
@@ -6423,30 +6395,111 @@ object Pipeline {
         "SELECT doc_id, y FROM qcy", wp)})"
     }.mkString(",\n")
 
-  /** Spark-side training chain: materialize the feature/label relations
-    * once, run $QcRounds GD rounds (one localCheckpoint per 65-row weight
-    * relation), and return the FINAL weights DataFrame `(bkt, w)` — the
-    * model handoff the streaming learned filter broadcasts at serve time.
+  /** Sufficient statistics of the GD chain in one aggregate over the
+    * feature relation `cc` and label relation `yy`. Rows tagged k = 0
+    * hold the Gram entries G(i, j) = Σ cnt_i·cnt_j over the documents'
+    * (i, j) bucket pairs, k = 1 the label moments (Xᵀy)(i), and the one
+    * k = 2 row the document count n. Every value is an exact BIGINT sum.
+    */
+  private def qcStatsSql(cc: String, yy: String): String =
+    s"""WITH cc AS ($cc)
+       |SELECT 0 AS k, a.bkt AS i, b.bkt AS j, CAST(SUM(a.cnt * b.cnt) AS BIGINT) AS v
+       |FROM cc a JOIN cc b ON a.doc_id = b.doc_id
+       |GROUP BY a.bkt, b.bkt
+       |UNION ALL
+       |SELECT 1, cc.bkt, CAST(NULL AS BIGINT), CAST(SUM(cc.cnt * yy.y) AS BIGINT)
+       |FROM cc JOIN ($yy) yy ON cc.doc_id = yy.doc_id
+       |GROUP BY cc.bkt
+       |UNION ALL
+       |SELECT 2, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), COUNT(*) FROM documents""".stripMargin
+
+  /** The $QcRounds GD rounds of [[qcRoundSql]], trained from sufficient
+    * statistics. Expanding a round's per-document prediction
+    * pred_d = Σ cnt·w gives the gradient in Gram form,
+    * g = 10⁶·Xᵀy − (XᵀX)·w, so one Spark aggregate ([[qcStatsSql]])
+    * gives everything the rounds read, and they run on the driver in
+    * exact `Long` arithmetic: integer sums are associative and
+    * `floorDiv(g, m)` is the SQL's positive-remainder floored division,
+    * so the weights are bit-identical to the SQL chain. Every product and
+    * sum is `Math.*Exact`: an overflow throws, as ANSI SQL does.
+    *
+    * Preconditions, guarded loudly: `cc` has the [[qcFeatSql]] shape (one
+    * bias row, bkt = −1 and cnt = 1, per `documents` row) and `yy` has one
+    * row per document. The Gram form needs `doc_id` unique in
+    * `documents`; the bias×bias Gram entry is Σ (rows per doc_id)², which
+    * equals n exactly when it is. The model is at most ($DsirB+1) buckets,
+    * so the statistics are at most ($DsirB+1)·($DsirB+2) values.
+    *
+    * Returns the final weights `(bkt, w)` as an exact-size local relation.
+    */
+  private[queries] def qcGdWeights(s: SparkSession, cc: String, yy: String): DataFrame = {
+    val maxStats = (DsirB + 1) * (DsirB + 2)
+    val rows = s.sql(qcStatsSql(cc, yy)).collect()
+    val n = rows.collectFirst { case r if r.getInt(0) == 2 => r.getLong(3) }.get
+    val gram = rows.collect {
+      case r if r.getInt(0) == 0 => (r.getLong(1), r.getLong(2)) -> r.getLong(3)
+    }.toMap
+    val xty = rows.collect { case r if r.getInt(0) == 1 => r.getLong(1) -> r.getLong(3) }.toMap
+    require(gram.size + xty.size <= maxStats,
+      s"classifier statistics have ${gram.size} Gram and ${xty.size} label entries; " +
+        s"the model is bounded by ${DsirB + 1} buckets (at most $maxStats values)")
+    val biasBias = gram.getOrElse((-1L, -1L), 0L)
+    require(biasBias == n, s"doc_id must be unique and non-null in documents: " +
+      s"bias×bias Gram entry $biasBias != document count $n")
+    // the weight set is the SQL round's: every bucket with a label moment
+    val bkts = xty.keys.toArray.sorted
+    val g = bkts.map(i => bkts.map(j => gram.getOrElse((i, j), 0L)))
+    val y = bkts.map(i => Math.multiplyExact(xty(i), 1000000L))
+    val m = Math.multiplyExact(n, QcLrd.toLong)
+    val w = new Array[Long](bkts.length)
+    (1 to QcRounds).foreach { _ =>
+      val grad = bkts.indices.map { i =>
+        bkts.indices.foldLeft(y(i)) { (acc, j) =>
+          Math.subtractExact(acc, Math.multiplyExact(g(i)(j), w(j)))
+        }
+      }
+      bkts.indices.foreach(i => w(i) = Math.addExact(w(i), Math.floorDiv(grad(i), m)))
+    }
+    val schema = StructType(Seq(StructField("bkt", LongType), StructField("w", LongType)))
+    s.createDataFrame(bkts.indices.map(i => Row(bkts(i), w(i))).asJava, schema)
+  }
+
+  /** Spark-side training: materialize the feature relation once, train
+    * from its sufficient statistics ([[qcGdWeights]]), and return the
+    * FINAL weights `(bkt, w)`, also registered as `graft_qc_w` — the model
+    * handoff the streaming learned filter broadcasts at serve time.
     */
   private[queries] def qcTrainWeights(s: SparkSession, dir: String): DataFrame = {
     views(s, dir, "documents")
-    val d = SparkDialect
-    // the feature matrix feeds every round twice — materialize once
-    s.sql(qcFeatSql(d)).localCheckpoint().createOrReplaceTempView("graft_qc_cc")
-    s.sql(qcLabelSql).localCheckpoint().createOrReplaceTempView("graft_qc_y")
-    val cc = "SELECT doc_id, bkt, cnt FROM graft_qc_cc"
-    val yy = "SELECT doc_id, y FROM graft_qc_y"
-    var wp = qcEmptyW
-    var w: DataFrame = null
-    (1 to QcRounds).foreach { _ =>
-      // 65-row model state per round; localCheckpoint keeps lineage O(1)
-      w = s.sql(qcRoundSql(d, cc, yy, wp)).localCheckpoint()
-      w.createOrReplaceTempView("graft_qc_w")
-      wp = "SELECT bkt, w FROM graft_qc_w"
-    }
+    // the feature matrix feeds the statistics and the scoring pass; the
+    // labels are a projection of documents, cheaper to rescan than to stage
+    s.sql(qcFeatSql(SparkDialect)).localCheckpoint().createOrReplaceTempView("graft_qc_cc")
+    s.sql(qcLabelSql).createOrReplaceTempView("graft_qc_y")
+    val w = qcGdWeights(s, "SELECT doc_id, bkt, cnt FROM graft_qc_cc",
+      "SELECT doc_id, y FROM graft_qc_y")
+    w.createOrReplaceTempView("graft_qc_w")
     w
   }
 
+  /** QUALITY-CLASSIFIER DISTILLATION: train a hashed-feature LINEAR PROBE
+    * (the fastText-style quality-filter move — distill a slow quality rule
+    * into a vocabulary-free linear model that scores at hash+dot cost)
+    * against the `n_chars > 150` quality label, with $QcRounds full-batch
+    * gradient-descent steps in EXACT integer fixed-point (micro-unit
+    * weights, floored-division updates — both engines bit-identical, no
+    * float ever SUMmed). Output = per-doc score, hard prediction at 0.5,
+    * and the label (measured: ≈0.90 accuracy vs ≈0.80 base rate at
+    * sf0.001-0.1).
+    *
+    * 100 TB shape: training is ONE corpus pass — the feature relation is
+    * shuffled once by doc_id, each document emits at most ($DsirB+1)²
+    * bucket-pair rows, and a map-side-combinable aggregate keyed by bucket
+    * pair folds them into the sufficient statistics XᵀX and Xᵀy. The model
+    * state is at most ($DsirB+1)×($DsirB+2) Longs, so the GD rounds run on
+    * the driver and cost nothing that grows with the corpus. Scoring is
+    * one per-doc aggregate against the broadcast ($DsirB+1)-row weight
+    * relation.
+    */
   private def textQualityClassifierDef: QueryDef = {
     val dd = DuckDialect
     val oracleChain =

@@ -52,19 +52,10 @@ object TripleIO {
     spark.read.text(path)
       .filter(!col("value").rlike("^-?\\d+ -?\\d+ -?\\d+$"))
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(
-      col(TripleSchema.subject).cast("int").as(TripleSchema.subject),
-      col(TripleSchema.predicate).cast("int").as(TripleSchema.predicate),
-      col(TripleSchema.objekt).cast("int").as(TripleSchema.objekt))
-
   /** Decoded-result text sink; `mode=overwrite` replaces the reference's
     * manual `FileUtils.deleteDirectory` (`PartitionQueryingSubject.java:72-73`).
     */
   def writeText(df: DataFrame, path: String): Unit =
     df.select(concat_ws(" ", df.columns.map(col): _*).as("value"))
       .write.mode(SaveMode.Overwrite).text(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 }

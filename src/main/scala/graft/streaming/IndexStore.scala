@@ -177,47 +177,44 @@ final class IndexStore(ss: SparkSession, val dir: String, keyCol: String,
     }
     // Crash protocol: survivors are made DURABLE (parquet under a
     // dot-hidden temp dir, invisible to partition discovery) before any
-    // store file is deleted. _SUCCESS marks the temp as complete; if it is
-    // already there we are recovering from a crash after the temp write —
-    // the store may be partially deleted, so we must NOT recompute
-    // survivors, only finish the (idempotent) delete loop and publish.
-    val tmpDone = fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-    // Same-gc guard for the CRASH WINDOW (round-14, ADVICE r13): temp
-    // complete (_SUCCESS + _GC written) but batch=<id> unpublished. A
-    // re-run of this gcBatchId with a DIFFERENT tombstone set would
-    // otherwise reuse the stale survivors (tmpDone skips the recompute),
-    // keep the stale digest (the marker is only written if absent), and
-    // then delete the NEW set's partitions from every generation —
-    // survivors for the difference were never written. Mirror the
-    // published-generation check BEFORE any delete: refuse on digest
-    // mismatch (empty marker = legacy, accept).
+    // store file is deleted. The temp is complete only once it holds both
+    // _SUCCESS and the _GC marker, which is written last, before the
+    // delete loop: if both are there we are recovering from a crash after
+    // the temp write — the store may be partially deleted, so we must NOT
+    // recompute survivors, only finish the (idempotent) delete loop and
+    // publish. A temp without the marker was cut before any delete, so it
+    // is redone from the intact store: reusing it would skip the digest
+    // guard below and publish survivors of another tombstone set.
+    val marker = new org.apache.hadoop.fs.Path(tmp, "_GC")
+    val tmpDone = fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")) &&
+      fs.exists(marker)
     if (tmpDone) {
-      val tmpMarker = new org.apache.hadoop.fs.Path(tmp, "_GC")
-      if (fs.exists(tmpMarker)) {
-        val recorded = {
-          val in = fs.open(tmpMarker)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        }
-        require(recorded.isEmpty || recorded == partsDigest,
-          s"gcBatchId=$gcBatchId has an in-flight gc temp over a DIFFERENT " +
-            s"tombstone partition set (recorded digest $recorded, this run " +
-            s"$partsDigest); pick a fresh id")
+      // Same-gc guard for the crash window: a re-run of this gcBatchId with
+      // a DIFFERENT tombstone set would otherwise reuse the stale survivors
+      // and then delete the NEW set's partitions from every generation —
+      // survivors for the difference were never written. Mirror the
+      // published-generation check BEFORE any delete: refuse on digest
+      // mismatch (empty marker = legacy, accept).
+      val recorded = {
+        val in = fs.open(marker)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+        finally in.close()
       }
-    }
-    if (!tmpDone) {
+      require(recorded.isEmpty || recorded == partsDigest,
+        s"gcBatchId=$gcBatchId has an in-flight gc temp over a DIFFERENT " +
+          s"tombstone partition set (recorded digest $recorded, this run " +
+          s"$partsDigest); pick a fresh id")
+    } else {
       val dels = tombs.select(col(idCol).as("__gcdel")).distinct()
       val survivors = readBatches(batchSchema(rowSchema), parts)
         .join(dels, col(idCol) === col("__gcdel"), "left_anti")
         .select(rowSchema.fieldNames.map(col).toSeq: _*)
       bucketed(survivors).sortWithinPartitions(partCol)
         .write.partitionBy(partCol).mode("overwrite").parquet(tmp.toString)
-    }
-    // provenance marker: travels with the rename, so a future re-run can
-    // tell "our own published generation" from a live appended batch; its
-    // content is the tombstone-partition digest the recovery path verifies
-    val marker = new org.apache.hadoop.fs.Path(tmp, "_GC")
-    if (!fs.exists(marker)) {
+      // provenance marker: travels with the rename, so a future re-run can
+      // tell "our own published generation" from a live appended batch;
+      // its content is the tombstone-partition digest the recovery path
+      // verifies
       val out = fs.create(marker)
       try out.write(partsDigest.getBytes("UTF-8")) finally out.close()
     }

@@ -12,6 +12,15 @@ import java.nio.file.Files
   */
 class BandStoreSpec extends SparkTestBase {
 
+  /** The `_GC` marker gcCompact writes into its temp after the survivors
+    * and before the delete loop: the tombstone-partition-set digest. */
+  private def writeGcMarker(tmp: String, parts: Seq[Any]): Unit = {
+    val s = parts.map(String.valueOf).sorted.mkString("\n")
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    Files.write(java.nio.file.Paths.get(tmp, "_GC"), digest.getBytes("UTF-8"))
+  }
+
   private def bands(rows: (Long, String)*) = {
     import spark.implicits._
     rows.toDF("doc_id", "bk")
@@ -205,13 +214,14 @@ class BandStoreSpec extends SparkTestBase {
     val tombs = Seq((3L, 3L), (11L, 3L)).toDF("id", "bkt")
     val parts = store.partsOf(tombs)
     // SIMULATED CRASH STATE: the durable temp write completed (_SUCCESS
-    // present) and the delete loop ran, but the process died before the
-    // rename published the compacted generation
+    // and the _GC marker present) and the delete loop ran, but the process
+    // died before the rename published the compacted generation
     val survivors = store.readBatches(store.batchSchema(rows.schema), parts)
       .filter(!col("id").isin(3L, 11L))
       .select("id", "bkt")
     store.bucketed(survivors).write.partitionBy(store.bucketCol)
       .mode("overwrite").parquet(s"$idx/.gc-tmp-99")
+    writeGcMarker(s"$idx/.gc-tmp-99", parts)
     val root = new java.io.File(idx)
     root.listFiles().filter(_.getName.startsWith("batch=")).foreach { b =>
       parts.foreach { v =>
@@ -295,14 +305,7 @@ class BandStoreSpec extends SparkTestBase {
       .filter(col("id") =!= 3L).select("id", "bkt")
     store.bucketed(surv1).write.partitionBy(store.bucketCol)
       .mode("overwrite").parquet(s"$idx/.gc-tmp-99")
-    val digest1 = {
-      val s = parts1.map(String.valueOf).sorted.mkString("\n")
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    }
-    val fos = new java.io.FileOutputStream(
-      new java.io.File(s"$idx/.gc-tmp-99", "_GC"))
-    try fos.write(digest1.getBytes("UTF-8")) finally fos.close()
+    writeGcMarker(s"$idx/.gc-tmp-99", parts1)
     // a re-run of the SAME id with a DIFFERENT tombstone set (bkt 2) must
     // refuse BEFORE deleting anything: tmpDone would skip the survivor
     // recompute, so S2's survivors were never written — proceeding would
@@ -320,6 +323,31 @@ class BandStoreSpec extends SparkTestBase {
     val post = store.readAll(store.batchSchema(rows.schema))
       .select("id").as[Long].collect().sorted.toSeq
     assert(post == (1L to 16L).filterNot(_ == 3L))
+  }
+
+  test("IndexStore.gcCompact: temp cut before its _GC marker is redone, not reused") {
+    import spark.implicits._
+    val idx = Files.createTempDirectory("gcnomark").toString + "/idx"
+    val store = new graft.streaming.IndexStore(spark, idx, "bkt", 4)
+    val rows = (1L to 16L).map(i => (i, i % 4)).toDF("id", "bkt")
+    store.appendBatch(rows, 0L)
+    // SIMULATED CRASH STATE: the temp for tombstone set S1 = {bkt 3} was
+    // written (_SUCCESS present) but the process died before the _GC
+    // digest marker, so before the delete loop: the store is intact.
+    val s1 = Seq((3L, 3L)).toDF("id", "bkt")
+    val surv1 = store.readBatches(store.batchSchema(rows.schema), store.partsOf(s1))
+      .filter(col("id") =!= 3L).select("id", "bkt")
+    store.bucketed(surv1).write.partitionBy(store.bucketCol)
+      .mode("overwrite").parquet(s"$idx/.gc-tmp-99")
+    // a re-run of the SAME id with a DIFFERENT tombstone set (bkt 2) has no
+    // digest to check against: it must recompute survivors for its own set,
+    // not publish S1's while deleting bkt 2 from every generation
+    store.gcCompact(Seq((6L, 2L)).toDF("id", "bkt"), "id", rows.schema,
+      gcBatchId = 99L)
+    val post = store.readAll(store.batchSchema(rows.schema))
+      .select("id").as[Long].collect().sorted.toSeq
+    assert(post == (1L to 16L).filterNot(_ == 6L),
+      "the gc must apply exactly its own tombstones, each row kept once")
   }
 
   test("IndexStore.compactGenerations: crash between delete and publish is recoverable") {

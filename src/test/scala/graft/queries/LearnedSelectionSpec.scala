@@ -1,7 +1,13 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkTestBase}
+import graft.functions.SparkDialect
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Round-9 learned-selection / serving family: DSIR importance selection,
   * the distilled quality classifier, binary-quantized two-stage serving,
@@ -115,5 +121,100 @@ class LearnedSelectionSpec extends SparkTestBase {
     assert(out.last.getAs[Double]("positive_rate") >
       out.head.getAs[Double]("positive_rate"),
       "a working classifier's rate curve must rise from bottom to top decile")
+  }
+
+  // ---- the classifier trained from sufficient statistics (qcGdWeights)
+  // against the SQL GD chain it replaces, on hand-built relations of the
+  // qcFeatSql shape: one bias row (bkt = -1, cnt = 1) per document
+
+  private val qcCc = "SELECT doc_id, bkt, cnt FROM qc_cc"
+  private val qcY = "SELECT doc_id, y FROM qc_y"
+
+  /** A fresh session (its own temp views) holding `documents`, `qc_cc`
+    * and `qc_y`. */
+  private def qcInputs(docs: Seq[Long], feats: Seq[(Long, Long, Long)],
+      labels: Seq[(Long, Long)]): SparkSession = {
+    val s = spark.newSession()
+    import s.implicits._
+    docs.toDF("doc_id").createOrReplaceTempView("documents")
+    (docs.map(d => (d, -1L, 1L)) ++ feats).toDF("doc_id", "bkt", "cnt")
+      .createOrReplaceTempView("qc_cc")
+    labels.toDF("doc_id", "y").createOrReplaceTempView("qc_y")
+    s
+  }
+
+  private def weights(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("qcGdWeights: driver-side GD equals the SQL round chain, negative gradients included") {
+    // large counts make round 1 overshoot, so later gradients go negative
+    // and the floored division differs from a truncating one
+    val s = qcInputs(1L to 6L,
+      Seq((1L, 0L, 40L), (1L, 1L, 3L), (2L, 0L, 25L), (2L, 2L, 17L),
+        (3L, 1L, 31L), (3L, 2L, 9L), (4L, 0L, 7L), (4L, 1L, 12L), (4L, 2L, 44L),
+        (5L, 2L, 5L), (6L, 0L, 19L), (6L, 1L, 2L)),
+      Seq(1L -> 1L, 2L -> 0L, 3L -> 1L, 4L -> 0L, 5L -> 1L, 6L -> 0L))
+    var wp = Pipeline.qcEmptyW
+    val rounds = (1 to Pipeline.QcRounds).map { k =>
+      val w = s.sql(Pipeline.qcRoundSql(SparkDialect, qcCc, qcY, wp)).localCheckpoint()
+      w.createOrReplaceTempView(s"qc_w$k")
+      wp = s"SELECT bkt, w FROM qc_w$k"
+      weights(w)
+    }
+    assert(rounds.sliding(2).exists { case Seq(a, b) => b.exists { case (k, v) => v < a(k) } },
+      "some round must step a weight down (a negative gradient)")
+    assert(weights(Pipeline.qcGdWeights(s, qcCc, qcY)) == rounds.last)
+  }
+
+  test("qcGdWeights: statistics beyond the model bound fail the size guard") {
+    // 70 feature buckets + bias: a 71 x 71 Gram, above (64+1)·(64+2) values
+    val s = qcInputs(Seq(1L), (0L until 70L).map(b => (1L, b, 1L)), Seq(1L -> 1L))
+    val e = intercept[IllegalArgumentException](Pipeline.qcGdWeights(s, qcCc, qcY))
+    assert(e.getMessage.contains("bounded"), e.getMessage)
+  }
+
+  test("qcGdWeights: a duplicated doc_id fails the uniqueness check") {
+    // documents holds doc 1 twice, so qcFeatSql gives it two bias rows
+    val s = qcInputs(Seq(1L, 1L, 2L), Seq((1L, 0L, 10L), (2L, 0L, 3L)),
+      Seq(1L -> 1L, 1L -> 1L, 2L -> 0L))
+    val e = intercept[IllegalArgumentException](Pipeline.qcGdWeights(s, qcCc, qcY))
+    assert(e.getMessage.contains("unique"), e.getMessage)
+  }
+
+  test("qcGdWeights: an overflowing product throws instead of wrapping") {
+    // the Spark aggregate fits (Gram 4e12), but round 2's Gram·w product
+    // (4e12 × ~1e10) does not fit a Long
+    val s = qcInputs(Seq(1L), Seq((1L, 0L, 2000000L)), Seq(1L -> 1L))
+    intercept[ArithmeticException](Pipeline.qcGdWeights(s, qcCc, qcY))
+  }
+
+  test("qcTrainWeights: training starts at most 10 Spark jobs") {
+    // job budget: one statistics aggregate, not a corpus pass per GD round
+    val sc = spark.sparkContext
+    val tag = "graft.test.qcJobBudget"
+    val jobs = new AtomicInteger
+    val fence = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("train") => jobs.incrementAndGet()
+          case Some("fence") => fence.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "train")
+      Pipeline.qcTrainWeights(spark, sf)
+      // listener events arrive in order: once the fence job is seen, every
+      // training job has been counted
+      sc.setLocalProperty(tag, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fence.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get > 0 && jobs.get <= 10, s"qcTrainWeights started ${jobs.get} jobs")
   }
 }
