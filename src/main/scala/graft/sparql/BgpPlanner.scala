@@ -36,149 +36,6 @@ object BgpPlanner {
   final case class SingleTable(df: DataFrame) extends Store
   final case class SplitTables(positive: DataFrame, negative: DataFrame) extends Store
 
-  /** Plan `query` over `store`, encoding constants through `dict`.
-    * Output: one int column per distinct variable (projection order), encoded;
-    * decode with `Dictionary.decode`. A constant term that is absent from the
-    * dictionary yields an empty (not failing) result — it can match nothing.
-    */
-  /** `:p+` / `(:p|:q)+` / `:p*` / `:p?` — SPARQL property path closure
-    * modifiers over the (alternation of the) named predicates: one-or-more
-    * (`+`), zero-or-more (`*`), zero-or-one (`?`). Returns (base predicate
-    * lexical forms, modifier) when `lexical` is the path syntax.
-    */
-  private def pathPreds(lexical: String): Option[(Seq[String], Char)] = {
-    val re = "^\\(?((?::?\\w+)(?:\\|:?\\w+)*)\\)?([+*?])$".r
-    lexical match {
-      case re(inner, mod) =>
-        Some((inner.split("\\|").toSeq.map(Dictionary.normalizeTerm), mod.head))
-      case _ => None
-    }
-  }
-
-  /** `!:p` / `!(:p|:q)` — SPARQL negated property set: any predicate NOT
-    * in the alternation. Returns the base predicate lexical forms.
-    */
-  private def negPreds(lexical: String): Option[Seq[String]] = {
-    val re = "^!\\(?((?::?\\w+)(?:\\|:?\\w+)*)\\)?$".r
-    lexical match {
-      case re(inner) => Some(inner.split("\\|").toSeq.map(Dictionary.normalizeTerm))
-      case _ => None
-    }
-  }
-
-  /** `(!:p)+` / `(!(:p|:q))*` — closure over a NEGATED property set: walk
-    * edges whose predicate is NOT in the alternation, any number of steps.
-    * Same closure machinery as [[pathPreds]] paths, edge set complemented.
-    */
-  private def negClosurePreds(lexical: String): Option[(Seq[String], Char)] = {
-    val re = "^\\(!\\(?((?::?\\w+)(?:\\|:?\\w+)*)\\)?\\)([+*?])$".r
-    lexical match {
-      case re(inner, mod) =>
-        Some((inner.split("\\|").toSeq.map(Dictionary.normalizeTerm), mod.head))
-      case _ => None
-    }
-  }
-
-  /** `(^:p)+` / `(:p|^:q)*` — closure over an alternation with INVERSE
-    * members: each `^`-marked member contributes its edges reversed, the
-    * union is closed over. Only matched when at least one `^` appears —
-    * pure-forward alternations stay with [[pathPreds]].
-    */
-  private def invClosurePreds(lexical: String): Option[(Seq[(String, Boolean)], Char)] = {
-    val re = "^\\(?((?:\\^?:?\\w+)(?:\\|\\^?:?\\w+)*)\\)?([+*?])$".r
-    lexical match {
-      case re(inner, mod) if inner.contains("^") =>
-        Some((inner.split("\\|").toSeq.map { t =>
-          if (t.startsWith("^")) (Dictionary.normalizeTerm(t.substring(1)), true)
-          else (Dictionary.normalizeTerm(t), false)
-        }, mod.head))
-      case _ => None
-    }
-  }
-
-  /** `:p{n,m}` / `(:p|:q){n}` / `:p{n,}` — bounded path repetition (the
-    * SPARQL 1.1 draft quantifier forms; the final spec dropped them, every
-    * practical engine kept them). Returns (base predicate lexical forms,
-    * min repetitions, max repetitions — None for the unbounded `{n,}`).
-    */
-  private def quantPreds(lexical: String): Option[(Seq[String], Int, Option[Int])] = {
-    val re = "^\\(?((?::?\\w+)(?:\\|:?\\w+)*)\\)?\\{(\\d+)(?:(,)(\\d*))?\\}$".r
-    lexical match {
-      case re(inner, lo, comma, hi) =>
-        val n = lo.toInt
-        val m =
-          if (comma == null) Some(n) // {n} = exactly n
-          else if (hi.isEmpty) None  // {n,} = n or more
-          else Some(hi.toInt)        // {n,m}
-        require(m.forall(_ >= n), s"path quantifier needs n <= m: $lexical")
-        // the bounded composition is one join per level — cap the plan
-        // depth the syntax can demand
-        require(n <= 20 && m.forall(_ <= 20),
-          s"path quantifier bound beyond the subset's 20-level cap: $lexical")
-        Some((inner.split("\\|").toSeq.map(Dictionary.normalizeTerm), n, m))
-      case _ => None
-    }
-  }
-
-  /** Base predicate lexical forms of any closure-path syntax (positive,
-    * inverse-bearing, negated, or quantified) — for dictionary encoding. */
-  private def closureBasePreds(lexical: String): Seq[String] =
-    (pathPreds(lexical).map(_._1) orElse
-      invClosurePreds(lexical).map(_._1.map(_._1)) orElse
-      negClosurePreds(lexical).map(_._1) orElse
-      quantPreds(lexical).map(_._1)).getOrElse(Nil)
-
-  private def isClosurePath(lexical: String): Boolean =
-    pathPreds(lexical).isDefined || invClosurePreds(lexical).isDefined ||
-      negClosurePreds(lexical).isDefined || quantPreds(lexical).isDefined
-
-  /** One step of a sequence property path: the alternation's predicate
-    * lexical forms, inverse (`^`) flag, and an optional closure modifier
-    * (`+` / `*` / `?`) applying to THIS step.
-    */
-  final case class PathStep(preds: Seq[String], inverse: Boolean, mod: Option[Char])
-
-  private val stepRe = "^(\\^?)(:?\\w+|\\((?::?\\w+)(?:\\|:?\\w+)*\\))([+*?]?)$".r
-
-  private def parseStep(text: String): Option[PathStep] = text match {
-    case stepRe(inv, core, mod) =>
-      val preds = core.stripPrefix("(").stripSuffix(")")
-        .split("\\|").toSeq.map(Dictionary.normalizeTerm)
-      Some(PathStep(preds, inv == "^", mod.headOption))
-    case _ => None
-  }
-
-  /** Nested sequence property paths (SPARQL 1.1 PathSequence with closure):
-    *  - group closure `(:p/:q)+` / `(^:p/:q)*` / `(:p/:q)?` — the closure
-    *    of the COMPOSED relation (the sequence joined into one edge set);
-    *  - flat sequence with closure steps `:p/:q+`, `:p+/^:q`,
-    *    `:p/(:q|:r)*` — each step evaluated left-to-right over a frontier,
-    *    closure steps through the BFS fixpoint.
-    * Returns (steps, outer modifier — Some for the group-closure form).
-    * Plain sequences without any modifier are NOT matched here (the parser
-    * rewrites those to fresh-variable chains — one static join plan).
-    */
-  private[sparql] def seqPath(lexical: String): Option[(Seq[PathStep], Option[Char])] = {
-    val groupRe = "^\\((.+)\\)([+*?])$".r
-    lexical match {
-      case groupRe(inner, mod) if inner.contains("/") =>
-        val steps = inner.split("/").toSeq.map(parseStep)
-        // group-closure steps must be modifier-free (no nested closures)
-        if (steps.forall(s => s.isDefined && s.get.mod.isEmpty))
-          Some((steps.map(_.get), Some(mod.head)))
-        else None
-      case l if l.contains("/") =>
-        val steps = l.split("/").toSeq.map(parseStep)
-        // at least one closure step or alternation group — otherwise the
-        // parser's plain-sequence rewrite owns the syntax
-        if (steps.forall(_.isDefined) &&
-            steps.exists(s => s.get.mod.nonEmpty || s.get.preds.length > 1))
-          Some((steps.map(_.get), None))
-        else None
-      case _ => None
-    }
-  }
-
   /** All atoms of a FILTER condition tree. */
   private def filterLeaves(e: FilterExpr): Seq[FilterCond] = e match {
     case FilterLeaf(c) => Seq(c)
@@ -186,30 +43,17 @@ object BgpPlanner {
     case FilterOr(l, r) => filterLeaves(l) ++ filterLeaves(r)
   }
 
-  /** Base predicate constants referenced by any path-syntax predicate token
-    * in `pats` (closure, negated set, or sequence) — nothing for plain
-    * patterns.
-    */
-  private def pathBasePreds(pats: Seq[TriplePattern]): Seq[Constant] =
-    pats.flatMap(_.p match {
-      case Constant(l) =>
-        (Some(closureBasePreds(l)).filter(_.nonEmpty) orElse negPreds(l) orElse
-          seqPath(l).map(_._1.flatMap(_.preds)))
-          .getOrElse(Nil).map(Constant.apply)
-      case _ => Nil
-    })
+  /** Every triple of `store`: the sign-split pair scans as its union. */
+  private def allTriples(store: Store): DataFrame = store match {
+    case SingleTable(df) => df
+    case SplitTables(pos, neg) => pos.unionAll(neg)
+  }
 
-  /** True when `lexical` uses property-path syntax THIS planner supports in
-    * the predicate position (closure, negated set, or sequence-with-closure
-    * forms — plain sequences/inverses are the parser's rewrite). The parser
-    * uses this to fail loudly on unsupported path syntax instead of letting
-    * it fall through as a constant term that encodes to nothing.
-    */
-  private[sparql] def supportedPathSyntax(lexical: String): Boolean =
-    isClosurePath(lexical) || negPreds(lexical).isDefined ||
-      seqPath(lexical).isDefined
-
-  /** `quads`: optional 4-column (Subject, Predicate, Object, Graph) store
+  /** Plan `query` over `store`, encoding constants through `dict`.
+    * Output: one int column per distinct variable (projection order), encoded;
+    * decode with `Dictionary.decode`. A constant term that is absent from the
+    * dictionary yields an empty (not failing) result — it can match nothing.
+    * `quads`: optional 4-column (Subject, Predicate, Object, Graph) store
     * backing `GRAPH` groups — absent, a GRAPH query fails loudly.
     */
   def plan(query: BgpQuery, store: Store, dict: Dictionary,
@@ -221,10 +65,7 @@ object BgpPlanner {
     query.describeTerm.foreach { t =>
       val enc = dict.encodeTerms(Seq(t.lexical))
       val id = enc.get(t.lexical)
-      val all = store match {
-        case SingleTable(df) => df
-        case SplitTables(pos, neg) => pos.unionAll(neg)
-      }
+      val all = allTriples(store)
       val bySubject = (store, id) match {
         case (_, None) => return all.limit(0).select(
           col(TripleSchema.subject), col(TripleSchema.predicate), col(TripleSchema.objekt))
@@ -247,112 +88,71 @@ object BgpPlanner {
       val v = inner.projection.head
       val bind = plan(inner, store, dict, quads)
         .select(col(v).as("node")).distinct()
-      val all = store match {
-        case SingleTable(df) => df
-        case SplitTables(pos, neg) => pos.unionAll(neg)
-      }
+      val all = allTriples(store)
       val bySubject = all.join(bind, all(TripleSchema.subject) === bind("node"), "left_semi")
       val byObject = all.join(bind, all(TripleSchema.objekt) === bind("node"), "left_semi")
       return bySubject.unionAll(byObject).select(
         col(TripleSchema.subject), col(TripleSchema.predicate), col(TripleSchema.objekt))
         .distinct()
     }
-    // Patterns whose predicate is a one-or-more property path plan through
-    // the iterative closure operator, not a scan.
-    val (pathPatterns, nonPathPatterns) = query.patterns.partition {
-      p => p.p match {
-        case Constant(l) => isClosurePath(l)
-        case _ => false
-      }
-    }
-    // Sequence paths carrying closure steps (`:p/:q+`, `(:p/:q)*`) plan
-    // left-to-right over a frontier (closures through the BFS fixpoint).
-    val (seqPatterns, plainPatterns) = nonPathPatterns.partition {
-      p => p.p match {
-        case Constant(l) => seqPath(l).isDefined
-        case _ => false
-      }
-    }
-    // Negated property sets plan as ordinary scans over a hidden predicate
-    // variable post-filtered with NOT isin (an unknown negated term excludes
-    // nothing — it cannot occur in the data, so the pattern matches every
-    // predicate, per SPARQL semantics).
-    val (negPatterns, scanPatterns) = plainPatterns.partition {
-      p => p.p match {
-        case Constant(l) => negPreds(l).isDefined
-        case _ => false
-      }
-    }
-    // Encode every constant — pattern terms, path base predicates, AND
-    // filter right-hand sides — in one dictionary round-trip (single
-    // pushed-down isin scan, not one scan per term).
-    val constants = ((plainPatterns ++ query.optionals.flatten ++ query.unionArms.flatten ++
-      query.constructTemplate)
+    // Encode every constant — pattern terms, path predicates, AND filter
+    // right-hand sides — in one dictionary round-trip (single pushed-down
+    // isin scan, not one scan per term).
+    val constants = ((query.patterns ++ query.optionals.flatten ++ query.unionArms.flatten ++
+      query.constructTemplate ++ query.minuses.flatten ++ query.existsFilters.flatMap(_._1) ++
+      query.graphGroups.flatMap(_._2))
       .flatMap(p => Seq(p.s, p.p, p.o)) ++
-      pathPatterns.flatMap(p => Seq(p.s, p.o)) ++
-      pathPatterns.flatMap(p =>
-        closureBasePreds(p.p.asInstanceOf[Constant].lexical).map(Constant(_))) ++
-      seqPatterns.flatMap(p => Seq(p.s, p.o)) ++
-      seqPatterns.flatMap(p => seqPath(p.p.asInstanceOf[Constant].lexical).get._1
-        .flatMap(_.preds).map(Constant(_))) ++
-      negPatterns.flatMap(p => negPreds(p.p.asInstanceOf[Constant].lexical).get.map(Constant(_))) ++
       (query.filters ++ query.optionalFilters.flatten ++
         query.filterExprs.flatMap(filterLeaves))
         // regex patterns / string-function args are raw strings, not
         // dictionary terms
         .filterNot(c => FilterOp.isLexical(c.op))
         .flatMap(c => c.value +: c.values) ++
-      query.minuses.flatten.flatMap(p => Seq(p.s, p.p, p.o)) ++
-      query.existsFilters.flatMap(_._1).flatMap(p => Seq(p.s, p.p, p.o)) ++
-      // path syntax inside groups (OPTIONAL/UNION/MINUS/EXISTS/GRAPH):
-      // the base predicates must encode even though the composite token
-      // itself is not a dictionary term
-      pathBasePreds(query.optionals.flatten ++ query.unionArms.flatten ++
-        query.minuses.flatten ++ query.existsFilters.flatMap(_._1) ++
-        query.graphGroups.flatMap(_._2)) ++
       query.inlineValues.flatMap(_._2) ++
       query.inlineValuesMulti.flatMap(_._2.flatten.flatten) ++
-      query.graphGroups.flatMap { case (g, pats) =>
-        g +: pats.flatMap(p => Seq(p.s, p.p, p.o)) } ++
+      query.graphGroups.map(_._1) ++
       query.binds.flatMap(_._1 match {
         case BindTerm(t) => Seq(t)
         case BindArith(l, _, r) => Seq(l, r)
         case BindCoalesce(ts) => ts
         case BindIf(c, t, e) => Seq(c.value, t, e)
-      })).collect {
-      case Constant(l) => l
+      })).flatMap {
+      case Constant(l) => Seq(l)
+      case PathTerm(path) => path.preds
+      case _: Variable => Nil
     }.distinct
     val enc: Map[String, Int] = dict.encodeTerms(constants)
 
-    // Group-context pattern dispatcher: patterns inside OPTIONAL / UNION /
-    // MINUS / EXISTS / bound-GRAPH groups route through the SAME path
-    // planners as required patterns (closures via the BFS fixpoint,
-    // sequences, negated sets) instead of silently encoding a composite
-    // path token to nothing.
+    // One pattern, in any group: a property path plans through [[planPath]]
+    // over every triple (a path crosses entity classes, so it spans both
+    // sign tables); a negated property set plans as an ordinary scan over a
+    // hidden predicate variable post-filtered with NOT isin (an unknown
+    // negated term excludes nothing — it cannot occur in the data, so the
+    // pattern matches every predicate, per SPARQL semantics).
     def planGroupPattern(st: Store)(p: TriplePattern, idx: Int): DataFrame =
       p.p match {
-        case Constant(l) if isClosurePath(l) => planPathPattern(p, st, enc)
-        case Constant(l) if seqPath(l).isDefined => planSeqPathPattern(p, st, enc)
-        case Constant(l) if negPreds(l).isDefined =>
-          val v = s"__gneg$idx"
-          val ids = negPreds(l).get.flatMap(enc.get)
+        case PathTerm(NegSet(preds)) =>
+          // the `__path` prefix keeps the synthetic predicate variable out
+          // of star projections; it is dropped before the joins regardless
+          val v = s"__pathneg$idx"
+          val ids = preds.flatMap(enc.get)
           val base = planPattern(TriplePattern(p.s, Variable(v), p.o), idx, st, enc)
           (if (ids.isEmpty) base else base.filter(!col(v).isin(ids: _*))).drop(v)
+        case PathTerm(path) => planPath(p.s, path, p.o, allTriples(st), enc)
         case _ => planPattern(p, idx, st, enc)
       }
 
-    val planned = scanPatterns.zipWithIndex.map { case (pat, i) =>
-      planPattern(pat, i, store, enc)
-    } ++ negPatterns.zipWithIndex.map { case (pat, i) =>
-      // the `__path` prefix keeps the synthetic predicate variable out of
-      // star projections; it is dropped before the joins regardless
-      val v = s"__pathneg$i"
-      val ids = negPreds(pat.p.asInstanceOf[Constant].lexical).get.flatMap(enc.get)
-      val base = planPattern(TriplePattern(pat.s, Variable(v), pat.o),
-        900000 + i, store, enc)
-      (if (ids.isEmpty) base else base.filter(!col(v).isin(ids: _*))).drop(v)
-    } ++ pathPatterns.map(p => planPathPattern(p, store, enc)) ++
-      seqPatterns.map(p => planSeqPathPattern(p, store, enc))
+    // Required patterns join in a fixed order: scans, negated property
+    // sets, closures, then sequence paths.
+    def joinRank(p: TriplePattern): Int = p.p match {
+      case PathTerm(NegSet(_)) => 1
+      case PathTerm(PathSeq(_) | Rep(PathSeq(_), _, _)) => 3
+      case PathTerm(_) => 2
+      case _ => 0
+    }
+    val planned = query.patterns.sortBy(joinRank).zipWithIndex.map {
+      case (p, i) => planGroupPattern(store)(p, i)
+    }
 
     // Join patterns left-to-right on shared variables; disjoint patterns
     // cross-join (correct per SPARQL semantics, logged as a scale hazard).
@@ -373,7 +173,7 @@ object BgpPlanner {
       case ((gTerm, pats), gi) =>
         val q = quads.getOrElse(throw new IllegalArgumentException(
           "GRAPH requires a registered quad store"))
-        gTerm match {
+        (gTerm: @unchecked) match {
           case Constant(l) =>
             val sub = enc.get(l) match {
               case Some(id) => q.filter(col(TripleSchema.graph) === lit(id))
@@ -385,7 +185,9 @@ object BgpPlanner {
               planGroupPattern(st)(p, 300000 * (gi + 1) + i) }
           case Variable(gv) =>
             pats.zipWithIndex.map { case (p, i) =>
-              planQuadPattern(p, gv, 300000 * (gi + 1) + i, q, enc) }
+              require(!p.p.isInstanceOf[PathTerm],
+                s"unsupported property path inside GRAPH ?$gv: $p")
+              planPattern(p, 300000 * (gi + 1) + i, SingleTable(q), enc, graph = Some(gv)) }
         }
     }
     // Subqueries (SPARQL 1.1 SubSelect): each plans RECURSIVELY as a full
@@ -496,7 +298,7 @@ object BgpPlanner {
             else !col(f.variable).isin(ids: _*)
           }
         case cmp =>
-          val sides: Option[(Column, Column)] = f.value match {
+          val sides: Option[(Column, Column)] = (f.value: @unchecked) match {
             case Variable(v) =>
               require(df.columns.contains(v), s"FILTER variable ?$v not bound")
               Some((col(f.variable), col(v)))
@@ -645,13 +447,10 @@ object BgpPlanner {
       if (query.unionArms.nonEmpty)
         query.unionArms.map(_.flatMap(p => Seq(p.s, p.p, p.o)
           .collect { case Variable(v) => v }).toSet).reduce(_ intersect _)
-      else (plainPatterns.flatMap(p => Seq(p.s, p.p, p.o)
-          .collect { case Variable(v) => v }) ++
+      else (query.patterns.flatMap(p => Seq(p.s, p.p, p.o)) ++
         query.graphGroups.flatMap { case (g, pats) =>
-          (g +: pats.flatMap(p => Seq(p.s, p.p, p.o)))
-            .collect { case Variable(v) => v } } ++
-        (pathPatterns ++ seqPatterns).flatMap(p =>
-          Seq(p.s, p.o).collect { case Variable(v) => v })).toSet
+          g +: pats.flatMap(p => Seq(p.s, p.p, p.o)) })
+        .collect { case Variable(v) => v }.toSet
 
     // FILTER [NOT] EXISTS: a correlated semi-join (anti-join when negated)
     // on the SHARED variables. With NO shared variable the test is the
@@ -786,7 +585,7 @@ object BgpPlanner {
         // arithmetic operand: variable → column, term → encoded id, bare
         // integer → itself, unknown → null (expression error); widened to
         // long so id-space arithmetic cannot overflow the int domain
-        def operand(t: Term): Column = t match {
+        def operand(t: Term): Column = (t: @unchecked) match {
           case Variable(v) =>
             require(acc.columns.contains(v), s"BIND source ?$v not bound")
             col(v).cast("long")
@@ -795,7 +594,7 @@ object BgpPlanner {
               .orElse(l.toLongOption.map(n => lit(n)))
               .getOrElse(lit(null).cast("long"))
         }
-        bexpr match {
+        (bexpr: @unchecked) match {
           case BindTerm(Variable(v)) =>
             require(acc.columns.contains(v), s"BIND source ?$v not bound")
             acc.withColumn(alias, col(v))
@@ -859,7 +658,7 @@ object BgpPlanner {
     // missing from the dictionary can instantiate nothing.
     if (query.constructTemplate.nonEmpty) {
       val built = query.constructTemplate.map { t =>
-        def termCol(term: Term) = term match {
+        def termCol(term: Term) = (term: @unchecked) match {
           case Variable(v) =>
             require(filtered.columns.contains(v),
               s"CONSTRUCT template variable ?$v not bound by the BGP")
@@ -1021,372 +820,141 @@ object BgpPlanner {
     query.limit.fold(offsetted)(offsetted.limit)
   }
 
-  /** A property-path pattern `<bound subject> (:p|:q)+ ?var` → the set of
-    * nodes reachable from the subject in one or more steps over edges whose
-    * predicate is in the alternation — planned as the semi-naive BFS
-    * fixpoint ([[graft.operators.Graph.reachableFrom]]): per iteration one
-    * frontier⋈edges equi-join + one anti-join, lineage truncated per round.
-    * Path solutions are DISTINCT endpoints, exactly the closure's output
-    * (SPARQL's arbitrary-length-path semantics). The closure spans both
-    * sign tables (a path crosses entity classes), so the split store scans
-    * their union.
+  /** A property-path pattern `s path o` → its solutions, DISTINCT
+    * endpoints (SPARQL's path semantics), over `triples` (both sign tables:
+    * a path crosses entity classes). With one bound end the path is walked
+    * from that end over a frontier of reached nodes — a bound object walks
+    * the inverse path ([[Path.inverse]]); with both ends variable, closures
+    * and quantifiers build the pair relation. Three parts:
+    *  - `edges` compiles a step (names, `^`, alternation, negated set, or a
+    *    sequence composed into one relation by equi-joins — at scale the
+    *    per-step predicate filters keep it far below |E|²) to a src→dst
+    *    relation;
+    *  - `levels` answers a top-level `Rep(e, lo, hi)` as the union of the
+    *    exact path-length levels in the window: level 1 is the direct
+    *    successors (pairs: the edges), level k one hash equi-join beyond
+    *    level k-1 — a plain composition, not a visited-set BFS, which keeps
+    *    only the SHORTEST depth per node and would miss a node whose only
+    *    in-window path is longer — with lineage truncated every fourth
+    *    level. An unbounded window closes over its deepest level with the
+    *    semi-naive BFS fixpoint ([[graft.operators.Graph.reachableFrom]] /
+    *    [[graft.operators.Graph.reachablePairs]]: one frontier⋈edges
+    *    equi-join + one anti-join per round), and `lo = 0` adds the zero
+    *    step (the seed, or every node of the edge set paired with itself);
+    *  - `walk` runs a sequence step by step over the frontier: a plain step
+    *    is one frontier⋈edges equi-join, `+` / `*` run the BFS fixpoint
+    *    seeded by the step's successors / by the frontier itself, and `?`
+    *    is the frontier plus one step, no fixpoint. Intermediate frontier
+    *    nodes are existential — they never surface as bindings — which is
+    *    what licenses the frontier evaluation.
+    * SUBSET DEVIATION: full SPARQL would emit the zero step even for a bound
+    * term absent from the dictionary, but the output is encoded ids, so an
+    * un-encodable term yields the empty result instead (pinned by
+    * SparqlSpec).
     */
-  private def planPathPattern(
-      pat: TriplePattern, store: Store, enc: Map[String, Int]): DataFrame = {
-    val lex = pat.p.asInstanceOf[Constant].lexical
-    quantPreds(lex).foreach { case (preds, lo, hi) =>
-      return planQuantPath(pat, store, enc, preds, lo, hi)
-    }
-    // Three closure families share one fixpoint: positive `(:p|:q)+`,
-    // inverse-bearing `(^:p|:q)+` (each ^-member contributes reversed
-    // edges), and negated-set `(!(:p|:q))+` (the complement edge set; an
-    // un-encodable negated term excludes nothing, per SPARQL: it cannot
-    // occur in the data, so every predicate survives the NOT-IN).
-    val (members, mod, negated) =
-      pathPreds(lex).map { case (p, m) => (p.map((_, false)), m, false) }
-        .orElse(invClosurePreds(lex).map { case (p, m) => (p, m, false) })
-        .orElse(negClosurePreds(lex).map { case (p, m) => (p.map((_, false)), m, true) })
-        .get
-    val zeroStep = mod == '*' || mod == '?'
-    val base = store match {
-      case SingleTable(df) => df
-      case SplitTables(pos, neg) => pos.unionAll(neg)
-    }
-    val fwdIds = members.collect { case (p, false) => p }.flatMap(enc.get)
-    val invIds = members.collect { case (p, true) => p }.flatMap(enc.get)
-    val edges0 =
-      if (negated) {
-        val ids = fwdIds
-        if (ids.isEmpty) base
-        else base.filter(!col(TripleSchema.predicate).isin(ids: _*))
-      } else if (invIds.isEmpty)
-        base.filter(col(TripleSchema.predicate).isin(fwdIds: _*))
-      else {
-        val fwd = base.filter(col(TripleSchema.predicate).isin(fwdIds: _*))
-          .select(col(TripleSchema.subject), col(TripleSchema.objekt))
-        val inv = base.filter(col(TripleSchema.predicate).isin(invIds: _*))
-          .select(col(TripleSchema.objekt).as(TripleSchema.subject),
-            col(TripleSchema.subject).as(TripleSchema.objekt))
-        if (fwdIds.isEmpty) inv else fwd.unionAll(inv)
-      }
-    // BOTH ends variable (`?s :p+ ?o`): the full pairwise closure via the
-    // provenance-carrying BFS (Graph.reachablePairs) — state = the closure
-    // itself, per-round hash equi-joins, no driver involvement. The result
-    // relation joins the rest of the BGP on either/both variables. Same
-    // variable twice (`?x :p+ ?x`) keeps only cycle members.
-    (pat.s, pat.o) match {
-      case (Variable(sv), Variable(ov)) =>
-        val oneOrMore =
-          if (mod == '?')
-            edges0.select(col(TripleSchema.subject).as("root"),
-              col(TripleSchema.objekt).as("node")).distinct()
-          else graft.operators.Graph.reachablePairs(edges0,
-            budgetRows = graft.operators.Graph.DefaultClosureBudget)
-        val withZero =
-          if (!zeroStep) oneOrMore
-          else {
-            // zero step: every node occurring in the path's edge set
-            val nodes = edges0.select(col(TripleSchema.subject).as("n"))
-              .unionAll(edges0.select(col(TripleSchema.objekt)))
-              .distinct()
-            oneOrMore.unionAll(nodes.select(col("n").as("root"), col("n").as("node")))
-              .distinct()
-          }
-        val out =
-          if (sv == ov) withZero.filter(col("root") === col("node")).select(col("root").as(sv))
-          else withZero.select(col("root").as(sv), col("node").as(ov))
-        return out
-      case _ =>
-    }
-    // Direction: `<bound> :p+ ?v` closes FORWARD from the subject;
-    // `?v :p+ <bound>` closes over REVERSED edges from the object (the set
-    // of nodes that REACH it) — same fixpoint, edge projection swapped.
-    val forward = (pat.s, pat.o) match {
-      case (Constant(_), Variable(_)) => true
-      case (Variable(_), Constant(_)) => false
-      case _ => throw new IllegalArgumentException(
-        "property path needs both or one end(s) variable in the subset")
-    }
-    val edges =
-      if (forward) edges0
-      else edges0.select(col(TripleSchema.objekt).as(TripleSchema.subject),
-        col(TripleSchema.subject).as(TripleSchema.objekt))
-    val oVar = (if (forward) pat.o else pat.s).asInstanceOf[Variable].name
-    val seedId = (if (forward) pat.s else pat.o) match {
-      case Constant(l) => enc.get(l)
-      case _ => throw new IllegalStateException("unreachable")
-    }
-    // one-or-more: seed the closure with the subject's DIRECT successors
-    // (the `+` semantics — the subject itself only appears if reached by a
-    // cycle); an unknown subject term reaches nothing. Zero-or-more (`*`)
-    // additionally includes the zero-step binding ?o = subject — SUBSET
-    // DEVIATION: full SPARQL would emit the zero step even for a term
-    // absent from the dictionary, but this planner's output is encoded
-    // ids, so an un-encodable term yields the empty result instead
-    // (pinned by SparqlSpec).
-    val direct = edges
-      .filter(col(TripleSchema.subject) === lit(seedId.getOrElse(Int.MinValue)))
-      .select(col(TripleSchema.objekt).as("node")).distinct()
-    // zero-or-one needs no fixpoint: at most one step from the seed
-    val closure =
-      if (mod == '?') direct
-      else graft.operators.Graph.reachableFrom(edges, direct)
-    val withZero =
-      if (!zeroStep) closure
-      else seedId match {
-        case Some(id) =>
-          val spark = edges.sparkSession
-          import spark.implicits._
-          closure.unionAll(Seq(id).toDF("node")).distinct()
-        case None => closure
-      }
-    withZero.select(col("node").as(oVar))
-  }
-
-  /** Bounded path repetition `:p{n,m}` — the depth-WINDOWED composition:
-    * level set F_k = nodes reachable by a path of length EXACTLY k (a
-    * plain relational composition F_k = F_{k-1} ⋈ edges, distinct; NOT a
-    * visited-set BFS, which keeps only the SHORTEST depth per node and
-    * would miss a node whose only in-window path is longer than its
-    * shortest one). Answer = ∪ F_k for k in [n, m], plus the zero step
-    * (the seed / node identity) when n = 0; `{n,}` composes the exact-n
-    * level with the unbounded closure fixpoint. Each level is one hash
-    * equi-join; m is syntax-capped at 20 and lineage is truncated every
-    * few levels, so the plan stays bounded at any data scale.
-    */
-  private def planQuantPath(pat: TriplePattern, store: Store,
-      enc: Map[String, Int], preds: Seq[String], lo: Int,
-      hi: Option[Int]): DataFrame = {
-    val base = store match {
-      case SingleTable(df) => df
-      case SplitTables(pos, neg) => pos.unionAll(neg)
-    }
-    val ids = preds.flatMap(enc.get)
-    val edges0 =
-      (if (ids.isEmpty) base.limit(0)
-       else base.filter(col(TripleSchema.predicate).isin(ids: _*)))
-        .select(col(TripleSchema.subject), col(TripleSchema.objekt))
-
-    // BOTH ends variable: depth-windowed PAIR composition.
-    (pat.s, pat.o) match {
-      case (Variable(sv), Variable(ov)) =>
-        val p1 = edges0.select(col(TripleSchema.subject).as("root"),
-          col(TripleSchema.objekt).as("node")).distinct().localCheckpoint()
-        var level = p1 // exact-k pair set
-        var acc: DataFrame = null
-        def keep(k: Int): Boolean = k >= math.max(lo, 1) && hi.forall(_ >= k)
-        if (keep(1)) acc = level
-        var k = 2
-        while (hi.forall(k <= _) && (hi.isDefined || k <= lo)) {
-          level = level.join(
-              edges0.select(col(TripleSchema.subject).as("node"),
-                col(TripleSchema.objekt).as("__next")), "node")
-            .select(col("root"), col("__next").as("node")).distinct()
-          if (k % 4 == 0) level = level.localCheckpoint()
-          if (keep(k)) acc = if (acc == null) level else acc.unionAll(level)
-          k += 1
-        }
-        // {n,}: exact-n pairs composed with the closure (zero-or-more steps
-        // beyond) — P_n ∪ (P_n ⋈ reachablePairs)
-        if (hi.isEmpty) {
-          val pn = (if (lo <= 1) p1 else level).localCheckpoint()
-          val beyond = pn.join(
-              graft.operators.Graph.reachablePairs(edges0,
-                  budgetRows = graft.operators.Graph.DefaultClosureBudget)
-                .select(col("root").as("node"), col("node").as("__far")), "node")
-            .select(col("root"), col("__far").as("node"))
-          acc = pn.unionAll(beyond)
-        }
-        val withZero =
-          if (lo > 0) acc
-          else {
-            val nodes = edges0.select(col(TripleSchema.subject).as("n"))
-              .unionAll(edges0.select(col(TripleSchema.objekt))).distinct()
-            val idPairs = nodes.select(col("n").as("root"), col("n").as("node"))
-            if (acc == null) idPairs else acc.unionAll(idPairs)
-          }
-        val dedup = withZero.distinct()
-        return (
-          if (sv == ov) dedup.filter(col("root") === col("node")).select(col("root").as(sv))
-          else dedup.select(col("root").as(sv), col("node").as(ov)))
-      case _ =>
-    }
-
-    // One end bound: depth-windowed frontier from the seed (reversed edges
-    // when the OBJECT is the bound end — same windowed walk).
-    val forward = (pat.s, pat.o) match {
-      case (Constant(_), Variable(_)) => true
-      case (Variable(_), Constant(_)) => false
-      case _ => throw new IllegalArgumentException(
-        "property path needs both or one end(s) variable in the subset")
-    }
-    val edges =
-      if (forward) edges0
-      else edges0.select(col(TripleSchema.objekt).as(TripleSchema.subject),
-        col(TripleSchema.subject).as(TripleSchema.objekt))
-    val oVar = (if (forward) pat.o else pat.s).asInstanceOf[Variable].name
-    val seedId = (if (forward) pat.s else pat.o) match {
-      case Constant(l) => enc.get(l)
-      case _ => throw new IllegalStateException("unreachable")
-    }
-    val spark = edges.sparkSession
+  private def planPath(s: Term, path: Path, o: Term, triples: DataFrame,
+      enc: Map[String, Int]): DataFrame = {
+    import graft.operators.Graph.{DefaultClosureBudget, reachableFrom, reachablePairs}
+    val spark = triples.sparkSession
     import spark.implicits._
-    val seedDf = seedId.toSeq.toDF("node")
-    var frontier = edges
-      .filter(col(TripleSchema.subject) === lit(seedId.getOrElse(Int.MinValue)))
-      .select(col(TripleSchema.objekt).as("node")).distinct().localCheckpoint()
-    var acc: DataFrame = if (math.max(lo, 1) <= 1 && hi.forall(_ >= 1)) frontier else null
-    var k = 2
-    while (hi.forall(k <= _) && (hi.isDefined || k <= lo)) {
-      frontier = frontier.join(
-          edges.select(col(TripleSchema.subject).as("node"),
-            col(TripleSchema.objekt).as("__next")), "node")
-        .select(col("__next").as("node")).distinct()
-      if (k % 4 == 0) frontier = frontier.localCheckpoint()
-      if (k >= lo) acc = if (acc == null) frontier else acc.unionAll(frontier)
-      k += 1
+    val (subj, obj) = (col(TripleSchema.subject), col(TripleSchema.objekt))
+    def isin(preds: Seq[String]) = col(TripleSchema.predicate).isin(preds.flatMap(enc.get): _*)
+    // (Subject, Object) edges of a step. Left unprojected where possible:
+    // a closure seed filtered from them stays a pruned point scan, where a
+    // seed over the projection `reachableFrom` caches would be read back
+    // from that cache (a full edge pass and one more job)
+    def edges(p: Path): DataFrame = p match {
+      // an un-encodable negated term excludes nothing: it cannot occur in
+      // the data, so every predicate survives the NOT-IN
+      case NegSet(preds) =>
+        if (preds.forall(enc.get(_).isEmpty)) triples else triples.filter(!isin(preds))
+      case Inv(x) => edges(x).select(obj.as(TripleSchema.subject), subj.as(TripleSchema.objekt))
+      case Alt(ms) if ms.exists(_.isInstanceOf[Inv]) =>
+        val (inv, fwd) = ms.partition(_.isInstanceOf[Inv])
+        val back = edges(Inv(Alt(inv.map(_.inverse))))
+        if (fwd.isEmpty) back else edges(Alt(fwd)).select(subj, obj).unionAll(back)
+      case names => triples.filter(isin(names.preds))
     }
-    if (hi.isEmpty) {
-      // {n,}: close over the exact-n frontier (reachableFrom includes its
-      // seeds — exactly "n or more"; the loop above left `frontier` at the
-      // exact-max(n,1) level)
-      acc = graft.operators.Graph.reachableFrom(edges, frontier)
+    // (src, dst) edges of a sequence step; a sequence composes its steps
+    def steps(p: Path): DataFrame = p match {
+      case PathSeq(ps) => ps.map(steps).reduceLeft { (a, b) =>
+        a.join(b, a("dst") === b("src")).select(a("src"), b("dst"))
+      }
+      case x => edges(x).select(subj.as("src"), obj.as("dst"))
     }
-    val withZero =
-      if (lo > 0) (if (acc == null) seedDf.limit(0) else acc)
-      else if (acc == null) seedDf
-      else acc.unionAll(seedDf)
-    withZero.distinct().select(col("node").as(oVar))
-  }
-
-  /** A sequence property path with closure steps — `<bound subject>
-    * :p/:q+ ?var` or `<bound subject> (:p/:q)+ ?var` — evaluated
-    * left-to-right over a FRONTIER of reached nodes:
-    *  - a plain step is one frontier⋈edges equi-join (edge side filtered to
-    *    the step's predicate alternation, reversed for `^`);
-    *  - a closure step (`+`/`*`/`?`) runs the semi-naive BFS fixpoint
-    *    ([[graft.operators.Graph.reachableFrom]]) over that step's edge
-    *    set, seeded by the current frontier (`*` keeps the frontier as the
-    *    zero-step case, `?` is frontier ∪ one-step — no fixpoint);
-    *  - the group-closure form composes the whole sequence into ONE edge
-    *    relation (a chain of equi-joins — the composed relation is
-    *    bounded by the join of the per-step edge sets; at scale the
-    *    per-step predicate filters keep it far below |E|²) and closes
-    *    over it.
-    * Solutions are DISTINCT endpoints (SPARQL arbitrary-length-path
-    * semantics). The closure spans both sign tables, so the split store
-    * scans their union. Intermediate frontier nodes are existential — they
-    * never surface as bindings — which is what licenses the frontier
-    * evaluation (no provenance to the seed is required beyond reachability).
-    */
-  private def planSeqPathPattern(
-      pat: TriplePattern, store: Store, enc: Map[String, Int]): DataFrame = {
-    val parsed = seqPath(pat.p.asInstanceOf[Constant].lexical).get
-    val base = store match {
-      case SingleTable(df) => df
-      case SplitTables(pos, neg) => pos.unionAll(neg)
+    def asTriples(e: DataFrame) =
+      e.select(col("src").as(TripleSchema.subject), col("dst").as(TripleSchema.objekt))
+    def oneStep(frontier: DataFrame, e: DataFrame): DataFrame =
+      frontier.join(e, frontier("node") === e("src")).select(col("dst").as("node")).distinct()
+    def levels(first: DataFrame, e: DataFrame, zero: DataFrame, lo: Int,
+        hi: Option[Int], close: DataFrame => Seq[DataFrame]): DataFrame = {
+      val step = e.select(subj.as("node"), obj.as("__next"))
+      val deepest = hi.getOrElse(lo)
+      var level = if (deepest >= 2) first.localCheckpoint() else first
+      var parts = if (lo <= 1 && hi.forall(_ >= 1)) Seq(level) else Nil
+      for (k <- 2 to deepest) {
+        level = level.join(step, "node")
+          .select(level.columns.filter(_ != "node").map(col) :+ col("__next").as("node"): _*)
+          .distinct()
+        if (k % 4 == 0) level = level.localCheckpoint()
+        if (k >= lo) parts :+= level
+      }
+      if (hi.isEmpty) parts = close(level)
+      if (lo == 0) parts :+= zero
+      if (parts.length == 1) parts.head else parts.reduce(_.unionAll(_)).distinct()
     }
-    val spark = base.sparkSession
-    import spark.implicits._
-    // `?v seq <bound>`: evaluate the INVERSE path — steps reversed and each
-    // step's direction flipped (`(a/b)⁻¹ = b⁻¹/a⁻¹`; closure modifiers
-    // commute with inversion) — seeded at the bound object, binding the
-    // subject variable.
-    val forward = (pat.s, pat.o) match {
-      case (Constant(_), Variable(_)) => true
-      case (Variable(_), Constant(_)) => false
-      case _ => throw new IllegalArgumentException(
-        "property path needs exactly one bound end in the subset " +
-          "(all-pairs closure is not planned)")
+    def walk(frontier: DataFrame, p: Path): DataFrame = p match {
+      case PathSeq(ps) => ps.foldLeft(frontier)(walk)
+      case Rep(x, lo, None) =>
+        val e = steps(x)
+        reachableFrom(asTriples(e), if (lo == 1) oneStep(frontier, e) else frontier)
+      case Rep(x, _, _) => frontier.unionAll(oneStep(frontier, steps(x))).distinct()
+      case x => oneStep(frontier, steps(x))
     }
-    val (steps, outerMod) =
-      if (forward) parsed
-      else (parsed._1.reverse.map(st => st.copy(inverse = !st.inverse)), parsed._2)
-    val oVar = (if (forward) pat.o else pat.s).asInstanceOf[Variable].name
-    val seedId = (if (forward) pat.s else pat.o) match {
-      case Constant(l) => enc.get(l)
-      case _ => throw new IllegalStateException("unreachable")
-    }
-    // src→dst edge set of one step: predicate-filtered scan, reversed for ^
-    def stepEdges(st: PathStep): DataFrame = {
-      val ids = st.preds.flatMap(enc.get)
-      val e = base.filter(col(TripleSchema.predicate).isin(ids: _*))
-      if (st.inverse)
-        e.select(col(TripleSchema.objekt).as("src"), col(TripleSchema.subject).as("dst"))
-      else
-        e.select(col(TripleSchema.subject).as("src"), col(TripleSchema.objekt).as("dst"))
-    }
-    def oneStep(frontier: DataFrame, edges: DataFrame): DataFrame =
-      frontier.join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node")).distinct()
-    val seed = seedId.toSeq.toDF("node") // unknown subject term: empty seed
-    val result = outerMod match {
-      case Some(mod) =>
-        // group closure: compose the sequence into one edge relation, then
-        // close over it (reachableFrom includes its seeds — exactly the
-        // zero-step case `*` needs)
-        val composed = steps.map(stepEdges).reduceLeft { (a, b) =>
-          a.join(b, a("dst") === b("src")).select(a("src"), b("dst"))
-        }
-        mod match {
-          case '+' => graft.operators.Graph.reachableFrom(
-            composed.select(col("src").as(TripleSchema.subject), col("dst").as(TripleSchema.objekt)),
-            oneStep(seed, composed))
-          case '*' => graft.operators.Graph.reachableFrom(
-            composed.select(col("src").as(TripleSchema.subject), col("dst").as(TripleSchema.objekt)),
-            seed)
-          case _ => seed.unionAll(oneStep(seed, composed)).distinct() // '?'
-        }
-      case None =>
-        steps.foldLeft(seed) { (frontier, st) =>
-          val edges = stepEdges(st)
-          val asTriples = edges.select(
-            col("src").as(TripleSchema.subject), col("dst").as(TripleSchema.objekt))
-          st.mod match {
-            case None => oneStep(frontier, edges)
-            case Some('+') =>
-              graft.operators.Graph.reachableFrom(asTriples, oneStep(frontier, edges))
-            case Some('*') =>
-              graft.operators.Graph.reachableFrom(asTriples, frontier)
-            case Some(_) => // '?': zero-or-one, no fixpoint
-              frontier.unionAll(oneStep(frontier, edges)).distinct()
-          }
-        }
-    }
-    result.select(col("node").as(oVar))
-  }
-
-  /** One QUAD pattern (a GRAPH-variable group member) → filtered scan of
-    * the quad store projected to its variable columns, the graph column
-    * bound to the group's graph variable.
-    */
-  private def planQuadPattern(pat: TriplePattern, gVar: String, idx: Int,
-      quads: DataFrame, enc: Map[String, Int]): DataFrame = {
-    val positions = Seq(
-      (pat.s, TripleSchema.subject),
-      (pat.p, TripleSchema.predicate),
-      (pat.o, TripleSchema.objekt),
-      (Variable(gVar): Term, TripleSchema.graph))
-    val filters: Seq[Column] = positions.collect {
-      case (Constant(l), c) => enc.get(l) match {
-        case Some(id) => col(c) === lit(id)
-        case None => lit(false)
+    def fromSeed(seed: Option[Int], p: Path): DataFrame = {
+      val seedDf = seed.toSeq.toDF("node")
+      p match {
+        case Rep(x, lo, hi) if !x.isInstanceOf[PathSeq] =>
+          val e = edges(x)
+          val direct = e.filter(subj === lit(seed.getOrElse(Int.MinValue)))
+            .select(obj.as("node")).distinct()
+          levels(direct, e, seedDf, lo, hi, l => Seq(reachableFrom(e, l)))
+        case _ => walk(seedDf, p)
       }
     }
-    val varCols = positions.collect { case (Variable(v), c) => (v, c) }
-    val selfEq: Seq[Column] = varCols.groupBy(_._1).values.collect {
-      case vs if vs.size > 1 => vs.map(_._2).sliding(2).map {
-        case Seq(a, b) => col(a) === col(b)
-      }.reduce(_ && _)
-    }.toSeq
-    val filtered = (filters ++ selfEq).foldLeft(quads)(_.filter(_))
-    val distinctVars = varCols.distinctBy(_._1)
-    filtered.select(distinctVars.map { case (v, c) => col(c).as(v) }: _*)
+    (s, path, o) match {
+      case (Constant(l), _, Variable(v)) => fromSeed(enc.get(l), path).select(col("node").as(v))
+      case (Variable(v), _, Constant(l)) =>
+        fromSeed(enc.get(l), path.inverse).select(col("node").as(v))
+      case (Variable(sv), Rep(x, lo, hi), Variable(ov)) if !x.isInstanceOf[PathSeq] =>
+        val e = edges(x)
+        def closure(level: DataFrame): Seq[DataFrame] = {
+          val pairs = reachablePairs(e, budgetRows = DefaultClosureBudget)
+          if (lo <= 1) Seq(pairs)
+          else {
+            // {n,}: exact-n pairs composed with the closure beyond them
+            val pn = level.localCheckpoint()
+            Seq(pn, pn.join(pairs.select(col("root").as("node"), col("node").as("__far")), "node")
+              .select(col("root"), col("__far").as("node")))
+          }
+        }
+        val nodes = e.select(subj.as("n")).unionAll(e.select(obj)).distinct()
+        val out = levels(e.select(subj.as("root"), obj.as("node")).distinct(), e,
+          nodes.select(col("n").as("root"), col("n").as("node")), lo, hi, closure)
+        if (sv == ov) out.filter(col("root") === col("node")).select(col("root").as(sv))
+        else out.select(col("root").as(sv), col("node").as(ov))
+      case _ => throw new IllegalArgumentException(
+        s"property path needs one bound end in the subset (two only for a closure or " +
+          s"quantifier over one step): $s $path $o")
+    }
   }
 
-  /** One pattern → filtered scan projected to its variable columns. */
-  private def planPattern(
-      pat: TriplePattern, idx: Int, store: Store, enc: Map[String, Int]): DataFrame = {
+  /** One pattern → filtered scan projected to its variable columns; with
+    * `graph`, a QUAD pattern (a GRAPH-variable group member) over a quad
+    * store whose graph column binds that variable.
+    */
+  private def planPattern(pat: TriplePattern, idx: Int, store: Store,
+      enc: Map[String, Int], graph: Option[String] = None): DataFrame = {
 
     val base: DataFrame = (store, pat.s) match {
       case (SingleTable(df), _) => df
@@ -1397,13 +965,14 @@ object BgpPlanner {
           case Some(_) => neg
           case None => pos.limit(0) // unknown term: empty
         }
-      case (SplitTables(pos, neg), _: Variable) => pos.unionAll(neg)
+      case (SplitTables(_, _), _) => allTriples(store)
     }
 
     val positions = Seq(
       (pat.s, TripleSchema.subject),
       (pat.p, TripleSchema.predicate),
-      (pat.o, TripleSchema.objekt))
+      (pat.o, TripleSchema.objekt)) ++
+      graph.map(g => (Variable(g): Term, TripleSchema.graph))
 
     val filters: Seq[Column] = positions.collect {
       case (Constant(l), c) =>

@@ -11,6 +11,65 @@ package graft.sparql
 sealed trait Term
 final case class Variable(name: String) extends Term
 final case class Constant(lexical: String) extends Term
+/** A property path in the predicate position (see [[Path]]). */
+final case class PathTerm(path: Path) extends Term
+
+/** A SPARQL 1.1 property path, parsed once by [[SparqlParser]].
+  * Grammar, loosest binding first (`name` is `:?\w+`, a dictionary term):
+  * {{{
+  * path    ::= seq ('|' seq)*                     Alt
+  * seq     ::= elt ('/' elt)*                     PathSeq
+  * elt     ::= '^' elt | primary mod?             Inv; ^p+ parses as (^p)+
+  * primary ::= name | '!' negset | '(' path ')'   Link | NegSet
+  * negset  ::= name | '(' name ('|' name)* ')'
+  * mod     ::= '+' | '*' | '?' | '{' n '}' | '{' n ',}' | '{' n ',' m '}'
+  *                                                Rep(p, lo, hi); n <= m <= 20
+  * }}}
+  * The engine evaluates this subset of it; anything else fails with
+  * "unsupported property path" (`step` is a name, a parenthesized
+  * alternation of names, or either under `^`):
+  *  - `^name`, and sequences of `name`s and `^name`s: rewritten by the
+  *    parser into plain patterns joined through fresh `__pathN` variables;
+  *  - `!negset` alone: a scan over every other predicate;
+  *  - `step+`, `step*`, `step?`: closure over one step, an alternation of
+  *    `name`s and `^name`s, or a `!negset`;
+  *  - `name{n,m}` and `(name|...){n,m}`, in all three quantifier forms;
+  *  - `(step/step/...)+` (or `*`, `?`): closure over the composed
+  *    sequence, with one bound end;
+  *  - `step/step/...` whose steps may carry `+`, `*` or `?`, with one
+  *    bound end.
+  */
+sealed trait Path {
+  /** Predicate lexical forms the path mentions, for dictionary encoding. */
+  def preds: Seq[String] = this match {
+    case Link(p) => Seq(p)
+    case NegSet(ps) => ps
+    case Inv(p) => p.preds
+    case Rep(p, _, _) => p.preds
+    case Alt(ps) => ps.flatMap(_.preds)
+    case PathSeq(ps) => ps.flatMap(_.preds)
+  }
+
+  /** The same relation walked backwards: (a/b)⁻¹ = b⁻¹/a⁻¹, and
+    * modifiers commute with inversion.
+    */
+  def inverse: Path = this match {
+    case Inv(p) => p
+    case PathSeq(ps) => PathSeq(ps.reverse.map(_.inverse))
+    case Rep(p, lo, hi) => Rep(p.inverse, lo, hi)
+    case p => Inv(p)
+  }
+}
+final case class Link(pred: String) extends Path
+final case class Inv(p: Path) extends Path
+final case class Alt(ps: Seq[Path]) extends Path
+final case class PathSeq(ps: Seq[Path]) extends Path
+/** `!name` / `!(name|...)`: any predicate outside the set. */
+final case class NegSet(names: Seq[String]) extends Path
+/** `p{lo,hi}`; `hi = None` is unbounded. `+` is (1, None), `*` is
+  * (0, None), `?` is (0, Some(1)).
+  */
+final case class Rep(p: Path, lo: Int, hi: Option[Int]) extends Path
 
 final case class TriplePattern(s: Term, p: Term, o: Term)
 
@@ -531,9 +590,8 @@ object SparqlParser {
   /** Split a brace-free pattern group on dots DELIMITED BY WHITESPACE (or
     * line end) and outside quotes — dots inside <uri>s or quoted literals
     * don't split. With a `fresh` variable supply, predicate positions may be
-    * property-path expressions — sequence `:p/:q` and inverse `^:p` steps —
-    * each rewritten into plain patterns chained through fresh variables
-    * (`fresh = null` in CONSTRUCT templates, where paths are not triples).
+    * property paths (see [[expandPattern]]; `fresh = null` in CONSTRUCT
+    * templates, where paths are not triples).
     */
   private def splitPatterns(body: String, fresh: () => String = null): Seq[TriplePattern] =
     body.split("\\s+\\.(?=\\s|$)(?=(?:[^']*'[^']*')*[^']*$)")
@@ -566,40 +624,139 @@ object SparqlParser {
     vars -> rows
   }
 
-  /** One pattern text → its plain patterns. A sequence path `e1/e2/.../en`
-    * (each step a predicate name, optionally `^`-inverted) chains n plain
-    * patterns through n-1 fresh intermediate variables; a lone inverse
-    * `^:p` swaps subject and object. The closure syntax (`:p+`, `(:p|:q)*`)
-    * stays a single pattern — the planner routes it to the BFS operator.
+  /** One pattern text → its plain patterns, or one pattern whose predicate
+    * is a [[PathTerm]]. A lone `^name` swaps subject and object; a sequence
+    * of single names, each optionally `^`-inverted, chains n plain patterns
+    * through n-1 fresh intermediate variables, so it plans as one static
+    * join. Without a fresh-variable supply (CONSTRUCT templates) any path
+    * syntax fails: a path is not a triple.
     */
   private def expandPattern(text: String, fresh: () => String): Seq[TriplePattern] = {
     val toks = tokenize(text)
     require(toks.length == 3, s"triple pattern needs 3 terms, got ${toks.length} in: $text")
     val p = toks(1)
-    val pathLike = !p.startsWith("?") && fresh != null &&
-      (p.matches("\\^?:?\\w+(?:/\\^?:?\\w+)+") || p.matches("\\^:?\\w+"))
-    if (!pathLike) {
-      // Predicate tokens carrying property-path syntax that neither the
-      // sequence rewrite above nor the planner's recognizers (closure,
-      // negated set, sequence-with-closure) accept must FAIL LOUDLY —
-      // falling through as a constant term would encode to nothing and
-      // silently return an empty result instead of an error. Quoted
-      // literals and raw URIs are lexical forms, never path syntax.
-      if (!p.startsWith("?") && !p.startsWith("'") && !p.startsWith("<") &&
-          p.exists(c => "/|+*?^!(){}".contains(c)) &&
-          !BgpPlanner.supportedPathSyntax(p))
-        throw new IllegalArgumentException(s"unsupported property path: $p")
-      Seq(parsePattern(text))
+    // quoted literals and raw URIs are lexical forms, never path syntax
+    if ("?'<".contains(p.head) || !p.exists(c => "/|+*?^!(){}".contains(c)))
+      return Seq(parsePattern(text))
+    def unsupported = new IllegalArgumentException(s"unsupported property path: $p")
+    if (fresh == null) throw unsupported
+    def pattern(s: String, pred: Term, o: String) = TriplePattern(toTerm(s), pred, toTerm(o))
+    val path = parsePath(p)
+    val chain = path match {
+      case PathSeq(ps) if ps.forall(singleLink) => ps
+      case x if singleLink(x) => Seq(x)
+      case _ => Nil
     }
-    else {
-      val steps = p.split("/").toSeq
-      val nodes = toks(0) +: Seq.fill(steps.length - 1)("?" + fresh()) :+ toks(2)
-      steps.zipWithIndex.map { case (st, i) =>
-        val (inv, pred) = if (st.startsWith("^")) (true, st.substring(1)) else (false, st)
-        val (sTok, oTok) = if (inv) (nodes(i + 1), nodes(i)) else (nodes(i), nodes(i + 1))
-        TriplePattern(toTerm(sTok), toTerm(pred), toTerm(oTok))
+    if (chain.nonEmpty) {
+      val nodes = toks(0) +: Seq.fill(chain.length - 1)("?" + fresh()) :+ toks(2)
+      chain.zipWithIndex.map {
+        case (Inv(x), i) => pattern(nodes(i + 1), Constant(x.preds.head), nodes(i))
+        case (x, i) => pattern(nodes(i), Constant(x.preds.head), nodes(i + 1))
       }
     }
+    else if (evaluated(path)) Seq(pattern(toks(0), PathTerm(path), toks(2)))
+    else throw unsupported
+  }
+
+  private def singleLink(p: Path): Boolean = p match {
+    case Link(_) | Inv(Link(_)) => true
+    case _ => false
+  }
+
+  /** The subset of [[Path]] the planner evaluates (listed on [[Path]]),
+    * beyond the plain patterns the parser rewrites.
+    */
+  private def evaluated(path: Path): Boolean = {
+    def names(p: Path) = p match {
+      case Link(_) => true
+      case Alt(ps) => ps.forall(_.isInstanceOf[Link])
+      case _ => false
+    }
+    def step(p: Path) = names(p) || (p match {
+      case Inv(x) => names(x)
+      case _ => false
+    })
+    def modifier(lo: Int, hi: Option[Int]) = hi.isEmpty && lo <= 1 || lo == 0 && hi.contains(1)
+    path match {
+      case NegSet(_) => true
+      case Rep(e, lo, hi) if !modifier(lo, hi) => names(e)
+      case Rep(e, _, _) => step(e) || (e match {
+        case NegSet(_) => true
+        case Alt(ms) => ms.forall(singleLink)
+        case PathSeq(ps) => ps.forall(step)
+        case _ => false
+      })
+      case PathSeq(ps) => ps.forall {
+        case Rep(e, lo, hi) => modifier(lo, hi) && step(e)
+        case e => step(e)
+      }
+      case _ => false
+    }
+  }
+
+  private val pathNameRe = ":?\\w+".r
+  private val digitsRe = "\\d+".r
+
+  /** Parse one property-path token by the grammar on [[Path]]. */
+  private def parsePath(text: String): Path = {
+    var i = 0
+    def fail() = throw new IllegalArgumentException(s"unsupported property path: $text")
+    def eat(c: Char): Boolean = {
+      val hit = i < text.length && text.charAt(i) == c
+      if (hit) i += 1
+      hit
+    }
+    def expect(c: Char): Unit = if (!eat(c)) fail()
+    def token(re: scala.util.matching.Regex): Option[String] = {
+      val m = re.findPrefixOf(text.substring(i))
+      m.foreach(t => i += t.length)
+      m
+    }
+    def name(): String = token(pathNameRe).getOrElse(fail())
+    def sepBy[A](sep: Char)(one: => A): Seq[A] = {
+      val out = scala.collection.mutable.ListBuffer(one)
+      while (eat(sep)) out += one
+      out.toList
+    }
+    def alt(): Path = sepBy('|')(seq()) match {
+      case Seq(p) => p
+      case ps => Alt(ps)
+    }
+    def seq(): Path = sepBy('/')(elt()) match {
+      case Seq(p) => p
+      case ps => PathSeq(ps)
+    }
+    def elt(): Path =
+      if (eat('^')) elt() match {
+        case Rep(p, lo, hi) => Rep(Inv(p), lo, hi)
+        case p => Inv(p)
+      }
+      else modified(primary())
+    def primary(): Path =
+      if (eat('!')) NegSet(
+        if (eat('(')) { val ns = sepBy('|')(name()); expect(')'); ns }
+        else Seq(name()))
+      else if (eat('(')) { val p = alt(); expect(')'); p }
+      else Link(name())
+    def modified(p: Path): Path =
+      if (eat('+')) Rep(p, 1, None)
+      else if (eat('*')) Rep(p, 0, None)
+      else if (eat('?')) Rep(p, 0, Some(1))
+      else if (eat('{')) {
+        val n = token(digitsRe).getOrElse(fail()).toInt
+        val m = if (eat(',')) token(digitsRe).map(_.toInt) else Some(n)
+        expect('}')
+        require(m.forall(_ >= n), s"path quantifier needs n <= m: $text")
+        // the bounded composition is one join per level — cap the plan
+        // depth the syntax can demand
+        require(n <= 20 && m.forall(_ <= 20),
+          s"path quantifier bound beyond the subset's 20-level cap: $text")
+        Rep(p, n, m)
+      }
+      else p
+    val path = alt()
+    if (i != text.length) fail()
+    path
   }
 
   /** Split on a two-character operator (`||` / `&&`) at paren depth 0 and

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.{Dictionary, TripleSchema}
 import graft.plans.Layouts
-import graft.sparql.{BgpQuery, BindTerm, Constant, SparqlParser, TriplePattern, Variable}
+import graft.sparql._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -56,6 +56,7 @@ class PropertySpec extends AnyFunSuite {
     def render(t: graft.sparql.Term): String = t match {
       case Variable(v) => s"?$v"
       case Constant(l) => s"'$l'"
+      case PathTerm(p) => renderPath(p)
     }
     forSamples(genBgp, 100) { bgp =>
       val text = "SELECT * WHERE { " +
@@ -94,6 +95,126 @@ class PropertySpec extends AnyFunSuite {
         case 2 => assert(q.inlineValues.nonEmpty)
         case 3 => assert(q.limit.contains(limit) && q.offset.contains(limit))
         case 4 => assert(q.havings.nonEmpty && q.groupByVars == Seq(v1))
+      }
+    }
+  }
+
+  /** SPARQL text of a path, parenthesized so that it parses back to `p`. */
+  private def renderPath(p: Path): String = {
+    def group(x: Path) = x match {
+      case Link(n) => n
+      case _ => s"(${renderPath(x)})"
+    }
+    p match {
+      case Link(n) => n
+      case NegSet(Seq(n)) => s"!$n"
+      case NegSet(ns) => ns.mkString("!(", "|", ")")
+      case Inv(x) => "^" + group(x)
+      case Alt(ps) => ps.map(renderPath).mkString("|")
+      case PathSeq(ps) => ps.map {
+        case a: Alt => s"(${renderPath(a)})"
+        case x => renderPath(x)
+      }.mkString("/")
+      case Rep(x, lo, hi) => group(x) + ((lo, hi) match {
+        case (1, None) => "+"
+        case (0, None) => "*"
+        case (0, Some(1)) => "?"
+        case (n, Some(m)) if n == m => s"{$n}"
+        case (n, None) => s"{$n,}"
+        case (n, Some(m)) => s"{$n,$m}"
+      })
+    }
+  }
+
+  test("property: random paths match an in-memory BFS on both store layouts") {
+    // paths from the evaluated subset, on the SparqlSpec fixture graph:
+    // render -> parse is the identity, and the Spark answer equals a
+    // set-based reference walk over the edge list, on the single-table and
+    // the sign-split store alike
+    val names = Gen.frequency(4 -> Gen.oneOf(":p1", ":p2", ":p3", ":loop"), 1 -> Gen.const(":nosuch"))
+    val linkSet: Gen[Path] = Gen.oneOf(
+      names.map(Link(_)),
+      Gen.choose(2, 3).flatMap(Gen.listOfN(_, names)).map(ns => Alt(ns.distinct.map(Link(_))))
+        .map { case Alt(Seq(one)) => one; case a => a })
+    val step: Gen[Path] = Gen.oneOf(linkSet, linkSet.map(Inv(_)))
+    val modifier = Gen.oneOf((1, None), (0, None), (0, Some(1)))
+    val quantifier = for {
+      lo <- Gen.choose(0, 3)
+      hi <- Gen.option(Gen.choose(lo, lo + 2))
+    } yield (lo, hi)
+    def rep(g: Gen[Path], bounds: Gen[(Int, Option[Int])]): Gen[Path] =
+      for { x <- g; (lo, hi) <- bounds } yield Rep(x, lo, hi)
+    val negSet = Gen.choose(1, 2).flatMap(Gen.listOfN(_, names)).map(ns => NegSet(ns.distinct))
+    val mixedAlt = Gen.listOfN(2, Gen.zip(names, Gen.oneOf(true, false)))
+      .map(ms => Alt(ms.map { case (n, inv) => if (inv) Inv(Link(n)) else Link(n) }))
+    // closures and quantifiers also take two variable ends
+    val pairable = Gen.oneOf(rep(linkSet, quantifier),
+      rep(Gen.oneOf(step, mixedAlt, negSet), modifier))
+    val sequence = Gen.choose(2, 3).flatMap(Gen.listOfN(_, Gen.oneOf(step, rep(step, modifier))))
+      .suchThat(_.exists {
+        case Link(_) | Inv(Link(_)) => false
+        case _ => true
+      })
+      .map(PathSeq(_))
+    val oneEnd = Gen.oneOf(sequence, rep(Gen.choose(2, 3).flatMap(Gen.listOfN(_, step))
+      .map(PathSeq(_)), modifier), negSet)
+    val nodes = SparqlSpec.terms.take(8)
+    val genCase = for {
+      two <- Gen.oneOf(true, false)
+      path <- if (two) pairable else oneEnd
+      (id, seed) <- Gen.oneOf(nodes)
+      objectBound <- Gen.oneOf(true, false)
+    } yield (path, id, seed, objectBound, two)
+
+    // reference: relations as sets of (from, to) pairs
+    val ids = SparqlSpec.terms.map(_.swap).toMap
+    def rel(p: Path): Set[(Int, Int)] = p match {
+      case Link(n) => SparqlSpec.edges.collect { case (s, q, o) if ids.get(n).contains(q) => (s, o) }.toSet
+      case NegSet(ns) =>
+        SparqlSpec.edges.collect { case (s, q, o) if !ns.flatMap(ids.get).contains(q) => (s, o) }.toSet
+      case Inv(x) => rel(x).map(_.swap)
+      case Alt(ps) => ps.map(rel).reduce(_ ++ _)
+      case PathSeq(ps) => ps.map(rel).reduce { (a, b) =>
+        for { (x, m) <- a; (m2, y) <- b if m == m2 } yield (x, y) }
+      case Rep(x, _, _) => throw new IllegalStateException(s"no relation for $x")
+    }
+    def step1(from: Set[Int], r: Set[(Int, Int)]) = r.collect { case (a, b) if from(a) => b }
+    def reach(from: Set[Int], p: Path): Set[Int] = p match {
+      case PathSeq(ps) => ps.foldLeft(from)(reach)
+      case Rep(x, lo, hi) =>
+        val r = rel(x)
+        val atLo = (1 to lo).foldLeft(from)((f, _) => step1(f, r))
+        var (seen, level, k) = (atLo, atLo, lo)
+        while (level.nonEmpty && hi.forall(k < _)) {
+          level = if (hi.isEmpty) step1(level, r) -- seen else step1(level, r)
+          seen ++= level
+          k += 1
+        }
+        seen
+      case x => step1(from, rel(x))
+    }
+
+    val (engine, triples) = SparqlSpec.fixture(spark)
+    val stores = Seq(engine.registerSingleTable(triples), engine.registerSplitTables(triples))
+    forSamples(genCase, 30) { case (path, id, seed, objectBound, two) =>
+      val text = renderPath(path)
+      val parsed = SparqlParser.parse(s"SELECT ?o WHERE { '$seed' $text ?o }")
+      assert(parsed.patterns == Seq(TriplePattern(Constant(seed), PathTerm(path), Variable("o"))),
+        s"$text does not parse back to $path")
+      val graphNodes = SparqlSpec.edges.flatMap { case (s, _, o) => Seq(s, o) }.toSet + id
+      val (query, expected) =
+        if (two) {
+          val inner = path.asInstanceOf[Rep].p
+          val domain = rel(inner).flatMap { case (a, b) => Set(a, b) }
+          (s"SELECT ?s ?o WHERE { ?s $text ?o }",
+            domain.flatMap(a => reach(Set(a), path).map(b => Seq(a, b))))
+        } else if (objectBound)
+          (s"SELECT ?s WHERE { ?s $text '$seed' }",
+            graphNodes.filter(a => reach(Set(a), path)(id)).map(Seq(_)))
+        else (s"SELECT ?o WHERE { '$seed' $text ?o }", reach(Set(id), path).map(Seq(_)))
+      stores.foreach { reg =>
+        val got = reg.sparql(query).collect().map(r => r.toSeq.map(_.asInstanceOf[Int])).toSet
+        assert(got == expected, s"$query")
       }
     }
   }
