@@ -32,32 +32,20 @@ object Pipeline {
   private val R = 4  // rows per LSH band -> 4 bands
   private[queries] val DIM = 64 // embedding dimension (TESTDATA embeddings)
 
-  private def views(s: SparkSession, dir: String, names: String*): Unit =
-    names.foreach(n => Tables.load(s, dir, n).createOrReplaceTempView(n))
-
-  /** Dev-only stage timer (SPARK_GRAFT_STAGE_DEBUG=1): localizes staged-
-    * materialization cost without the Spark UI. No-op otherwise. */
-  private[queries] def stageTimed[T](label: String)(f: => T): T =
-    if (sys.env.get("SPARK_GRAFT_STAGE_DEBUG").contains("1")) {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[stage] $label%-20s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    } else f
-
   private def docQuery(name: String, sql: Dialect => String): QueryDef =
     QueryDef(name, sql(DuckDialect)) { (s, dir) =>
-      views(s, dir, "documents"); s.sql(sql(SparkDialect))
+      Stage.tables(s, dir, "documents"); s.sql(sql(SparkDialect))
     }
 
   private def embQuery(name: String, sql: Dialect => String): QueryDef =
     QueryDef(name, sql(DuckDialect)) { (s, dir) =>
       graft.functions.VectorExpressions.register(s)
-      views(s, dir, "embeddings"); s.sql(sql(SparkDialect))
+      Stage.tables(s, dir, "embeddings"); s.sql(sql(SparkDialect))
     }
 
   private def custQuery(name: String, sql: Dialect => String): QueryDef =
     QueryDef(name, sql(DuckDialect)) { (s, dir) =>
-      views(s, dir, "customer"); s.sql(sql(SparkDialect))
+      Stage.tables(s, dir, "customer"); s.sql(sql(SparkDialect))
     }
 
   // ---------------------------------------------------------------- dedup
@@ -135,18 +123,19 @@ object Pipeline {
     * plan carried THREE inlined copies of the sig aggregate; measured 2.6s
     * → 1.2s isolated when fixed). So: CTE-free plans (this explode, the
     * token explodes, tf) persist + view; CTE-bearing plans (minhash sigs,
-    * ngram sets, simhash) must `localCheckpoint()` — lineage truncation
-    * makes every reference scan the materialized RDD unconditionally.
+    * ngram sets, simhash) must be staged with [[Stage.view]] — its lineage
+    * truncation makes every reference scan the materialized RDD
+    * unconditionally.
     */
   private def cachedShingles(s: SparkSession, dir: String): String = {
-    views(s, dir, "documents")
+    Stage.tables(s, dir, "documents")
     s.sql(shingleExplode(SparkDialect)).persist().createOrReplaceTempView("graft_sh")
     "SELECT doc_id, s FROM graft_sh"
   }
 
   /** Same materialization for the whitespace-token explode (`tok` CTE). */
   private def cachedTokens(s: SparkSession, dir: String): String = {
-    views(s, dir, "documents")
+    Stage.tables(s, dir, "documents")
     s.sql(SparkDialect.explodeSelect("doc_id", "documents",
         F.tokens(SparkDialect, "text"), "tk"))
       .persist().createOrReplaceTempView("graft_tok")
@@ -294,9 +283,7 @@ object Pipeline {
       s"""WITH sigs AS (${minhashSigSql(DuckDialect)})
          |, result AS (${minhashPairsSql(DuckDialect, "sigs")})
          |SELECT * FROM result""".stripMargin) { (s, dir) =>
-      val sigs = s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir))))
-        .localCheckpoint()
-      sigs.createOrReplaceTempView("minhash_sigs")
+      Stage.view("minhash_sigs", s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir)))))
       s.sql(minhashPairsSql(SparkDialect, "minhash_sigs"))
     }
 
@@ -403,9 +390,7 @@ object Pipeline {
       s"""WITH sets AS (${ngramSetSql(DuckDialect)})
          |, result AS (${ngramPairsSql(DuckDialect, "sets")})
          |SELECT * FROM result""".stripMargin) { (s, dir) =>
-      val sets = s.sql(ngramSetSql(SparkDialect, Some(cachedShingles(s, dir))))
-        .localCheckpoint()
-      sets.createOrReplaceTempView("ngram_sets")
+      Stage.view("ngram_sets", s.sql(ngramSetSql(SparkDialect, Some(cachedShingles(s, dir)))))
       s.sql(ngramPairsSql(SparkDialect, "ngram_sets"))
     }
 
@@ -547,9 +532,7 @@ object Pipeline {
       s"""WITH sims AS (${simhashSql(DuckDialect)})
          |, result AS (${simhashPairsSql(DuckDialect, "sims")})
          |SELECT * FROM result""".stripMargin) { (s, dir) =>
-      val sims = s.sql(simhashSql(SparkDialect, Some(cachedTokens(s, dir))))
-        .localCheckpoint()
-      sims.createOrReplaceTempView("simhash_vals")
+      Stage.view("simhash_vals", s.sql(simhashSql(SparkDialect, Some(cachedTokens(s, dir)))))
       s.sql(simhashPairsSql(SparkDialect, "simhash_vals"))
     }
 
@@ -695,17 +678,16 @@ object Pipeline {
          |  FROM embeddings CROSS JOIN nv),
          |${knnGraphBody(DuckDialect, "e")}""".stripMargin) { (s, dir) =>
       graft.functions.VectorExpressions.register(s)
-      views(s, dir, "embeddings")
+      Stage.tables(s, dir, "embeddings")
       val planes = autoPlanes(s.table("embeddings").count())
       // hash ONCE: the self-join references e twice and the mutuality join
       // references knn twice — inlined CTEs would run the per-row plane
       // fold 4× over the corpus
-      s.sql(
+      Stage.view("graft_knn_auto_e", s.sql(
         s"""SELECT vec_id, embedding,
            |  ${F.norm(SparkDialect, "embedding", DIM)} AS nrm,
            |  ${F.lshBucketExpr(SparkDialect, "embedding", DIM, planes.toString)} AS bkt
-           |FROM embeddings""".stripMargin)
-        .localCheckpoint().createOrReplaceTempView("graft_knn_auto_e")
+           |FROM embeddings""".stripMargin))
       s.sql(s"WITH ${knnGraphBody(SparkDialect, "graft_knn_auto_e")}")
     }
 
@@ -954,7 +936,7 @@ object Pipeline {
 
   /** Oracle: the whole search as one CTE chain (DuckDB shares CTEs; the
     * Spark side runs [[gsSparkSearch]] — the same stage SQL, one
-    * localCheckpoint per stage, BPE-trainer precedent).
+    * [[Stage.view]] per stage, BPE-trainer precedent).
     */
   private def gsOracleSql(d: Dialect): String = {
     val hops = (1 to GsHops).map { h =>
@@ -982,43 +964,32 @@ object Pipeline {
 
   private def gsSparkSearch(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    views(s, dir, "embeddings")
+    Stage.tables(s, dir, "embeddings")
     val n = s.table("embeddings").count()
     val planes = autoPlanes(n)
-    val e = s.sql(gsESelect(SparkDialect, planes.toString, "embeddings"))
-      .localCheckpoint()
-    e.createOrReplaceTempView("graft_gs_e")
-    val knn = s.sql(gsKnnSelect(SparkDialect, "graft_gs_e")).localCheckpoint()
-    knn.createOrReplaceTempView("graft_gs_knn")
-    s.sql(gsEdgesSelect("graft_gs_knn")).localCheckpoint()
-      .createOrReplaceTempView("graft_gs_edges")
+    Stage.view("graft_gs_e", s.sql(gsESelect(SparkDialect, planes.toString, "embeddings")))
+    Stage.view("graft_gs_knn", s.sql(gsKnnSelect(SparkDialect, "graft_gs_e")))
+    Stage.view("graft_gs_edges", s.sql(gsEdgesSelect("graft_gs_knn")))
     s.sql(gsQSelect("graft_gs_e")).createOrReplaceTempView("graft_gs_q")
     // the hierarchy: √n layer (model-sized, checkpointed so the broadcast
     // reuses one materialization), posting-list assignment, query routing
-    s.sql(gsLayerSelect("graft_gs_e", gsLayerMod(n).toString))
-      .localCheckpoint().createOrReplaceTempView("graft_gs_l1")
-    s.sql(gsL2Select("graft_gs_l1", (gsLayerMod(n) * gsLayerMod2(n)).toString))
-      .localCheckpoint().createOrReplaceTempView("graft_gs_l2")
-    s.sql(gsL1RouteSelect(SparkDialect, "graft_gs_l1", "graft_gs_l2"))
-      .localCheckpoint().createOrReplaceTempView("graft_gs_l1r")
-    s.sql(gsBaseRouteSelect(SparkDialect, "graft_gs_e", "graft_gs_l2"))
-      .localCheckpoint().createOrReplaceTempView("graft_gs_basr")
-    s.sql(gsAssignHierSelect(SparkDialect, "graft_gs_e", "graft_gs_l1",
-        "graft_gs_basr", "graft_gs_l1r"))
-      .localCheckpoint().createOrReplaceTempView("graft_gs_asg")
-    s.sql(gsQProbeSelect(SparkDialect, "graft_gs_q", "graft_gs_l1"))
-      .localCheckpoint().createOrReplaceTempView("graft_gs_qc")
-    var frontier = s.sql(gsScoreTop(SparkDialect,
+    Stage.view("graft_gs_l1", s.sql(gsLayerSelect("graft_gs_e", gsLayerMod(n).toString)))
+    Stage.view("graft_gs_l2",
+      s.sql(gsL2Select("graft_gs_l1", (gsLayerMod(n) * gsLayerMod2(n)).toString)))
+    Stage.view("graft_gs_l1r", s.sql(gsL1RouteSelect(SparkDialect, "graft_gs_l1", "graft_gs_l2")))
+    Stage.view("graft_gs_basr",
+      s.sql(gsBaseRouteSelect(SparkDialect, "graft_gs_e", "graft_gs_l2")))
+    Stage.view("graft_gs_asg", s.sql(gsAssignHierSelect(SparkDialect, "graft_gs_e", "graft_gs_l1",
+        "graft_gs_basr", "graft_gs_l1r")))
+    Stage.view("graft_gs_qc", s.sql(gsQProbeSelect(SparkDialect, "graft_gs_q", "graft_gs_l1")))
+    // each hop reads the previous frontier as graft_gs_f
+    var frontier = Stage.view("graft_gs_f", s.sql(gsScoreTop(SparkDialect,
         gsEntryCand("graft_gs_qc", "graft_gs_asg"),
-        "graft_gs_q", "graft_gs_e", GsBeam))
-      .localCheckpoint()
-    for (_ <- 1 to GsHops) {
-      frontier.createOrReplaceTempView("graft_gs_f")
-      frontier = s.sql(gsScoreTop(SparkDialect,
+        "graft_gs_q", "graft_gs_e", GsBeam)))
+    for (_ <- 1 to GsHops)
+      frontier = Stage.view("graft_gs_f", s.sql(gsScoreTop(SparkDialect,
           gsHopCand("graft_gs_f", "graft_gs_edges"),
-          "graft_gs_q", "graft_gs_e", GsBeam))
-        .localCheckpoint()
-    }
+          "graft_gs_q", "graft_gs_e", GsBeam)))
     frontier
   }
 
@@ -1234,19 +1205,16 @@ object Pipeline {
     */
   private def embPcaPowerSpark(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    views(s, dir, "embeddings")
+    Stage.tables(s, dir, "embeddings")
     val d = SparkDialect
     // Materialize qz BEFORE exploding: with the explode stacked directly
     // on the quantize projection, CollapseProject inlines the amax
     // aggregate fold into every lane of the lane transform (it appears in
     // both the CASE condition and the divisor), turning the scan into
     // O(DIM²) folds per row — measured 1.4s vs 0.2s for the qz scan alone.
-    val qz = s.sql(s"WITH ${quantCte(d)} SELECT vec_id, qv FROM qz")
-      .localCheckpoint()
-    qz.createOrReplaceTempView("graft_pca_qz")
-    val x = s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_pca_qz")
-      .localCheckpoint()
-    x.createOrReplaceTempView("graft_pca_x")
+    Stage.view("graft_pca_qz", s.sql(s"WITH ${quantCte(d)} SELECT vec_id, qv FROM qz"))
+    val x = Stage.view("graft_pca_x",
+      s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_pca_qz"))
     // The direction vector is DIM-sized MODEL STATE (the IVF-centroid
     // precedent): collect the 64-row w aggregate per iteration and
     // normalize on the driver with the IDENTICAL truncating int64
@@ -1383,17 +1351,13 @@ object Pipeline {
       s"""WITH ${quantCte(dd)},
          |x AS ($duckX),
          |${kmeansBodySql(dd, "x")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "embeddings")
+      Stage.tables(s, dir, "embeddings")
       val d = SparkDialect
       // materialize qz before exploding (CollapseProject would inline the
       // absmax fold into every lane — the embPcaPowerSpark lesson), then
       // the exploded lane matrix once (referenced by all 4 stages)
-      val qz = s.sql(s"WITH ${quantCte(d)} SELECT vec_id, qv FROM qz")
-        .localCheckpoint()
-      qz.createOrReplaceTempView("graft_km_qz")
-      val x = s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_km_qz")
-        .localCheckpoint()
-      x.createOrReplaceTempView("graft_km_x")
+      Stage.view("graft_km_qz", s.sql(s"WITH ${quantCte(d)} SELECT vec_id, qv FROM qz"))
+      Stage.view("graft_km_x", s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_km_qz"))
       s.sql(s"WITH ${kmeansBodySql(d, "graft_km_x")}")
     }
   }
@@ -1455,13 +1419,9 @@ object Pipeline {
       s"""WITH ${quantCte(DuckDialect)},
          |x AS ($duckPqX),
          |${embClusterSample(DuckDialect, "x")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "embeddings")
-      val qz = s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz")
-        .localCheckpoint()
-      qz.createOrReplaceTempView("graft_cs_qz")
-      val x = s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_cs_qz")
-        .localCheckpoint()
-      x.createOrReplaceTempView("graft_cs_x")
+      Stage.tables(s, dir, "embeddings")
+      Stage.view("graft_cs_qz", s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz"))
+      Stage.view("graft_cs_x", s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_cs_qz"))
       s.sql(s"WITH ${embClusterSample(SparkDialect, "graft_cs_x")}")
     }
 
@@ -1471,15 +1431,11 @@ object Pipeline {
          |x AS ($duckPqX),
          |${dedupSemanticSql(DuckDialect, "x")}""".stripMargin) { (s, dir) =>
       graft.functions.VectorExpressions.register(s)
-      views(s, dir, "embeddings")
+      Stage.tables(s, dir, "embeddings")
       // materialize the quantized lane matrix once (the embKmeansLloyd
       // lesson: it feeds every assign/recompute stage)
-      val qz = s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz")
-        .localCheckpoint()
-      qz.createOrReplaceTempView("graft_sd_qz")
-      val x = s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_sd_qz")
-        .localCheckpoint()
-      x.createOrReplaceTempView("graft_sd_x")
+      Stage.view("graft_sd_qz", s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz"))
+      Stage.view("graft_sd_x", s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_sd_qz"))
       s.sql(s"WITH ${dedupSemanticSql(SparkDialect, "graft_sd_x")}")
     }
 
@@ -1733,30 +1689,27 @@ object Pipeline {
     * downstream reference — sim_ivf_pq_residual's physical plan measured
     * 1220 Exchange nodes / 16.6k plan lines at sf0.1 (guide §2.4: remove
     * shuffles outright; §7.2: read the plan). Each multiply-referenced
-    * model relation is localCheckpoint'ed ONCE and registered as a temp
-    * view; every stage runs the IDENTICAL per-relation SQL the oracle's
-    * CTEs define, so results stay bit-identical. Registers
+    * model relation is staged ONCE ([[Stage.view]]); every stage runs the
+    * IDENTICAL per-relation SQL the oracle's CTEs define, so results stay
+    * bit-identical. Registers
     * `graft_${tag}_{s1c2,s1a2,s2c2,cvc2,cva2}` (cvc2 is a pure projection
     * over the checkpointed s2c2 — no extra job). */
   private[queries] def ivf2ModelViews(s: SparkSession, xView: String,
       k0: String, tag: String): Unit = {
     val d = SparkDialect
-    def mat(sql: String, view: String): Unit = stageTimed(view) {
-      s.sql(sql).localCheckpoint().createOrReplaceTempView(view)
-    }
     // level-1 train + final assignment in ONE job: the chain is linear, so
     // inlining it costs nothing, and only its END relation (s1a2, 3 refs
     // downstream) needs materializing — a separate s1c2 barrier measured
     // pure serialization overhead.
-    mat(s"WITH ${pqTrainCtes(d, xView, "s1", DIM, k0)}, " +
-      s"${pqAssignCtes(d, xView, "s1", 2, "s1c2")} " +
-      "SELECT vec_id, m, cid FROM s1a2", s"graft_${tag}_s1a2")
-    mat(s"WITH ${ivf2SubTrainCtes(d, xView, s"graft_${tag}_s1a2", k0)} " +
-      "SELECT scid, sub, i, c FROM s2c2", s"graft_${tag}_s2c2")
-    mat(s"WITH ${ivf2SubAssignCtes(d, xView, s"graft_${tag}_s1a2",
-        s"graft_${tag}_s2c2")} " +
-      s"SELECT vec_id, 0 AS m, scid*1024 + sub AS cid FROM s2a2",
-      s"graft_${tag}_cva2")
+    Stage.view(s"graft_${tag}_s1a2", s.sql(
+      s"WITH ${pqTrainCtes(d, xView, "s1", DIM, k0)}, " +
+        s"${pqAssignCtes(d, xView, "s1", 2, "s1c2")} SELECT vec_id, m, cid FROM s1a2"))
+    Stage.view(s"graft_${tag}_s2c2", s.sql(
+      s"WITH ${ivf2SubTrainCtes(d, xView, s"graft_${tag}_s1a2", k0)} " +
+        "SELECT scid, sub, i, c FROM s2c2"))
+    Stage.view(s"graft_${tag}_cva2", s.sql(
+      s"WITH ${ivf2SubAssignCtes(d, xView, s"graft_${tag}_s1a2", s"graft_${tag}_s2c2")} " +
+        "SELECT vec_id, 0 AS m, scid*1024 + sub AS cid FROM s2a2"))
     s.sql(s"SELECT scid*1024 + sub AS cid, 0 AS m, i, c FROM graft_${tag}_s2c2")
       .createOrReplaceTempView(s"graft_${tag}_cvc2")
   }
@@ -1766,16 +1719,11 @@ object Pipeline {
   private[queries] def pqModelViews(s: SparkSession, xView: String,
       tag: String, scale: Int = 1000, withCodes: Boolean = true): Unit = {
     val d = SparkDialect
-    stageTimed(s"graft_${tag}_pqc2") {
-      s.sql(s"WITH ${pqTrainCtes(d, xView, "pq", 8, "8", scale)} " +
-          "SELECT cid, m, i, c FROM pqc2")
-        .localCheckpoint().createOrReplaceTempView(s"graft_${tag}_pqc2")
-    }
-    if (withCodes) stageTimed(s"graft_${tag}_pqa2") {
-      s.sql(s"WITH ${pqAssignCtes(d, xView, "pq", 2, s"graft_${tag}_pqc2", scale)} " +
-          "SELECT vec_id, m, cid FROM pqa2")
-        .localCheckpoint().createOrReplaceTempView(s"graft_${tag}_pqa2")
-    }
+    Stage.view(s"graft_${tag}_pqc2", s.sql(
+      s"WITH ${pqTrainCtes(d, xView, "pq", 8, "8", scale)} SELECT cid, m, i, c FROM pqc2"))
+    if (withCodes) Stage.view(s"graft_${tag}_pqa2", s.sql(
+      s"WITH ${pqAssignCtes(d, xView, "pq", 2, s"graft_${tag}_pqc2", scale)} " +
+        "SELECT vec_id, m, cid FROM pqa2"))
   }
 
   /** Hierarchical ENCODE against an already-trained two-level model
@@ -1864,13 +1812,10 @@ object Pipeline {
     * RESIDUAL gates are the exception — see [[ivfPqResidualSpark]]. */
   private def ivfPqSpark(body: (String, String) => String): (SparkSession, String) => DataFrame =
     (s, dir) => {
-      views(s, dir, "embeddings")
-      val qz = s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz")
-        .localCheckpoint()
-      qz.createOrReplaceTempView("graft_pq_qz")
-      val x = s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_pq_qz")
-        .localCheckpoint()
-      x.createOrReplaceTempView("graft_pq_x")
+      Stage.tables(s, dir, "embeddings")
+      val qz = Stage.view("graft_pq_qz",
+        s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz"))
+      Stage.view("graft_pq_x", s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_pq_qz"))
       // auto-K literal: one count job over the checkpointed per-vector
       // relation (the oracle's nv CTE computes the identical value)
       val k0 = autoCoarseCells(qz.count()).toString
@@ -1889,27 +1834,18 @@ object Pipeline {
     * previous stage's relation, so results are bit-identical. */
   private def ivfPqResidualSpark(tail: String => String): (SparkSession, String) => DataFrame =
     (s, dir) => {
-      views(s, dir, "embeddings")
-      val qz = stageTimed("qz") {
-        s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz")
-          .localCheckpoint()
-      }
-      qz.createOrReplaceTempView("graft_pq_qz")
-      val x = stageTimed("x") {
-        s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_pq_qz")
-          .localCheckpoint()
-      }
-      x.createOrReplaceTempView("graft_pq_x")
-      val k0 = stageTimed("k0count") { autoCoarseCells(qz.count()).toString }
+      Stage.tables(s, dir, "embeddings")
+      val qz = Stage.view("graft_pq_qz",
+        s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz"))
+      Stage.view("graft_pq_x",
+        s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_pq_qz"))
+      val k0 = autoCoarseCells(qz.count()).toString
       ivf2ModelViews(s, "graft_pq_x", k0, "pq")
       // residual lanes (already milli-unit): x − assigned leaf centroid
-      stageTimed("xr") {
-        s.sql(
-          """SELECT x.vec_id, x.i, x.x*1000 - c.c AS x
-            |FROM graft_pq_x x JOIN graft_pq_cva2 a ON a.vec_id = x.vec_id
-            |JOIN graft_pq_cvc2 c ON c.cid = a.cid AND c.i = x.i""".stripMargin)
-          .localCheckpoint().createOrReplaceTempView("graft_pq_xr")
-      }
+      Stage.view("graft_pq_xr", s.sql(
+        """SELECT x.vec_id, x.i, x.x*1000 - c.c AS x
+          |FROM graft_pq_x x JOIN graft_pq_cva2 a ON a.vec_id = x.vec_id
+          |JOIN graft_pq_cvc2 c ON c.cid = a.cid AND c.i = x.i""".stripMargin))
       // codebooks only: the code relation (pqa2, ONE downstream reference)
       // is inlined into the serve tail — a checkpoint there is a pure
       // barrier (the assign compute runs once either way)
@@ -2219,17 +2155,13 @@ object Pipeline {
     * the butterfly relation itself is 32 rows of model state). */
   private def opqSpark(body: (String, String) => String): (SparkSession, String) => DataFrame =
     (s, dir) => {
-      views(s, dir, "embeddings")
-      val qz = s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz")
-        .localCheckpoint()
-      qz.createOrReplaceTempView("graft_opq_qz")
-      val x = s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_opq_qz")
-        .localCheckpoint()
-      x.createOrReplaceTempView("graft_opq_x")
-      val xrot = s.sql(s"WITH ${ivfPqOpqCtes(SparkDialect, "graft_opq_x")} " +
-          "SELECT vec_id, i, x FROM xrot")
-        .localCheckpoint()
-      xrot.createOrReplaceTempView("graft_opq_xrot")
+      Stage.tables(s, dir, "embeddings")
+      val qz = Stage.view("graft_opq_qz",
+        s.sql(s"WITH ${quantCte(SparkDialect)} SELECT vec_id, qv FROM qz"))
+      val x = Stage.view("graft_opq_x",
+        s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_opq_qz"))
+      Stage.view("graft_opq_xrot", s.sql(s"WITH ${ivfPqOpqCtes(SparkDialect, "graft_opq_x")} " +
+          "SELECT vec_id, i, x FROM xrot"))
       val k0 = autoCoarseCells(qz.count()).toString
       s.sql(body("graft_opq_xrot", k0))
     }
@@ -2426,11 +2358,9 @@ object Pipeline {
     QueryDef("dedup_winnow_pairs",
       s"""WITH ${winnowCtes(DuckDialect)}
          |${dedupWinnowPairsSelect("fps")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
-      val fps = s.sql(
-        s"WITH ${winnowCtes(SparkDialect)} SELECT doc_id, fp FROM fps")
-        .localCheckpoint()
-      fps.createOrReplaceTempView("graft_winnow_fps")
+      Stage.tables(s, dir, "documents")
+      Stage.view("graft_winnow_fps", s.sql(
+        s"WITH ${winnowCtes(SparkDialect)} SELECT doc_id, fp FROM fps"))
       s.sql(dedupWinnowPairsSelect("graft_winnow_fps"))
     }
 
@@ -2488,11 +2418,9 @@ object Pipeline {
     QueryDef("dedup_exact_substring",
       s"""WITH ${exactSubGramCtes(DuckDialect)}
          |${exactSubBody("g")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
-      val g = s.sql(
-        s"WITH ${exactSubGramCtes(SparkDialect)} SELECT doc_id, i, kg FROM g")
-        .localCheckpoint()
-      g.createOrReplaceTempView("graft_xsub_g")
+      Stage.tables(s, dir, "documents")
+      Stage.view("graft_xsub_g", s.sql(
+        s"WITH ${exactSubGramCtes(SparkDialect)} SELECT doc_id, i, kg FROM g"))
       s.sql(exactSubBody("graft_xsub_g"))
     }
 
@@ -2534,13 +2462,10 @@ object Pipeline {
       s"""WITH ${exactSubGramCtes(DuckDialect)},
          |gc AS (${exactSubCappedSel("g")})
          |${exactSubBody("gc")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
-      val g = s.sql(
-        s"WITH ${exactSubGramCtes(SparkDialect)} SELECT doc_id, i, kg FROM g")
-        .localCheckpoint()
-      g.createOrReplaceTempView("graft_xsubc_g")
-      val gc = s.sql(exactSubCappedSel("graft_xsubc_g")).localCheckpoint()
-      gc.createOrReplaceTempView("graft_xsubc_gc")
+      Stage.tables(s, dir, "documents")
+      Stage.view("graft_xsubc_g", s.sql(
+        s"WITH ${exactSubGramCtes(SparkDialect)} SELECT doc_id, i, kg FROM g"))
+      Stage.view("graft_xsubc_gc", s.sql(exactSubCappedSel("graft_xsubc_g")))
       s.sql(exactSubBody("graft_xsubc_gc"))
     }
 
@@ -2617,15 +2542,13 @@ object Pipeline {
     QueryDef("dedup_span_scrub",
       s"""WITH ${scrubShgCtes(DuckDialect)},
          |${spanScrubSelect(DuckDialect, "sshg")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       // sshg is referenced twice (repeated-span aggregate + the occurrence
       // join); it is a CTE-bearing plan, so per the materialization rule it
-      // must localCheckpoint — persist+view would silently re-run the
+      // must be staged (Stage.view) — persist+view would silently re-run the
       // explode + window per reference.
-      val shg = s.sql(
-        s"WITH ${scrubShgCtes(SparkDialect)} SELECT doc_id, pos, t, sh FROM sshg")
-        .localCheckpoint()
-      shg.createOrReplaceTempView("graft_scrub_shg")
+      Stage.view("graft_scrub_shg", s.sql(
+        s"WITH ${scrubShgCtes(SparkDialect)} SELECT doc_id, pos, t, sh FROM sshg"))
       s.sql(s"WITH ${spanScrubSelect(SparkDialect, "graft_scrub_shg")}")
     }
 
@@ -2679,11 +2602,9 @@ object Pipeline {
     QueryDef("corpus_split_leakage",
       s"""WITH ${winnowCtes(DuckDialect)},
          |${splitLeakageSelect("fps", DuckDialect)}""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
-      val fps = s.sql(
-        s"WITH ${winnowCtes(SparkDialect)} SELECT doc_id, fp FROM fps")
-        .localCheckpoint()
-      fps.createOrReplaceTempView("graft_leak_fps")
+      Stage.tables(s, dir, "documents")
+      Stage.view("graft_leak_fps", s.sql(
+        s"WITH ${winnowCtes(SparkDialect)} SELECT doc_id, fp FROM fps"))
       s.sql(s"WITH ${splitLeakageSelect("graft_leak_fps", SparkDialect)}")
     }
 
@@ -2809,14 +2730,13 @@ object Pipeline {
     * merge table.
     */
   private def bpeSparkChain(s: SparkSession, dir: String): (DataFrame, Seq[(Long, String, Long)]) = {
-    views(s, dir, "documents")
-    var cur = s.sql(s"WITH ${bpePrefix(SparkDialect)} SELECT w, f, pos, sym FROM s0")
-      .localCheckpoint()
+    Stage.tables(s, dir, "documents")
+    // each round reads the current symbol relation as graft_bpe_prev
+    var cur = Stage.view("graft_bpe_prev",
+      s.sql(s"WITH ${bpePrefix(SparkDialect)} SELECT w, f, pos, sym FROM s0"))
     val merges = Seq.newBuilder[(Long, String, Long)]
     for (r <- 1 to BpeRounds) {
-      cur.createOrReplaceTempView("graft_bpe_prev")
-      val p = s.sql(bpePairScan("graft_bpe_prev")).localCheckpoint()
-      p.createOrReplaceTempView("graft_bpe_p")
+      Stage.view("graft_bpe_p", s.sql(bpePairScan("graft_bpe_prev")))
       val top = s.sql(s"SELECT pair, CAST(cnt AS BIGINT) AS cnt FROM (${bpePairCount("graft_bpe_p")}) c ORDER BY cnt DESC, pair LIMIT 1")
         .collect()
       if (top.nonEmpty) {
@@ -2826,8 +2746,8 @@ object Pipeline {
         import s.implicits._
         Seq(top(0).getString(0)).toDF("pair")
           .createOrReplaceTempView("graft_bpe_top")
-        cur = s.sql(bpeMergeSelect("graft_bpe_p",
-          "(SELECT pair FROM graft_bpe_top)")).localCheckpoint()
+        cur = Stage.view("graft_bpe_prev",
+          s.sql(bpeMergeSelect("graft_bpe_p", "(SELECT pair FROM graft_bpe_top)")))
       }
     }
     (cur, merges.result())
@@ -2988,18 +2908,15 @@ object Pipeline {
     * backtrack (round-14, [[uniDpWalkViews]]). */
   private[queries] def unigramViews(s: SparkSession, dir: String): Unit = {
     val d = SparkDialect
-    views(s, dir, "documents")
-    def mat(sql: String, view: String): Unit = stageTimed(view) {
-      s.sql(sql).localCheckpoint().createOrReplaceTempView(view)
-    }
+    Stage.tables(s, dir, "documents")
     // INCREMENTAL head staging (round-13): each relation builds on the
     // previous stage's checkpointed view — the old form re-ran the whole
     // head (tokenize → wf → sub → …) inside every one of the four head
     // materializations (2.7 s of train's 4.9 s at sf0.1). Same per-relation
     // SQL text as the oracle's CTEs.
     val tok = d.explodeSelect("doc_id", "documents", F.tokens(d, "text"), "w")
-    mat(s"SELECT doc_id, w FROM ($tok) toks", "graft_uni_toks")
-    mat(unigramWfSel("graft_uni_toks"), "graft_uni_wf")
+    Stage.view("graft_uni_toks", s.sql(s"SELECT doc_id, w FROM ($tok) toks"))
+    Stage.view("graft_uni_wf", s.sql(unigramWfSel("graft_uni_toks")))
     // Round-14 head refinement (guide §2.4: eliminate recomputation): the
     // round-13 head still derived the substring explosion `sub` twice (once
     // inside the pcost statement, once inside occ), and the piece-count
@@ -3010,20 +2927,20 @@ object Pipeline {
     // window (SUM(c) OVER ()) instead of the oracle's CROSS JOIN over a
     // separate tt aggregate, so `voc` is evaluated once — SUM is
     // associative, so tt and therefore pcost are the identical integers.
-    mat(s"WITH ${unigramSubCtes(d, "graft_uni_wf")} " +
-      "SELECT w, f, i, l, p FROM sub", "graft_uni_sub")
-    mat("SELECT p, CAST(SUM(f) AS BIGINT) AS c FROM graft_uni_sub GROUP BY p",
-      "graft_uni_pc")
-    mat(s"""WITH voc AS (SELECT p, c FROM graft_uni_pc WHERE length(p) = 1
+    Stage.view("graft_uni_sub",
+      s.sql(s"WITH ${unigramSubCtes(d, "graft_uni_wf")} SELECT w, f, i, l, p FROM sub"))
+    Stage.view("graft_uni_pc",
+      s.sql("SELECT p, CAST(SUM(f) AS BIGINT) AS c FROM graft_uni_sub GROUP BY p"))
+    Stage.view("graft_uni_pcost",
+      s.sql(s"""WITH voc AS (SELECT p, c FROM graft_uni_pc WHERE length(p) = 1
           |  UNION ALL
           |  SELECT p, c FROM (SELECT p, c,
           |      ROW_NUMBER() OVER (ORDER BY c DESC, p) AS rn
           |    FROM graft_uni_pc WHERE length(p) > 1 AND c >= 2) vm WHERE rn <= 64)
           |SELECT p, c, CAST(${F.log2Micro(d, "tt")} - ${F.log2Micro(d, "c")}
           |  AS BIGINT) AS pcost
-          |FROM (SELECT p, c, SUM(c) OVER () AS tt FROM voc) v""".stripMargin,
-      "graft_uni_pcost")
-    mat(unigramOccSel("graft_uni_sub", "graft_uni_pcost"), "graft_uni_occ")
+          |FROM (SELECT p, c, SUM(c) OVER () AS tt FROM voc) v""".stripMargin))
+    Stage.view("graft_uni_occ", s.sql(unigramOccSel("graft_uni_sub", "graft_uni_pcost")))
     uniDpWalkViews(s, "graft_uni_occ", "graft_uni_wf", "graft_uni")
   }
 
@@ -3052,9 +2969,6 @@ object Pipeline {
     */
   private def uniDpWalkViews(s: SparkSession, occView: String,
       wfView: String, out: String): Unit = {
-    def mat(sql: String, view: String): Unit = stageTimed(view) {
-      s.sql(sql).localCheckpoint().createOrReplaceTempView(view)
-    }
     def square(eRef: String): String =
       s"""SELECT w, j0, j1, MIN(cost) AS cost FROM (
          |    SELECT w, j0, j1, cost FROM $eRef
@@ -3067,17 +2981,17 @@ object Pipeline {
     // plain temp view, no barrier.
     s.sql(s"SELECT w, j0, j1, pcost AS cost FROM $occView")
       .createOrReplaceTempView(s"${out}_e1")
-    mat(square(s"${out}_e1"), s"${out}_e2")
-    mat(square(s"${out}_e2"), s"${out}_e4")
-    mat(square(s"${out}_e4"), s"${out}_e8")
+    Stage.view(s"${out}_e2", s.sql(square(s"${out}_e1")))
+    Stage.view(s"${out}_e4", s.sql(square(s"${out}_e2")))
+    Stage.view(s"${out}_e8", s.sql(square(s"${out}_e4")))
     // dp8: cost 0 at j = 0 (edges never end at 0: j1 ≥ 1), E8(0, j) else.
-    mat(s"""SELECT w, j, MIN(cost) AS cost FROM (
+    Stage.view(s"${out}_dp", s.sql(s"""SELECT w, j, MIN(cost) AS cost FROM (
           |    SELECT w, CAST(0 AS BIGINT) AS j, CAST(0 AS BIGINT) AS cost
           |    FROM $wfView
           |    UNION ALL
           |    SELECT w, j1 AS j, cost FROM ${out}_e8 WHERE j0 = 0) u
-          |  GROUP BY w, j""".stripMargin, s"${out}_dp")
-    mat(uniBedge(s"${out}_dp", occView), s"${out}_bedge")
+          |  GROUP BY w, j""".stripMargin))
+    Stage.view(s"${out}_bedge", s.sql(uniBedge(s"${out}_dp", occView)))
     def reach(rRef: String): String =
       s"""SELECT w, src, dst FROM (
          |    SELECT w, src, dst FROM $rRef
@@ -3087,19 +3001,19 @@ object Pipeline {
          |  GROUP BY w, src, dst""".stripMargin
     s.sql(s"SELECT w, j1 AS src, j0 AS dst FROM ${out}_bedge")
       .createOrReplaceTempView(s"${out}_r1")
-    mat(reach(s"${out}_r1"), s"${out}_r2")
-    mat(reach(s"${out}_r2"), s"${out}_r4")
-    mat(reach(s"${out}_r4"), s"${out}_r8")
+    Stage.view(s"${out}_r2", s.sql(reach(s"${out}_r1")))
+    Stage.view(s"${out}_r4", s.sql(reach(s"${out}_r2")))
+    Stage.view(s"${out}_r8", s.sql(reach(s"${out}_r4")))
     // traversed edges = bedge at the path nodes {wlen} ∪ reach(wlen);
     // dst = 0 rows match no edge (j1 ≥ 1) — the walk's pos > 0 guard.
-    mat(s"""SELECT b.w, b.p, CAST(COUNT(*) AS BIGINT) AS k
+    Stage.view(s"${out}_segc", s.sql(s"""SELECT b.w, b.p, CAST(COUNT(*) AS BIGINT) AS k
           |FROM ${out}_bedge b JOIN (
           |    SELECT w, wlen AS pos FROM $wfView
           |    UNION ALL
           |    SELECT r.w, r.dst AS pos FROM ${out}_r8 r
           |    JOIN $wfView wf ON wf.w = r.w AND r.src = wf.wlen) n
           |  ON n.w = b.w AND n.pos = b.j1
-          |GROUP BY b.w, b.p""".stripMargin, s"${out}_segc")
+          |GROUP BY b.w, b.p""".stripMargin))
   }
 
   /** DuckDB inlines every CTE per REFERENCE — the 8 self-referencing DP
@@ -3162,38 +3076,27 @@ object Pipeline {
     * ([[uniDpWalkViews]]). Registers graft_uni2_{pcost, segc}. */
   private[queries] def unigram2Views(s: SparkSession, dir: String): Unit = {
     unigramViews(s, dir)
-    stageTimed("graft_uni_newc") {
-      s.sql(
-        """SELECT sc.p, CAST(SUM(sc.k * wf.f) AS BIGINT) AS em_count
-          |FROM graft_uni_segc sc JOIN graft_uni_wf wf ON wf.w = sc.w
-          |GROUP BY sc.p""".stripMargin)
-        .localCheckpoint().createOrReplaceTempView("graft_uni_newc")
-    }
+    Stage.view("graft_uni_newc", s.sql(
+      """SELECT sc.p, CAST(SUM(sc.k * wf.f) AS BIGINT) AS em_count
+        |FROM graft_uni_segc sc JOIN graft_uni_wf wf ON wf.w = sc.w
+        |GROUP BY sc.p""".stripMargin))
     val d = SparkDialect
     // vocabulary total as a window, like round 1's pcost — tt2 is the same
     // integer by SUM associativity, and voc2 is evaluated once.
-    stageTimed("graft_uni2_pcost") {
-      s.sql(
-        s"""WITH voc2 AS (SELECT pc.p,
-           |    GREATEST(COALESCE(n.em_count, 0), 1) AS c2,
-           |    COALESCE(n.em_count, 0) AS emc
-           |  FROM graft_uni_pcost pc
-           |  LEFT JOIN graft_uni_newc n ON n.p = pc.p
-           |  WHERE length(pc.p) = 1 OR COALESCE(n.em_count, 0) > 0)
-           |SELECT p, c2, emc,
-           |  CAST(${F.log2Micro(d, "tt")} - ${F.log2Micro(d, "c2")}
-           |    AS BIGINT) AS pcost
-           |FROM (SELECT p, c2, emc, SUM(c2) OVER () AS tt FROM voc2) v"""
-          .stripMargin)
-        .localCheckpoint().createOrReplaceTempView("graft_uni2_pcost")
-    }
-    stageTimed("graft_uni2_occ") {
-      s.sql(
-        """SELECT o.w, o.j0, o.j1, o.l, o.p, c.pcost
-          |FROM graft_uni_occ o JOIN graft_uni2_pcost c ON c.p = o.p"""
-          .stripMargin)
-        .localCheckpoint().createOrReplaceTempView("graft_uni2_occ")
-    }
+    Stage.view("graft_uni2_pcost", s.sql(
+      s"""WITH voc2 AS (SELECT pc.p,
+         |    GREATEST(COALESCE(n.em_count, 0), 1) AS c2,
+         |    COALESCE(n.em_count, 0) AS emc
+         |  FROM graft_uni_pcost pc
+         |  LEFT JOIN graft_uni_newc n ON n.p = pc.p
+         |  WHERE length(pc.p) = 1 OR COALESCE(n.em_count, 0) > 0)
+         |SELECT p, c2, emc,
+         |  CAST(${F.log2Micro(d, "tt")} - ${F.log2Micro(d, "c2")}
+         |    AS BIGINT) AS pcost
+         |FROM (SELECT p, c2, emc, SUM(c2) OVER () AS tt FROM voc2) v""".stripMargin))
+    Stage.view("graft_uni2_occ", s.sql(
+      """SELECT o.w, o.j0, o.j1, o.l, o.p, c.pcost
+        |FROM graft_uni_occ o JOIN graft_uni2_pcost c ON c.p = o.p""".stripMargin))
     uniDpWalkViews(s, "graft_uni2_occ", "graft_uni_wf", "graft_uni2")
   }
 
@@ -3354,16 +3257,15 @@ object Pipeline {
          |  FROM embeddings CROSS JOIN nv),
          |${embHardNegativesBody(DuckDialect, "e")}""".stripMargin) { (s, dir) =>
       graft.functions.VectorExpressions.register(s)
-      views(s, dir, "embeddings")
+      Stage.tables(s, dir, "embeddings")
       val planes = autoPlanes(s.table("embeddings").count())
       // hash ONCE (the sim_knn_graph_auto lesson): the self-join references
       // e twice — inlined, the per-row plane fold would run 2x
-      s.sql(
+      Stage.view("graft_hn_e", s.sql(
         s"""SELECT vec_id, embedding, label,
            |  ${F.norm(SparkDialect, "embedding", DIM)} AS nrm,
            |  ${F.lshBucketExpr(SparkDialect, "embedding", DIM, planes.toString)} AS bkt
-           |FROM embeddings""".stripMargin)
-        .localCheckpoint().createOrReplaceTempView("graft_hn_e")
+           |FROM embeddings""".stripMargin))
       s.sql(s"WITH ${embHardNegativesBody(SparkDialect, "graft_hn_e")}")
     }
 
@@ -3410,15 +3312,14 @@ object Pipeline {
          |  FROM embeddings CROSS JOIN nv),
          |${embTripletMineBody(DuckDialect, "e")}""".stripMargin) { (s, dir) =>
       graft.functions.VectorExpressions.register(s)
-      views(s, dir, "embeddings")
+      Stage.tables(s, dir, "embeddings")
       val planes = autoPlanes(s.table("embeddings").count())
       // hash ONCE (self-join references e twice)
-      s.sql(
+      Stage.view("graft_tm_e", s.sql(
         s"""SELECT vec_id, embedding, label,
            |  ${F.norm(SparkDialect, "embedding", DIM)} AS nrm,
            |  ${F.lshBucketExpr(SparkDialect, "embedding", DIM, planes.toString)} AS bkt
-           |FROM embeddings""".stripMargin)
-        .localCheckpoint().createOrReplaceTempView("graft_tm_e")
+           |FROM embeddings""".stripMargin))
       s.sql(s"WITH ${embTripletMineBody(SparkDialect, "graft_tm_e")}")
     }
 
@@ -3682,7 +3583,7 @@ object Pipeline {
 
   /** Positional token explode, materialized once (see [[cachedShingles]]). */
   private def cachedTokensPos(s: SparkSession, dir: String): String = {
-    views(s, dir, "documents")
+    Stage.tables(s, dir, "documents")
     s.sql(s"SELECT doc_id, posexplode(toks) AS (pos, tk) FROM " +
         s"(SELECT doc_id, ${F.tokens(SparkDialect, "text")} AS toks FROM documents) tw")
       .persist().createOrReplaceTempView("graft_tokpos")
@@ -4153,7 +4054,7 @@ object Pipeline {
 
   private def eventsQuery(name: String, sql: Dialect => String): QueryDef =
     QueryDef(name, sql(DuckDialect)) { (s, dir) =>
-      views(s, dir, "events"); s.sql(sql(SparkDialect))
+      Stage.tables(s, dir, "events"); s.sql(sql(SparkDialect))
     }
 
   /** HLL SET OPERATIONS — the reason sketches win at 100 TB is not one
@@ -4436,9 +4337,7 @@ object Pipeline {
       s"""WITH sets AS (${ngramSetSql(DuckDialect)})
          |, result AS (${dedupContainment(DuckDialect, "sets")})
          |SELECT * FROM result""".stripMargin) { (s, dir) =>
-      val sets = s.sql(ngramSetSql(SparkDialect, Some(cachedShingles(s, dir))))
-        .localCheckpoint()
-      sets.createOrReplaceTempView("ngram_sets_cont")
+      Stage.view("ngram_sets_cont", s.sql(ngramSetSql(SparkDialect, Some(cachedShingles(s, dir)))))
       s.sql(dedupContainment(SparkDialect, "ngram_sets_cont"))
     }
 
@@ -4484,16 +4383,14 @@ object Pipeline {
          |sigs AS (${minhashSigSql(d, Some("SELECT doc_id, s FROM sh0"))}),
          |result AS (${evalSelect(d, "sets", "sigs")})
          |SELECT * FROM result""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       val sh = s.sql(
         s"SELECT * FROM (${shingleExplode(SparkDialect)}) q0 WHERE doc_id < 1000")
         .persist()
       sh.createOrReplaceTempView("graft_sh_eval")
       val src = "SELECT doc_id, s FROM graft_sh_eval"
-      val sets = s.sql(ngramSetSql(SparkDialect, Some(src))).localCheckpoint()
-      sets.createOrReplaceTempView("ngram_sets_eval")
-      val sigs = s.sql(minhashSigSql(SparkDialect, Some(src))).localCheckpoint()
-      sigs.createOrReplaceTempView("minhash_sigs_eval")
+      val sets = Stage.view("ngram_sets_eval", s.sql(ngramSetSql(SparkDialect, Some(src))))
+      val sigs = Stage.view("minhash_sigs_eval", s.sql(minhashSigSql(SparkDialect, Some(src))))
       // Materialize the (1-row) eval result, then RELEASE the cached
       // shingle explode — without this its blocks squat in executor storage
       // for the rest of a 205-gate board run. The checkpointed sets/sigs
@@ -4528,9 +4425,8 @@ object Pipeline {
          |  CAST(CASE WHEN MIN(comp) = node THEN 1 ELSE 0 END AS INTEGER) AS keep
          |FROM reach GROUP BY node""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.functions.{col, when}
-      val sigs = s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir))))
-        .localCheckpoint()
-      sigs.createOrReplaceTempView("minhash_sigs_cc")
+      Stage.view("minhash_sigs_cc",
+        s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir)))))
       val pairs = s.sql(minhashPairsSql(SparkDialect, "minhash_sigs_cc"))
       val edges = pairs.select(col("a").as("u"), col("b").as("v"))
       val nodes = Tables.load(s, dir, "documents")
@@ -4814,16 +4710,15 @@ object Pipeline {
     QueryDef("text_kn_score",
       s"""WITH ${knCtes(DuckDialect)}
          |${knTail(DuckDialect, "bi", "pkn")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       val d = SparkDialect
       // every model CTE re-inlines its inputs per reference in Spark —
       // the one-statement form re-ran the token explode 10x (measured
       // 6.5s at sf0.1); materialize the bigram relation and the
       // vocabulary-sized model once
-      s.sql(s"WITH ${knBiCtes(d)} SELECT doc_id, w1, w2 FROM bi")
-        .localCheckpoint().createOrReplaceTempView("graft_kn_bi")
-      s.sql(s"WITH ${knModelCtes(d, "graft_kn_bi")} SELECT w1, w2, p_micro FROM pkn")
-        .localCheckpoint().createOrReplaceTempView("graft_kn_p")
+      Stage.view("graft_kn_bi", s.sql(s"WITH ${knBiCtes(d)} SELECT doc_id, w1, w2 FROM bi"))
+      Stage.view("graft_kn_p",
+        s.sql(s"WITH ${knModelCtes(d, "graft_kn_bi")} SELECT w1, w2, p_micro FROM pkn"))
       s.sql(knTail(d, "graft_kn_bi", "graft_kn_p"))
     }
 
@@ -4897,15 +4792,14 @@ object Pipeline {
       s"""WITH ${kn3TriCtes(DuckDialect)},
          |${kn3ModelCtes(DuckDialect, "tri")}
          |${kn3Tail(DuckDialect, "tri", "pkn3")}""".stripMargin) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       val d = SparkDialect
       // the bigram gate's materialization discipline: one token explode,
       // one model build, each checkpointed once
-      s.sql(s"WITH ${kn3TriCtes(d)} SELECT doc_id, w1, w2, w3 FROM tri")
-        .localCheckpoint().createOrReplaceTempView("graft_kn3_tri")
-      s.sql(s"WITH ${kn3ModelCtes(d, "graft_kn3_tri")} " +
-          "SELECT w1, w2, w3, p_micro FROM pkn3")
-        .localCheckpoint().createOrReplaceTempView("graft_kn3_p")
+      Stage.view("graft_kn3_tri",
+        s.sql(s"WITH ${kn3TriCtes(d)} SELECT doc_id, w1, w2, w3 FROM tri"))
+      Stage.view("graft_kn3_p", s.sql(s"WITH ${kn3ModelCtes(d, "graft_kn3_tri")} " +
+          "SELECT w1, w2, w3, p_micro FROM pkn3"))
       s.sql(kn3Tail(d, "graft_kn3_tri", "graft_kn3_p"))
     }
 
@@ -5083,10 +4977,8 @@ object Pipeline {
       s"""WITH $phashOracleCtes,
          |res AS (${imagePhashPairs(DuckDialect, "ph")})
          |SELECT * FROM res""".stripMargin) { (s, dir) =>
-      graft.operators.Multimodal.imagePHash(
-          graft.operators.Multimodal.imageTable(s, dir))
-        .localCheckpoint()
-        .createOrReplaceTempView("graft_phash")
+      Stage.view("graft_phash", graft.operators.Multimodal.imagePHash(
+          graft.operators.Multimodal.imageTable(s, dir)))
       s.sql(imagePhashPairs(SparkDialect, "graft_phash"))
     }
 
@@ -5136,10 +5028,8 @@ object Pipeline {
     QueryDef("dedup_video_frames",
       s"""WITH $frameHashOracleCtes
          |${videoDupPairsSelect("fh")}""".stripMargin) { (s, dir) =>
-      graft.operators.Multimodal.videoFrameHashes(
-          graft.operators.Multimodal.videoTable(s, dir))
-        .localCheckpoint()
-        .createOrReplaceTempView("graft_frame_hash")
+      Stage.view("graft_frame_hash", graft.operators.Multimodal.videoFrameHashes(
+          graft.operators.Multimodal.videoTable(s, dir)))
       s.sql(videoDupPairsSelect("graft_frame_hash"))
     }
 
@@ -5507,7 +5397,7 @@ object Pipeline {
     * (released by the harness's per-query clearCache).
     */
   private def cachedTf(s: SparkSession, dir: String): String = {
-    views(s, dir, "documents")
+    Stage.tables(s, dir, "documents")
     s.sql(tfSql(SparkDialect)).persist().createOrReplaceTempView("graft_tf")
     "SELECT doc_id, tk, tf FROM graft_tf"
   }
@@ -5813,7 +5703,7 @@ object Pipeline {
 
   private def corpusPreprocessDef: QueryDef =
     QueryDef("corpus_preprocess_e2e", corpusPreprocessSql(DuckDialect)) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       // f feeds the keeper aggregate AND the keeper join — materialize once
       s.sql(e2eFilteredSql(SparkDialect)).persist()
         .createOrReplaceTempView("graft_e2e_f")
@@ -5880,13 +5770,13 @@ object Pipeline {
 
   private def corpusKlDef: QueryDef =
     QueryDef("corpus_kl_divergence", corpusKlSql(DuckDialect)) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       s.sql(corpusKlSql(SparkDialect))
     }
 
   private def textPmiDef: QueryDef =
     QueryDef("text_pmi", pmiSql(DuckDialect)) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       // tokenize once (both counts read the materialized arrays); uni
       // feeds the two scoring joins + the corpus total and bc feeds the
       // scoring join + the bigram total — materialize all three (Catalyst
@@ -6121,9 +6011,8 @@ object Pipeline {
          |q AS (${editDistSql(DuckDialect, "sigs")})
          |SELECT * FROM q""".stripMargin
     QueryDef("dedup_edit_distance", oracle) { (s, dir) =>
-      val sigs = s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir))))
-        .localCheckpoint()
-      sigs.createOrReplaceTempView("minhash_sigs_ed")
+      Stage.view("minhash_sigs_ed",
+        s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir)))))
       s.sql(editDistSql(SparkDialect, "minhash_sigs_ed"))
     }
   }
@@ -6148,9 +6037,8 @@ object Pipeline {
          |  CAST(d.n_chars AS BIGINT) AS n_chars
          |FROM documents d JOIN keepers k ON CAST(d.doc_id AS BIGINT) = k.node""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.functions.col
-      val sigs = s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir))))
-        .localCheckpoint()
-      sigs.createOrReplaceTempView("minhash_sigs_apply")
+      Stage.view("minhash_sigs_apply",
+        s.sql(minhashSigSql(SparkDialect, Some(cachedShingles(s, dir)))))
       val pairs = s.sql(minhashPairsSql(SparkDialect, "minhash_sigs_apply"))
       val edges = pairs.select(col("a").as("u"), col("b").as("v"))
       val nodes = Tables.load(s, dir, "documents")
@@ -6313,7 +6201,7 @@ object Pipeline {
   private def corpusDsirSelectDef: QueryDef =
     QueryDef("corpus_dsir_select",
       dsirSql(DuckDialect, dsirFeatSql(DuckDialect))) { (s, dir) =>
-      views(s, dir, "documents")
+      Stage.tables(s, dir, "documents")
       // c is referenced by both the distribution branch and the weight
       // branch — materialize once (the cachedTf lesson)
       s.sql(dsirFeatSql(SparkDialect)).persist()
@@ -6470,10 +6358,10 @@ object Pipeline {
     * handoff the streaming learned filter broadcasts at serve time.
     */
   private[queries] def qcTrainWeights(s: SparkSession, dir: String): DataFrame = {
-    views(s, dir, "documents")
+    Stage.tables(s, dir, "documents")
     // the feature matrix feeds the statistics and the scoring pass; the
     // labels are a projection of documents, cheaper to rescan than to stage
-    s.sql(qcFeatSql(SparkDialect)).localCheckpoint().createOrReplaceTempView("graft_qc_cc")
+    Stage.view("graft_qc_cc", s.sql(qcFeatSql(SparkDialect)))
     s.sql(qcLabelSql).createOrReplaceTempView("graft_qc_y")
     val w = qcGdWeights(s, "SELECT doc_id, bkt, cnt FROM graft_qc_cc",
       "SELECT doc_id, y FROM graft_qc_y")

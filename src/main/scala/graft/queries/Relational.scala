@@ -263,7 +263,7 @@ object Relational {
         |    ELSE 'below' END AS bucket,
         |  CAST(COUNT(*) AS BIGINT) AS n
         |FROM orders GROUP BY 1""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+      Stage.tables(s, dir, "orders")
       s.sql(
         """SELECT CASE WHEN CAST(o_totalprice AS DECIMAL(18,2)) * (SELECT COUNT(*) FROM orders) > 2 * (SELECT SUM(CAST(o_totalprice AS DECIMAL(18,2))) FROM orders) THEN 'high'
           |    WHEN CAST(o_totalprice AS DECIMAL(18,2)) * (SELECT COUNT(*) FROM orders) > (SELECT SUM(CAST(o_totalprice AS DECIMAL(18,2))) FROM orders) THEN 'above'
@@ -611,7 +611,7 @@ object Relational {
         |  CAST(COUNT(*) AS BIGINT) AS n
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+      Stage.tables(s, dir, "orders")
       s.sql(
         """SELECT o_orderpriority, o_orderstatus,
           |  CAST(GROUPING(o_orderpriority) AS INTEGER) AS g_prio,
@@ -743,7 +743,7 @@ object Relational {
         |  COALESCE((MAP {'1-URGENT': 5, '2-HIGH': 4, '3-MEDIUM': 3}[o_orderpriority])[1], 0)
         |    AS urgency
         |FROM orders""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+      Stage.tables(s, dir, "orders")
       s.sql(
         """SELECT o_orderkey,
           |  COALESCE(element_at(
@@ -763,8 +763,7 @@ object Relational {
         |  AND NOT EXISTS (SELECT 1 FROM orders o2
         |                  WHERE o2.o_custkey = c.c_custkey
         |                    AND o2.o_orderpriority = '5-LOW')""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+      Stage.tables(s, dir, "customer", "orders")
       s.sql(
         """SELECT c_custkey, c_name FROM customer c
           |WHERE EXISTS (SELECT 1 FROM orders o
@@ -784,8 +783,7 @@ object Relational {
         |LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
         |         WHERE o.o_custkey = c.c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey LIMIT 1) l""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+      Stage.tables(s, dir, "customer", "orders")
       s.sql(
         """SELECT c.c_custkey, l.o_orderkey, l.o_totalprice
           |FROM customer c,
@@ -806,7 +804,7 @@ object Relational {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (PARTITION BY user_id ORDER BY ts
         |    RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW) AS DOUBLE) AS sum_1h
         |FROM events""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "events").createOrReplaceTempView("events")
+      Stage.tables(s, dir, "events")
       s.sql(
         """SELECT event_id, user_id, ts,
           |  CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY ts
@@ -918,7 +916,7 @@ object Relational {
     // engines — only the recursion-limit conf is Spark-side. ----
     QueryDef("q49_recursive_cte",
       recursiveMonthsSql) { (s, dir) =>
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+      Stage.tables(s, dir, "orders")
       val key = "spark.sql.cteRecursionLevelLimit"
       val saved = s.conf.getOption(key)
       s.conf.set(key, "2000") // month spines beyond the default 100 levels
@@ -1190,7 +1188,7 @@ object Relational {
           |ORDER BY ALL""".stripMargin
       sql
     }) { (s, dir) =>
-      Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
+      Stage.tables(s, dir, "orders")
       s.sql(
         """SELECT o_orderpriority, o_orderstatus,
           |  CAST(COUNT(*) AS BIGINT) AS n,
@@ -1213,7 +1211,7 @@ object Relational {
         |  CAST(SUM(CASE WHEN CAST(value AS DECIMAL(18,2)) = 0 THEN NULL
         |    ELSE CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) / CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) END) AS BIGINT) AS n_nonzero
         |FROM events GROUP BY event_type""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "events").createOrReplaceTempView("events")
+      Stage.tables(s, dir, "events")
       s.sql(
         """SELECT event_type,
           |  CAST(COUNT(TRY_CAST(event_type AS INTEGER)) AS BIGINT) AS n_numeric_type,
@@ -1235,7 +1233,7 @@ object Relational {
         |        unnest(regexp_extract_all(props, '\d+')) AS x,
         |        unnest(range(len(regexp_extract_all(props, '\d+')))) AS i
         |      FROM events) t""".stripMargin) { (s, dir) =>
-      Tables.load(s, dir, "events").createOrReplaceTempView("events")
+      Stage.tables(s, dir, "events")
       s.sql(
         """SELECT event_id, CAST(pos AS BIGINT) AS pos, CAST(num AS BIGINT) AS num
           |FROM (SELECT event_id,

@@ -34,11 +34,6 @@ object Streams {
     dir
   }
 
-  private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def seedKey(spark: SparkSession, sfDir: String, kind: String): String =
-    s"${System.identityHashCode(spark)}/$kind/${sfDir.hashCode & 0x7fffffff}"
-
   /** Run the three staged-batch writes with PINNED, strictly increasing
     * modification times on each batch's files: FileStreamSource orders
     * arrival by mtime, and sequential `coalesce(1)` writes can land inside
@@ -66,9 +61,7 @@ object Streams {
     * micro-batches whose event times genuinely advance the watermark.
     */
   private def stagedEventsDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "stage"), { _ =>
-      val dir = cleanScratch(spark,
-        s"events_stream_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "events_stream") { dir =>
       val all = Tables.load(spark, sfDir, "events")
       val n = all.count()
       val w = org.apache.spark.sql.expressions.Window
@@ -82,20 +75,17 @@ object Streams {
           .coalesce(1).write.mode("append").parquet(dir)
       }
       withIdx.unpersist()
-      dir
-    })
+    }
 
   /** The staged dir with every file DUPLICATED (distinct filenames), so each
     * event arrives twice in different micro-batches.
     */
   private def duplicatedEventsDir(spark: SparkSession, sfDir: String): String = {
-    // resolve the source staging BEFORE entering computeIfAbsent: a nested
-    // computeIfAbsent on the same map from inside a mapping function is a
-    // recursive update (IllegalStateException when the keys share a bin)
+    // resolve the source staging BEFORE entering Tables.staged: a nested
+    // Tables.staged call from inside its mapping function is a recursive
+    // update (IllegalStateException when the keys share a bin)
     val src = stagedEventsDir(spark, sfDir)
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "dup"), { _ =>
-      val dir = cleanScratch(spark,
-        s"events_stream_dup_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "events_stream_dup") { dir =>
       // Hadoop FS throughout (same as cleanScratch) — works on any scheme,
       // no java.nio directory-stream handle to leak
       val conf = spark.sparkContext.hadoopConfiguration
@@ -114,8 +104,7 @@ object Streams {
           }
         }
       }
-      dir
-    })
+    }
   }
 
   /** The staged dir plus a FINAL sentinel file holding one far-future event
@@ -127,10 +116,8 @@ object Streams {
     * own window never closes (nothing later arrives) and is never emitted.
     */
   private def sentinelEventsDir(spark: SparkSession, sfDir: String): String = {
-    val src = stagedEventsDir(spark, sfDir) // resolve OUTSIDE computeIfAbsent
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "sentinel"), { _ =>
-      val dir = cleanScratch(spark,
-        s"events_stream_wm_${sfDir.hashCode & 0x7fffffff}")
+    val src = stagedEventsDir(spark, sfDir) // resolve OUTSIDE Tables.staged
+    Tables.staged(spark, sfDir, "events_stream_wm") { dir =>
       val conf = spark.sparkContext.hadoopConfiguration
       val dstPath = new org.apache.hadoop.fs.Path(dir)
       val fs = dstPath.getFileSystem(conf)
@@ -169,8 +156,7 @@ object Streams {
         .filter(st => st.getPath.getName.endsWith(".parquet") &&
           !copied.contains(st.getPath.getName))
         .foreach(st => fs.setTimes(st.getPath, base + 100 * 1000L, -1))
-      dir
-    })
+    }
   }
 
   /** The sentinel staging with a SECOND 'sentinel'-typed file at +480 h,
@@ -187,14 +173,12 @@ object Streams {
     * type at the sink.
     */
   private def dualSentinelEventsDir(spark: SparkSession, sfDir: String): String = {
-    val src = sentinelEventsDir(spark, sfDir) // resolve OUTSIDE computeIfAbsent
-    // NB: key/dir must not collide with joinSentinelEventsDir's "sentinel2"
-    // / events_stream_wm2_ — a collision hands the join gates THIS staging,
+    val src = sentinelEventsDir(spark, sfDir) // resolve OUTSIDE Tables.staged
+    // NB: the kind must not collide with joinSentinelEventsDir's
+    // "events_stream_wm2" — a collision hands the join gates THIS staging,
     // whose 'sentinel'-typed rows their event-type pushed filters prune at
     // the scan, silently freezing their watermark (debugged round 5)
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "sentinel_chain"), { _ =>
-      val dir = cleanScratch(spark,
-        s"events_stream_wmc_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "events_stream_wmc") { dir =>
       val conf = spark.sparkContext.hadoopConfiguration
       val dstPath = new org.apache.hadoop.fs.Path(dir)
       val fs = dstPath.getFileSystem(conf)
@@ -231,8 +215,7 @@ object Streams {
         // a fixed offset would silently break ordering if the source
         // staging ever grew past it
         .foreach(st => fs.setTimes(st.getPath, base + (copied.size + 1) * 1000L, -1))
-      dir
-    })
+    }
   }
 
   /** TWO sentinel files (+240 h and +480 h, each its own final micro-batch),
@@ -256,10 +239,8 @@ object Streams {
     *    (+238 h), flushing every real row's result deterministically.
     */
   private def joinSentinelEventsDir(spark: SparkSession, sfDir: String): String = {
-    val src = stagedEventsDir(spark, sfDir) // resolve OUTSIDE computeIfAbsent
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "sentinel2"), { _ =>
-      val dir = cleanScratch(spark,
-        s"events_stream_wm2_${sfDir.hashCode & 0x7fffffff}")
+    val src = stagedEventsDir(spark, sfDir) // resolve OUTSIDE Tables.staged
+    Tables.staged(spark, sfDir, "events_stream_wm2") { dir =>
       val conf = spark.sparkContext.hadoopConfiguration
       val dstPath = new org.apache.hadoop.fs.Path(dir)
       val fs = dstPath.getFileSystem(conf)
@@ -297,8 +278,7 @@ object Streams {
             !before.contains(st.getPath.getName))
           .foreach(st => fs.setTimes(st.getPath, base + (si + 1) * 100 * 1000L, -1))
       }
-      dir
-    })
+    }
   }
 
   /** Hash-bucket width of the ingestion band-key store. Gate-scale value;
@@ -380,13 +360,11 @@ object Streams {
     */
   private def stagedModel(s: SparkSession, dir: String, kind: String)(
       build: => Seq[(String, DataFrame)]): Unit = {
-    val base = stageCache.computeIfAbsent(seedKey(s, dir, kind), { _ =>
-      val root = cleanScratch(s, s"${kind}_${dir.hashCode & 0x7fffffff}")
+    val base = Tables.staged(s, dir, kind) { root =>
       build.foreach { case (name, df) =>
         df.coalesce(1).write.parquet(s"$root/$name")
       }
-      root
-    })
+    }
     new java.io.File(base).listFiles().filter(_.isDirectory).foreach { d =>
       s.read.parquet(d.toString).createOrReplaceTempView(d.getName)
     }
@@ -534,16 +512,23 @@ object Streams {
     mergeStore()
   }
 
-  private def await(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def await(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
     assert(q.awaitTermination(300000), "streaming gate timed out")
-    // batch-level trace for debugging watermark/eviction timing issues
-    // (opt-in: SPARK_GRAFT_STREAM_DEBUG=1)
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-debug] ${q.name} batch=${p.batchId} " +
-          s"rows=${p.numInputRows} wm=${p.eventTime.get("watermark")}")
-      }
-  }
+
+  /** The checkpoint-restart schedule shared by the restart gates: pass 1
+    * lands arrival 0 and drains it with an AvailableNow `foreachBatch`
+    * query on `ckpt`, then stops cleanly; pass 2 lands arrivals 1 and 2
+    * (arrival 0 REMAINS present) and a NEW query restarts from the same
+    * checkpoint — the source's log must skip arrival 0, so nothing
+    * replays. */
+  private def drainRestarted(source: => DataFrame, ckpt: String,
+      land: Int => Unit)(batch: (DataFrame, Long) => Unit): Unit =
+    Seq(Seq(0), Seq(1, 2)).foreach { arrivals =>
+      arrivals.foreach(land)
+      await(source.writeStream.foreachBatch(batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start())
+    }
 
   /** Stage the RdfBridge triple set as THREE parquet files (memoized per
     * session + dataset): with `maxFilesPerTrigger=1` the triple STREAM
@@ -555,17 +540,14 @@ object Streams {
     * parquet chunks — the arriving query stream of the ANN serving gate.
     */
   private def stagedEmbQueriesDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "embq"), { _ =>
-      val dir = cleanScratch(spark,
-        s"embq_stream_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "embq_stream") { dir =>
       val qs = Tables.load(spark, sfDir, "embeddings")
         .filter(col("vec_id") % 50 === 0)
       stageOrdered(spark, dir) { i =>
         qs.filter(pmod(hash(col("vec_id")), lit(3)) === i)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      dir
-    })
+    }
 
   /** Corpus-vector arrival stream for the upsert-index gate: three files
     * appended in deterministic order (`vec_id % 3` = 0, 1, 2), so the
@@ -573,16 +555,13 @@ object Streams {
     * — an SQL-expressible arrival schedule the oracle replays.
     */
   private def stagedEmbCorpusDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "embc"), { _ =>
-      val dir = cleanScratch(spark,
-        s"embc_stream_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "embc_stream") { dir =>
       val all = Tables.load(spark, sfDir, "embeddings")
       stageOrdered(spark, dir) { i =>
         all.filter(col("vec_id") % 3 === i)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      dir
-    })
+    }
 
   /** Document arrival stream for the ingestion-dedup gate: three files in
     * deterministic `doc_id % 3` order (same schedule as the corpus-vector
@@ -593,58 +572,46 @@ object Streams {
     * order, so the oracle can replay deletion visibility relationally.
     */
   private def stagedEmbDeletesDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "embdel"), { _ =>
-      val dir = cleanScratch(spark,
-        s"embdel_stream_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "embdel_stream") { dir =>
       val all = Tables.load(spark, sfDir, "embeddings")
         .filter(col("vec_id") % 97 === 0).select("vec_id")
       stageOrdered(spark, dir) { i =>
         all.filter(col("vec_id") % 3 === i)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      dir
-    })
+    }
 
   private def stagedDocsDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "docs"), { _ =>
-      val dir = cleanScratch(spark,
-        s"docs_stream_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "docs_stream") { dir =>
       val all = Tables.load(spark, sfDir, "documents")
       stageOrdered(spark, dir) { i =>
         all.filter(col("doc_id") % 3 === i)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      dir
-    })
+    }
 
   /** The events table staged OUT OF TIME ORDER (split by user_id % 3, each
     * file spanning the full time range) — the late-data fixture: once
     * batch 0 has advanced the watermark to its own max event time, most of
     * batches 1–2 arrive behind it. */
   private def stagedEventsByUserDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "byuser"), { _ =>
-      val dir = cleanScratch(spark,
-        s"events_stream_byuser_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "events_stream_byuser") { dir =>
       val all = Tables.load(spark, sfDir, "events")
       stageOrdered(spark, dir) { i =>
         all.filter(col("user_id") % 3 === i)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      dir
-    })
+    }
 
   private def stagedTriplesDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "triples"), { _ =>
-      val dir = cleanScratch(spark,
-        s"triples_stream_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "triples_stream") { dir =>
       val all = graft.sources.RdfBridge.triples(spark, sfDir)
       val cols = all.columns.map(col)
       stageOrdered(spark, dir) { i =>
         all.filter(pmod(hash(cols: _*), lit(3)) === i)
           .coalesce(1).write.mode("append").parquet(dir)
       }
-      dir
-    })
+    }
 
   /** Run `f` with a reduced shuffle-partition count. Streaming STATE is
     * partitioned by `spark.sql.shuffle.partitions` captured at query start;
@@ -735,11 +702,9 @@ object Streams {
     val imgs = bdf.select(col("doc_id")).as[Long].mapPartitions(_.map(
       id => graft.operators.Multimodal.ImageRow(
         id, graft.operators.Multimodal.pngBytes(id % 97))))
-    graft.operators.Multimodal.imagePHash(imgs)
-      .filter(col("phash_hi") >= 0)
-      .localCheckpoint()
-      .createOrReplaceTempView("graft_img_ph")
-    val bands = ss.sql(
+    Stage.view("graft_img_ph", graft.operators.Multimodal.imagePHash(imgs)
+      .filter(col("phash_hi") >= 0))
+    val bands = Stage.view("graft_img_bands", ss.sql(
       s"""SELECT doc_id, CAST(bk AS BIGINT) AS bk,
          |  phash_hi AS ah, phash_lo AS al FROM (
          |  SELECT doc_id, phash_hi, phash_lo,
@@ -749,9 +714,7 @@ object Streams {
          |  UNION ALL SELECT doc_id, phash_hi, phash_lo,
          |    131072 + ${d.shiftRight("phash_lo", "16")} FROM graft_img_ph
          |  UNION ALL SELECT doc_id, phash_hi, phash_lo,
-         |    196608 + phash_lo % 65536 FROM graft_img_ph) b""".stripMargin)
-      .localCheckpoint()
-    bands.createOrReplaceTempView("graft_img_bands")
+         |    196608 + phash_lo % 65536 FROM graft_img_ph) b""".stripMargin))
     // rivals: the store's pruned slice (strictly earlier batches —
     // replay-safe) plus lower-id same-batch arrivals. Both sides are
     // compressed to DISTINCT hash triples (Hamming depends on the
@@ -761,10 +724,9 @@ object Streams {
     // distinct-image set instead of the arrival count — the
     // bandStoreProbe compaction lesson generalized to keyed rows.
     val parts = store.partsOf(bands.select("bk"))
-    val slice = store
+    val slice = Stage.view("graft_img_store", store
       .readBefore(store.batchSchema(imageStoreSchema), parts, batchId)
-      .select("bk", "ah", "al").localCheckpoint()
-    slice.createOrReplaceTempView("graft_img_store")
+      .select("bk", "ah", "al"))
     ss.sql(
       s"""WITH riv AS (
          |  SELECT bk, ah, al, CAST(-1 AS BIGINT) AS rid
@@ -1499,21 +1461,10 @@ object Streams {
       val out = cleanScratch(s, s"stream_anr_out_${dir.hashCode & 0x7fffffff}")
       val emb = Tables.load(s, dir, "embeddings")
       val (queries, qParts) = annQueryState(s, dir, idxDir)
-      def drainOnce(): Unit = {
-        val q = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-          .writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            annUpsertBatch(queries, qParts, idxDir, out)(b, id) }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
-      }
-      landArrival(s, staged, src, 0)
-      drainOnce()                            // version 1, then clean stop
-      landArrival(s, staged, src, 1)
-      landArrival(s, staged, src, 2)         // file 0 REMAINS present
-      drainOnce()                            // versions 2, 3 — no replay
+      // pass 1 serves version 1; the restart serves versions 2, 3
+      drainRestarted(
+        s.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(src),
+        ckpt, landArrival(s, staged, src, _))(annUpsertBatch(queries, qParts, idxDir, out))
       annReadOut(s, out)
     },
 
@@ -1795,23 +1746,19 @@ object Streams {
       // cadence: centroids retrain rarely, codes upsert constantly) —
       // disk-memoized per dataset, so timed runs measure the serve path ----
       stagedModel(s, dir, "ipumodel") {
-        s.sql(s"WITH ${Pipeline.quantCte(d)} SELECT vec_id, qv FROM qz")
-          .localCheckpoint().createOrReplaceTempView("graft_ipu_qz")
-        s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_ipu_qz")
-          .localCheckpoint().createOrReplaceTempView("graft_ipu_x")
+        Stage.view("graft_ipu_qz", s.sql(s"WITH ${Pipeline.quantCte(d)} SELECT vec_id, qv FROM qz"))
+        Stage.view("graft_ipu_x",
+          s.sql("SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_ipu_qz"))
         // two-level auto-K coarse model: BOTH levels' centroids are model
         // state (the per-batch encode routes super-then-sub)
         val k0 = Pipeline.autoCoarseCells(s.table("graft_ipu_qz").count()).toString
         val coarse = Pipeline.ivf2CoarseCtes(d, "graft_ipu_x", k0)
-        val s1c2 = s.sql(s"WITH $coarse SELECT cid, m, i, c FROM s1c2")
-          .localCheckpoint()
-        s1c2.createOrReplaceTempView("graft_ipu_s1c2")
-        val cvc2 = s.sql(s"WITH $coarse SELECT cid, m, i, c FROM cvc2")
-          .localCheckpoint()
-        cvc2.createOrReplaceTempView("graft_ipu_cvc2")
-        val pqc2 = s.sql(s"WITH ${Pipeline.pqTrainCtes(d, "graft_ipu_x", "pq", 8, 8)} SELECT cid, m, i, c FROM pqc2")
-          .localCheckpoint()
-        pqc2.createOrReplaceTempView("graft_ipu_pqc2")
+        val s1c2 = Stage.view("graft_ipu_s1c2",
+          s.sql(s"WITH $coarse SELECT cid, m, i, c FROM s1c2"))
+        val cvc2 = Stage.view("graft_ipu_cvc2",
+          s.sql(s"WITH $coarse SELECT cid, m, i, c FROM cvc2"))
+        val pqc2 = Stage.view("graft_ipu_pqc2",
+          s.sql(s"WITH ${Pipeline.pqTrainCtes(d, "graft_ipu_x", "pq", 8, 8)} SELECT cid, m, i, c FROM pqc2"))
         // query-side serve state: cell probes (nq×3) and the ADC lookup
         // table (nq×M×K) — broadcast-sized, computed once
         val serveCtes = Pipeline.ivfPqServeStaticCtes(
@@ -1839,10 +1786,9 @@ object Streams {
           // 1. encode THE BATCH: quantize + lane-explode + nearest-cell
           //    assign + PQ-encode against the broadcast-sized centroids
           bdf.createOrReplaceTempView("graft_ipu_b")
-          ss.sql(
+          Stage.view("graft_ipu_bx", ss.sql(
             s"""WITH ${Pipeline.quantCte(d, "graft_ipu_b")}
-               |SELECT vec_id, posexplode(qv) AS (i, x) FROM qz""".stripMargin)
-            .localCheckpoint().createOrReplaceTempView("graft_ipu_bx")
+               |SELECT vec_id, posexplode(qv) AS (i, x) FROM qz""".stripMargin))
           val codes = ss.sql(
             s"""WITH ${Pipeline.ivf2EncodeCtes(d, "graft_ipu_bx",
                   "graft_ipu_s1c2", "graft_ipu_cvc2")},
@@ -2232,15 +2178,14 @@ object Streams {
       val ckpt = cleanScratch(s, s"stream_cms_ckpt_${dir.hashCode & 0x7fffffff}")
       val pdir = cleanScratch(s, s"stream_cms_m_${dir.hashCode & 0x7fffffff}")
       val out = cleanScratch(s, s"stream_cms_out_${dir.hashCode & 0x7fffffff}")
-      Tables.load(s, dir, "events").createOrReplaceTempView("events")
+      Stage.tables(s, dir, "events")
       // static probe set + its 3 sketch cells per key — broadcast model state
-      val probes = s.sql(
+      Stage.view("graft_cms_probes", s.sql(
         s"""SELECT user_id, r, ${F2.cmsCellFromHash(graft.functions.SparkDialect, "h", "r")} AS cell
            |FROM (SELECT user_id, ${F2.cmsHash(graft.functions.SparkDialect, "user_id")} AS h
            |      FROM (SELECT DISTINCT user_id FROM events WHERE user_id % 37 = 0) p0) p
            |CROSS JOIN (SELECT explode(array(CAST(0 AS BIGINT), 1, 2)) AS r) rr"""
-          .stripMargin).localCheckpoint()
-      probes.createOrReplaceTempView("graft_cms_probes")
+          .stripMargin))
       val schema = s.read.parquet(src).schema
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
@@ -2488,20 +2433,10 @@ object Streams {
       val idxDir = cleanScratch(s, s"stream_irs_idx_${dir.hashCode & 0x7fffffff}")
       val out = cleanScratch(s, s"stream_irs_out_${dir.hashCode & 0x7fffffff}")
       val docs = Tables.load(s, dir, "documents")
-      def land(i: Int): Unit = landArrival(s, staged, src, i)
-      def drainOnce(): Unit = {
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-          .writeStream
-          .foreachBatch { (b: DataFrame, id: Long) => ingestE2eBatch(idxDir, out)(b, id) }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
-      }
-      land(0)
-      drainOnce()                // pass 1: batch 0 only, then clean stop
-      land(1); land(2)           // file 0 REMAINS present
-      drainOnce()                // restart from ckpt: batches 1, 2 — no replay
+      // pass 1 runs batch 0; the restart continues at batches 1, 2
+      drainRestarted(
+        s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src),
+        ckpt, landArrival(s, staged, src, _))(ingestE2eBatch(idxDir, out))
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"), col("status"))
@@ -2685,21 +2620,10 @@ object Streams {
       new org.apache.hadoop.fs.Path(idxDir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
         .mkdirs(new org.apache.hadoop.fs.Path(idxDir))
-      def drainOnce(): Unit = {
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-          .writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            imageIngestBatch(idxDir, out)(b, id) }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
-      }
-      landArrival(s, staged, src, 0)
-      drainOnce()                            // version 1, then clean stop
-      landArrival(s, staged, src, 1)
-      landArrival(s, staged, src, 2)         // file 0 REMAINS present
-      drainOnce()                            // versions 2, 3 — no replay
+      // pass 1 emits version 1; the restart emits versions 2, 3
+      drainRestarted(
+        s.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src),
+        ckpt, landArrival(s, staged, src, _))(imageIngestBatch(idxDir, out))
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"), col("status"))
@@ -2786,22 +2710,13 @@ object Streams {
         java.nio.file.Files.copy(from.toPath,
           new java.io.File(src, from.getName).toPath)
       }
-      def drainOnce(): Unit = {
-        // memory sink refuses checkpoint recovery; foreachBatch supports it
-        val q = s.readStream.format("graft-triples").load(src)
+      // memory sink refuses checkpoint recovery; foreachBatch supports it.
+      // Pass 1 drains f00; on restart the recovered marks skip f00.
+      drainRestarted(
+        s.readStream.format("graft-triples").load(src)
           .filter(col("Subject").isNotNull && col("Predicate") === -2)
-          .select("Subject", "Object")
-          .writeStream
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            b.sinkBatch(out, id) }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
-      }
-      land(0)
-      drainOnce()                 // f00 only, then clean stop
-      land(1); land(2)            // f00 REMAINS present
-      drainOnce()                 // restart: marks skip f00, drain f01+f02
+          .select("Subject", "Object"),
+        ckpt, land)((b, id) => b.sinkBatch(out, id))
       s.read.parquet(out).select("Subject", "Object")
     },
   )
@@ -2812,9 +2727,7 @@ object Streams {
     * shared directory.
     */
   private def stagedTripleTextDir(spark: SparkSession, sfDir: String): String =
-    stageCache.computeIfAbsent(seedKey(spark, sfDir, "tritext"), { _ =>
-      val dir = cleanScratch(spark,
-        s"tritext_stream_${sfDir.hashCode & 0x7fffffff}")
+    Tables.staged(spark, sfDir, "tritext_stream") { dir =>
       new java.io.File(dir).mkdirs()
       val all = graft.sources.RdfBridge.triples(spark, sfDir)
       val cols = all.columns.map(col)
@@ -2831,8 +2744,7 @@ object Streams {
         // pin strictly increasing mtimes — FileStreamSource orders by them
         dst.setLastModified(1000000000000L + i * 100000L)
       }
-      dir
-    })
+    }
 
   // -------------------------------------------- streaming top-k heavy hitters
 
@@ -3018,12 +2930,11 @@ object Streams {
       emb.createOrReplaceTempView("embeddings")
       // offline seed snapshot: the KM lowest vec_ids' quantized lanes
       // (model-sized — KM × DIM rows)
-      s.sql(s"WITH ${Pipeline.quantCte(d)} SELECT vec_id, qv FROM qz WHERE vec_id < ${Pipeline.KM}")
-        .localCheckpoint().createOrReplaceTempView("graft_smk_seedqz")
-      s.sql(
+      Stage.view("graft_smk_seedqz",
+        s.sql(s"WITH ${Pipeline.quantCte(d)} SELECT vec_id, qv FROM qz WHERE vec_id < ${Pipeline.KM}"))
+      Stage.view("graft_smk_k0", s.sql(
         """SELECT vec_id AS cid, CAST(0 AS BIGINT) AS m, i, CAST(x*1000 AS BIGINT) AS c
-          |FROM (SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_smk_seedqz) t""".stripMargin)
-        .localCheckpoint().createOrReplaceTempView("graft_smk_k0")
+          |FROM (SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_smk_seedqz) t""".stripMargin))
       val q = s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
         .writeStream
@@ -3031,10 +2942,9 @@ object Streams {
           val ss = bdf.sparkSession
           // 1. quantize + lane-explode THE BATCH
           bdf.createOrReplaceTempView("graft_smk_b")
-          ss.sql(
+          Stage.view("graft_smk_bx", ss.sql(
             s"""WITH ${Pipeline.quantCte(d, "graft_smk_b")}
-               |SELECT vec_id, posexplode(qv) AS (i, x) FROM qz""".stripMargin)
-            .localCheckpoint().createOrReplaceTempView("graft_smk_bx")
+               |SELECT vec_id, posexplode(qv) AS (i, x) FROM qz""".stripMargin))
           // 2. current centroids = seeds folded with cumulative state
           //    (model-sized — KM × DIM rows; referenced once per batch, so
           //    no checkpoint: the plan inlines the tiny state read)

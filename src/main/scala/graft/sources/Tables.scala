@@ -64,7 +64,9 @@ object Tables {
     * the operator, not its fixture construction. The key embeds the
     * sanitized dataset path plus an md5 fingerprint of the RAW path —
     * sanitization alone aliases distinct paths ('/a/b' vs '/a_b'), which
-    * would silently reuse the wrong dataset's staged fixture.
+    * would silently reuse the wrong dataset's staged fixture. The directory
+    * is emptied before `build` runs (a previous process may have left a
+    * partial or stale staging there), so builders may append.
     */
   def staged(spark: SparkSession, sfDir: String, kind: String)(build: String => Unit): String = {
     val ds = sfDir.replaceAll("[^A-Za-z0-9_.-]", "_") + "_" +
@@ -72,6 +74,8 @@ object Tables {
     val key = s"${System.identityHashCode(spark)}/$kind/$ds"
     stagedDirs.computeIfAbsent(key, { _ =>
       val dir = scratchDir(s"staged_${kind}_$ds")
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       build(dir)
       dir
     })

@@ -285,6 +285,23 @@ class StreamingSpec extends SparkTestBase {
     assert(streamed.length == batch.length && streamed.sameElements(batch))
   }
 
+  test("staged stream fixtures never alias across datasets with equal path hashes") {
+    import graft.sources.RdfBridge
+    import java.nio.file.Paths
+    val root = Files.createTempDirectory("graft_alias")
+    // "Aa" and "BB" have equal String.hashCode, so the two paths do too
+    val aa = Files.createSymbolicLink(root.resolve("Aa"), Paths.get(sf)).toString
+    val bb = Files.createSymbolicLink(root.resolve("BB"),
+      Paths.get(sf).resolveSibling("sf0.01")).toString
+    assert(aa.hashCode == bb.hashCode)
+    val gate = graft.queries.Streams.defs.find(_.name == "stream_rdf_match").get
+    val small = gate.run(spark, aa).count()
+    val big = gate.run(spark, bb).count()
+    assert(big == RdfBridge.triples(spark, bb)
+      .filter(col("Predicate") === RdfBridge.Placed).count())
+    assert(small < big)
+  }
+
   test("dropDuplicatesWithinWatermark evicts state: a post-eviction duplicate re-emits") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -1,0 +1,77 @@
+package graft.queries
+
+import graft.SparkTestBase
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.Range
+import org.apache.spark.sql.execution.LogicalRDD
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+/** The staging primitive's contract: one eager job per staged relation, a
+  * lineage-free view, and no hand-rolled copy of it elsewhere. */
+class StageSpec extends SparkTestBase {
+
+  /** Spark jobs started by `body`, counted up to a fence job: listener
+    * events arrive in order, so once the fence is seen every job of
+    * `body` has been counted. */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.test.stageJobs"
+    val n = new AtomicInteger
+    val fence = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("body") => n.incrementAndGet()
+          case Some("fence") => fence.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      body
+      sc.setLocalProperty(tag, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fence.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("Stage.view runs one job per call and registers the checkpointed relation") {
+    val src = spark.range(0, 1000, 1, 4).selectExpr("id", "id * 3 AS v")
+    assert(jobs(Stage.view("graft_stage_spec", src)) == 1)
+    val plan = spark.table("graft_stage_spec").queryExecution.analyzed
+    assert(plan.collectLeaves().map(_.getClass) == Seq(classOf[LogicalRDD]), plan.treeString)
+    assert(plan.collectFirst { case r: Range => r }.isEmpty, plan.treeString)
+    // reading the staged view re-runs nothing of the source plan
+    assert(spark.sql("SELECT SUM(v) FROM graft_stage_spec").head().getLong(0) ==
+      3L * (0 until 1000).sum)
+  }
+
+  test("no hand-rolled localCheckpoint + temp-view pair outside Stage") {
+    val dir = new java.io.File("src/main/scala/graft/queries")
+    val files = Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.endsWith(".scala") && f.getName != "Stage.scala")
+    assert(files.length >= 5, s"source guard found no sources under ${dir.getAbsolutePath}")
+    val offenders = files.toSeq.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f.toPath).asScala.toVector
+      val code = lines.map { l =>
+        val t = l.trim
+        if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) "" else l
+      }
+      code.indices.collect {
+        case i if code(i).contains(".localCheckpoint()") &&
+            code.slice(i, i + 3).exists(_.contains("createOrReplaceTempView")) =>
+          s"${f.getName}:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"stage through Stage.view instead: ${offenders.mkString(", ")}")
+  }
+}
