@@ -2,9 +2,9 @@ package graft.queries
 
 import graft.sources.Tables
 import graft.streaming.EventStreams
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** GATE-VERIFIED Structured Streaming operators (beyond reference parity —
   * the reference is batch-only): each runs a real `readStream` →
@@ -22,12 +22,22 @@ import org.apache.spark.sql.streaming.Trigger
   *    (closed) sessions are exactly the batch gaps-and-islands sessions
   *    minus each user's final (never-flushed) session — both facts pinned
   *    by StreamingSpec.
+  *
+  * Every gate drains its query through the one helper [[drain]] (checkpoint,
+  * AvailableNow trigger, start, bounded wait), reached through
+  * `drainToMemory`, `drainBatches` or `drainRestarted`, and names its
+  * checkpoint, sink and store directories through [[scratch]].
   */
 object Streams {
 
-  /** Remove-and-return a fixed scratch dir (bounded disk across runs). */
-  private def cleanScratch(spark: SparkSession, name: String): String = {
-    val dir = Tables.scratchDir(name)
+  /** The fixed scratch dir `<tag>_<hash of the dataset path>` of one gate's
+    * checkpoint, sink or store. */
+  private[graft] def scratchDir(sfDir: String, tag: String): String =
+    Tables.scratchDir(s"${tag}_${sfDir.hashCode & 0x7fffffff}")
+
+  /** Remove-and-return a gate's scratch dir (bounded disk across runs). */
+  private def scratch(spark: SparkSession, sfDir: String, tag: String): String = {
+    val dir = scratchDir(sfDir, tag)
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -81,12 +91,9 @@ object Streams {
     * event arrives twice in different micro-batches.
     */
   private def duplicatedEventsDir(spark: SparkSession, sfDir: String): String = {
-    // resolve the source staging BEFORE entering Tables.staged: a nested
-    // Tables.staged call from inside its mapping function is a recursive
-    // update (IllegalStateException when the keys share a bin)
     val src = stagedEventsDir(spark, sfDir)
     Tables.staged(spark, sfDir, "events_stream_dup") { dir =>
-      // Hadoop FS throughout (same as cleanScratch) — works on any scheme,
+      // Hadoop FS throughout (same as scratch) — works on any scheme,
       // no java.nio directory-stream handle to leak
       val conf = spark.sparkContext.hadoopConfiguration
       val dstPath = new org.apache.hadoop.fs.Path(dir)
@@ -116,7 +123,7 @@ object Streams {
     * own window never closes (nothing later arrives) and is never emitted.
     */
   private def sentinelEventsDir(spark: SparkSession, sfDir: String): String = {
-    val src = stagedEventsDir(spark, sfDir) // resolve OUTSIDE Tables.staged
+    val src = stagedEventsDir(spark, sfDir)
     Tables.staged(spark, sfDir, "events_stream_wm") { dir =>
       val conf = spark.sparkContext.hadoopConfiguration
       val dstPath = new org.apache.hadoop.fs.Path(dir)
@@ -173,7 +180,7 @@ object Streams {
     * type at the sink.
     */
   private def dualSentinelEventsDir(spark: SparkSession, sfDir: String): String = {
-    val src = sentinelEventsDir(spark, sfDir) // resolve OUTSIDE Tables.staged
+    val src = sentinelEventsDir(spark, sfDir)
     // NB: the kind must not collide with joinSentinelEventsDir's
     // "events_stream_wm2" — a collision hands the join gates THIS staging,
     // whose 'sentinel'-typed rows their event-type pushed filters prune at
@@ -239,7 +246,7 @@ object Streams {
     *    (+238 h), flushing every real row's result deterministically.
     */
   private def joinSentinelEventsDir(spark: SparkSession, sfDir: String): String = {
-    val src = stagedEventsDir(spark, sfDir) // resolve OUTSIDE Tables.staged
+    val src = stagedEventsDir(spark, sfDir)
     Tables.staged(spark, sfDir, "events_stream_wm2") { dir =>
       val conf = spark.sparkContext.hadoopConfiguration
       val dstPath = new org.apache.hadoop.fs.Path(dir)
@@ -512,30 +519,39 @@ object Streams {
     mergeStore()
   }
 
-  private def await(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    assert(q.awaitTermination(300000), "streaming gate timed out")
+  /** The one drain of every gate: start the query on checkpoint `ckpt`
+    * with `Trigger.AvailableNow` (every file present at start, then stop)
+    * and wait up to 300 s for it to terminate. */
+  private def drain(w: DataStreamWriter[_], ckpt: String): Unit =
+    assert(w.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+      .start().awaitTermination(300000), "streaming gate timed out")
+
+  /** The two sinks the gates drain into. */
+  private implicit class Drain[T](private val ds: Dataset[T]) {
+    /** Drain into the memory sink `name`; returns the sink's table. */
+    def drainToMemory(name: String, ckpt: String, mode: String = "append"): DataFrame = {
+      drain(ds.writeStream.format("memory").queryName(name).outputMode(mode), ckpt)
+      ds.sparkSession.table(name)
+    }
+
+    /** Drain through `batch`, run once per micro-batch. */
+    def drainBatches(ckpt: String, mode: String = "append")(
+        batch: (Dataset[T], Long) => Unit): Unit =
+      drain(ds.writeStream.foreachBatch(batch).outputMode(mode), ckpt)
+  }
 
   /** The checkpoint-restart schedule shared by the restart gates: pass 1
-    * lands arrival 0 and drains it with an AvailableNow `foreachBatch`
-    * query on `ckpt`, then stops cleanly; pass 2 lands arrivals 1 and 2
-    * (arrival 0 REMAINS present) and a NEW query restarts from the same
-    * checkpoint — the source's log must skip arrival 0, so nothing
-    * replays. */
+    * lands arrival 0 and drains it through `batch` on `ckpt`, then stops
+    * cleanly; pass 2 lands arrivals 1 and 2 (arrival 0 REMAINS present)
+    * and a NEW query restarts from the same checkpoint — the source's log
+    * must skip arrival 0, so nothing replays. */
   private def drainRestarted(source: => DataFrame, ckpt: String,
       land: Int => Unit)(batch: (DataFrame, Long) => Unit): Unit =
     Seq(Seq(0), Seq(1, 2)).foreach { arrivals =>
       arrivals.foreach(land)
-      await(source.writeStream.foreachBatch(batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start())
+      source.drainBatches(ckpt)(batch)
     }
 
-  /** Stage the RdfBridge triple set as THREE parquet files (memoized per
-    * session + dataset): with `maxFilesPerTrigger=1` the triple STREAM
-    * arrives in three genuine micro-batches. Slices are a deterministic
-    * hash partition of the rows — batch boundaries carry no semantics for
-    * the stateless stream-static match, so any split verifies the same.
-    */
   /** The sim_ann_lsh QUERY SUBSET (vec_id % 50 = 0) staged as three
     * parquet chunks — the arriving query stream of the ANN serving gate.
     */
@@ -563,10 +579,6 @@ object Streams {
       }
     }
 
-  /** Document arrival stream for the ingestion-dedup gate: three files in
-    * deterministic `doc_id % 3` order (same schedule as the corpus-vector
-    * stream, so the oracle can replay arrival relationally).
-    */
   /** The TOMBSTONE stream for the ANN-delete gate: delete requests
     * (`vec_id % 97 = 0`) staged as three files in `vec_id % 3` arrival
     * order, so the oracle can replay deletion visibility relationally.
@@ -581,6 +593,10 @@ object Streams {
       }
     }
 
+  /** Document arrival stream for the ingestion-dedup gate: three files in
+    * deterministic `doc_id % 3` order (same schedule as the corpus-vector
+    * stream, so the oracle can replay arrival relationally).
+    */
   private def stagedDocsDir(spark: SparkSession, sfDir: String): String =
     Tables.staged(spark, sfDir, "docs_stream") { dir =>
       val all = Tables.load(spark, sfDir, "documents")
@@ -603,6 +619,12 @@ object Streams {
       }
     }
 
+  /** Stage the RdfBridge triple set as THREE parquet files (memoized per
+    * session + dataset): with `maxFilesPerTrigger=1` the triple STREAM
+    * arrives in three genuine micro-batches. Slices are a deterministic
+    * hash partition of the rows — batch boundaries carry no semantics for
+    * the stateless stream-static match, so any split verifies the same.
+    */
   private def stagedTriplesDir(spark: SparkSession, sfDir: String): String =
     Tables.staged(spark, sfDir, "triples_stream") { dir =>
       val all = graft.sources.RdfBridge.triples(spark, sfDir)
@@ -758,15 +780,12 @@ object Streams {
       """SELECT event_id, ts, user_id, value FROM events
         |WHERE event_type = 'purchase'""".stripMargin) { (s, dir) =>
       val src = stagedEventsDir(s, dir)
-      val out = cleanScratch(s, s"stream_sink_out_${dir.hashCode & 0x7fffffff}")
-      val ckpt = cleanScratch(s, s"stream_sink_ckpt_${dir.hashCode & 0x7fffffff}")
-      val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+      val out = scratch(s, dir, "stream_sink_out")
+      val ckpt = scratch(s, dir, "stream_sink_ckpt")
+      drain(EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
+        .writeStream.format("parquet").option("path", out), ckpt)
       s.read.parquet(out)
     },
 
@@ -777,17 +796,13 @@ object Streams {
       "SELECT event_id, ts, user_id, event_type, value FROM events") { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = duplicatedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_dedup_ckpt_${dir.hashCode & 0x7fffffff}")
-      val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 2)
+      val ckpt = scratch(s, dir, "stream_dedup_ckpt")
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 2)
         .withWatermark("ts", "30 days")
         .dropDuplicates("event_id", "ts")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-        .writeStream.format("memory").queryName("g_stream_dedup")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_dedup")
+        .drainToMemory("g_stream_dedup", ckpt)
       }
     },
 
@@ -803,17 +818,13 @@ object Streams {
       "SELECT event_id, ts, user_id, event_type, value FROM events") { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = duplicatedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_dwm_ckpt_${dir.hashCode & 0x7fffffff}")
-      val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 2)
+      val ckpt = scratch(s, dir, "stream_dwm_ckpt")
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 2)
         .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-        .writeStream.format("memory").queryName("g_stream_dwm")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_dwm")
+        .drainToMemory("g_stream_dwm", ckpt)
       }
     },
 
@@ -830,19 +841,16 @@ object Streams {
         |FROM events GROUP BY window_start, event_type""".stripMargin) { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = sentinelEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_wm_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_wm_ckpt")
       // data in one batch, sentinel its own (mtime-later) batch: the
       // append-mode window SET closed by the final watermark is identical,
       // at half the state commits — the sentinel batch still demonstrates
       // cross-batch watermark progression
-      val q = EventStreams.windowedCounts(
+      EventStreams.windowedCounts(
           EventStreams.readEventStream(s, src, maxFilesPerTrigger = 3),
           "1 hour", "30 minutes")
-        .writeStream.format("memory").queryName("g_stream_wm")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_wm").filter(col("event_type") =!= "sentinel")
+        .drainToMemory("g_stream_wm", ckpt)
+        .filter(col("event_type") =!= "sentinel")
       }
     },
 
@@ -863,7 +871,7 @@ object Streams {
         |FROM events GROUP BY window_start, event_type""".stripMargin) { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = dualSentinelEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_chain_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_chain_ckpt")
       // all data in one batch; the two sentinels stay their own batches
       // (each level's flush rides one sentinel's watermark) — emitted set
       // identical, two stateful levels commit 3 batches instead of 6
@@ -872,16 +880,13 @@ object Streams {
         .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).as("v"))
-      val q = lvl1
+      lvl1
         .groupBy(window(col("window"), "1 hour"), col("event_type"))
         .agg(sum(col("n")).as("n"), sum(col("v")).cast("double").as("total_value"))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("total_value"))
-        .writeStream.format("memory").queryName("g_stream_chain")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_chain").filter(col("event_type") =!= "sentinel")
+        .drainToMemory("g_stream_chain", ckpt)
+        .filter(col("event_type") =!= "sentinel")
       }
     },
 
@@ -900,18 +905,14 @@ object Streams {
         |FROM events GROUP BY event_type""".stripMargin) { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_cagg_ckpt_${dir.hashCode & 0x7fffffff}")
-      val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+      val ckpt = scratch(s, dir, "stream_cagg_ckpt")
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)"))
             .cast("decimal(18,2)").cast("double").as("total_value"),
           max(col("ts")).as("last_ts"))
-        .writeStream.format("memory").queryName("g_stream_cagg")
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_cagg")
+        .drainToMemory("g_stream_cagg", ckpt, "complete")
       }
     },
 
@@ -930,7 +931,7 @@ object Streams {
         |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""".stripMargin) { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_ssj_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_ssj_ckpt")
       // one micro-batch for ALL data files (the join's emitted SET is
       // batch-insensitive; fewer batches = fewer state commits, the
       // dominant cost at this scale — the staging's mtime order still
@@ -943,16 +944,12 @@ object Streams {
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
           col("event_id").as("c_id"))
         .withWatermark("c_ts", "2 hours")
-      val q = purchases.join(clicks,
+      purchases.join(clicks,
           col("user_id") === col("c_user") &&
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts"))
         .select("user_id", "p_id", "c_id")
-        .writeStream.format("memory").queryName("g_stream_ssj")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_ssj")
+        .drainToMemory("g_stream_ssj", ckpt)
       }
     },
 
@@ -979,7 +976,7 @@ object Streams {
         |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""".stripMargin) { (s, dir) =>
       withStatePartitions(s, 4) {
       val src = joinSentinelEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_soj_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_soj_ckpt")
       // all 3 data files in ONE batch; the two sentinel files (stamped
       // later) stay their own watermark-advancing batches — the emitted
       // set is identical, at half the state commits
@@ -991,17 +988,14 @@ object Streams {
         .filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
           col("event_id").as("c_id"))
-      val q = purchases.join(clicks,
+      purchases.join(clicks,
           col("user_id") === col("c_user") &&
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts"),
           "left_outer")
         .select("user_id", "p_id", "c_id")
-        .writeStream.format("memory").queryName("g_stream_soj")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_soj").filter(col("user_id") >= 0)
+        .drainToMemory("g_stream_soj", ckpt)
+        .filter(col("user_id") >= 0)
       }
     },
 
@@ -1023,7 +1017,7 @@ object Streams {
         |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""".stripMargin) { (s, dir) =>
       withStatePartitions(s, 4) {
       val src = joinSentinelEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_foj_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_foj_ckpt")
       // all 3 data files in ONE batch (see the left outer join note)
       val stream = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 3)
       val purchases = stream.withWatermark("ts", "2 hours")
@@ -1033,18 +1027,15 @@ object Streams {
         .filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
           col("event_id").as("c_id"))
-      val q = purchases.join(clicks,
+      purchases.join(clicks,
           col("user_id") === col("c_user") &&
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts"),
           "full_outer")
         .select(coalesce(col("user_id"), col("c_user")).as("user_id"),
           col("p_id"), col("c_id"))
-        .writeStream.format("memory").queryName("g_stream_foj")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_foj").filter(col("user_id") >= 0)
+        .drainToMemory("g_stream_foj", ckpt)
+        .filter(col("user_id") >= 0)
       }
     },
 
@@ -1059,20 +1050,16 @@ object Streams {
         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
         |WHERE e.event_type = 'purchase'""".stripMargin) { (s, dir) =>
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_dim_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_dim_ckpt")
       val dim = broadcast(Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey")))
-      val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
         .filter(col("event_type") === "purchase")
         .join(dim, col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("ts"),
           col("user_id").cast("long").as("user_id"),
           col("c_nationkey").cast("int").as("nation"))
-        .writeStream.format("memory").queryName("g_stream_dim")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_dim")
+        .drainToMemory("g_stream_dim", ckpt)
     },
 
     // ---- foreachBatch UPSERT sink (the CDC "apply changes" pattern): each
@@ -1090,13 +1077,13 @@ object Streams {
         |  FROM events) t WHERE rnk = 1""".stripMargin) { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_ups_ckpt_${dir.hashCode & 0x7fffffff}")
-      val store = cleanScratch(s, s"stream_ups_store_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_ups_ckpt")
+      val store = scratch(s, dir, "stream_ups_store")
       val conf = s.sparkContext.hadoopConfiguration
       val storePath = new org.apache.hadoop.fs.Path(store)
       val fs = storePath.getFileSystem(conf)
-      val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-        .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .drainBatches(ckpt) { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty) {
             val cols = Seq("user_id", "ts", "event_id", "event_type", "value")
             val incoming = batch.selectExpr(cols: _*)
@@ -1122,9 +1109,6 @@ object Streams {
           }
           (): Unit
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(store)
         .select(col("user_id").cast("long").as("user_id"), col("ts"),
           col("event_id").cast("long").as("event_id"),
@@ -1147,20 +1131,16 @@ object Streams {
         |                  WHERE c.c_custkey = e.user_id
         |                    AND c.c_custkey < (SELECT MAX(user_id) / 2 FROM events))""".stripMargin) { (s, dir) =>
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_dedupst_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_dedupst_ckpt")
       val half = Tables.load(s, dir, "events")
         .agg((max(col("user_id")) / 2).as("h")).head().getDouble(0)
       val seen = broadcast(Tables.load(s, dir, "customer")
         .filter(col("c_custkey") < half).select(col("c_custkey")))
-      val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
         .join(seen, col("user_id") === col("c_custkey"), "left_anti")
         .select(col("event_id").cast("long").as("event_id"), col("ts"),
           col("user_id").cast("long").as("user_id"), col("event_type"))
-        .writeStream.format("memory").queryName("g_stream_dedupst")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_dedupst")
+        .drainToMemory("g_stream_dedupst", ckpt)
     },
 
     // ---- TRUE streaming sessionization through flatMapGroupsWithState:
@@ -1185,15 +1165,11 @@ object Streams {
       withStatePartitions(s, 8) {
       import s.implicits._
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_sess_ckpt_${dir.hashCode & 0x7fffffff}")
-      val q = EventStreams.sessionize(
+      val ckpt = scratch(s, dir, "stream_sess_ckpt")
+      EventStreams.sessionize(
           EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
             .as[EventStreams.Event], 30L * 60 * 1000)
-        .writeStream.format("memory").queryName("g_stream_sess")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_sess")
+        .drainToMemory("g_stream_sess", ckpt)
         .select(col("user_id"), col("session_start"), col("session_end"),
           col("n_events"),
           col("total_value").cast("decimal(18,2)").cast("double").as("total_value"))
@@ -1236,21 +1212,17 @@ object Streams {
       withStatePartitions(s, 2) {
       import s.implicits._
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_tws_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_tws_ckpt")
       withRocksDb(s) {
-        val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
           .as[EventStreams.Event]
           .groupByKey(_.user_id)
           .transformWithState(new EventStreams.RunningStatsProcessor,
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF()
-          .writeStream.format("memory").queryName("g_stream_tws")
-          .outputMode("update").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
+          .drainToMemory("g_stream_tws", ckpt, "update")
       }
-      s.table("g_stream_tws")
       }
     },
 
@@ -1287,21 +1259,17 @@ object Streams {
       withStatePartitions(s, 1) {
       import s.implicits._
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_twsd_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_twsd_ckpt")
       withRocksDb(s) {
-        val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
           .as[EventStreams.Event]
           .groupByKey(_.user_id)
           .transformWithState(new EventStreams.DistinctTypesProcessor,
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF()
-          .writeStream.format("memory").queryName("g_stream_twsd")
-          .outputMode("update").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
+          .drainToMemory("g_stream_twsd", ckpt, "update")
       }
-      s.table("g_stream_twsd")
       }
     },
 
@@ -1330,7 +1298,7 @@ object Streams {
       withStatePartitions(s, 2) {
       import s.implicits._
       val src = dualSentinelEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_twst_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_twst_ckpt")
       withRocksDb(s) {
         // Sentinels must REACH the watermark operator: a pre-watermark
         // row filter pushes down into the scan and silently freezes the
@@ -1339,7 +1307,7 @@ object Streams {
         // processor — their null value coalesced for the typed encoder,
         // their user -1 sessions dropped from the OUTPUT, where the
         // filter cannot push through the stateful operator.
-        val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
           .withWatermark("ts", "2 hours")
           .withColumn("value", coalesce(col("value"), lit(0.0)))
           .as[EventStreams.Event]
@@ -1350,12 +1318,8 @@ object Streams {
             org.apache.spark.sql.streaming.OutputMode.Append())
           .toDF()
           .filter(col("user_id") >= 0)
-          .writeStream.format("memory").queryName("g_stream_twst")
-          .outputMode("append").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
+          .drainToMemory("g_stream_twst", ckpt)
       }
-      s.table("g_stream_twst")
       }
     },
 
@@ -1375,8 +1339,8 @@ object Streams {
       val d = graft.functions.SparkDialect
       val dim = 64 // TESTDATA embeddings dimension (Pipeline.DIM)
       val src = stagedEmbQueriesDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_ann_ckpt_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_ann_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_ann_ckpt")
+      val out = scratch(s, dir, "stream_ann_out")
       val emb = Tables.load(s, dir, "embeddings")
       // the indexed corpus is computed ONCE (localCheckpoint): without it
       // every micro-batch re-runs the norm/bucket folds over the whole
@@ -1385,7 +1349,7 @@ object Streams {
         s"${F.norm(d, "embedding", dim)} AS en",
         s"${F.lshBucket(d, "embedding", dim, 8)} AS bkt")
         .localCheckpoint())
-      val q = s.readStream.schema(emb.schema)
+      s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
         .selectExpr("vec_id AS qid", "embedding AS qv",
           s"${F.norm(d, "embedding", dim)} AS qn",
@@ -1396,17 +1360,13 @@ object Streams {
           when(col("qn") * col("en") > 0,
             expr("graft_dot(qv, ev)") / (col("qn") * col("en")))
             .otherwise(lit(0.0)).as("score"))
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           bdf.withColumn("rnk", row_number().over(
               org.apache.spark.sql.expressions.Window.partitionBy("qid")
                 .orderBy(col("score").desc, col("nid"))))
             .filter(col("rnk") <= 3)
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("qid").cast("long").as("qid"), col("nid").cast("long").as("nid"),
           col("score"), col("rnk").cast("long").as("rnk"))
@@ -1427,19 +1387,14 @@ object Streams {
     QueryDef("stream_ann_upsert", annUpsertOracle) { (s, dir) =>
       graft.functions.VectorExpressions.register(s)
       val src = stagedEmbCorpusDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_annu_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_annu_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_annu_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_annu_ckpt")
+      val idxDir = scratch(s, dir, "stream_annu_idx")
+      val out = scratch(s, dir, "stream_annu_out")
       val emb = Tables.load(s, dir, "embeddings")
       val (queries, qParts) = annQueryState(s, dir, idxDir)
-      val q = s.readStream.schema(emb.schema)
+      s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          annUpsertBatch(queries, qParts, idxDir, out)(b, id) }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
+        .drainBatches(ckpt)(annUpsertBatch(queries, qParts, idxDir, out))
       annReadOut(s, out)
     },
 
@@ -1455,10 +1410,10 @@ object Streams {
     QueryDef("stream_ann_restart", annUpsertOracle) { (s, dir) =>
       graft.functions.VectorExpressions.register(s)
       val staged = stagedEmbCorpusDir(s, dir)
-      val src = cleanScratch(s, s"stream_anr_src_${dir.hashCode & 0x7fffffff}")
-      val ckpt = cleanScratch(s, s"stream_anr_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_anr_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_anr_out_${dir.hashCode & 0x7fffffff}")
+      val src = scratch(s, dir, "stream_anr_src")
+      val ckpt = scratch(s, dir, "stream_anr_ckpt")
+      val idxDir = scratch(s, dir, "stream_anr_idx")
+      val out = scratch(s, dir, "stream_anr_out")
       val emb = Tables.load(s, dir, "embeddings")
       val (queries, qParts) = annQueryState(s, dir, idxDir)
       // pass 1 serves version 1; the restart serves versions 2, 3
@@ -1510,9 +1465,9 @@ object Streams {
       val d = graft.functions.SparkDialect
       val dim = 64
       val src = stagedEmbDeletesDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_adel_ckpt_${dir.hashCode & 0x7fffffff}")
-      val tombDir = cleanScratch(s, s"stream_adel_tomb_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_adel_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_adel_ckpt")
+      val tombDir = scratch(s, dir, "stream_adel_tomb")
+      val out = scratch(s, dir, "stream_adel_out")
       val emb = Tables.load(s, dir, "embeddings")
       // static index × static queries: the full bucket-pruned candidate
       // scores are computed ONCE; every version re-serves from this
@@ -1538,11 +1493,10 @@ object Streams {
         org.apache.spark.sql.types.StructField("vec_id",
           emb.schema("vec_id").dataType)))
       val tombStore = new graft.streaming.IndexStore(s, tombDir, "vec_id", 1)
-      val q = s.readStream
+      s.readStream
         .schema(delSchema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           // merge tombstones FIRST: a delete takes effect in its version
           tombStore.appendBatch(bdf.select(col("vec_id")), batchId)
           val tombs = tombStore.readAll(tombStore.batchSchema(delSchema))
@@ -1558,9 +1512,6 @@ object Streams {
               col("score"), col("rnk").cast("long").as("rnk"))
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("qid").cast("long").as("qid"), col("nid").cast("long").as("nid"),
@@ -1607,7 +1558,7 @@ object Streams {
       graft.functions.VectorExpressions.register(s)
       val F = graft.functions.Formulas
       val d = graft.functions.SparkDialect
-      val idxDir = cleanScratch(s, s"stream_agc_idx_${dir.hashCode & 0x7fffffff}")
+      val idxDir = scratch(s, dir, "stream_agc_idx")
       val emb = Tables.load(s, dir, "embeddings")
       val store = new graft.streaming.IndexStore(s, idxDir, "bkt", 8)
       val rows = emb.selectExpr("vec_id AS nid", "embedding AS ev",
@@ -1669,7 +1620,7 @@ object Streams {
       graft.functions.VectorExpressions.register(s)
       val F = graft.functions.Formulas
       val d = graft.functions.SparkDialect
-      val idxDir = cleanScratch(s, s"stream_cmp_idx_${dir.hashCode & 0x7fffffff}")
+      val idxDir = scratch(s, dir, "stream_cmp_idx")
       val emb = Tables.load(s, dir, "embeddings")
       val store = new graft.streaming.IndexStore(s, idxDir, "bkt", 8)
       val rows = emb.selectExpr("vec_id AS nid", "embedding AS ev",
@@ -1737,9 +1688,9 @@ object Streams {
     }) { (s, dir) =>
       val d = graft.functions.SparkDialect
       val src = stagedEmbCorpusDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_ipu_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_ipu_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_ipu_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_ipu_ckpt")
+      val idxDir = scratch(s, dir, "stream_ipu_idx")
+      val out = scratch(s, dir, "stream_ipu_out")
       val emb = Tables.load(s, dir, "embeddings")
       emb.createOrReplaceTempView("embeddings")
       // ---- static model state, trained ONCE on the corpus (the production
@@ -1778,10 +1729,9 @@ object Streams {
       // second index family)
       val probeCells = new graft.streaming.IndexStore(s, idxDir, "cell", 0)
         .partsOf(s.table("graft_ipu_probe").select(col("cid").as("cell")))
-      val q = s.readStream.schema(emb.schema)
+      s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           // 1. encode THE BATCH: quantize + lane-explode + nearest-cell
           //    assign + PQ-encode against the broadcast-sized centroids
@@ -1822,9 +1772,6 @@ object Streams {
               col("adist"), col("rnk").cast("long").as("rnk"))
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("qid").cast("long").as("qid"), col("nid").cast("long").as("nid"),
@@ -1868,9 +1815,9 @@ object Streams {
       withStatePartitions(s, 2) {
       import s.implicits._
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_cep_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_cep_ckpt")
       withRocksDb(s) {
-        val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
           .as[EventStreams.Event]
           .groupByKey(_.user_id)
           .transformWithState(
@@ -1878,15 +1825,11 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF()
-          .writeStream.format("memory").queryName("g_stream_cep")
-          .outputMode("update").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
+          .drainToMemory("g_stream_cep", ckpt, "update")
+          .select(col("user_id").cast("long").as("user_id"),
+            col("purchase_us").cast("long").as("purchase_us"),
+            col("span_us").cast("long").as("span_us"))
       }
-      s.table("g_stream_cep")
-        .select(col("user_id").cast("long").as("user_id"),
-          col("purchase_us").cast("long").as("purchase_us"),
-          col("span_us").cast("long").as("span_us"))
       }
     },
 
@@ -1903,14 +1846,13 @@ object Streams {
     // associative, so cumulative = prefix bit-for-bit. ----
     QueryDef("stream_ab_test", Pipeline.eventsAbTestVersionedOracle) { (s, dir) =>
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_sab_ckpt_${dir.hashCode & 0x7fffffff}")
-      val pdir = cleanScratch(s, s"stream_sab_m_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_sab_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_sab_ckpt")
+      val pdir = scratch(s, dir, "stream_sab_m")
+      val out = scratch(s, dir, "stream_sab_out")
       val schema = s.read.parquet(src).schema
-      val q = s.readStream.schema(schema)
+      s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           bdf.createOrReplaceTempView("graft_sab_b")
           ss.sql(
@@ -1929,9 +1871,6 @@ object Streams {
                |    FROM graft_sab_parts GROUP BY arm) m) w""".stripMargin)
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("na").cast("long").as("na"), col("nb").cast("long").as("nb"),
@@ -1955,9 +1894,9 @@ object Streams {
       withStatePartitions(s, 2) {
       import s.implicits._
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_ret_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_ret_ckpt")
       withRocksDb(s) {
-        val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
           .as[EventStreams.Event]
           .groupByKey(_.user_id)
           .transformWithState(
@@ -1965,12 +1904,9 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF()
-          .writeStream.format("memory").queryName("g_stream_ret")
-          .outputMode("update").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
+          .drainToMemory("g_stream_ret", ckpt, "update")
+          .createOrReplaceTempView("graft_ret_hits")
       }
-      s.table("g_stream_ret").createOrReplaceTempView("graft_ret_hits")
       s.sql(
         """SELECT CAST((t0_us - g.g0) div 86400000000 AS BIGINT) AS cohort_day,
           |  CAST(age_day AS BIGINT) AS age_day,
@@ -2008,14 +1944,14 @@ object Streams {
       withStatePartitions(s, 2) {
       import s.implicits._
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_scd_ckpt_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_scd_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_scd_ckpt")
+      val out = scratch(s, dir, "stream_scd_out")
       withRocksDb(s) {
         // changes land in a batch-partitioned parquet sink (the replay-
         // idempotent sinkBatch), NOT a memory sink: the change stream is
         // corpus-sized, and a driver-materialized sink was the measured
         // 10× bottleneck (2.6 → 16.9s; parquet sink: tracks batch volume)
-        val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
           .as[EventStreams.Event]
           .groupByKey(_.user_id)
           .transformWithState(
@@ -2023,11 +1959,7 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF()
-          .writeStream
-          .foreachBatch { (b: DataFrame, id: Long) => b.sinkBatch(out, id) }
-          .outputMode("update").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
+          .drainBatches(ckpt, "update")((b, id) => b.sinkBatch(out, id))
       }
       s.read.parquet(out)
         .select(col("op"), col("user_id").cast("long").as("user_id"),
@@ -2061,16 +1993,15 @@ object Streams {
         |    THEN 'late' ELSE 'ok' END AS route
         |FROM ev LEFT JOIN prior p ON p.m = ev.m""".stripMargin) { (s, dir) =>
       val src = stagedEventsByUserDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_dlq_ckpt_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_dlq_out_${dir.hashCode & 0x7fffffff}")
-      val dlq = cleanScratch(s, s"stream_dlq_side_${dir.hashCode & 0x7fffffff}")
-      val okd = cleanScratch(s, s"stream_dlq_ok_${dir.hashCode & 0x7fffffff}")
-      val wmd = cleanScratch(s, s"stream_dlq_wm_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_dlq_ckpt")
+      val out = scratch(s, dir, "stream_dlq_out")
+      val dlq = scratch(s, dir, "stream_dlq_side")
+      val okd = scratch(s, dir, "stream_dlq_ok")
+      val wmd = scratch(s, dir, "stream_dlq_wm")
       val schema = s.read.parquet(src).schema
-      val q = s.readStream.schema(schema)
+      s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           // the watermark state: ONE value — max event time of strictly
           // earlier batches (replay-safe: a replayed batch recomputes the
@@ -2092,9 +2023,6 @@ object Streams {
             .sinkBatch(out, batchId)
           bdf.agg(max("ts").as("mx")).sinkBatch(wmd, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("event_id").cast("long").as("event_id"), col("route"))
@@ -2113,9 +2041,9 @@ object Streams {
       withStatePartitions(s, 2) {
       import s.implicits._
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_anm_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_anm_ckpt")
       withRocksDb(s) {
-        val q = EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
           .as[EventStreams.Event]
           .groupByKey(_.user_id)
           .transformWithState(
@@ -2123,15 +2051,11 @@ object Streams {
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF()
-          .writeStream.format("memory").queryName("g_stream_anom")
-          .outputMode("update").option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
+          .drainToMemory("g_stream_anom", ckpt, "update")
+          .select(col("event_id").cast("long").as("event_id"),
+            col("user_id").cast("long").as("user_id"),
+            col("value_cents").cast("long").as("value_cents"), col("zscore"))
       }
-      s.table("g_stream_anom")
-        .select(col("event_id").cast("long").as("event_id"),
-          col("user_id").cast("long").as("user_id"),
-          col("value_cents").cast("long").as("value_cents"), col("zscore"))
       }
     },
 
@@ -2175,9 +2099,9 @@ object Streams {
          |  ON c.version = vs.version AND c.r = pc.r AND c.cell = pc.cell
          |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_cms_ckpt_${dir.hashCode & 0x7fffffff}")
-      val pdir = cleanScratch(s, s"stream_cms_m_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_cms_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_cms_ckpt")
+      val pdir = scratch(s, dir, "stream_cms_m")
+      val out = scratch(s, dir, "stream_cms_out")
       Stage.tables(s, dir, "events")
       // static probe set + its 3 sketch cells per key — broadcast model state
       Stage.view("graft_cms_probes", s.sql(
@@ -2187,10 +2111,9 @@ object Streams {
            |CROSS JOIN (SELECT explode(array(CAST(0 AS BIGINT), 1, 2)) AS r) rr"""
           .stripMargin))
       val schema = s.read.parquet(src).schema
-      val q = s.readStream.schema(schema)
+      s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           bdf.createOrReplaceTempView("graft_cms_b")
           // hash the batch's DISTINCT keys (key-cardinality work), then
@@ -2216,9 +2139,6 @@ object Streams {
                |GROUP BY p.user_id""".stripMargin)
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("user_id").cast("long").as("user_id"),
@@ -2267,14 +2187,13 @@ object Streams {
     }) { (s, dir) =>
       val d = graft.functions.SparkDialect
       val src = stagedEventsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_hll_ckpt_${dir.hashCode & 0x7fffffff}")
-      val pdir = cleanScratch(s, s"stream_hll_m_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_hll_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_hll_ckpt")
+      val pdir = scratch(s, dir, "stream_hll_m")
+      val out = scratch(s, dir, "stream_hll_out")
       val schema = s.read.parquet(src).schema
-      val q = s.readStream.schema(schema)
+      s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           bdf.createOrReplaceTempView("graft_hll_b")
           // MAX over registers is idempotent — hash the batch's DISTINCT
@@ -2305,9 +2224,6 @@ object Streams {
                |FROM agg""".stripMargin)
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("n_active").cast("long").as("n_active"),
@@ -2337,14 +2253,13 @@ object Streams {
       // as the tws gates' state width)
       withStatePartitions(s, 8) {
       val src = stagedDocsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_ding_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_ding_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_ding_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_ding_ckpt")
+      val idxDir = scratch(s, dir, "stream_ding_idx")
+      val out = scratch(s, dir, "stream_ding_out")
       val docs = Tables.load(s, dir, "documents")
-      val q = s.readStream.schema(docs.schema)
+      s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           val bands = Pipeline.ingestBands(ss, bdf).localCheckpoint()
           // ONE rival relation covers both dup rules: within-batch rows keep
@@ -2373,9 +2288,6 @@ object Streams {
           // through the store (the within-batch rule handles that exactly)
           mergeStore()
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"),
@@ -2396,17 +2308,13 @@ object Streams {
     QueryDef("stream_ingest_e2e", Pipeline.ingestE2eOracle) { (s, dir) =>
       withStatePartitions(s, 8) {
       val src = stagedDocsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_ie2e_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_ie2e_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_ie2e_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_ie2e_ckpt")
+      val idxDir = scratch(s, dir, "stream_ie2e_idx")
+      val out = scratch(s, dir, "stream_ie2e_out")
       val docs = Tables.load(s, dir, "documents")
-      val q = s.readStream.schema(docs.schema)
+      s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) => ingestE2eBatch(idxDir, out)(b, id) }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
+        .drainBatches(ckpt)(ingestE2eBatch(idxDir, out))
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"), col("status"))
@@ -2428,10 +2336,10 @@ object Streams {
     QueryDef("stream_ingest_restart", Pipeline.ingestE2eOracle) { (s, dir) =>
       withStatePartitions(s, 8) {
       val staged = stagedDocsDir(s, dir)
-      val src = cleanScratch(s, s"stream_irs_src_${dir.hashCode & 0x7fffffff}")
-      val ckpt = cleanScratch(s, s"stream_irs_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_irs_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_irs_out_${dir.hashCode & 0x7fffffff}")
+      val src = scratch(s, dir, "stream_irs_src")
+      val ckpt = scratch(s, dir, "stream_irs_ckpt")
+      val idxDir = scratch(s, dir, "stream_irs_idx")
+      val out = scratch(s, dir, "stream_irs_out")
       val docs = Tables.load(s, dir, "documents")
       // pass 1 runs batch 0; the restart continues at batches 1, 2
       drainRestarted(
@@ -2458,18 +2366,17 @@ object Streams {
     // every version exactly. ----
     QueryDef("stream_learned_filter", Pipeline.learnedFilterOracle) { (s, dir) =>
       val src = stagedDocsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_lf_ckpt_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_lf_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_lf_ckpt")
+      val out = scratch(s, dir, "stream_lf_out")
       // the model-handoff contract: retrain rarely in batch, serve per
       // batch — the trained weight relation is disk-memoized model state
       stagedModel(s, dir, "lfmodel") {
         Seq("graft_lf_w" -> Pipeline.qcTrainWeights(s, dir))
       }
       val docs = Tables.load(s, dir, "documents")
-      val q = s.readStream.schema(docs.schema)
+      s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           bdf.createOrReplaceTempView("graft_lf_batch")
           Pipeline.learnedFilterScore(ss, "graft_lf_batch", "graft_lf_w")
@@ -2478,9 +2385,6 @@ object Streams {
               col("score_micro"), col("admitted"))
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"),
@@ -2516,8 +2420,8 @@ object Streams {
       graft.functions.VectorExpressions.register(s)
       val d = graft.functions.SparkDialect
       val src = stagedDocsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_sdc_ckpt_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_sdc_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_sdc_ckpt")
+      val out = scratch(s, dir, "stream_sdc_out")
       val docs = Tables.load(s, dir, "documents")
       docs.createOrReplaceTempView("documents")
       stagedModel(s, dir, "sdcmodel") {
@@ -2531,10 +2435,9 @@ object Streams {
             |FROM graft_sdc_eval_build""".stripMargin)
         Seq("graft_sdc_eval" -> evalSh, "graft_sdc_bloom" -> bloom)
       }
-      val q = s.readStream.schema(docs.schema)
+      s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           bdf.createOrReplaceTempView("graft_sdc_b")
           ss.sql(
@@ -2552,9 +2455,6 @@ object Streams {
                |FROM hits""".stripMargin)
             .sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"),
@@ -2578,23 +2478,18 @@ object Streams {
     // cost tracks the batch, never the corpus. ----
     QueryDef("stream_image_ingest", imageIngestOracle) { (s, dir) =>
       val src = stagedDocsDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_img_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_img_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_img_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_img_ckpt")
+      val idxDir = scratch(s, dir, "stream_img_idx")
+      val out = scratch(s, dir, "stream_img_out")
       val docs = Tables.load(s, dir, "documents")
       // batch 0 probes BEFORE the first append: an empty store is a valid
       // state, but the directory must exist for the explicit-schema read
       new org.apache.hadoop.fs.Path(idxDir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
         .mkdirs(new org.apache.hadoop.fs.Path(idxDir))
-      val q = s.readStream.schema(docs.schema)
+      s.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          imageIngestBatch(idxDir, out)(b, id) }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
+        .drainBatches(ckpt)(imageIngestBatch(idxDir, out))
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"), col("status"))
@@ -2612,10 +2507,10 @@ object Streams {
     // both gates run the same per-batch plan. ----
     QueryDef("stream_image_restart", imageIngestOracle) { (s, dir) =>
       val staged = stagedDocsDir(s, dir)
-      val src = cleanScratch(s, s"stream_imr_src_${dir.hashCode & 0x7fffffff}")
-      val ckpt = cleanScratch(s, s"stream_imr_ckpt_${dir.hashCode & 0x7fffffff}")
-      val idxDir = cleanScratch(s, s"stream_imr_idx_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_imr_out_${dir.hashCode & 0x7fffffff}")
+      val src = scratch(s, dir, "stream_imr_src")
+      val ckpt = scratch(s, dir, "stream_imr_ckpt")
+      val idxDir = scratch(s, dir, "stream_imr_idx")
+      val out = scratch(s, dir, "stream_imr_out")
       val docs = Tables.load(s, dir, "documents")
       new org.apache.hadoop.fs.Path(idxDir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2646,23 +2541,19 @@ object Streams {
       import graft.core.TripleSchema
       import graft.sources.RdfBridge
       val src = stagedTriplesDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_rdf_ckpt_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_rdf_ckpt")
       val static = broadcast(RdfBridge.triples(s, dir)
         .filter(col(TripleSchema.predicate) === RdfBridge.InNation)
         .select(col(TripleSchema.subject).as("__c2"),
           col(TripleSchema.objekt).as("n")))
       val schema = RdfBridge.triples(s, dir).schema
-      val q = s.readStream.schema(schema)
+      s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
         .filter(col(TripleSchema.predicate) === RdfBridge.Placed)
         .join(static, col(TripleSchema.subject) === col("__c2"))
         .select(col(TripleSchema.subject).as("c"),
           col(TripleSchema.objekt).as("o"), col("n"))
-        .writeStream.format("memory").queryName("g_stream_rdf")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_rdf")
+        .drainToMemory("g_stream_rdf", ckpt)
     },
 
     // ---- STREAMING DSv2 (round-9): the graft-triples V2 source read as a
@@ -2677,15 +2568,11 @@ object Streams {
       graft.sources.RdfBridge.oracleCte +
         "SELECT Subject, Object FROM triples WHERE Predicate = -2") { (s, dir) =>
       val src = stagedTripleTextDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_dsv2_ckpt_${dir.hashCode & 0x7fffffff}")
-      val q = s.readStream.format("graft-triples").load(src)
+      val ckpt = scratch(s, dir, "stream_dsv2_ckpt")
+      s.readStream.format("graft-triples").load(src)
         .filter(col("Subject").isNotNull && col("Predicate") === -2)
         .select("Subject", "Object")
-        .writeStream.format("memory").queryName("g_stream_dsv2")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
-      s.table("g_stream_dsv2")
+        .drainToMemory("g_stream_dsv2", ckpt)
     },
 
     // ---- DSv2 SOURCE CHECKPOINT RESTART (round-10): exactly-once for the
@@ -2701,9 +2588,9 @@ object Streams {
       graft.sources.RdfBridge.oracleCte +
         "SELECT Subject, Object FROM triples WHERE Predicate = -2") { (s, dir) =>
       val staged = stagedTripleTextDir(s, dir)
-      val src = cleanScratch(s, s"stream_dsv2r_src_${dir.hashCode & 0x7fffffff}")
-      val ckpt = cleanScratch(s, s"stream_dsv2r_ckpt_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_dsv2r_out_${dir.hashCode & 0x7fffffff}")
+      val src = scratch(s, dir, "stream_dsv2r_src")
+      val ckpt = scratch(s, dir, "stream_dsv2r_ckpt")
+      val out = scratch(s, dir, "stream_dsv2r_out")
       new java.io.File(src).mkdirs()
       def land(i: Int): Unit = {
         val from = new java.io.File(staged, f"f$i%02d.txt")
@@ -2732,8 +2619,7 @@ object Streams {
       val all = graft.sources.RdfBridge.triples(spark, sfDir)
       val cols = all.columns.map(col)
       Seq(0, 1, 2).foreach { i =>
-        val tmp = cleanScratch(spark,
-          s"tritext_tmp_${sfDir.hashCode & 0x7fffffff}")
+        val tmp = scratch(spark, sfDir, "tritext_tmp")
         graft.sources.TripleIO.writeText(
           all.filter(pmod(hash(cols: _*), lit(3)) === i).coalesce(1), tmp)
         val part = new java.io.File(tmp).listFiles()
@@ -2816,14 +2702,13 @@ object Streams {
     QueryDef("stream_topk_hh", oracle) { (s, dir) =>
       withStatePartitions(s, 8) {
         val src = stagedEventsDir(s, dir)
-        val ckpt = cleanScratch(s, s"stream_hh_ckpt_${dir.hashCode & 0x7fffffff}")
-        val stateDir = cleanScratch(s, s"stream_hh_state_${dir.hashCode & 0x7fffffff}")
-        val out = cleanScratch(s, s"stream_hh_out_${dir.hashCode & 0x7fffffff}")
+        val ckpt = scratch(s, dir, "stream_hh_ckpt")
+        val stateDir = scratch(s, dir, "stream_hh_state")
+        val out = scratch(s, dir, "stream_hh_out")
         val schema = s.read.parquet(src).schema
-        val q = s.readStream.schema(schema)
+        s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(src)
-          .writeStream
-          .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+          .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
             val ss = bdf.sparkSession
             bdf.createOrReplaceTempView("graft_hh_b")
             // replay-safe state read: version v{batchId} is strictly
@@ -2852,9 +2737,6 @@ object Streams {
                  |FROM graft_hh_sn""".stripMargin)
               .coalesce(1).sinkBatch(out, batchId)
           }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        await(q)
         s.read.parquet(out)
           .select(col("version").cast("long").as("version"),
             col("user_id").cast("long").as("user_id"),
@@ -2923,9 +2805,9 @@ object Streams {
       withStatePartitions(s, 8) {
       val d = graft.functions.SparkDialect
       val src = stagedEmbCorpusDir(s, dir)
-      val ckpt = cleanScratch(s, s"stream_smk_ckpt_${dir.hashCode & 0x7fffffff}")
-      val stateDir = cleanScratch(s, s"stream_smk_state_${dir.hashCode & 0x7fffffff}")
-      val out = cleanScratch(s, s"stream_smk_out_${dir.hashCode & 0x7fffffff}")
+      val ckpt = scratch(s, dir, "stream_smk_ckpt")
+      val stateDir = scratch(s, dir, "stream_smk_state")
+      val out = scratch(s, dir, "stream_smk_out")
       val emb = Tables.load(s, dir, "embeddings")
       emb.createOrReplaceTempView("embeddings")
       // offline seed snapshot: the KM lowest vec_ids' quantized lanes
@@ -2935,10 +2817,9 @@ object Streams {
       Stage.view("graft_smk_k0", s.sql(
         """SELECT vec_id AS cid, CAST(0 AS BIGINT) AS m, i, CAST(x*1000 AS BIGINT) AS c
           |FROM (SELECT vec_id, posexplode(qv) AS (i, x) FROM graft_smk_seedqz) t""".stripMargin))
-      val q = s.readStream.schema(emb.schema)
+      s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .foreachBatch { (bdf: DataFrame, batchId: Long) =>
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
           val ss = bdf.sparkSession
           // 1. quantize + lane-explode THE BATCH
           bdf.createOrReplaceTempView("graft_smk_b")
@@ -2980,9 +2861,6 @@ object Streams {
               col("i").cast("long").as("i"), col("c").cast("long").as("c"))
             .coalesce(1).sinkBatch(out, batchId)
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      await(q)
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("cid").cast("long").as("cid"),

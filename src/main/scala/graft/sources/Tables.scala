@@ -54,7 +54,12 @@ object Tables {
     p.toString
   }
 
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One staging: the lazy val builds it once — concurrent first callers
+    * wait on it — outside any map mapping function, so a `build` may stage
+    * other kinds itself. */
+  private final class Staging(make: () => String) { lazy val dir: String = make() }
+
+  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, Staging]()
 
   /** Memoized fixture staging: `build` populates a scratch directory once
     * per (session, dataset, kind); later calls reuse it. Gates whose input
@@ -66,18 +71,19 @@ object Tables {
     * sanitization alone aliases distinct paths ('/a/b' vs '/a_b'), which
     * would silently reuse the wrong dataset's staged fixture. The directory
     * is emptied before `build` runs (a previous process may have left a
-    * partial or stale staging there), so builders may append.
+    * partial or stale staging there), so builders may append. Reentrant:
+    * `build` may itself call `staged` for another kind.
     */
   def staged(spark: SparkSession, sfDir: String, kind: String)(build: String => Unit): String = {
     val ds = sfDir.replaceAll("[^A-Za-z0-9_.-]", "_") + "_" +
       graft.plans.Layouts.rawFingerprint(sfDir)
     val key = s"${System.identityHashCode(spark)}/$kind/$ds"
-    stagedDirs.computeIfAbsent(key, { _ =>
+    stagedDirs.computeIfAbsent(key, _ => new Staging(() => {
       val dir = scratchDir(s"staged_${kind}_$ds")
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       build(dir)
       dir
-    })
+    })).dir
   }
 }

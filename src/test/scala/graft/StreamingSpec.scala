@@ -338,11 +338,10 @@ class StreamingSpec extends SparkTestBase {
     assert(single.count() == restart.count(), "no duplicated or lost statuses")
     assert(restart.exceptAll(single).isEmpty && single.exceptAll(restart).isEmpty,
       "restarted pipeline must emit exactly the single-run statuses")
-    val h = sf.hashCode & 0x7fffffff
     val st1 = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_ie2e_idx_$h")).select("bk").persist()
+      graft.queries.Streams.scratchDir(sf, "stream_ie2e_idx")).select("bk").persist()
     val st2 = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_irs_idx_$h")).select("bk").persist()
+      graft.queries.Streams.scratchDir(sf, "stream_irs_idx")).select("bk").persist()
     assert(st2.count() == st2.distinct().count(), "store holds no duplicate keys")
     assert(st1.exceptAll(st2).isEmpty && st2.exceptAll(st1).isEmpty,
       "band store after restart must equal the single-run store")
@@ -354,11 +353,10 @@ class StreamingSpec extends SparkTestBase {
     val restart = SparkEntry.queries("stream_ann_restart")(spark, sf).persist()
     assert(restart.exceptAll(single).isEmpty && single.exceptAll(restart).isEmpty,
       "restarted upsert must serve exactly the single-run results")
-    val h = sf.hashCode & 0x7fffffff
     val st1 = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_annu_idx_$h")).select("nid").persist()
+      graft.queries.Streams.scratchDir(sf, "stream_annu_idx")).select("nid").persist()
     val st2 = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_anr_idx_$h")).select("nid").persist()
+      graft.queries.Streams.scratchDir(sf, "stream_anr_idx")).select("nid").persist()
     assert(st2.count() == st2.distinct().count(),
       "no vector appended twice across the restart")
     assert(st1.exceptAll(st2).isEmpty && st2.exceptAll(st1).isEmpty,
@@ -417,12 +415,11 @@ class StreamingSpec extends SparkTestBase {
     assert(restarted.exceptAll(single).isEmpty &&
       single.exceptAll(restarted).isEmpty,
       "no replayed version-1 statuses, no lost arrivals")
-    val tag = sf.hashCode & 0x7fffffff
     val s1 = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_img_idx_$tag"))
+      graft.queries.Streams.scratchDir(sf, "stream_img_idx"))
       .select("bk", "ah", "al")
     val s2 = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_imr_idx_$tag"))
+      graft.queries.Streams.scratchDir(sf, "stream_imr_idx"))
       .select("bk", "ah", "al")
     assert(s2.exceptAll(s1).isEmpty && s1.exceptAll(s2).isEmpty,
       "the compacted band store equals the single run's")
@@ -462,11 +459,10 @@ class StreamingSpec extends SparkTestBase {
     val late = out.filter(col("route") === "late").count()
     val ok = out.filter(col("route") === "ok").count()
     assert(late > 0, "out-of-order staging must produce late rows")
-    val tag = sf.hashCode & 0x7fffffff
     val dlq = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_dlq_side_$tag"))
+      graft.queries.Streams.scratchDir(sf, "stream_dlq_side"))
     val okd = spark.read.parquet(
-      graft.sources.Tables.scratchDir(s"stream_dlq_ok_$tag"))
+      graft.queries.Streams.scratchDir(sf, "stream_dlq_ok"))
     assert(dlq.count() == late && okd.count() == ok,
       "each route's sink holds exactly its rows")
     assert(late + ok == spark.read.parquet(s"$sf/events.parquet").count(),
