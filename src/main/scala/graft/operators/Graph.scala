@@ -1,8 +1,12 @@
 package graft.operators
 
 import graft.core.TripleSchema
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Iterative graph operators over the triple table. Spark 4's recursive
   * CTE (`WITH RECURSIVE`, exercised by gate q49) covers simple monotone
@@ -10,14 +14,17 @@ import org.apache.spark.sql.functions._
   * lineage truncation, and distance/provenance carrying — still the
   * driver-loop-of-joins layer.
   *
-  * Reachability = semi-naive BFS fixpoint: each iteration joins only the
-  * FRONTIER (not the whole reached set) against the edge table, anti-joins
-  * out already-reached nodes, and stops when the frontier empties. Each
-  * iteration is a distributed join; the driver holds only the loop counter
-  * and the emptiness check. At cluster scale the edge table would be
-  * pre-partitioned (bucketed) on Subject so every iteration's join reuses
-  * the same partitioning without a fresh shuffle, and `localCheckpoint`
-  * truncates the growing lineage.
+  * Reachability = semi-naive BFS fixpoint: each round expands only the
+  * FRONTIER (not the whole reached set) through the edge table, drops
+  * already-reached nodes, and stops when the frontier empties. A seeded
+  * walk whose reached set stays small keeps it on the driver and spends one
+  * pruned scan per round ([[reachableFrom]]); past that size, and for the
+  * other fixpoints, every round is a distributed join and the driver holds
+  * only the loop counter and the emptiness check. At cluster scale the edge
+  * table is pre-partitioned (bucketed) on Subject, so a driver round reads
+  * only the frontier's buckets and a distributed round's join reuses the
+  * same partitioning without a fresh shuffle; `localCheckpoint` truncates
+  * the growing lineage.
   */
 object Graph {
 
@@ -31,21 +38,113 @@ object Graph {
     reachableFrom(triples, seeds.toDF("node"), maxIters)
   }
 
-  /** As [[reachable]], but seeded by a one-column (`node`) DataFrame — the
-    * seed computation (e.g. a MIN aggregation) stays part of the distributed
-    * plan instead of a pre-query driver `.head()`.
+  /** Most node ids a [[reachableFrom]] walk keeps on the driver: its reached
+    * set, and so every frontier, while the set fits; and the ids one round
+    * may bring back per partition (`LocalFrontierMax + 1`, one past the cap
+    * to tell an overflow).
     */
-  def reachableFrom(triples: DataFrame, seeds: DataFrame, maxIters: Int = -1): DataFrame = {
+  val LocalFrontierMax: Int = 1 << 16
+
+  /** Largest frontier a [[reachableFrom]] round probes with an IN list; a
+    * larger one joins a local relation of the frontier instead. Past a few
+    * hundred ids the IN list touches every bucket anyway, and a long one is
+    * slow to build and to evaluate: at sf0.1 a round over 17,211 ids took
+    * about 4 s, against 0.4–0.5 s for the join (4 cores). */
+  private val InListProbeMax = 1024
+
+  /** Nodes reachable from the one-column (`node`) `seeds` by directed
+    * Subject→Object edges of `triples`: with `includeSeeds`, every node
+    * within `maxIters` rounds, the seeds included (the `*` closure); without
+    * it, every node 1 to `maxIters` edges away (the `+` closure — a seed is
+    * in the result only when a cycle leads back to it). `maxIters < 0` runs
+    * to fixpoint. Null seeds are dropped. The `node` column has the wider
+    * of the seed and Object types (Int or Long).
+    *
+    * DRIVER FRONTIER. The seeds are collected to the driver — no job for a
+    * local seed relation such as the encoded constant of a property path,
+    * the jobs of its plan for a computed one such as a MIN aggregation —
+    * and while the reached set holds at most [[LocalFrontierMax]] ids the
+    * frontier and the reached set stay there. Each round is then ONE Spark
+    * job: a `Subject IN (frontier)` scan — bucket-pruned on the
+    * subject-bucketed layouts — whose Object ids each partition
+    * deduplicates and caps at `LocalFrontierMax + 1` before they reach the
+    * driver. A frontier of more than 1,024 ids joins the edges as a local
+    * relation instead of an IN list (one job more, for its broadcast). The
+    * result is an exact-size local relation, so AQE sizes the joins above
+    * it with no hint, and nothing reads checkpoint blocks back.
+    *
+    * OVERFLOW. If the seeds, one partition's ids of a round, or the reached
+    * set grow past the cap, the walk restarts from the original seeds on the
+    * distributed semi-naive loop: per round one frontier⋈edges equi-join, a
+    * distinct, an anti-join against the reached set and an eager
+    * `localCheckpoint`, over a persisted edge projection.
+    */
+  def reachableFrom(triples: DataFrame, seeds: DataFrame, maxIters: Int = -1,
+      includeSeeds: Boolean = true): DataFrame = {
+    val spark = triples.sparkSession
+    import spark.implicits._
+    val edges = triples
+      .select(col(TripleSchema.subject).as("src"), col(TripleSchema.objekt).as("dst"))
+    val seedNodes = seeds.select(col("node")).filter(col("node").isNotNull)
+    val nodeType =
+      if (Seq(seedNodes, edges.select("dst")).forall(_.schema.head.dataType == IntegerType))
+        IntegerType
+      else LongType
+    val intSubjects = edges.schema("src").dataType == IntegerType
+    val cap = LocalFrontierMax
+    def distributed = reachableDistributed(edges, seedNodes, maxIters, includeSeeds)
+
+    val seedIds =
+      seedNodes.select(col("node").cast(LongType)).limit(cap + 1).as[Long].collect().distinct
+    if (seedIds.length > cap) return distributed
+    val reached = mutable.HashSet.empty[Long]
+    if (includeSeeds) reached ++= seedIds
+    var frontier: Seq[Long] = seedIds.toSeq
+    var iter = 0
+    while (frontier.nonEmpty && (maxIters < 0 || iter < maxIters)) {
+      // probe with literals of the Subject type: a cast column would neither
+      // push down nor prune buckets (an Int column cannot hold a wider id)
+      val probe = if (intSubjects) frontier.filter(_.isValidInt).map(_.toInt) else frontier
+      val found =
+        if (probe.isEmpty) Set.empty[Long]
+        else {
+          val hits =
+            if (probe.length <= InListProbeMax) edges.filter(col("src").isin(probe: _*))
+            else edges.join(frontier.toDF("__f"), col("src").cast(LongType) === col("__f"))
+          hits.filter(col("dst").isNotNull).select(col("dst").cast(LongType)).as[Long]
+            .mapPartitions(distinctCapped(_, cap)).collect().toSet
+        }
+      val next = found.diff(reached)
+      // a partition stopped at cap + 1 ids leaves `found` above the cap
+      if (found.size > cap || reached.size + next.size > cap) return distributed
+      reached ++= next
+      frontier = next.toSeq
+      iter += 1
+    }
+    spark.createDataFrame(
+      reached.toSeq.sorted.map(v => Row(if (nodeType == IntegerType) v.toInt else v)).asJava,
+      StructType(Seq(StructField("node", nodeType, nullable = false))))
+  }
+
+  /** At most `cap + 1` distinct values of one partition. */
+  private def distinctCapped(it: Iterator[Long], cap: Int): Iterator[Long] = {
+    val seen = mutable.HashSet.empty[Long]
+    while (it.hasNext && seen.size <= cap) seen += it.next()
+    seen.iterator
+  }
+
+  /** The distributed semi-naive loop behind [[reachableFrom]]: `edges` is
+    * (src, dst), `seeds` one column `node`. */
+  private def reachableDistributed(edges0: DataFrame, seeds: DataFrame, maxIters: Int,
+      includeSeeds: Boolean): DataFrame = {
     // cache the 2-column edge projection across iterations (the GraphX/
     // Pregel discipline): without it every BFS round re-scans the source.
     // MEMORY_AND_DISK so oversized edge sets degrade to disk, not OOM.
-    val edges = triples
-      .select(col(TripleSchema.subject).as("src"), col(TripleSchema.objekt).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = edges0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val seedDf = seeds.select(col("node")).persist()
-    var reached = seedDf
-    var frontier = reached
+    val seedDf = seeds.persist()
+    var reached = if (includeSeeds) seedDf else seedDf.limit(0)
+    var frontier = seedDf
     var iter = 0
     var done = false
     while (!done && (maxIters < 0 || iter < maxIters)) {

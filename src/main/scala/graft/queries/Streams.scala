@@ -44,6 +44,10 @@ object Streams {
     dir
   }
 
+  /** Base of the pinned modification times of staged stream input files:
+    * only their order matters to FileStreamSource, not the clock. */
+  private val StagedMtimeBase = 1000000000000L
+
   /** Run the three staged-batch writes with PINNED, strictly increasing
     * modification times on each batch's files: FileStreamSource orders
     * arrival by mtime, and sequential `coalesce(1)` writes can land inside
@@ -59,7 +63,7 @@ object Streams {
       write(i)
       fs.listStatus(p).filter(_.getPath.getName.startsWith("part-")).foreach { st =>
         if (!seen(st.getPath.getName)) {
-          fs.setTimes(st.getPath, 1000000000000L + i * 100000L, -1)
+          fs.setTimes(st.getPath, StagedMtimeBase + i * 100000L, -1)
           seen += st.getPath.getName
         }
       }
@@ -68,49 +72,92 @@ object Streams {
 
   /** Stage the events table as THREE time-ordered parquet files (memoized
     * per session + dataset): `maxFilesPerTrigger=1` then yields three
-    * micro-batches whose event times genuinely advance the watermark.
+    * micro-batches whose event times genuinely advance the watermark. File
+    * i holds the rows of ranks (i·n/3, (i+1)·n/3] in (ts, event_id) order,
+    * cut at the keys of ranks n/3 and 2n/3. Those two keys come from a
+    * range-partitioned sort (per-partition sizes, then the two rows), not a
+    * global window, which would move every event to one task. event_id is
+    * unique, so no two rows share a key and the cuts are exact.
     */
-  private def stagedEventsDir(spark: SparkSession, sfDir: String): String =
+  private[graft] def stagedEventsDir(spark: SparkSession, sfDir: String): String =
     Tables.staged(spark, sfDir, "events_stream") { dir =>
       val all = Tables.load(spark, sfDir, "events")
       val n = all.count()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy().orderBy("ts", "event_id")
-      // persist the globally-sorted numbering: each of the three split
-      // writes reads the cached rows instead of re-running the sort
-      val withIdx = all.withColumn("__rn", row_number().over(w)).persist()
-      stageOrdered(spark, dir) { i =>
-        withIdx.filter(col("__rn") > i * n / 3 && col("__rn") <= (i + 1) * n / 3)
-          .drop("__rn")
-          .coalesce(1).write.mode("append").parquet(dir)
+      val ranks = Seq(n / 3, 2 * n / 3)
+      val cut = all.select(col("ts"), col("event_id")).orderBy("ts", "event_id").rdd
+        .zipWithIndex().filter { case (_, i) => ranks.contains(i + 1) }
+        .collect().map { case (k, i) => (i + 1) -> k }.toMap
+      // the rows up to rank r: none for r = 0
+      def upTo(r: Long) = cut.get(r).fold(lit(false)) { k =>
+        col("ts") < lit(k.get(0)) || col("ts") === lit(k.get(0)) && col("event_id") <= lit(k.get(1))
       }
-      withIdx.unpersist()
+      val files = Seq(upTo(ranks(0)), !upTo(ranks(0)) && upTo(ranks(1)), !upTo(ranks(1)))
+      stageOrdered(spark, dir) { i =>
+        all.filter(files(i)).coalesce(1).write.mode("append").parquet(dir)
+      }
     }
 
-  /** The staged dir with every file DUPLICATED (distinct filenames), so each
-    * event arrives twice in different micro-batches.
+  /** Copy the parquet chunks of staged dir `src` into `dst` in chunk-time
+    * (modification-time) order, once per name prefix — every chunk under
+    * the first prefix, then every chunk under the next — and stamp the
+    * copies with pinned, strictly increasing modification times one second
+    * apart: FileStreamSource orders arrival by mtime at millisecond
+    * resolution, and copy-time stamps would follow the listing order or tie.
+    * Returns the next free stamp, for files appended after the copies.
     */
-  private def duplicatedEventsDir(spark: SparkSession, sfDir: String): String = {
+  private def copyRestamped(spark: SparkSession, src: String, dst: String,
+      prefixes: Seq[String] = Seq("")): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dstPath = new org.apache.hadoop.fs.Path(dst)
+    val fs = dstPath.getFileSystem(conf)
+    fs.mkdirs(dstPath)
+    val srcPath = new org.apache.hadoop.fs.Path(src)
+    val srcFs = srcPath.getFileSystem(conf)
+    val chunks = srcFs.listStatus(srcPath).filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(st => (st.getModificationTime, st.getPath.getName))
+    val copies = for (prefix <- prefixes; st <- chunks) yield (prefix, st)
+    copies.zipWithIndex.foreach { case ((prefix, st), i) =>
+      val to = new org.apache.hadoop.fs.Path(dstPath, prefix + st.getPath.getName)
+      org.apache.hadoop.fs.FileUtil.copy(srcFs, st.getPath, fs, to, false, conf)
+      fs.setTimes(to, StagedMtimeBase + i * 1000L, -1)
+    }
+    StagedMtimeBase + copies.length * 1000L
+  }
+
+  /** Append to staged dir `dir` one parquet file of sentinel events, stamped
+    * `stamp`: one row per entry of `types`, at `hours` past the hour of the
+    * events table's max(ts), plus one second, with `id` as event and user id
+    * and every other column null. */
+  private def appendSentinel(spark: SparkSession, sfDir: String, dir: String, hours: Int,
+      id: Long, types: Seq[String], stamp: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parquets = fs.listStatus(p).map(_.getPath).filter(_.getName.endsWith(".parquet")).toSet
+    val before = parquets
+    val all = Tables.load(spark, sfDir, "events")
+    val schema = all.schema
+    all.agg(max(col("ts")).as("m"))
+      .select(col("m"), explode(array(types.map(lit): _*)).as("st"))
+      .select(schema.fields.map { f =>
+        (f.name match {
+          case "ts" => expr(s"date_trunc('hour', m) + INTERVAL $hours HOURS 1 SECOND")
+          case "event_id" | "user_id" => lit(id)
+          case "event_type" => col("st")
+          case other => lit(null).cast(schema(other).dataType)
+        }).cast(f.dataType).as(f.name)
+      }: _*)
+      .coalesce(1).write.mode("append").parquet(dir)
+    (parquets -- before).foreach(fs.setTimes(_, stamp, -1))
+  }
+
+  /** The staged dir with every file DUPLICATED (distinct filenames), so each
+    * event arrives twice in different micro-batches: every `a_` chunk in time
+    * order, then every `b_` chunk.
+    */
+  private[graft] def duplicatedEventsDir(spark: SparkSession, sfDir: String): String = {
     val src = stagedEventsDir(spark, sfDir)
     Tables.staged(spark, sfDir, "events_stream_dup") { dir =>
-      // Hadoop FS throughout (same as scratch) — works on any scheme,
-      // no java.nio directory-stream handle to leak
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dstPath = new org.apache.hadoop.fs.Path(dir)
-      val fs = dstPath.getFileSystem(conf)
-      fs.mkdirs(dstPath)
-      val srcPath = new org.apache.hadoop.fs.Path(src)
-      srcPath.getFileSystem(conf).listStatus(srcPath).foreach { st =>
-        val name = st.getPath.getName
-        if (name.endsWith(".parquet")) {
-          Seq("a_", "b_").foreach { prefix =>
-            org.apache.hadoop.fs.FileUtil.copy(
-              st.getPath.getFileSystem(conf), st.getPath,
-              fs, new org.apache.hadoop.fs.Path(dstPath, prefix + name),
-              false, conf)
-          }
-        }
-      }
+      copyRestamped(spark, src, dir, Seq("a_", "b_"))
     }
   }
 
@@ -125,44 +172,8 @@ object Streams {
   private def sentinelEventsDir(spark: SparkSession, sfDir: String): String = {
     val src = stagedEventsDir(spark, sfDir)
     Tables.staged(spark, sfDir, "events_stream_wm") { dir =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dstPath = new org.apache.hadoop.fs.Path(dir)
-      val fs = dstPath.getFileSystem(conf)
-      fs.mkdirs(dstPath)
-      val srcPath = new org.apache.hadoop.fs.Path(src)
-      // copy in modification-time order, then EXPLICITLY re-stamp each copy
-      // with strictly increasing times: the file stream source batches by
-      // mod time at millisecond resolution, and sequential small copies can
-      // tie on one millisecond — an out-of-order tie would process a later
-      // time range first and drop the earlier chunk's rows as late
-      val base = System.currentTimeMillis()
-      val copied = srcPath.getFileSystem(conf).listStatus(srcPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getModificationTime).zipWithIndex.map { case (st, i) =>
-          val dst = new org.apache.hadoop.fs.Path(dstPath, st.getPath.getName)
-          org.apache.hadoop.fs.FileUtil.copy(
-            st.getPath.getFileSystem(conf), st.getPath, fs, dst, false, conf)
-          fs.setTimes(dst, base + i * 1000L, -1)
-          dst.getName
-        }.toSet
-      val all = Tables.load(spark, sfDir, "events")
-      val schema = all.schema
-      all.agg(max(col("ts")).as("m"))
-        .select(schema.fields.map { f =>
-          (f.name match {
-            case "ts" => expr("date_trunc('hour', m) + INTERVAL 240 HOURS 1 SECOND")
-            case "event_id" | "user_id" => lit(-1L)
-            case "event_type" => lit("sentinel")
-            case other => lit(null).cast(schema(other).dataType)
-          }).cast(f.dataType).as(f.name)
-        }: _*)
-        .coalesce(1).write.mode("append").parquet(dir)
-      // stamp the sentinel (the one parquet that is not a copied chunk)
-      // strictly after every chunk's timestamp
-      fs.listStatus(dstPath)
-        .filter(st => st.getPath.getName.endsWith(".parquet") &&
-          !copied.contains(st.getPath.getName))
-        .foreach(st => fs.setTimes(st.getPath, base + 100 * 1000L, -1))
+      appendSentinel(spark, sfDir, dir, 240, -1L, Seq("sentinel"),
+        copyRestamped(spark, src, dir))
     }
   }
 
@@ -186,42 +197,8 @@ object Streams {
     // whose 'sentinel'-typed rows their event-type pushed filters prune at
     // the scan, silently freezing their watermark (debugged round 5)
     Tables.staged(spark, sfDir, "events_stream_wmc") { dir =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dstPath = new org.apache.hadoop.fs.Path(dir)
-      val fs = dstPath.getFileSystem(conf)
-      fs.mkdirs(dstPath)
-      val srcPath = new org.apache.hadoop.fs.Path(src)
-      // copy the single-sentinel staging preserving its batch order
-      // (re-stamped with fresh strictly-increasing times, ties broken)
-      val base = System.currentTimeMillis()
-      val copied = srcPath.getFileSystem(conf).listStatus(srcPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getModificationTime).zipWithIndex.map { case (st, i) =>
-          val dst = new org.apache.hadoop.fs.Path(dstPath, st.getPath.getName)
-          org.apache.hadoop.fs.FileUtil.copy(
-            st.getPath.getFileSystem(conf), st.getPath, fs, dst, false, conf)
-          fs.setTimes(dst, base + i * 1000L, -1)
-          dst.getName
-        }.toSet
-      val all = Tables.load(spark, sfDir, "events")
-      val schema = all.schema
-      all.agg(max(col("ts")).as("m"))
-        .select(schema.fields.map { f =>
-          (f.name match {
-            case "ts" => expr("date_trunc('hour', m) + INTERVAL 480 HOURS 1 SECOND")
-            case "event_id" | "user_id" => lit(-2L)
-            case "event_type" => lit("sentinel")
-            case other => lit(null).cast(schema(other).dataType)
-          }).cast(f.dataType).as(f.name)
-        }: _*)
-        .coalesce(1).write.mode("append").parquet(dir)
-      fs.listStatus(dstPath)
-        .filter(st => st.getPath.getName.endsWith(".parquet") &&
-          !copied.contains(st.getPath.getName))
-        // stamp strictly AFTER the copied files whatever their count —
-        // a fixed offset would silently break ordering if the source
-        // staging ever grew past it
-        .foreach(st => fs.setTimes(st.getPath, base + (copied.size + 1) * 1000L, -1))
+      appendSentinel(spark, sfDir, dir, 480, -2L, Seq("sentinel"),
+        copyRestamped(spark, src, dir))
     }
   }
 
@@ -248,42 +225,10 @@ object Streams {
   private def joinSentinelEventsDir(spark: SparkSession, sfDir: String): String = {
     val src = stagedEventsDir(spark, sfDir)
     Tables.staged(spark, sfDir, "events_stream_wm2") { dir =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val dstPath = new org.apache.hadoop.fs.Path(dir)
-      val fs = dstPath.getFileSystem(conf)
-      fs.mkdirs(dstPath)
-      val srcPath = new org.apache.hadoop.fs.Path(src)
-      val base = System.currentTimeMillis()
-      val copied = srcPath.getFileSystem(conf).listStatus(srcPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getModificationTime).zipWithIndex.map { case (st, i) =>
-          val dst = new org.apache.hadoop.fs.Path(dstPath, st.getPath.getName)
-          org.apache.hadoop.fs.FileUtil.copy(
-            st.getPath.getFileSystem(conf), st.getPath, fs, dst, false, conf)
-          fs.setTimes(dst, base + i * 1000L, -1)
-          dst.getName
-        }.toSet
-      val all = Tables.load(spark, sfDir, "events")
-      val schema = all.schema
+      val next = copyRestamped(spark, src, dir)
       Seq(240, 480).zipWithIndex.foreach { case (hours, si) =>
-        val before = fs.listStatus(dstPath)
-          .filter(_.getPath.getName.endsWith(".parquet")).map(_.getPath.getName).toSet
-        all.agg(max(col("ts")).as("m"))
-          .select(col("m"),
-            explode(array(lit("purchase"), lit("click"))).as("st"))
-          .select(schema.fields.map { f =>
-            (f.name match {
-              case "ts" => expr(s"date_trunc('hour', m) + INTERVAL $hours HOURS 1 SECOND")
-              case "event_id" | "user_id" => lit(-1L - si)
-              case "event_type" => col("st")
-              case other => lit(null).cast(schema(other).dataType)
-            }).cast(f.dataType).as(f.name)
-          }: _*)
-          .coalesce(1).write.mode("append").parquet(dir)
-        fs.listStatus(dstPath)
-          .filter(st => st.getPath.getName.endsWith(".parquet") &&
-            !before.contains(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + (si + 1) * 100 * 1000L, -1))
+        appendSentinel(spark, sfDir, dir, hours, -1L - si, Seq("purchase", "click"),
+          next + si * 1000L)
       }
     }
   }
@@ -476,7 +421,7 @@ object Streams {
     fs.mkdirs(new org.apache.hadoop.fs.Path(src))
     val dst = new org.apache.hadoop.fs.Path(src, f"arrival-$i%02d.parquet")
     org.apache.hadoop.fs.FileUtil.copy(fs, files(i).getPath, fs, dst, false, conf)
-    fs.setTimes(dst, 1000000000000L + i * 100000L, -1)
+    fs.setTimes(dst, StagedMtimeBase + i * 100000L, -1)
   }
 
   /** One micro-batch of the production ingestion pipeline — quality gate →
@@ -2628,7 +2573,7 @@ object Streams {
         val ok = part.renameTo(dst)
         require(ok, s"staging rename failed for $part")
         // pin strictly increasing mtimes — FileStreamSource orders by them
-        dst.setLastModified(1000000000000L + i * 100000L)
+        dst.setLastModified(StagedMtimeBase + i * 100000L)
       }
     }
 

@@ -825,7 +825,13 @@ object BgpPlanner {
     * a path crosses entity classes). With one bound end the path is walked
     * from that end over a frontier of reached nodes — a bound object walks
     * the inverse path ([[Path.inverse]]); with both ends variable, closures
-    * and quantifiers build the pair relation. Three parts:
+    * and quantifiers build the pair relation. An unbounded `+` / `*` walks
+    * from the encoded seed id itself, on the driver frontier of
+    * [[graft.operators.Graph.reachableFrom]]: one bucket-pruned
+    * `Subject IN (frontier)` scan per BFS round, no DataFrame staged for
+    * the direct successors, and an exact-size local relation as the result
+    * — until the reached set passes `Graph.LocalFrontierMax` ids, when the
+    * walk restarts from the seed on the distributed loop. Three parts:
     *  - `edges` compiles a step (names, `^`, alternation, negated set, or a
     *    sequence composed into one relation by equi-joins — at scale the
     *    per-step predicate filters keep it far below |E|²) to a src→dst
@@ -836,14 +842,16 @@ object BgpPlanner {
     *    level k-1 — a plain composition, not a visited-set BFS, which keeps
     *    only the SHORTEST depth per node and would miss a node whose only
     *    in-window path is longer — with lineage truncated every fourth
-    *    level. An unbounded window closes over its deepest level with the
-    *    semi-naive BFS fixpoint ([[graft.operators.Graph.reachableFrom]] /
-    *    [[graft.operators.Graph.reachablePairs]]: one frontier⋈edges
-    *    equi-join + one anti-join per round), and `lo = 0` adds the zero
-    *    step (the seed, or every node of the edge set paired with itself);
+    *    level. An unbounded window (`{n,}`, n ≥ 2, with a bound end; any
+    *    closure with both ends variable) closes over its deepest level with
+    *    the semi-naive BFS fixpoint ([[graft.operators.Graph.reachableFrom]]
+    *    seeded by that level / [[graft.operators.Graph.reachablePairs]]),
+    *    and `lo = 0` adds the zero step (the seed, or every node of the
+    *    edge set paired with itself);
     *  - `walk` runs a sequence step by step over the frontier: a plain step
     *    is one frontier⋈edges equi-join, `+` / `*` run the BFS fixpoint
-    *    seeded by the step's successors / by the frontier itself, and `?`
+    *    from the frontier without / with the frontier itself (a bound end's
+    *    `+` or `*` over one step is this case too), and `?`
     *    is the frontier plus one step, no fixpoint. Intermediate frontier
     *    nodes are existential — they never surface as bindings — which is
     *    what licenses the frontier evaluation.
@@ -859,10 +867,8 @@ object BgpPlanner {
     import spark.implicits._
     val (subj, obj) = (col(TripleSchema.subject), col(TripleSchema.objekt))
     def isin(preds: Seq[String]) = col(TripleSchema.predicate).isin(preds.flatMap(enc.get): _*)
-    // (Subject, Object) edges of a step. Left unprojected where possible:
-    // a closure seed filtered from them stays a pruned point scan, where a
-    // seed over the projection `reachableFrom` caches would be read back
-    // from that cache (a full edge pass and one more job)
+    // (Subject, Object) edges of a step. Left unprojected where possible,
+    // so a filter on a bound end or a BFS frontier stays a pruned scan
     def edges(p: Path): DataFrame = p match {
       // an un-encodable negated term excludes nothing: it cannot occur in
       // the data, so every predicate survives the NOT-IN
@@ -905,16 +911,14 @@ object BgpPlanner {
     }
     def walk(frontier: DataFrame, p: Path): DataFrame = p match {
       case PathSeq(ps) => ps.foldLeft(frontier)(walk)
-      case Rep(x, lo, None) =>
-        val e = steps(x)
-        reachableFrom(asTriples(e), if (lo == 1) oneStep(frontier, e) else frontier)
+      case Rep(x, lo, None) => reachableFrom(asTriples(steps(x)), frontier, includeSeeds = lo == 0)
       case Rep(x, _, _) => frontier.unionAll(oneStep(frontier, steps(x))).distinct()
       case x => oneStep(frontier, steps(x))
     }
     def fromSeed(seed: Option[Int], p: Path): DataFrame = {
       val seedDf = seed.toSeq.toDF("node")
       p match {
-        case Rep(x, lo, hi) if !x.isInstanceOf[PathSeq] =>
+        case Rep(x, lo, hi) if !x.isInstanceOf[PathSeq] && (lo >= 2 || hi.nonEmpty) =>
           val e = edges(x)
           val direct = e.filter(subj === lit(seed.getOrElse(Int.MinValue)))
             .select(obj.as("node")).distinct()

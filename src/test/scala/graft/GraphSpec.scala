@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.Graph
+import graft.plans.Layouts
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph operator specs (the gate verifies reachability against a
@@ -21,6 +23,82 @@ class GraphSpec extends SparkTestBase {
     val r = Graph.reachable(t, Seq(1)).select("node")
       .collect().map(_.getInt(0)).sorted
     assert(r.sameElements(Array(1, 2, 3)))
+  }
+
+  private def ids(r: DataFrame): Seq[Long] =
+    r.collect().map(_.getAs[Number](0).longValue).sorted.toSeq
+
+  test("seeded walk: + starts from an empty reached set, a cycle brings the seed back") {
+    import spark.implicits._
+    val seed = Seq(1).toDF("node")
+    val chain = triples(Seq(1 -> 2, 2 -> 3, 4 -> 1))
+    assert(ids(Graph.reachableFrom(chain, seed, includeSeeds = false)) == Seq(2L, 3L))
+    assert(ids(Graph.reachableFrom(chain, seed)) == Seq(1L, 2L, 3L))
+    // 1 → 2 → 1: the seed is reached again by one edge or more
+    val cycle = triples(Seq(1 -> 2, 2 -> 1, 2 -> 3))
+    assert(ids(Graph.reachableFrom(cycle, seed, includeSeeds = false)) == Seq(1L, 2L, 3L))
+  }
+
+  test("seeded walk over Long ids beyond the Int range") {
+    import spark.implicits._
+    val b = 5000000000L
+    val t = Seq((b, 1L, b + 1), (b + 1, 1L, b + 2), (b + 2, 1L, b), (7L, 1L, -b), (9L, 1L, 8L))
+      .toDF(subject, predicate, objekt)
+    val seed = Seq(b + 1).toDF("node")
+    assert(ids(Graph.reachableFrom(t, seed, includeSeeds = false)) == Seq(b, b + 1, b + 2))
+    assert(ids(Graph.reachableFrom(t, seed)) == Seq(b, b + 1, b + 2))
+    // an Int seed over Long triples: the result is Long, the seed kept by *
+    val r = Graph.reachableFrom(t, Seq(7).toDF("node"))
+    assert(r.schema("node").dataType == org.apache.spark.sql.types.LongType)
+    assert(ids(r) == Seq(-b, 7L))
+  }
+
+  test("seeded walk: a hub past LocalFrontierMax hands off to the distributed loop") {
+    import spark.implicits._
+    val cap = Graph.LocalFrontierMax
+    // hub 0 → 1..cap+1, then 7 → -1 → -2 beyond it. With one partition the
+    // round's scan stops that partition at cap + 1 ids; with four, no
+    // partition reaches the cap but the round's ids together pass it
+    Seq((1, true), (4, false)).foreach { case (parts, plus) =>
+      val hub = spark.range(1, cap + 2, 1, parts)
+        .select(lit(0).as(subject), lit(1).as(predicate), col("id").cast("int").as(objekt))
+      val t = hub.unionByName(triples(Seq(7 -> -1, -1 -> -2)))
+      val r = Graph.reachableFrom(t, Seq(0).toDF("node"), includeSeeds = !plus)
+      assert(!r.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"$parts partition(s): the walk must leave the driver")
+      assert(ids(r) == Seq(-2L, -1L) ++ (if (plus) Nil else Seq(0L)) ++ (1L to cap + 1L),
+        s"$parts partition(s), plus = $plus")
+    }
+  }
+
+  test("seeded walk: a frontier past the IN-list size probes by a join, same answer") {
+    import spark.implicits._
+    // 0 → 1..2000 (round 1, IN list), 1500 → 5000 (round 2: a 2000-id
+    // frontier joins, one job more for its broadcast), 5000 → nothing
+    // (round 3, IN list again)
+    val fan = spark.range(1, 2001, 1, 4)
+      .select(lit(0).as(subject), lit(1).as(predicate), col("id").cast("int").as(objekt))
+    val t = fan.unionByName(triples(Seq(1500 -> 5000)))
+    var r: DataFrame = null
+    assert(jobsIn { r = Graph.reachableFrom(t, Seq(0).toDF("node"), includeSeeds = false) } == 4)
+    assert(r.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(ids(r) == (1L to 2000L) :+ 5000L)
+  }
+
+  test("seeded walk over a subject-bucketed table: one Spark job per BFS round") {
+    import spark.implicits._
+    Layouts.writeBucketed(triples(Seq(1 -> 2, 2 -> 3, 3 -> 4, 10 -> 11)), "graph_spec_walk",
+      Layouts.BySubject, 4)
+    try {
+      val t = spark.table("graph_spec_walk")
+      var r: DataFrame = null
+      // rounds from {1}, {2}, {3} and the empty one from {4}; the result is
+      // a local relation, so reading it starts no job
+      assert(jobsIn { r = Graph.reachableFrom(t, Seq(1).toDF("node"), includeSeeds = false) } == 4)
+      assert(jobsIn(assert(ids(r) == Seq(2L, 3L, 4L))) == 0)
+    } finally spark.sql("DROP TABLE IF EXISTS graph_spec_walk")
   }
 
   test("reachablePairs closure budget: loud failure with measured growth; unbudgeted unchanged") {

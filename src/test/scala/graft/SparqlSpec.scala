@@ -1339,43 +1339,16 @@ class SparqlSpec extends SparkTestBase {
     assert(rows.toSeq == Seq((-5, 10)))
   }
   test("path job budget: alternation closure and inverse-sequence rewrite") {
-    // the two path shapes the sparql_mixed benchmark times, at the job
-    // counts measured before the path evaluator was unified: a change must
-    // not quietly add BFS rounds, emptiness probes or checkpoints
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // the two path shapes the sparql_mixed benchmark times, at their
+    // measured job counts: a change must not quietly add BFS rounds,
+    // emptiness probes or checkpoints. The closure walks a driver frontier:
+    // three rounds of one scan each, which over this in-memory range layout
+    // is a sample, a map and a result job for a round that reads rows and
+    // one job with no stages for the last, empty one
     val (engine, triples) = fixture
     val reg = engine.registerSplitTables(triples)
-    val sc = spark.sparkContext
-    val tag = "graft.test.pathJobBudget"
-    def jobs(q: String): Int = {
-      val n = new AtomicInteger
-      val fence = new CountDownLatch(1)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).map(_.getProperty(tag)) match {
-            case Some("query") => n.incrementAndGet()
-            case Some("fence") => fence.countDown()
-            case _ =>
-          }
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setLocalProperty(tag, "query")
-        reg.sparql(q).collect()
-        // listener events arrive in order: once the fence job is seen,
-        // every query job has been counted
-        sc.setLocalProperty(tag, "fence")
-        sc.parallelize(Seq(1), 1).count()
-        assert(fence.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-      } finally {
-        sc.setLocalProperty(tag, null)
-        sc.removeSparkListener(listener)
-      }
-      n.get
-    }
-    assert(jobs("SELECT ?o WHERE { 'a' (:p1|:p2)+ ?o }") == 20)
+    def jobs(q: String): Int = jobsIn(reg.sparql(q).collect())
+    assert(jobs("SELECT ?o WHERE { 'a' (:p1|:p2)+ ?o }") == 7)
     assert(jobs("SELECT ?s WHERE { 'c' ^:p2/^:p1 ?s }") == 8)
   }
 }

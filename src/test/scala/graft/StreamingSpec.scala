@@ -577,4 +577,39 @@ class StreamingSpec extends SparkTestBase {
       r.getAs[Double]("hll_est")),
       "with most registers empty, LinearCounting must pull the estimate down")
   }
+
+  /** The parquet files of a staged events dir in arrival (mtime) order, as
+    * (name prefix before `part-`, event ids); asserts the mtimes strictly
+    * increase. */
+  private def arrival(dir: String): Seq[(String, Set[Long])] = {
+    import spark.implicits._
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.lastModified).toSeq
+    assert(files.map(_.lastModified).sliding(2).forall(p => p.head < p.last),
+      s"mtimes must strictly increase: ${files.map(f => f.getName -> f.lastModified)}")
+    files.map { f =>
+      (f.getName.take(f.getName.indexOf("part-")),
+        spark.read.parquet(f.getPath).select("event_id").as[Long].collect().toSet)
+    }
+  }
+
+  test("stagedEventsDir: the three files hold the (ts, event_id) rank thirds, in time order") {
+    import spark.implicits._
+    val ids = graft.sources.Tables.load(spark, sf, "events")
+      .orderBy("ts", "event_id").select("event_id").as[Long].collect()
+    val n = ids.length
+    val thirds = Seq(0 -> n / 3, n / 3 -> 2 * n / 3, 2 * n / 3 -> n)
+      .map { case (a, b) => ids.slice(a, b).toSet }
+    assert(arrival(graft.queries.Streams.stagedEventsDir(spark, sf)) == thirds.map("" -> _))
+  }
+
+  test("duplicatedEventsDir: two fresh stagings list one arrival order") {
+    def staging() = arrival(graft.queries.Streams.duplicatedEventsDir(spark.newSession(), sf))
+    val first = staging()
+    assert(first == staging())
+    // every chunk in time order, then its duplicate in the same order, so
+    // no two copies of a chunk share a two-file micro-batch
+    assert(first.map(_._1) == Seq("a_", "a_", "a_", "b_", "b_", "b_"))
+    assert(first.take(3).map(_._2) == first.drop(3).map(_._2))
+  }
 }

@@ -2,12 +2,8 @@ package graft.queries
 
 import graft.{SparkEntry, SparkTestBase}
 import graft.functions.SparkDialect
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Round-9 learned-selection / serving family: DSIR importance selection,
   * the distilled quality classifier, binary-quantized two-stage serving,
@@ -190,31 +186,7 @@ class LearnedSelectionSpec extends SparkTestBase {
 
   test("qcTrainWeights: training starts at most 10 Spark jobs") {
     // job budget: one statistics aggregate, not a corpus pass per GD round
-    val sc = spark.sparkContext
-    val tag = "graft.test.qcJobBudget"
-    val jobs = new AtomicInteger
-    val fence = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)) match {
-          case Some("train") => jobs.incrementAndGet()
-          case Some("fence") => fence.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "train")
-      Pipeline.qcTrainWeights(spark, sf)
-      // listener events arrive in order: once the fence job is seen, every
-      // training job has been counted
-      sc.setLocalProperty(tag, "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fence.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get > 0 && jobs.get <= 10, s"qcTrainWeights started ${jobs.get} jobs")
+    val jobs = jobsIn(Pipeline.qcTrainWeights(spark, sf))
+    assert(jobs > 0 && jobs <= 10, s"qcTrainWeights started $jobs jobs")
   }
 }

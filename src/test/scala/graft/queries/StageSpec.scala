@@ -1,12 +1,9 @@
 package graft.queries
 
 import graft.SparkTestBase
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Range
 import org.apache.spark.sql.execution.LogicalRDD
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 /** The staging primitive's contract: one eager job per staged relation, a
@@ -14,39 +11,9 @@ import scala.jdk.CollectionConverters._
   * streaming drain, `Streams.drain`. */
 class StageSpec extends SparkTestBase {
 
-  /** Spark jobs started by `body`, counted up to a fence job: listener
-    * events arrive in order, so once the fence is seen every job of
-    * `body` has been counted. */
-  private def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = "graft.test.stageJobs"
-    val n = new AtomicInteger
-    val fence = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)) match {
-          case Some("body") => n.incrementAndGet()
-          case Some("fence") => fence.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      body
-      sc.setLocalProperty(tag, "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fence.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   test("Stage.view runs one job per call and registers the checkpointed relation") {
     val src = spark.range(0, 1000, 1, 4).selectExpr("id", "id * 3 AS v")
-    assert(jobs(Stage.view("graft_stage_spec", src)) == 1)
+    assert(jobsIn(Stage.view("graft_stage_spec", src)) == 1)
     val plan = spark.table("graft_stage_spec").queryExecution.analyzed
     assert(plan.collectLeaves().map(_.getClass) == Seq(classOf[LogicalRDD]), plan.treeString)
     assert(plan.collectFirst { case r: Range => r }.isEmpty, plan.treeString)
