@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.TripleSchema
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -16,15 +16,22 @@ import scala.jdk.CollectionConverters._
   *
   * Reachability = semi-naive BFS fixpoint: each round expands only the
   * FRONTIER (not the whole reached set) through the edge table, drops
-  * already-reached nodes, and stops when the frontier empties. A seeded
-  * walk whose reached set stays small keeps it on the driver and spends one
-  * pruned scan per round ([[reachableFrom]]); past that size, and for the
-  * other fixpoints, every round is a distributed join and the driver holds
-  * only the loop counter and the emptiness check. At cluster scale the edge
-  * table is pre-partitioned (bucketed) on Subject, so a driver round reads
-  * only the frontier's buckets and a distributed round's join reuses the
-  * same partitioning without a fresh shuffle; `localCheckpoint` truncates
-  * the growing lineage.
+  * already-reached nodes, and stops when the frontier empties. Two
+  * primitives run every such fixpoint here:
+  *  - the seeded walk ([[reachableFrom]], [[shortestDistances]]) keeps its
+  *    frontier and its reached set, each id with the round that first
+  *    reached it, on the driver while they stay small, and spends one
+  *    pruned scan per round;
+  *  - [[semiNaive]], the one distributed loop, runs a walk past that size,
+  *    the pairwise closure ([[reachablePairs]]) and the weighted relax-join
+  *    ([[weightedDistances]]): per round one staged delta and one count,
+  *    which is both the stop test and the closure budget's tally.
+  * At cluster scale the edge table is pre-partitioned (bucketed) on
+  * Subject, so a driver round reads only the frontier's buckets and a
+  * distributed round's join reuses the same partitioning without a fresh
+  * shuffle; `localCheckpoint` truncates the growing lineage. Fixpoints that
+  * stop when nothing changed rather than on an empty delta
+  * ([[connectedComponents]], [[kCore]]) keep their own loops.
   */
 object Graph {
 
@@ -38,18 +45,18 @@ object Graph {
     reachableFrom(triples, seeds.toDF("node"), maxIters)
   }
 
-  /** Most node ids a [[reachableFrom]] walk keeps on the driver: its reached
-    * set, and so every frontier, while the set fits; and the ids one round
-    * may bring back per partition (`LocalFrontierMax + 1`, one past the cap
-    * to tell an overflow).
+  /** Most node ids a seeded walk keeps on the driver: its reached set, and
+    * so every frontier, while the set fits; and the ids one round may bring
+    * back per partition (`LocalFrontierMax + 1`, one past the cap to tell an
+    * overflow).
     */
   val LocalFrontierMax: Int = 1 << 16
 
-  /** Largest frontier a [[reachableFrom]] round probes with an IN list; a
-    * larger one joins a local relation of the frontier instead. Past a few
-    * hundred ids the IN list touches every bucket anyway, and a long one is
-    * slow to build and to evaluate: at sf0.1 a round over 17,211 ids took
-    * about 4 s, against 0.4–0.5 s for the join (4 cores). */
+  /** Largest frontier a seeded-walk round probes with an IN list; a larger
+    * one joins a local relation of the frontier instead. Past a few hundred
+    * ids the IN list touches every bucket anyway, and a long one is slow to
+    * build and to evaluate: at sf0.1 a round over 17,211 ids took about
+    * 4 s, against 0.4–0.5 s for the join (4 cores). */
   private val InListProbeMax = 1024
 
   /** Nodes reachable from the one-column (`node`) `seeds` by directed
@@ -57,34 +64,54 @@ object Graph {
     * within `maxIters` rounds, the seeds included (the `*` closure); without
     * it, every node 1 to `maxIters` edges away (the `+` closure — a seed is
     * in the result only when a cycle leads back to it). `maxIters < 0` runs
-    * to fixpoint. Null seeds are dropped. The `node` column has the wider
-    * of the seed and Object types (Int or Long).
+    * to fixpoint. Null and duplicate seeds are dropped, and the result is a
+    * set. The `node` column has the wider of the seed and Object types (Int
+    * or Long). This is the seeded walk ([[walk]]) without its distances.
+    */
+  def reachableFrom(triples: DataFrame, seeds: DataFrame, maxIters: Int = -1,
+      includeSeeds: Boolean = true): DataFrame =
+    walk(triples, seeds, maxIters, includeSeeds).select("node")
+
+  /** Single-source(-set) shortest HOP distances — (node, dist) for every
+    * node reachable from `seeds` within `maxIters` rounds, dist = minimum
+    * edge count (seeds at 0, Long). This is the seeded walk ([[walk]]) with
+    * the seeds included: BFS explores in hop order, so the round that first
+    * reaches a node IS its shortest distance — no per-round
+    * min-aggregation or re-relaxation (hop count = unit weights; weighted
+    * SSSP is [[weightedDistances]]). Null and duplicate seeds are dropped.
+    */
+  def shortestDistances(triples: DataFrame, seeds: DataFrame, maxIters: Int = -1): DataFrame =
+    walk(triples, seeds, maxIters, includeSeeds = true)
+
+  /** The seeded BFS behind [[reachableFrom]] and [[shortestDistances]]:
+    * (node, dist), dist the round that first reached the node (the seeds
+    * at 0 when `includeSeeds`).
     *
     * DRIVER FRONTIER. The seeds are collected to the driver — no job for a
     * local seed relation such as the encoded constant of a property path,
     * the jobs of its plan for a computed one such as a MIN aggregation —
     * and while the reached set holds at most [[LocalFrontierMax]] ids the
-    * frontier and the reached set stay there. Each round is then ONE Spark
-    * job: a `Subject IN (frontier)` scan — bucket-pruned on the
-    * subject-bucketed layouts — whose Object ids each partition
-    * deduplicates and caps at `LocalFrontierMax + 1` before they reach the
-    * driver. A frontier of more than 1,024 ids joins the edges as a local
-    * relation instead of an IN list (one job more, for its broadcast). The
-    * result is an exact-size local relation, so AQE sizes the joins above
-    * it with no hint, and nothing reads checkpoint blocks back.
+    * frontier and the reached ids, each with its round, stay there. Each
+    * round is then ONE Spark job: a `Subject IN (frontier)` scan —
+    * bucket-pruned on the subject-bucketed layouts — whose Object ids each
+    * partition deduplicates and caps at `LocalFrontierMax + 1` before they
+    * reach the driver. A frontier of more than 1,024 ids joins the edges as
+    * a local relation instead of an IN list (one job more, for its
+    * broadcast). The result is an exact-size local relation, so AQE sizes
+    * the joins above it with no hint, and nothing reads checkpoint blocks
+    * back.
     *
-    * OVERFLOW. If the seeds, one partition's ids of a round, or the reached
-    * set grow past the cap, the walk restarts from the original seeds on the
-    * distributed semi-naive loop: per round one frontier⋈edges equi-join, a
-    * distinct, an anti-join against the reached set and an eager
-    * `localCheckpoint`, over a persisted edge projection.
+    * OVERFLOW. If the seed rows, one partition's ids of a round, or the
+    * reached set grow past the cap, the walk restarts from the distinct
+    * seeds on [[semiNaive]]: per round one frontier⋈edges equi-join, a
+    * distinct and an anti-join against the reached set, with the round
+    * number as `dist`.
     */
-  def reachableFrom(triples: DataFrame, seeds: DataFrame, maxIters: Int = -1,
-      includeSeeds: Boolean = true): DataFrame = {
+  private def walk(triples: DataFrame, seeds: DataFrame, maxIters: Int,
+      includeSeeds: Boolean): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val edges = triples
-      .select(col(TripleSchema.subject).as("src"), col(TripleSchema.objekt).as("dst"))
+    val edges = edgeProjection(triples)
     val seedNodes = seeds.select(col("node")).filter(col("node").isNotNull)
     val nodeType =
       if (Seq(seedNodes, edges.select("dst")).forall(_.schema.head.dataType == IntegerType))
@@ -92,16 +119,24 @@ object Graph {
       else LongType
     val intSubjects = edges.schema("src").dataType == IntegerType
     val cap = LocalFrontierMax
-    def distributed = reachableDistributed(edges, seedNodes, maxIters, includeSeeds)
+    def distributed = semiNaive(edges, seedNodes.distinct().withColumn("dist", lit(0L)),
+        maxIters, keepStart = includeSeeds) { (frontier, reached, round) =>
+      frontier.join(edges, frontier("node") === edges("src"))
+        .select(col("dst").as("node"))
+        .distinct()
+        .join(reached.select("node"), Seq("node"), "left_anti")
+        .withColumn("dist", lit(round + 1L))
+    }
 
-    val seedIds =
-      seedNodes.select(col("node").cast(LongType)).limit(cap + 1).as[Long].collect().distinct
-    if (seedIds.length > cap) return distributed
-    val reached = mutable.HashSet.empty[Long]
-    if (includeSeeds) reached ++= seedIds
-    var frontier: Seq[Long] = seedIds.toSeq
-    var iter = 0
-    while (frontier.nonEmpty && (maxIters < 0 || iter < maxIters)) {
+    // hand off on the raw row count: duplicates among the first cap + 1
+    // rows must not hide the seeds behind them
+    val seedRows = seedNodes.select(col("node").cast(LongType)).limit(cap + 1).as[Long].collect()
+    if (seedRows.length > cap) return distributed
+    val dist = mutable.HashMap.empty[Long, Long]
+    if (includeSeeds) seedRows.foreach(dist(_) = 0L)
+    var frontier: Seq[Long] = seedRows.distinct.toSeq
+    var round = 0
+    while (frontier.nonEmpty && (maxIters < 0 || round < maxIters)) {
       // probe with literals of the Subject type: a cast column would neither
       // push down nor prune buckets (an Int column cannot hold a wider id)
       val probe = if (intSubjects) frontier.filter(_.isValidInt).map(_.toInt) else frontier
@@ -114,17 +149,24 @@ object Graph {
           hits.filter(col("dst").isNotNull).select(col("dst").cast(LongType)).as[Long]
             .mapPartitions(distinctCapped(_, cap)).collect().toSet
         }
-      val next = found.diff(reached)
+      val next = found.filterNot(dist.contains)
       // a partition stopped at cap + 1 ids leaves `found` above the cap
-      if (found.size > cap || reached.size + next.size > cap) return distributed
-      reached ++= next
+      if (found.size > cap || dist.size + next.size > cap) return distributed
+      round += 1
+      next.foreach(dist(_) = round)
       frontier = next.toSeq
-      iter += 1
     }
     spark.createDataFrame(
-      reached.toSeq.sorted.map(v => Row(if (nodeType == IntegerType) v.toInt else v)).asJava,
-      StructType(Seq(StructField("node", nodeType, nullable = false))))
+      dist.toSeq.sortBy(_._1).map { case (v, d) =>
+        Row(if (nodeType == IntegerType) v.toInt else v, d)
+      }.asJava,
+      StructType(Seq(StructField("node", nodeType, nullable = false),
+        StructField("dist", LongType, nullable = false))))
   }
+
+  /** The (src, dst) = (Subject, Object) edges of a triple table. */
+  private def edgeProjection(triples: DataFrame): DataFrame =
+    triples.select(col(TripleSchema.subject).as("src"), col(TripleSchema.objekt).as("dst"))
 
   /** At most `cap + 1` distinct values of one partition. */
   private def distinctCapped(it: Iterator[Long], cap: Int): Iterator[Long] = {
@@ -133,99 +175,75 @@ object Graph {
     seen.iterator
   }
 
-  /** The distributed semi-naive loop behind [[reachableFrom]]: `edges` is
-    * (src, dst), `seeds` one column `node`. */
-  private def reachableDistributed(edges0: DataFrame, seeds: DataFrame, maxIters: Int,
-      includeSeeds: Boolean): DataFrame = {
-    // cache the 2-column edge projection across iterations (the GraphX/
-    // Pregel discipline): without it every BFS round re-scans the source.
-    // MEMORY_AND_DISK so oversized edge sets degrade to disk, not OOM.
-    val edges = edges0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val seedDf = seeds.persist()
-    var reached = if (includeSeeds) seedDf else seedDf.limit(0)
-    var frontier = seedDf
-    var iter = 0
-    var done = false
-    while (!done && (maxIters < 0 || iter < maxIters)) {
-      val next = frontier
-        .join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"))
-        .distinct()
-        .join(reached, Seq("node"), "left_anti")
-        // localCheckpoint: truncate lineage so plan size stays O(1) in the
-        // iteration count instead of O(iterations)
-        .localCheckpoint()
-      if (next.isEmpty) done = true
-      else {
-        // `next` is already a materialized localCheckpoint — `reached` stays
-        // a UNION of those cached blocks (breadth O(iters), no plan depth,
-        // nothing recomputed), so re-checkpointing the growing set each
-        // round would only duplicate storage writes
-        reached = reached.unionAll(next)
-        frontier = next
-        iter += 1
-      }
-    }
-    seedDf.unpersist()
-    edges.unpersist()
-    reached
-  }
-
-  /** Single-source(-set) shortest HOP distances — (node, dist) for every
-    * node reachable from `seeds`, dist = minimum edge count (seeds at 0).
-    * Same semi-naive fixpoint as [[reachableFrom]]: because BFS explores in
-    * hop order, the anti-join against the already-reached set IS the min —
-    * a node's first appearance is its shortest distance, so no per-round
-    * min-aggregation or re-relaxation is needed (hop-count = unit weights;
-    * weighted SSSP would need the Bellman-Ford relax-join instead).
-    * Per-round cost: one frontier×edges equi-join + distinct + anti-join,
-    * O(diameter) rounds, O(1) plan depth via localCheckpoint.
+  /** THE distributed semi-naive loop: every walk that leaves the driver,
+    * [[reachablePairs]] and [[weightedDistances]] run on it.
+    *
+    * `edges`, the relation the caller's `start` and `delta` read, is
+    * persisted once per call (MEMORY_AND_DISK, the GraphX/Pregel
+    * discipline: no BFS round re-scans the source; an oversized edge set
+    * degrades to disk, not OOM) and released when the loop ends, however it
+    * ends. `start` is staged with one eager `localCheckpoint` and is the
+    * first frontier; the accumulated result `acc` starts from it when
+    * `keepStart`, empty otherwise. Round `r` (from 0) stages the caller's
+    * `delta(frontier, acc, r)` with one eager `localCheckpoint` — lineage
+    * stays O(1) in the round count — and reads its row count once:
+    * an empty delta, or `maxIters` rounds, ends the loop; otherwise
+    * `merge(acc, delta)` folds the delta in and the delta becomes the next
+    * frontier. `acc` stays a union of staged blocks (breadth O(rounds), no
+    * plan depth, nothing recomputed), so the default merge re-stages
+    * nothing.
+    *
+    * `budgetRows ≥ 0` bounds `acc`'s row count, tallied from the start's
+    * count and the same per-round counts: the loop aborts with the measured
+    * per-round growth before a round that starts over budget (the
+    * [[reachablePairs]] closure budget). The result is lazy over staged
+    * blocks only, never over the released edges.
     */
-  def shortestDistances(triples: DataFrame, seeds: DataFrame, maxIters: Int = -1): DataFrame = {
-    val edges = triples
-      .select(col(TripleSchema.subject).as("src"), col(TripleSchema.objekt).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val seedDf = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).persist()
-    var reached = seedDf
-    var frontier: DataFrame = seedDf
-    var iter = 0
-    var done = false
-    while (!done && (maxIters < 0 || iter < maxIters)) {
-      val next = frontier
-        .join(edges, frontier("node") === edges("src"))
-        .select(col("dst").as("node"))
-        .distinct()
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .withColumn("dist", lit((iter + 1).toLong))
-        .localCheckpoint()
-      if (next.isEmpty) done = true
-      else {
-        reached = reached.unionAll(next)
-        frontier = next
-        iter += 1
+  private def semiNaive(edges: DataFrame, start: DataFrame, maxIters: Int,
+      keepStart: Boolean = true, budgetRows: Long = -1L,
+      merge: (DataFrame, DataFrame) => DataFrame = _.unionAll(_))(
+      delta: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      var frontier = start.localCheckpoint()
+      var acc = if (keepStart) frontier else frontier.limit(0)
+      val growth = mutable.ArrayBuffer.empty[Long]
+      if (budgetRows >= 0) growth += rowCount(frontier)
+      var round = 0
+      var n = 1L
+      while (n > 0 && (maxIters < 0 || round < maxIters)) {
+        if (budgetRows >= 0 && growth.sum > budgetRows)
+          throw new IllegalStateException(
+            s"reachablePairs closure budget exceeded: ${growth.sum} pairs > " +
+              s"$budgetRows after ${round + 1} round(s); per-round growth: " +
+              s"${growth.mkString(", ")} — the pairwise closure is " +
+              "O(|V|·avg-reach) on dense graphs; raise the budget or bound " +
+              "the path's hop count")
+        val next = delta(frontier, acc, round).localCheckpoint()
+        n = rowCount(next)
+        if (n > 0) { growth += n; acc = merge(acc, next); frontier = next; round += 1 }
       }
-    }
-    seedDf.unpersist()
-    edges.unpersist()
-    reached
+      acc
+    } finally edges.unpersist()
   }
+
+  /** Row count of a staged relation in ONE job: `Dataset.count` aggregates
+    * through an exchange, which AQE runs as a job of its own. */
+  private def rowCount(staged: DataFrame): Long = staged.queryExecution.toRdd.count()
 
   /** WEIGHTED single-source(-set) shortest distances — the Bellman-Ford
-    * RELAX-JOIN fixpoint that [[shortestDistances]]'s scaladoc points to:
-    * hop-count BFS cannot carry weights (a node's first visit is not its
-    * cheapest), so each round RELAXES the improved frontier through the
-    * edge list — `cand(dst) = min(dist(src) + w)` — and keeps only strict
-    * improvements over the settled table. Per round: one frontier⋈edges
-    * equi-join, one map-side-combinable MIN by dst, one left join against
-    * the settled distances; the new frontier is exactly the improved set
-    * (semi-naive — settled nodes never re-relax unless genuinely improved).
-    * Converges in O(longest shortest-path edge count) rounds for
-    * non-negative weights; `localCheckpoint` keeps the plan O(1) in rounds.
-    * All state is distributed — the driver holds the loop counter and the
-    * emptiness probe.
+    * RELAX-JOIN fixpoint on [[semiNaive]]: hop-count BFS cannot carry
+    * weights (a node's first visit is not its cheapest), so each round
+    * RELAXES the improved frontier through the edge list —
+    * `cand(dst) = min(dist(src) + w)` — and keeps only strict improvements
+    * over the settled table. Per round: one frontier⋈edges equi-join, one
+    * map-side-combinable MIN by dst and one left join against the settled
+    * distances make the delta, exactly the improved set (semi-naive —
+    * settled nodes never re-relax unless genuinely improved); the merge
+    * re-aggregates MIN(dist) by node over settled ∪ delta and stages it, so
+    * a node improved twice keeps exactly one row. Converges in O(longest
+    * shortest-path edge count) rounds for non-negative weights. All state
+    * is distributed — the driver holds the round counter and the count.
     *
     * `edges`: columns `src`, `dst`, `w` (non-negative integral weight);
     * `seeds`: one column `node`. Returns (node, dist) for every node
@@ -235,33 +253,17 @@ object Graph {
   def weightedDistances(edges: DataFrame, seeds: DataFrame,
       maxIters: Int = -1): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    var frontier = dist
-    var iter = 0
-    var done = false
-    while (!done && (maxIters < 0 || iter < maxIters)) {
-      val cand = frontier.join(e, frontier("node") === e("src"))
+    val settle = (settled: DataFrame, improved: DataFrame) =>
+      settled.unionAll(improved).groupBy("node").agg(min("dist").as("dist")).localCheckpoint()
+    semiNaive(e, seeds.select(col("node")).distinct().withColumn("dist", lit(0L)), maxIters,
+        merge = settle) { (frontier, settled, _) =>
+      frontier.join(e, frontier("node") === e("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("d2"))
         .groupBy("node").agg(min("d2").as("d2"))
-      val improved = cand.join(dist, Seq("node"), "left")
+        .join(settled, Seq("node"), "left")
         .filter(col("dist").isNull || col("d2") < col("dist"))
         .select(col("node"), col("d2").as("dist"))
-        .localCheckpoint()
-      if (improved.isEmpty) done = true
-      else {
-        // settled table = min over (old, improved): re-aggregate so a node
-        // improved twice keeps exactly one row
-        dist = dist.unionAll(improved)
-          .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint()
-        frontier = improved
-        iter += 1
-      }
     }
-    e.unpersist()
-    dist
   }
 
   /** Default [[reachablePairs]] closure budget: 10⁸ (root, node) pairs
@@ -273,60 +275,30 @@ object Graph {
 
   /** PAIRWISE transitive closure — (root, node) for every node reachable
     * from `root` in ≥1 step — the provenance-carrying BFS that backs
-    * both-ends-variable property paths (`?s :p+ ?o`). Same semi-naive
-    * fixpoint as [[reachableFrom]] with a two-column frontier: each round
-    * joins only the frontier against the edges and anti-joins out pairs
-    * already reached. State size is the closure itself (bounded by
-    * |V|·avg-reach); the per-round shapes are hash equi-joins on `node`,
-    * nothing driver-side. O(longest path) rounds.
+    * both-ends-variable property paths (`?s :p+ ?o`). It runs on
+    * [[semiNaive]] from the distinct edge pairs with a two-column frontier:
+    * each round joins only the frontier against the edges and anti-joins
+    * out pairs already reached on (root, node). State size is the closure
+    * itself (bounded by |V|·avg-reach); the per-round shapes are hash
+    * equi-joins on `node`, nothing driver-side. O(longest path) rounds.
     *
     * `budgetRows ≥ 0` bounds the CLOSURE SIZE: the fixpoint aborts with
     * the measured per-round frontier growth the moment the accumulated
     * pair count exceeds the budget — a dense graph's closure is paid for
     * knowingly (raise the budget) instead of discovered by a stuck job.
-    * The per-round count reads a checkpointed frontier — no extra
-    * computation beyond the emptiness probe it replaces.
+    * The tally reads the loop's per-round count, which is also its stop
+    * test, plus one count of the starting pairs.
     */
   def reachablePairs(triples: DataFrame, maxIters: Int = -1,
       budgetRows: Long = -1L): DataFrame = {
-    val edges = triples
-      .select(col(TripleSchema.subject).as("src"), col(TripleSchema.objekt).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var reached = edges.select(col("src").as("root"), col("dst").as("node"))
-      .distinct().localCheckpoint()
-    var total = reached.count()
-    val growth = scala.collection.mutable.ArrayBuffer(total)
-    var frontier = reached
-    var iter = 0
-    var done = false
-    while (!done && (maxIters < 0 || iter < maxIters)) {
-      if (budgetRows >= 0 && total > budgetRows) {
-        edges.unpersist()
-        throw new IllegalStateException(
-          s"reachablePairs closure budget exceeded: $total pairs > " +
-            s"$budgetRows after ${iter + 1} round(s); per-round growth: " +
-            s"${growth.mkString(", ")} — the pairwise closure is " +
-            "O(|V|·avg-reach) on dense graphs; raise the budget or bound " +
-            "the path's hop count")
-      }
-      val next = frontier
-        .join(edges, frontier("node") === edges("src"))
+    val edges = edgeProjection(triples)
+    semiNaive(edges, edges.select(col("src").as("root"), col("dst").as("node")).distinct(),
+        maxIters, budgetRows = budgetRows) { (frontier, reached, _) =>
+      frontier.join(edges, frontier("node") === edges("src"))
         .select(col("root"), col("dst").as("node"))
         .distinct()
         .join(reached, Seq("root", "node"), "left_anti")
-        .localCheckpoint()
-      val n = next.count()
-      if (n == 0) done = true
-      else {
-        total += n
-        growth += n
-        reached = reached.unionAll(next)
-        frontier = next
-        iter += 1
-      }
     }
-    edges.unpersist()
-    reached
   }
 
   /** Connected components by iterative min-label propagation — the dedup

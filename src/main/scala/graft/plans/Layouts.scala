@@ -22,9 +22,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): `repartitionByRange` samples the key distribution, so
   * ranges stay balanced under skew; for a persistent table prefer
-  * `writePartitionedBySign` below — a `sign` partition column lets Catalyst's
+  * [[persistedLayout]] below — its `sign` partition column lets Catalyst's
   * built-in `PruneFileSourcePartitions` replace the manual Positive/Negative
-  * routing with partition pruning at planning time.
+  * routing with partition pruning at planning time, and its buckets let
+  * joins on the key run without a shuffle exchange (CoreSpec and
+  * ScaleTechniquesSpec prove both plan shapes).
   */
 object Layouts {
 
@@ -55,24 +57,6 @@ object Layouts {
       positive = rangeLayout(df.filter(col(TripleSchema.subject) >= 0), key, numPartitions),
       negative = rangeLayout(df.filter(col(TripleSchema.subject) < 0), key, numPartitions),
     )
-
-  /** Scale path: persist with a derived `sign` partition column so scans of
-    * sign-determined queries read half the files via partition pruning —
-    * subsumes the manual two-table split.
-    */
-  def writePartitionedBySign(df: DataFrame, path: String): Unit =
-    df.withColumn("sign", when(col(TripleSchema.subject) >= 0, lit("pos")).otherwise(lit("neg")))
-      .write.mode("overwrite").partitionBy("sign").parquet(path)
-
-  /** Scale path for repeated joins on the layout key: a bucketed + sorted
-    * catalog table. Joins between tables bucketed on the same key with the
-    * same bucket count run WITHOUT a shuffle exchange
-    * (ScaleTechniquesSpec proves the plan shape).
-    */
-  def writeBucketed(df: DataFrame, table: String, key: Key, buckets: Int): Unit =
-    df.write.format("parquet")
-      .bucketBy(buckets, key.column).sortBy(key.column)
-      .mode("overwrite").saveAsTable(table)
 
   /** Z-order value: bit-interleave the low `bits` bits of two non-negative
     * int columns (a in even positions, b in odd). Sorting by this key gives

@@ -326,13 +326,10 @@ object Pipeline {
     * dropping rows whose bound misses the threshold's minimum overlap
     * keeps recall exact while shrinking the verify join's pair set.
     */
-  /** The candidate-generation CTE chain of [[prefixJoinSql]] (everything up
-    * to and including the deduped `pairs` set), factored out so the Probe
-    * profiler measures EXACTLY the gate's candidate plan rather than a
-    * hand-copied approximation that could drift. */
-  private def prefixCandidateCtes(d: Dialect, setTable: String,
-      prefixLen: String, ySide: String, pairPredicate: String): String =
-    s"""tp AS (SELECT doc_id, sh, ${d.len("sh")} AS n FROM $setTable),
+  private def prefixJoinSql(d: Dialect, setTable: String, prefixLen: String,
+      ySide: String, pairPredicate: String, verifyName: String,
+      verifyExpr: String, verifyWhere: String): String =
+    s"""WITH tp AS (SELECT doc_id, sh, ${d.len("sh")} AS n FROM $setTable),
        |e AS (${d.explodeSelect(s"doc_id, ${d.len("sh")} AS n", setTable, "sh", "h")}),
        |df AS (SELECT h, COUNT(*) AS df FROM e GROUP BY h),
        |r AS (SELECT e.doc_id, e.h, e.n,
@@ -342,12 +339,7 @@ object Pipeline {
        |pairs AS (
        |  SELECT x.doc_id AS a, y.doc_id AS b
        |  FROM c x JOIN $ySide y ON x.h = y.h AND $pairPredicate
-       |  GROUP BY x.doc_id, y.doc_id)""".stripMargin
-
-  private def prefixJoinSql(d: Dialect, setTable: String, prefixLen: String,
-      ySide: String, pairPredicate: String, verifyName: String,
-      verifyExpr: String, verifyWhere: String): String =
-    s"""WITH ${prefixCandidateCtes(d, setTable, prefixLen, ySide, pairPredicate)}
+       |  GROUP BY x.doc_id, y.doc_id)
        |SELECT * FROM (
        |  SELECT CAST(p.a AS BIGINT) AS a, CAST(p.b AS BIGINT) AS b,
        |    $verifyExpr AS $verifyName
@@ -356,27 +348,19 @@ object Pipeline {
        |  JOIN tp tb ON p.b = tb.doc_id) s
        |WHERE $verifyWhere""".stripMargin
 
-  /** The Jaccard join's candidate parameters, shared by [[ngramPairsSql]]
-    * and the Probe's candidates-only handle. Length-ratio prune only: the
-    * PPJoin positional filter (see prefixJoinSql doc; applied in the
-    * containment join) was measured here and REVERTED — on this corpus the
-    * verify set after prefix + length pruning is already tiny, so
-    * per-match-row positional arithmetic on the dense candidate join costs
-    * more than the verify rows it saves (6.5s vs 4.5s at sf0.1). It pays
-    * when the verify join dominates — the asymmetric containment shape. */
-  private def jaccardPrefixLen(d: Dialect): String = {
-    val idiv = if (d == SparkDialect) "div" else "//"
-    s"n $idiv 2 + 1"
-  }
-  private val jaccardPairPredicate =
-    "x.doc_id < y.doc_id AND x.n <= 2*y.n AND y.n <= 2*x.n"
-
+  /** The Jaccard join: length-ratio prune only. The PPJoin positional
+    * filter (see prefixJoinSql doc; applied in the containment join) was
+    * measured here and REVERTED — on this corpus the verify set after
+    * prefix + length pruning is already tiny, so per-match-row positional
+    * arithmetic on the dense candidate join costs more than the verify rows
+    * it saves (6.5s vs 4.5s at sf0.1). It pays when the verify join
+    * dominates — the asymmetric containment shape. */
   private def ngramPairsSql(d: Dialect, setTable: String): String = {
     val inter = d.interSize("ta.sh", "tb.sh")
     prefixJoinSql(d, setTable,
-      prefixLen = jaccardPrefixLen(d),
+      prefixLen = s"n ${if (d == SparkDialect) "div" else "//"} 2 + 1",
       ySide = "c",
-      pairPredicate = jaccardPairPredicate,
+      pairPredicate = "x.doc_id < y.doc_id AND x.n <= 2*y.n AND y.n <= 2*x.n",
       verifyName = "sim",
       verifyExpr = s"CAST($inter AS DOUBLE) / (${d.len("ta.sh")} + ${d.len("tb.sh")} - $inter)",
       verifyWhere = "sim >= 0.5")
@@ -6060,23 +6044,6 @@ object Pipeline {
   def debugTfidfSql: String = tfidfSql(SparkDialect)
   def chunkParams: (Int, Int) = (CHUNK, STRIDE)
   def debugTextNormalizeSql: String = textNormalize(SparkDialect)
-  def debugNgramPairsSql: String = ngramPairsSql(SparkDialect, "ngram_sets")
-  // graft.Probe stage handles (n-gram pipeline profiling)
-  def debugShingleExplodeSql: String = shingleExplode(SparkDialect)
-  def debugNgramSetFromView: String =
-    ngramSetSql(SparkDialect, Some("SELECT doc_id, s FROM graft_sh"))
-  def debugMinhashSigFromView: String =
-    minhashSigSql(SparkDialect, Some("SELECT doc_id, s FROM graft_sh"))
-  /** Candidate generation WITHOUT the verify join: the prefix machinery
-    * (explode + global df + rank window + prefix self-join + pair dedup) —
-    * the gate's own candidate CTEs verbatim, so the profiler cannot drift
-    * from the plan it claims to measure.
-    */
-  def debugNgramCandidatesSql: String =
-    s"""WITH ${prefixCandidateCtes(SparkDialect, "ngram_sets",
-          jaccardPrefixLen(SparkDialect), "c", jaccardPairPredicate)}
-       |SELECT a, b FROM pairs""".stripMargin
-  def debugMinhashPairsSql(t: String): String = minhashPairsSql(SparkDialect, t)
 
   // ----------------------------- binary-quantized serving (round-9)
 

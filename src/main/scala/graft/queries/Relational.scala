@@ -699,8 +699,9 @@ object Relational {
     // hive-style `partitionBy` layout every big table uses — the filter on
     // the partition column is resolved at PLANNING time (file listing),
     // so the scan reads only the matching directory, not the table. The
-    // same mechanism backs Layouts.writePartitionedBySign (spec-proven);
-    // this gate proves the round-trip against the plain-filter oracle. ----
+    // same mechanism backs the `sign`-partitioned Layouts.persistedLayout
+    // (spec-proven); this gate proves the round-trip against the
+    // plain-filter oracle. ----
     QueryDef("q40_partitioned_io",
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE event_type = 'purchase'""".stripMargin) { (s, dir) =>
@@ -1466,8 +1467,7 @@ object Relational {
       |GROUP BY ms.m""".stripMargin
 
   /** The staged co-purchase edge fixture (distinct canonical part pairs
-    * sharing an order) — q50's input, shared with `graft.Probe tri` so the
-    * profiler cannot drift from the gate's fixture. The lineitem self-join
+    * sharing an order) — q50's input. The lineitem self-join
     * + distinct that derives it was the dominant per-run cost before
     * staging (PLANS.md r05 audit); memoizing it per (session, dataset)
     * makes the timed region measure the triangle KERNEL over an on-disk

@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * split layout is in use and a pattern's subject is bound, only the
   * sign-matching table is scanned; when the subject is a variable, the two
   * tables are UNION ALL'd (bag semantics, as the reference's `UNION ALL`).
-  * With the partition-column layout (`Layouts.writePartitionedBySign`) the
-  * same effect comes free from Catalyst partition pruning on a plain
-  * `sign = 'pos'` filter.
+  * With the `sign`-partitioned `Layouts.persistedLayout` the same effect
+  * comes free from Catalyst partition pruning on a plain `sign = 'pos'`
+  * filter.
   *
   * Scale notes: per-pattern constant filters are pushed into the parquet scan
   * by Catalyst (point predicates on int columns → row-group pruning via

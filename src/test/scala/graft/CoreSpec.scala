@@ -83,12 +83,14 @@ class CoreSpec extends SparkTestBase {
     import spark.implicits._
     val df = Seq((3, 1, 1), (-3, 1, 1)).toDF(
       TripleSchema.subject, TripleSchema.predicate, TripleSchema.objekt)
-    val dir = Files.createTempDirectory("signed").toString + "/t"
-    Layouts.writePartitionedBySign(df, dir)
-    val back = spark.read.parquet(dir)
-    assert(back.filter(col("sign") === "pos").count() == 1)
-    val plan = back.filter(col("sign") === "pos").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") || !plan.contains("sign = pos"),
-      s"expected partition pruning in:\n$plan")
+    val tbl = Layouts.persistedLayout(df, "core_spec_signed", Layouts.BySubject,
+      signPartitioned = true)
+    try {
+      val back = spark.table(tbl)
+      assert(back.filter(col("sign") === "pos").count() == 1)
+      val plan = back.filter(col("sign") === "pos").queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") || !plan.contains("sign = pos"),
+        s"expected partition pruning in:\n$plan")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }

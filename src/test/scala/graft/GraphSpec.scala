@@ -69,7 +69,31 @@ class GraphSpec extends SparkTestBase {
         s"$parts partition(s): the walk must leave the driver")
       assert(ids(r) == Seq(-2L, -1L) ++ (if (plus) Nil else Seq(0L)) ++ (1L to cap + 1L),
         s"$parts partition(s), plus = $plus")
+      // the same walk carries hop distances across the hand-off: the hub at
+      // 0, its cap + 1 successors (7 among them) at 1, then -1 at 2, -2 at 3
+      val d = Graph.shortestDistances(t, Seq(0).toDF("node"))
+      assert(!d.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(d.groupBy("dist").count().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(0L -> 1L, 1L -> (cap + 1L), 2L -> 1L, 3L -> 1L), s"$parts partition(s)")
+      assert(d.filter(col("node") < 0).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+        Map(-1 -> 2L, -2 -> 3L))
     }
+  }
+
+  test("seeded walk: duplicate seed rows past the cap hand off and hide no seed") {
+    import spark.implicits._
+    val cap = Graph.LocalFrontierMax
+    // cap + 1 copies of 0, then 5: the first cap + 1 rows hold one distinct
+    // id, but the walk must still start from 5
+    val seeds = spark.range(0, cap + 1, 1, 1).select(lit(0).as("node"))
+      .unionByName(Seq(5).toDF("node"))
+    val t = triples(Seq(5 -> 6, 0 -> 1))
+    // a set on both paths: one row per seed, however often it repeats
+    assert(ids(Graph.reachableFrom(t, seeds)) == Seq(0L, 1L, 5L, 6L))
+    assert(ids(Graph.reachableFrom(t, seeds, includeSeeds = false)) == Seq(1L, 6L))
+    assert(Graph.shortestDistances(t, seeds).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap == Map(0 -> 0L, 1 -> 1L, 5 -> 0L, 6 -> 1L))
   }
 
   test("seeded walk: a frontier past the IN-list size probes by a join, same answer") {
@@ -89,16 +113,21 @@ class GraphSpec extends SparkTestBase {
 
   test("seeded walk over a subject-bucketed table: one Spark job per BFS round") {
     import spark.implicits._
-    Layouts.writeBucketed(triples(Seq(1 -> 2, 2 -> 3, 3 -> 4, 10 -> 11)), "graph_spec_walk",
-      Layouts.BySubject, 4)
+    val tbl = Layouts.persistedLayout(triples(Seq(1 -> 2, 2 -> 3, 3 -> 4, 10 -> 11)),
+      "graph_spec_walk", Layouts.BySubject, signPartitioned = false, buckets = 4)
     try {
-      val t = spark.table("graph_spec_walk")
+      val t = spark.table(tbl)
       var r: DataFrame = null
       // rounds from {1}, {2}, {3} and the empty one from {4}; the result is
       // a local relation, so reading it starts no job
       assert(jobsIn { r = Graph.reachableFrom(t, Seq(1).toDF("node"), includeSeeds = false) } == 4)
       assert(jobsIn(assert(ids(r) == Seq(2L, 3L, 4L))) == 0)
-    } finally spark.sql("DROP TABLE IF EXISTS graph_spec_walk")
+      // hop distances ride the same walk: the same four rounds, no job to read
+      var d: DataFrame = null
+      assert(jobsIn { d = Graph.shortestDistances(t, Seq(1).toDF("node")) } == 4)
+      assert(jobsIn(assert(d.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+        Map(1 -> 0L, 2 -> 1L, 3 -> 2L, 4 -> 3L))) == 0)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
   test("reachablePairs closure budget: loud failure with measured growth; unbudgeted unchanged") {

@@ -287,6 +287,60 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("property: the graph fixpoints match in-memory BFS, Dijkstra and closure") {
+    import spark.implicits._
+    import graft.operators.Graph
+    val graphGen = for {
+      edges <- Gen.listOfN(16, Gen.zip(Gen.choose(0, 9), Gen.choose(0, 9), Gen.choose(0L, 6L)))
+      seeds <- Gen.listOfN(2, Gen.choose(0, 9))
+    } yield (edges, seeds)
+    forSamples(graphGen, 4) { case (edges, seeds) =>
+      val out = edges.groupBy(_._1).map { case (u, es) => u -> es.map(e => e._2 -> e._3) }
+        .withDefaultValue(Nil)
+      // hop distances: breadth-first from the distinct seeds
+      val hops = scala.collection.mutable.Map(seeds.map(_ -> 0L): _*)
+      var level = seeds.distinct
+      var depth = 0L
+      while (level.nonEmpty) {
+        depth += 1
+        level = level.flatMap(u => out(u).map(_._1)).distinct.filterNot(hops.contains)
+        level.foreach(hops(_) = depth)
+      }
+      // Dijkstra: settle the cheapest unsettled node, relax its out-edges
+      val cost = scala.collection.mutable.Map(seeds.map(_ -> 0L): _*)
+      val settled = scala.collection.mutable.Set.empty[Int]
+      while (cost.keySet.exists(!settled(_))) {
+        val (u, du) = cost.filter(c => !settled(c._1)).minBy(_._2)
+        settled += u
+        out(u).foreach { case (v, w) => if (cost.get(v).forall(du + w < _)) cost(v) = du + w }
+      }
+      // closure: every (root, node) one or more edges apart
+      def successors(from: Set[Int]): Set[Int] = {
+        var seen = from.flatMap(u => out(u).map(_._1))
+        var frontier = seen
+        while (frontier.nonEmpty) {
+          frontier = frontier.flatMap(u => out(u).map(_._1)).diff(seen)
+          seen ++= frontier
+        }
+        seen
+      }
+      val closure = edges.map(_._1).distinct.flatMap(r => successors(Set(r)).map(r -> _)).toSet
+
+      val triples = edges.map { case (u, v, _) => (u, 1, v) }
+        .toDF(TripleSchema.subject, TripleSchema.predicate, TripleSchema.objekt)
+      val seedDf = seeds.toDF("node")
+      val gotHops = Graph.shortestDistances(triples, seedDf).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(gotHops == hops.toMap, s"hops: edges=$edges seeds=$seeds")
+      val gotCost = Graph.weightedDistances(edges.toDF("src", "dst", "w"), seedDf).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(gotCost == cost.toMap, s"cost: edges=$edges seeds=$seeds")
+      val gotPairs = Graph.reachablePairs(triples).collect()
+        .map(r => r.getInt(0) -> r.getInt(1)).toSeq
+      assert(gotPairs.sorted == closure.toSeq.sorted, s"pairs: edges=$edges")
+    }
+  }
+
   test("property: native top-k matches the window form on random data") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window

@@ -28,6 +28,7 @@ class ScaleTechniquesSpec extends SparkTestBase {
     // drop the tables afterwards. Disable broadcast to force the SMJ path.
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    var tables = Seq.empty[String]
     try {
       // through the library API: triples bucketed on Subject
       val a = (1 to 1000).map(i => (i, 1, i * 2))
@@ -36,11 +37,13 @@ class ScaleTechniquesSpec extends SparkTestBase {
       val b = (1 to 1000).map(i => (i, 2, i * 3))
         .toDF(graft.core.TripleSchema.subject, graft.core.TripleSchema.predicate,
           graft.core.TripleSchema.objekt)
-      graft.plans.Layouts.writeBucketed(a, "bucketed_a", graft.plans.Layouts.BySubject, 8)
-      graft.plans.Layouts.writeBucketed(b, "bucketed_b", graft.plans.Layouts.BySubject, 8)
+      tables = Seq(a -> "bucketed_a", b -> "bucketed_b").map { case (df, seed) =>
+        graft.plans.Layouts.persistedLayout(df, seed, graft.plans.Layouts.BySubject,
+          signPartitioned = false, buckets = 8)
+      }
 
-      val joined = spark.table("bucketed_a")
-        .join(spark.table("bucketed_b"), graft.core.TripleSchema.subject)
+      val joined = spark.table(tables(0))
+        .join(spark.table(tables(1)), graft.core.TripleSchema.subject)
       val physical = joined.queryExecution.executedPlan.toString
 
       assert(joined.count() == 1000)
@@ -49,8 +52,7 @@ class ScaleTechniquesSpec extends SparkTestBase {
         s"expected shuffle-free bucketed join, got:\n$physical")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bucketed_a")
-      spark.sql("DROP TABLE IF EXISTS bucketed_b")
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
