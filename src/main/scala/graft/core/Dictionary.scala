@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** One dictionary row: integer id <-> lexical form. */
@@ -8,16 +9,28 @@ final case class DictEntry(id: Int, term: String)
 
 /** Dictionary-encoded vocabulary with both encode and decode directions.
   *
-  * Capability parity with the reference's driver-side `HashMap` decode map
-  * (`/root/reference/src/main/java/com/github/nkoutroumanis/PartitionQueryingSubject.java:62-70`)
-  * and the translator's lazily inverted encode map
-  * (`MyOpVisitorBase.java:56-66`) — but held as a `Dataset[DictEntry]` so the
-  * decode of large result sets is a broadcast (or shuffle) JOIN instead of a
-  * driver map. At 100 TB a vocabulary no longer fits on the driver; only the
-  * handful of literals appearing in a query text ever need driver-side
-  * encoding, and those are fetched with a pushed-down `isin` filter.
+  * Decode of result sets is a broadcast (or shuffle) JOIN against
+  * `entries`, never a driver map, so it scales with the vocabulary. Encode
+  * of a query's constants is a driver map lookup, as in the reference's
+  * translator (its lazily inverted encode map, `MyOpVisitorBase.java:56-66`,
+  * built from the driver `HashMap` of `PartitionQueryingSubject.java:62-70`):
+  * on first use the dictionary collects at most
+  * [[Dictionary.LocalVocabularyMax]] + 1 entries once, and every later
+  * encode is a lookup with no Spark job. A vocabulary past that gate stays
+  * distributed: each encode is a pushed-down `isin` scan that brings only
+  * the matching rows to the driver. Both paths give the same answers, and
+  * both reject a term listed under two ids.
   */
-final class Dictionary(val entries: Dataset[DictEntry]) extends Serializable {
+final class Dictionary private (val entries: Dataset[DictEntry],
+    @transient seed: Dictionary.Local) extends Serializable {
+
+  def this(entries: Dataset[DictEntry]) = this(entries, null)
+
+  /** The vocabulary on the driver, loaded once per instance, or None when
+    * it is past the gate. Thread-safe: concurrent first callers wait for
+    * the one load. Transient, so closures never ship it. */
+  @transient private lazy val local: Option[Dictionary.Local] =
+    Option(seed).orElse(Dictionary.loadLocal(entries))
 
   /** Decode the given integer columns of `df` to lexical forms via joins —
     * one join per column (parity with the reference's
@@ -54,17 +67,39 @@ final class Dictionary(val entries: Dataset[DictEntry]) extends Serializable {
       s"duplicate dictionary ids: ${dups.map(_.get(0)).mkString(", ")}")
   }
 
-  /** Driver-side encode of a small set of query literals. Pushes an `isin`
-    * filter into the dictionary scan, so only matching rows ever reach the
-    * driver — never the whole vocabulary.
+  /** Driver-side encode of a query's constants: term -> id for every
+    * term the dictionary lists. Absent and null terms are left out. While
+    * the vocabulary fits under [[Dictionary.LocalVocabularyMax]] this is a
+    * lookup in the once-loaded local map; past it, one `isin` scan pushed
+    * into the dictionary's source. Throws when a requested term is listed
+    * under two ids, since either answer would be arbitrary.
     */
-  def encodeTerms(terms: Seq[String]): Map[String, Int] = {
+  def encodeTerms(terms: Seq[String]): Map[String, Int] =
     if (terms.isEmpty) Map.empty
-    else entries
-      .filter(col("term").isin(terms: _*))
-      .collect()
-      .map(e => e.term -> e.id)
-      .toMap
+    else local match {
+      case Some(l) => terms.iterator.filter(_ != null)
+        .flatMap(t => l.ids.get(t).map(t -> _)).toMap
+      case None => Dictionary.termIds(entries
+        .filter(col("term").isin(terms: _*))
+        .collect().iterator.map(e => (e.id, e.term)))
+    }
+
+  /** The largest id, None for an empty dictionary: read from the local map
+    * when it is loaded, else one aggregate job. */
+  def maxId: Option[Int] = local match {
+    case Some(l) => l.maxId
+    case None => Option(entries.agg(max(col("id"))).head().get(0)).map(_.asInstanceOf[Int])
+  }
+
+  /** This dictionary plus the `fresh` (term, id) rows, whose terms it
+    * must not list yet. A loaded local map carries over as `map ++ fresh`,
+    * so the extended dictionary needs no load of its own. */
+  def extendedWith(fresh: Seq[(String, Int)]): Dictionary = {
+    val spark = entries.sparkSession
+    import spark.implicits._
+    val added = fresh.map { case (t, id) => DictEntry(id, t) }.toDS()
+    new Dictionary(entries.unionByName(added), local.map(l => Dictionary.Local(
+      l.ids ++ fresh, (l.maxId ++ fresh.map(_._2)).maxOption)).orNull)
   }
 
   /** Encode one SPARQL term to its dictionary id, applying the reference's
@@ -81,6 +116,59 @@ final class Dictionary(val entries: Dataset[DictEntry]) extends Serializable {
 }
 
 object Dictionary {
+
+  /** Size gate of the driver-side vocabulary: a dictionary of at most
+    * 2^18 (262,144) entries is encoded from a local map. That covers the
+    * bridge vocabulary to sf0.1 (18,629 terms at sf0.01, 186,029 at sf0.1).
+    * Driver memory, measured on JDK 17 with 2^18 terms like
+    * `order_123456`: the map's nodes take about 24 MB and the terms and
+    * boxed ids about 20 MB more, so a full map holds about 45 MB, and the
+    * collected rows add about 10 MB while it loads. That is about 2% of
+    * the smallest driver heap this engine runs with (2 GB). A larger
+    * vocabulary stays distributed and pays one scan per encode.
+    */
+  val LocalVocabularyMax: Int = 1 << 18
+
+  /** A loaded vocabulary: term -> id, and the largest id of any row. */
+  private[core] final case class Local(ids: Map[String, Int], maxId: Option[Int])
+
+  /** Gathers at most `LocalVocabularyMax + 1` entries; None when there are
+    * more. A plan that folds to a local relation (`fromPairs`, a literal
+    * DataFrame) collects with no job. Any other plan is read through
+    * `toRdd` in one job (per-partition limits, one shuffle to one task),
+    * where `Dataset.collect`'s incremental take would start one job for
+    * the first partition, one for the next four, and one for the rest.
+    */
+  private def loadLocal(entries: Dataset[DictEntry]): Option[Local] = {
+    val capped = entries.select(col("id"), col("term")).limit(LocalVocabularyMax + 1)
+    val qe = capped.queryExecution
+    val rows: Array[(Int, String)] =
+      if (qe.optimizedPlan.isInstanceOf[LocalRelation])
+        capped.collect().map(r => (requireId(r.get(0), r.getString(1)), r.getString(1)))
+      else qe.toRdd.map { r =>
+        val term = if (r.isNullAt(1)) null else r.getString(1)
+        (requireId(if (r.isNullAt(0)) null else r.getInt(0), term), term)
+      }.collect()
+    if (rows.length > LocalVocabularyMax) None
+    else Some(Local(termIds(rows.iterator), rows.iterator.map(_._1).maxOption))
+  }
+
+  private def requireId(id: Any, term: String): Int = {
+    require(id != null, s"dictionary row with a null id, term: $term")
+    id.asInstanceOf[Int]
+  }
+
+  /** term -> id over (id, term) rows; rows with a null term are skipped,
+    * since no query term can match them. A term under two ids throws. */
+  private def termIds(rows: Iterator[(Int, String)]): Map[String, Int] = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    rows.foreach { case (id, term) =>
+      if (term != null) ids.put(term, id).foreach { other =>
+        require(other == id, s"dictionary term listed under two ids ($other, $id): $term")
+      }
+    }
+    ids.toMap
+  }
 
   /** Load a reference-format dictionary: TSV `id<TAB>lexical-form`, one term
     * per line, split on the first tab only (the lexical form may itself

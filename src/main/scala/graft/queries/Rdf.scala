@@ -23,6 +23,25 @@ object Rdf {
   private def engine(s: SparkSession, dir: String): QueryEngine =
     new QueryEngine(s, RdfBridge.dictionary(s, dir))
 
+  /** The decoded-value gates' store: the bridge plus one `:val` (-47)
+    * triple per customer whose object is its nation key as a bare numeral
+    * term, id -(nationkey + 900000000), so id order is the reverse of value
+    * order. The numerals, one per nation, extend the session's bridge
+    * dictionary and share its driver map. */
+  private def valueEngine(s: SparkSession, dir: String): QueryEngine = {
+    import s.implicits._
+    val customer = graft.sources.Tables.load(s, dir, "customer")
+    val valTriples = customer.select(
+      (-(col("c_custkey") + 1000)).cast("int").as(graft.core.TripleSchema.subject),
+      lit(-47).as(graft.core.TripleSchema.predicate),
+      (-(col("c_nationkey") + 900000000)).cast("int").as(graft.core.TripleSchema.objekt))
+    val numerals = customer.select(col("c_nationkey").cast("string"),
+        (-(col("c_nationkey") + 900000000)).cast("int")).distinct()
+      .as[(String, Int)].collect().toSeq
+    new QueryEngine(s, RdfBridge.dictionary(s, dir).extendedWith(numerals :+ (":val" -> -47)))
+      .registerSplitTables(RdfBridge.triples(s, dir).unionAll(valTriples))
+  }
+
   /** CTE prefix defining triples/Positive/Negative for the DuckDB oracle. */
   private val cte: String = RdfBridge.oracleCte +
     """, Positive AS (SELECT * FROM triples WHERE Subject >= 0),
@@ -311,20 +330,7 @@ object Rdf {
         |FROM customer
         |ORDER BY c_nationkey ASC, 'cust_' || CAST(c_custkey AS VARCHAR) ASC
         |LIMIT 1000""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val customer = graft.sources.Tables.load(s, dir, "customer")
-      val valTriples = customer.select(
-        (-(col("c_custkey") + 1000)).cast("int").as(graft.core.TripleSchema.subject),
-        lit(-47).as(graft.core.TripleSchema.predicate),
-        (-(col("c_nationkey") + 900000000)).cast("int").as(graft.core.TripleSchema.objekt))
-      val numTerms = customer.select(
-          (-(col("c_nationkey") + 900000000)).cast("int").as("id"),
-          col("c_nationkey").cast("string").as("term")).distinct()
-        .unionAll(Seq((-47, ":val")).toDF("id", "term"))
-      val dict = graft.core.Dictionary.fromDF(
-        RdfBridge.dictionaryDf(s, dir).unionAll(numTerms))
-      new QueryEngine(s, dict)
-        .registerSplitTables(RdfBridge.triples(s, dir).unionAll(valTriples))
+      valueEngine(s, dir)
         .sparql("SELECT ?c ?v WHERE { ?c :val ?v } ORDER BY ?v ?c LIMIT 1000")
     },
 
@@ -982,20 +988,7 @@ object Rdf {
       """SELECT CAST(-(c_custkey + 1000) AS INTEGER) AS c,
         |       CAST(-(c_nationkey + 900000000) AS INTEGER) AS v
         |FROM customer WHERE c_nationkey > 10""".stripMargin) { (s, dir) =>
-      import s.implicits._
-      val customer = graft.sources.Tables.load(s, dir, "customer")
-      val valTriples = customer.select(
-        (-(col("c_custkey") + 1000)).cast("int").as(graft.core.TripleSchema.subject),
-        lit(-47).as(graft.core.TripleSchema.predicate),
-        (-(col("c_nationkey") + 900000000)).cast("int").as(graft.core.TripleSchema.objekt))
-      val numTerms = customer.select(
-          (-(col("c_nationkey") + 900000000)).cast("int").as("id"),
-          col("c_nationkey").cast("string").as("term")).distinct()
-        .unionAll(Seq((-47, ":val")).toDF("id", "term"))
-      val dict = graft.core.Dictionary.fromDF(
-        RdfBridge.dictionaryDf(s, dir).unionAll(numTerms))
-      new QueryEngine(s, dict)
-        .registerSplitTables(RdfBridge.triples(s, dir).unionAll(valTriples))
+      valueEngine(s, dir)
         .sparql("SELECT ?c ?v WHERE { ?c :val ?v . FILTER(?v > 10) }")
     },
 

@@ -93,28 +93,35 @@ object RdfBridge {
       .unionAll(customer.select(t(-(col("c_custkey") + 1000), InNation, col("c_nationkey") + 2000000000L): _*))
   }
 
+  /** One dictionary per staged bridge vocabulary, under the staging's own
+    * key (session, dataset): its driver map loads once and serves every
+    * gate of the session. */
+  private val dictionaries = new java.util.concurrent.ConcurrentHashMap[String, Dictionary]()
+
   /** Lexical dictionary for the bridge vocabulary — staged ONCE per
-    * (session, dataset) as a term-sorted parquet table. Every SPARQL query
-    * pays an `encodeTerms` lookup; over the derived union the isin filter
-    * re-computes five projections + concats per query, while over the
-    * staged table it is a pushed-down point scan whose term-sorted
-    * row-group stats prune to a handful of pages — the load-time
-    * amortization the triple layouts already use, applied to the
-    * vocabulary.
+    * (session, dataset) as a term-sorted parquet table, and returned as
+    * the same [[Dictionary]] instance on every call in that session. Query
+    * constants encode from its driver map, which the first encode loads
+    * (18,629 terms at sf0.01 and 186,029 at sf0.1, both under
+    * `Dictionary.LocalVocabularyMax`). Past that size each encode is a
+    * pushed-down point scan whose term-sorted row-group stats prune to a
+    * handful of pages. Decode joins read the staged table either way.
     */
   def dictionary(spark: SparkSession, sfDir: String): Dictionary = {
-    val path = Tables.staged(spark, sfDir, "dict_parquet") { out =>
+    val kind = "dict_parquet"
+    val path = Tables.staged(spark, sfDir, kind) { out =>
       dictionaryDf(spark, sfDir)
         .repartitionByRange(8, col("term")).sortWithinPartitions("term")
         .write.mode("overwrite").parquet(out)
     }
-    Dictionary.fromDF(spark.read.parquet(path))
+    dictionaries.computeIfAbsent(Tables.stagingKey(spark, sfDir, kind),
+      _ => Dictionary.fromDF(spark.read.parquet(path)))
   }
 
   /** The dictionary as a derived (unstaged) DataFrame: union of per-table
     * projections — built distributed, never on the driver.
     */
-  def dictionaryDf(spark: SparkSession, sfDir: String): DataFrame = {
+  private def dictionaryDf(spark: SparkSession, sfDir: String): DataFrame = {
     val customer = Tables.load(spark, sfDir, "customer")
     val orders = Tables.load(spark, sfDir, "orders")
     val part = Tables.load(spark, sfDir, "part")

@@ -15,9 +15,10 @@ import graft.operators.QueryEngine
   * stays embarrassingly parallel:
   *
   *  - `INSERT DATA { ground triples }` — literal triples union'd in; terms
-  *    absent from the dictionary get FRESH ids past the current max (one
-  *    scalar aggregate — dictionary growth is model-state-scale, like the
-  *    IVF centroids).
+  *    absent from the dictionary get FRESH ids past the current max (read
+  *    from the driver vocabulary map, or one scalar aggregate past its
+  *    size gate — dictionary growth is model-state-scale, like the IVF
+  *    centroids).
   *  - `DELETE DATA { ground triples }` — every copy of each listed triple
   *    is removed via a pushdown-friendly NOT-filter (no shuffle at all).
   *  - `DELETE WHERE { one pattern }` — the pattern's matches are removed by
@@ -104,7 +105,7 @@ object SparqlUpdate {
     // the graph term itself may be new vocabulary
     val gTerm = SparqlParser.toTerm(gLex)
     require(gTerm.isInstanceOf[Constant], s"WITH takes a constant graph: $gLex")
-    val (gEnc, gDict) = encodeMinting(spark, dict, Seq(lex(gTerm)))
+    val (gEnc, gDict) = encodeMinting(dict, Seq(lex(gTerm)))
     val gId = gEnc(lex(gTerm))
     val g = TripleSchema.graph
     val active = quads.filter(col(g) === gId)
@@ -143,29 +144,28 @@ object SparqlUpdate {
 
   private def lex(t: Term): String = t.asInstanceOf[Constant].lexical
 
-  /** Encode the given lexicals, minting fresh ids (current max + 1, +2, …)
-    * for terms the dictionary does not know. Returns the complete mapping
-    * and the possibly-extended dictionary.
+  /** Encode the given lexicals, minting fresh ids for terms the dictionary
+    * does not know: max(current max id, 0) + 1, + 2, …, so a mint never
+    * reuses the variable sentinel 0, an empty dictionary mints from 1, and
+    * a mint past `Int.MaxValue` throws instead of wrapping. Returns the
+    * complete mapping and the possibly-extended dictionary.
     */
-  private def encodeMinting(spark: SparkSession, dict: Dictionary,
+  private def encodeMinting(dict: Dictionary,
       lexicals: Seq[String]): (Map[String, Int], Dictionary) = {
     val known = dict.encodeTerms(lexicals)
     val unknown = lexicals.distinct.filterNot(known.contains)
     if (unknown.isEmpty) (known, dict)
     else {
-      val maxId = dict.entries.agg(max(col("id"))).head().getInt(0)
-      val fresh = unknown.zipWithIndex.map { case (t, i) => t -> (maxId + 1 + i) }
-      import spark.implicits._
-      val extended = Dictionary.fromDF(dict.entries.toDF()
-        .unionAll(fresh.map { case (t, id) => (id, t) }.toDF("id", "term")))
-      (known ++ fresh, extended)
+      val base = math.max(dict.maxId.getOrElse(0), TripleSchema.VariableSentinel)
+      val fresh = unknown.zipWithIndex.map { case (t, i) => t -> Math.addExact(base, i + 1) }
+      (known ++ fresh, dict.extendedWith(fresh))
     }
   }
 
   private def insertData(spark: SparkSession, triples: DataFrame,
       dict: Dictionary, body: String): UpdatedStore = {
     val pats = groundPatterns(body)
-    val (enc, newDict) = encodeMinting(spark, dict,
+    val (enc, newDict) = encodeMinting(dict,
       pats.flatMap(p => Seq(p.s, p.p, p.o)).map(lex))
     import spark.implicits._
     val rows = pats.map(p => (enc(lex(p.s)), enc(lex(p.p)), enc(lex(p.o))))
@@ -253,7 +253,7 @@ object SparqlUpdate {
     // term in the DELETE template matches nothing — the anti-join no-ops)
     val consts = (dPats ++ iPats).flatMap(p => Seq(p.s, p.p, p.o))
       .collect { case Constant(l) => l }
-    val (enc, newDict) = encodeMinting(spark, dict, consts)
+    val (enc, newDict) = encodeMinting(dict, consts)
     val bindings = new QueryEngine(spark, newDict)
       .registerSplitTables(triples)
       .sparql(s"SELECT * WHERE { $body }")
@@ -282,7 +282,7 @@ object SparqlUpdate {
     // template constants may be new vocabulary — mint ids BEFORE planning
     val tplConsts = splitTriples(tpl).map(SparqlParser.parsePattern)
       .flatMap(p => Seq(p.s, p.p, p.o)).collect { case Constant(l) => l }
-    val (_, newDict) = encodeMinting(spark, dict, tplConsts)
+    val (_, newDict) = encodeMinting(dict, tplConsts)
     val constructed = new QueryEngine(spark, newDict)
       .registerSplitTables(triples)
       .sparql(s"CONSTRUCT { $tpl } WHERE { $body }")

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.SparkTestBase
 
+import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -48,5 +49,35 @@ class TablesSpec extends SparkTestBase {
     val gate = graft.queries.Rdf.defs.find(_.name == "rdf_dict_tsv").get
     assert(gate.run(fresh, sf).count() ==
       Tables.load(fresh, sf, "customer").count())
+  }
+
+  test("the scratch sweep removes the roots of dead processes and keeps live ones") {
+    val base = Files.createTempDirectory("graft_sweep_spec")
+    val dead = new ProcessBuilder("true").start()
+    dead.waitFor()
+    val live = new ProcessBuilder("sleep", "60").start()
+    try {
+      def root(pid: Long) = Files.createDirectories(base.resolve(s"jvm_$pid/staged_x"))
+      Files.writeString(root(dead.pid).resolve("part"), "x")
+      root(live.pid)
+      root(ProcessHandle.current.pid)
+      Files.createDirectories(base.resolve("not_a_root"))
+      Tables.sweepDeadScratch(base)
+      assert(!Files.exists(base.resolve(s"jvm_${dead.pid}")))
+      assert(Files.exists(base.resolve(s"jvm_${live.pid}/staged_x")))
+      assert(Files.exists(base.resolve(s"jvm_${ProcessHandle.current.pid}")))
+      assert(Files.exists(base.resolve("not_a_root")))
+    } finally {
+      live.destroy()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(base.toFile)
+    }
+  }
+
+  test("scratch lives under a root of this process; each session stages its own directory") {
+    assert(Tables.scratchDir("x").contains(s"/jvm_${ProcessHandle.current.pid}/"))
+    val ds = s"tables_spec_sessions_${System.nanoTime()}"
+    val a = Tables.staged(spark, ds, "k")(_ => ())
+    val b = Tables.staged(spark.newSession(), ds, "k")(_ => ())
+    assert(a != b)
   }
 }
