@@ -22,15 +22,16 @@ final case class DictEntry(id: Int, term: String)
   * both reject a term listed under two ids.
   */
 final class Dictionary private (val entries: Dataset[DictEntry],
-    @transient seed: Dictionary.Local) extends Serializable {
+    @transient loaded: () => Option[Dictionary.Local]) extends Serializable {
 
   def this(entries: Dataset[DictEntry]) = this(entries, null)
 
-  /** The vocabulary on the driver, loaded once per instance, or None when
-    * it is past the gate. Thread-safe: concurrent first callers wait for
-    * the one load. Transient, so closures never ship it. */
+  /** The vocabulary on the driver, loaded once per instance (or taken from
+    * `loaded`), or None when it is past the gate. Thread-safe: concurrent
+    * first callers wait for the one load. Transient, so closures never
+    * ship it. */
   @transient private lazy val local: Option[Dictionary.Local] =
-    Option(seed).orElse(Dictionary.loadLocal(entries))
+    if (loaded == null) Dictionary.loadLocal(entries) else loaded()
 
   /** Decode the given integer columns of `df` to lexical forms via joins —
     * one join per column (parity with the reference's
@@ -98,9 +99,15 @@ final class Dictionary private (val entries: Dataset[DictEntry],
     val spark = entries.sparkSession
     import spark.implicits._
     val added = fresh.map { case (t, id) => DictEntry(id, t) }.toDS()
-    new Dictionary(entries.unionByName(added), local.map(l => Dictionary.Local(
-      l.ids ++ fresh, (l.maxId ++ fresh.map(_._2)).maxOption)).orNull)
+    val extended = local.map(l => Dictionary.Local(
+      l.ids ++ fresh, (l.maxId ++ fresh.map(_._2)).maxOption))
+    new Dictionary(entries.unionByName(added), if (extended.isEmpty) null else () => extended)
   }
+
+  /** This vocabulary over `rows`, the same rows read in another session:
+    * the result's `entries` belong to that session, and the two share one
+    * driver map, loaded by whichever of them needs it first. */
+  def over(rows: DataFrame): Dictionary = new Dictionary(Dictionary.entriesOf(rows), () => local)
 
   /** Encode one SPARQL term to its dictionary id, applying the reference's
     * normalization rules (`MyOpVisitorBase.java:69-78`): unbound variables
@@ -192,12 +199,14 @@ object Dictionary {
   }
 
   /** From an existing two-column DataFrame (id: int, term: string). */
-  def fromDF(df: DataFrame): Dictionary = {
+  def fromDF(df: DataFrame): Dictionary = new Dictionary(entriesOf(df))
+
+  private def entriesOf(df: DataFrame): Dataset[DictEntry] = {
     val spark = df.sparkSession
     import spark.implicits._
-    new Dictionary(df.select(
+    df.select(
       col(df.columns(0)).cast("int").as("id"),
-      col(df.columns(1)).cast("string").as("term")).as[DictEntry])
+      col(df.columns(1)).cast("string").as("term")).as[DictEntry]
   }
 
   /** Normalization rules of the reference translator

@@ -59,9 +59,9 @@ final class QueryEngine(val spark: SparkSession, val dict: Dictionary) {
   }
 
   /** Single-table layout over a ONCE-persisted bucketed table (memoized per
-    * session + `seed`): queries pay no per-query range exchange; joins on the
+    * context + `seed`): queries pay no per-query range exchange; joins on the
     * layout key inherit the bucket partitioning. The scale path — layout cost
-    * is amortized across every query of the session, as the reference
+    * is amortized across every query of the context, as the reference
     * amortizes its load-time sort.
     */
   def registerSingleTablePersisted(triples: DataFrame, seed: String,

@@ -86,10 +86,15 @@ object Layouts {
       .write.mode("overwrite").parquet(path)
   }
 
-  private val persistCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** 40-bit md5 prefix of the raw string — disambiguates identifiers whose
+    * sanitized forms collide.
+    */
+  private[graft] def rawFingerprint(raw: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(raw.getBytes("UTF-8")).take(5).map("%02x".format(_)).mkString
 
-  /** Load-time layout materialization, memoized per (session, seed, key,
-    * split): writes the triple set ONCE as a bucketed + per-bucket-sorted
+  /** Load-time layout materialization, memoized in the catalog per (seed,
+    * key, split): writes the triple set ONCE as a bucketed + per-bucket-sorted
     * catalog table (optionally `sign`-partitioned for the split layouts) and
     * returns the table name. This is the reference's amortization — it sorts
     * at LOAD and queries many times (`PartitionQueryingSubject.java:100,128`)
@@ -103,17 +108,10 @@ object Layouts {
     * seeds ('sf0.1' and 'sf0_1' both sanitize to 'sf0_1'), which would
     * silently serve the wrong dataset's table; the fingerprint makes the
     * mapping injective up to md5 collisions. Contract: the seed names the
-    * dataset — `df` content must be fixed per seed within a session
+    * dataset — `df` content must be fixed per seed within a context
     * (callers pass the source directory as the seed); a changed dataset
     * needs a changed seed.
     */
-  /** 40-bit md5 prefix of the raw string — disambiguates identifiers whose
-    * sanitized forms collide.
-    */
-  private[graft] def rawFingerprint(raw: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(raw.getBytes("UTF-8")).take(5).map("%02x".format(_)).mkString
-
   def persistedLayout(df: DataFrame, seed: String, key: Key,
       signPartitioned: Boolean, buckets: Int = 32): String = {
     val spark = df.sparkSession
@@ -151,30 +149,24 @@ object Layouts {
     seed.toLowerCase.replaceAll("[^a-z0-9]+", "_")
       .stripPrefix("_").stripSuffix("_") + "_" + rawFingerprint(seed)
 
-  /** Write-once memoization of a catalog table per (session, identifier):
-    * a cache hit is trusted only while the table is still resolvable in
-    * THIS session's catalog (identity hashes can be reused after a session
-    * is GC'd; a stale hit would hand out an unresolvable name). Handles the
-    * in-memory-catalog + fresh-JVM orphan: a previous process may have left
-    * the managed location behind while the catalog has no table entry,
-    * which turns `overwrite` into CREATE and fails with
-    * LOCATION_ALREADY_EXISTS — the orphaned location is removed first.
+  /** Write-once memoization of a catalog table per identifier: the catalog
+    * is shared by every session of a context, so a table it resolves is
+    * already written — `saveAsTable` adds the catalog entry
+    * only after the data — and is never rewritten under another session's
+    * scans. Handles the in-memory-catalog + fresh-JVM orphan: a previous
+    * process may have left the managed location behind while the catalog
+    * has no table entry, which turns `overwrite` into CREATE and fails
+    * with LOCATION_ALREADY_EXISTS — the orphaned location is removed first.
     */
   private def memoizedTable(spark: org.apache.spark.sql.SparkSession,
       ident: String)(write: => Unit): String = {
-    val cacheKey = s"${System.identityHashCode(spark)}/$ident"
-    if (persistCache.containsKey(cacheKey) && spark.catalog.tableExists(ident))
-      return ident
-    this.synchronized {
-      if (!(persistCache.containsKey(cacheKey) && spark.catalog.tableExists(ident))) {
-        if (!spark.catalog.tableExists(ident)) {
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"), ident)
-          val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(loc)) fs.delete(loc, true)
-        }
+    if (!spark.catalog.tableExists(ident)) this.synchronized {
+      if (!spark.catalog.tableExists(ident)) {
+        val loc = new org.apache.hadoop.fs.Path(
+          spark.conf.get("spark.sql.warehouse.dir"), ident)
+        val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(loc)) fs.delete(loc, true)
         write
-        persistCache.put(cacheKey, ident)
       }
     }
     ident

@@ -4008,7 +4008,7 @@ object Pipeline {
           .select("event_id", "user_id", "event_type", "value")
           .repartition(64).write.mode("overwrite").parquet(fragDir)
       }
-      val out = Tables.scratchDir("compact_out")
+      val out = Tables.scratchDir(dir, "compact_out")
       compactParquet(s, frag, out, targetFiles = 4)
       s.read.parquet(out)
     }

@@ -26,7 +26,7 @@ object Rdf {
   /** The decoded-value gates' store: the bridge plus one `:val` (-47)
     * triple per customer whose object is its nation key as a bare numeral
     * term, id -(nationkey + 900000000), so id order is the reverse of value
-    * order. The numerals, one per nation, extend the session's bridge
+    * order. The numerals, one per nation, extend the context's bridge
     * dictionary and share its driver map. */
   private def valueEngine(s: SparkSession, dir: String): QueryEngine = {
     import s.implicits._
@@ -73,7 +73,7 @@ object Rdf {
     // read back through the schema'd CSV scan. ----
     QueryDef("rdf_text_io",
       RdfBridge.oracleCte + "SELECT Subject, Predicate, Object FROM triples") { (s, dir) =>
-      val tmp = graft.sources.Tables.scratchDir("text_io")
+      val tmp = graft.sources.Tables.scratchDir(dir, "text_io")
       graft.sources.TripleIO.writeText(RdfBridge.triples(s, dir), tmp)
       graft.sources.TripleIO.readText(s, tmp)
     },
@@ -83,7 +83,7 @@ object Rdf {
     // CSV-based readText path. ----
     QueryDef("rdf_text_io_v2",
       RdfBridge.oracleCte + "SELECT Subject, Predicate, Object FROM triples") { (s, dir) =>
-      val tmp = graft.sources.Tables.scratchDir("text_io_v2")
+      val tmp = graft.sources.Tables.scratchDir(dir, "text_io_v2")
       graft.sources.TripleIO.writeText(RdfBridge.triples(s, dir), tmp)
       s.read.format("graft-triples").load(tmp)
     },
@@ -93,7 +93,7 @@ object Rdf {
     // overwrite) feeding the pushdown reader. ----
     QueryDef("rdf_dsv2_roundtrip",
       RdfBridge.oracleCte + "SELECT Subject, Predicate, Object FROM triples") { (s, dir) =>
-      val tmp = graft.sources.Tables.scratchDir("dsv2_rt")
+      val tmp = graft.sources.Tables.scratchDir(dir, "dsv2_rt")
       RdfBridge.triples(s, dir).write.format("graft-triples")
         .mode("overwrite").save(tmp)
       s.read.format("graft-triples").load(tmp)
@@ -108,7 +108,7 @@ object Rdf {
         "SELECT Subject, Object FROM triples WHERE Predicate = -2") { (s, dir) =>
       // own scratch dir: sharing rdf_text_io_v2's would race two Overwrite
       // writes under concurrent gate execution
-      val tmp = graft.sources.Tables.scratchDir("dsv2_pushdown")
+      val tmp = graft.sources.Tables.scratchDir(dir, "dsv2_pushdown")
       graft.sources.TripleIO.writeText(RdfBridge.triples(s, dir), tmp)
       s.read.format("graft-triples").load(tmp)
         .filter(org.apache.spark.sql.functions.col("Predicate") === -2)
@@ -1543,7 +1543,7 @@ object Rdf {
       val decoded = engine(s, dir)
         .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
         .sparqlDecoded(s"SELECT ?o ?p2 WHERE { 'cust_$minCust' :placed ?o . ?o :contains ?p2 }")
-      val out = graft.sources.Tables.scratchDir("rdf_lifecycle")
+      val out = graft.sources.Tables.scratchDir(dir, "rdf_lifecycle")
       graft.sources.TripleIO.writeText(decoded, out)
       s.read.schema("o STRING, p2 STRING").option("sep", " ").csv(out)
     },

@@ -425,7 +425,7 @@ object Relational {
     QueryDef("q26_json_io",
       "SELECT event_id, ts, user_id, event_type, value, props FROM events") { (s, dir) =>
       val events = Tables.load(s, dir, "events")
-      val tmp = Tables.scratchDir("json_io")
+      val tmp = Tables.scratchDir(dir, "json_io")
       val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
       val ntzFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
       events.write.mode("overwrite")
@@ -442,7 +442,7 @@ object Relational {
     QueryDef("q32_orc_io",
       "SELECT event_id, ts, user_id, event_type, value, props FROM events") { (s, dir) =>
       val events = Tables.load(s, dir, "events")
-      val tmp = Tables.scratchDir("orc_io")
+      val tmp = Tables.scratchDir(dir, "orc_io")
       events.write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -552,7 +552,7 @@ object Relational {
     QueryDef("q33_csv_io",
       "SELECT event_id, ts, user_id, event_type, value, props FROM events") { (s, dir) =>
       val events = Tables.load(s, dir, "events")
-      val tmp = Tables.scratchDir("csv_io")
+      val tmp = Tables.scratchDir(dir, "csv_io")
       val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
       val ntzFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
       events.write.mode("overwrite")
@@ -705,7 +705,7 @@ object Relational {
     QueryDef("q40_partitioned_io",
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE event_type = 'purchase'""".stripMargin) { (s, dir) =>
-      val tmp = Tables.scratchDir("part_io")
+      val tmp = Tables.scratchDir(dir, "part_io")
       Tables.load(s, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
         .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
@@ -722,7 +722,7 @@ object Relational {
     QueryDef("q41_zorder_io",
       """SELECT event_id, user_id, event_type, value FROM events
         |WHERE user_id BETWEEN 3 AND 8 AND event_id BETWEEN 100 AND 500""".stripMargin) { (s, dir) =>
-      val tmp = Tables.scratchDir("zorder_io")
+      val tmp = Tables.scratchDir(dir, "zorder_io")
       graft.plans.Layouts.writeZOrdered(
         Tables.load(s, dir, "events")
           .select("event_id", "user_id", "event_type", "value"),
@@ -874,8 +874,8 @@ object Relational {
     // rows that can actually join. The gate pins injection with a hard
     // `require` (a silently-vanished filter would fail the gate, not fade
     // into an unaudited plain join); the size floors are dropped because
-    // local test tables are below the 10 GiB production default. Confs are
-    // restored after the plan is forced so nothing leaks to other gates.
+    // local test tables are below the 10 GiB production default. The confs
+    // are set on the run's own session, so nothing leaks to other gates.
     // RuntimeFilterSpec pins the same plan + result equality. ----
     QueryDef("q48_runtime_bloom_join",
       """SELECT CAST(l.l_orderkey AS BIGINT) AS l_orderkey,
@@ -883,28 +883,20 @@ object Relational {
         |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
         |WHERE o.o_orderpriority = '1-URGENT'
         |GROUP BY l.l_orderkey""".stripMargin) { (s, dir) =>
-      val keys = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val saved = keys.map(k => k -> s.conf.getOption(k))
-      keys.zip(Seq("true", "0", "100MB", "-1")).foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val df = Tables.load(s, dir, "lineitem")
-          .join(Tables.load(s, dir, "orders")
-            .filter(col("o_orderpriority") === "1-URGENT"),
-            col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("l_orderkey"))
-          .agg(count(lit(1)).as("n_items"))
-        require(df.queryExecution.optimizedPlan.toString.contains("might_contain"),
-          "runtime bloom filter was not injected")
-        df.queryExecution.executedPlan // pin the physical plan under these confs
-        df
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
+      Seq("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+        .foreach { case (k, v) => s.conf.set(k, v) }
+      val df = Tables.load(s, dir, "lineitem")
+        .join(Tables.load(s, dir, "orders")
+          .filter(col("o_orderpriority") === "1-URGENT"),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("l_orderkey"))
+        .agg(count(lit(1)).as("n_items"))
+      require(df.queryExecution.optimizedPlan.toString.contains("might_contain"),
+        "runtime bloom filter was not injected")
+      df
     },
 
     // ---- RECURSIVE CTE (Spark 4's WITH RECURSIVE, planned as UnionLoop):
@@ -918,16 +910,9 @@ object Relational {
     QueryDef("q49_recursive_cte",
       recursiveMonthsSql) { (s, dir) =>
       Stage.tables(s, dir, "orders")
-      val key = "spark.sql.cteRecursionLevelLimit"
-      val saved = s.conf.getOption(key)
-      s.conf.set(key, "2000") // month spines beyond the default 100 levels
-      try {
-        val df = s.sql(recursiveMonthsSql)
-        df.queryExecution.executedPlan // pin the plan under the raised limit
-        df
-      } finally saved match {
-        case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key)
-      }
+      // month spines beyond the default 100 levels
+      s.conf.set("spark.sql.cteRecursionLevelLimit", "2000")
+      s.sql(recursiveMonthsSql)
     },
 
     // ---- TRIANGLE COUNTING over the co-purchase graph (parts sharing an
@@ -1126,7 +1111,7 @@ object Relational {
         |SELECT o_orderkey, o_totalprice, CAST(o_orderkey % 7 AS INTEGER) AS o_flag
         |FROM orders WHERE o_orderkey % 2 = 1""".stripMargin) { (s, dir) =>
       val orders = Tables.load(s, dir, "orders")
-      val tmp = Tables.scratchDir("schema_evolution")
+      val tmp = Tables.scratchDir(dir, "schema_evolution")
       orders.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
         .write.mode("overwrite").parquet(s"$tmp/gen=1")
@@ -1166,7 +1151,7 @@ object Relational {
               col("l_extendedprice").cast("decimal(18,2)"))
             .otherwise(lit(0).cast("decimal(18,2)"))).as("kept_price"))
         .filter(col("l_quantity") < 10)
-      kept.write.mode("overwrite").parquet(Tables.scratchDir("observe_metrics"))
+      kept.write.mode("overwrite").parquet(Tables.scratchDir(dir, "observe_metrics"))
       val m = obs.get
       import s.implicits._
       Seq((m("n_seen").asInstanceOf[Long], m("n_kept").asInstanceOf[Long],
@@ -1295,31 +1280,25 @@ object Relational {
     // that fits executor memory skips BOTH sort passes of the default
     // sort-merge; MERGE forces the sort-based plan for spill-safety on
     // oversized builds). Broadcast is disabled so the hints — not the
-    // size estimate — decide; both plans are require-pinned, the
-    // shuffle-hash result is returned, and the conf is restored. ----
+    // size estimate — decide; both plans are require-pinned and the
+    // shuffle-hash result is returned. ----
     QueryDef("q56_join_hints",
       """SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment""".stripMargin) { (s, dir) =>
-      val key = "spark.sql.autoBroadcastJoinThreshold"
-      val saved = s.conf.getOption(key)
-      s.conf.set(key, "-1")
-      try {
-        val orders = Tables.load(s, dir, "orders")
-        val cust = Tables.load(s, dir, "customer")
-        def agg(hint: String) = orders
-          .join(cust.hint(hint), col("o_custkey") === col("c_custkey"))
-          .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-        val sh = agg("SHUFFLE_HASH")
-        val sm = agg("MERGE")
-        require(sh.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"),
-          "SHUFFLE_HASH hint was not honored")
-        require(sm.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
-          "MERGE hint was not honored")
-        sh
-      } finally saved match {
-        case Some(v) => s.conf.set(key, v); case None => s.conf.unset(key)
-      }
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val orders = Tables.load(s, dir, "orders")
+      val cust = Tables.load(s, dir, "customer")
+      def agg(hint: String) = orders
+        .join(cust.hint(hint), col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
+      val sh = agg("SHUFFLE_HASH")
+      val sm = agg("MERGE")
+      require(sh.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"),
+        "SHUFFLE_HASH hint was not honored")
+      require(sm.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
+        "MERGE hint was not honored")
+      sh
     },
 
     // ---- BAG (ALL) SET OPERATIONS: INTERSECT ALL / EXCEPT ALL keep
@@ -1469,7 +1448,7 @@ object Relational {
   /** The staged co-purchase edge fixture (distinct canonical part pairs
     * sharing an order) — q50's input. The lineitem self-join
     * + distinct that derives it was the dominant per-run cost before
-    * staging (PLANS.md r05 audit); memoizing it per (session, dataset)
+    * staging (PLANS.md r05 audit); memoizing it per (context, dataset)
     * makes the timed region measure the triangle KERNEL over an on-disk
     * edge table — also the realistic 100 TB shape: a graph engine reads
     * its edge list from storage, it does not re-derive it from the raw

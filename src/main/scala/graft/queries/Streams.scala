@@ -30,14 +30,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   */
 object Streams {
 
-  /** The fixed scratch dir `<tag>_<hash of the dataset path>` of one gate's
-    * checkpoint, sink or store. */
-  private[graft] def scratchDir(sfDir: String, tag: String): String =
-    Tables.scratchDir(s"${tag}_${sfDir.hashCode & 0x7fffffff}")
-
   /** Remove-and-return a gate's scratch dir (bounded disk across runs). */
   private def scratch(spark: SparkSession, sfDir: String, tag: String): String = {
-    val dir = scratchDir(sfDir, tag)
+    val dir = Tables.scratchDir(sfDir, tag)
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
@@ -71,7 +66,7 @@ object Streams {
   }
 
   /** Stage the events table as THREE time-ordered parquet files (memoized
-    * per session + dataset): `maxFilesPerTrigger=1` then yields three
+    * per context + dataset): `maxFilesPerTrigger=1` then yields three
     * micro-batches whose event times genuinely advance the watermark. File
     * i holds the rows of ranks (i·n/3, (i+1)·n/3] in (ts, event_id) order,
     * cut at the keys of ranks n/3 and 2n/3. Those two keys come from a
@@ -300,7 +295,7 @@ object Streams {
       df.write.mode("overwrite").parquet(s"$out/batch=$batchId")
   }
 
-  /** Disk-memoized STATIC MODEL STATE (per session + dataset): built once,
+  /** Disk-memoized STATIC MODEL STATE (per context + dataset): built once,
     * each relation written to a scratch parquet, and every later gate run
     * re-registers temp views from disk — the staged-fixture discipline.
     * In-memory memoization (cached localCheckpoint DataFrames) would break
@@ -565,7 +560,7 @@ object Streams {
     }
 
   /** Stage the RdfBridge triple set as THREE parquet files (memoized per
-    * session + dataset): with `maxFilesPerTrigger=1` the triple STREAM
+    * context + dataset): with `maxFilesPerTrigger=1` the triple STREAM
     * arrives in three genuine micro-batches. Slices are a deterministic
     * hash partition of the rows — batch boundaries carry no semantics for
     * the stateless stream-static match, so any split verifies the same.
@@ -580,40 +575,27 @@ object Streams {
       }
     }
 
-  /** Run `f` with a reduced shuffle-partition count. Streaming STATE is
-    * partitioned by `spark.sql.shuffle.partitions` captured at query start;
-    * at gate scale (10⁵ rows, local) 32 partitions mean 32–64 state-store
-    * instances committing per micro-batch — pure overhead. 8 keeps the
-    * per-batch state commit cost proportionate; results are independent of
-    * partitioning. On a real cluster this knob is sized to executor count ×
-    * state volume, not lowered.
+  /** The shuffle-partition conf, which a stateful gate lowers on its
+    * run's own session (see [[QueryDef]]). Streaming STATE is partitioned
+    * by `spark.sql.shuffle.partitions` captured at query start; at gate
+    * scale (10⁵ rows, local) 32 partitions mean 32–64 state-store instances
+    * committing per micro-batch — pure overhead. 8 (fewer for the
+    * RocksDB-backed gates) keeps the per-batch state commit cost
+    * proportionate; results are independent of partitioning. On a real
+    * cluster this knob is sized to executor count × state volume, not
+    * lowered.
     */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try f finally s.conf.set(key, prev)
-  }
+  private val StatePartitions = "spark.sql.shuffle.partitions"
 
-  /** Scope the RocksDB state-store provider (transformWithState refuses the
+  /** The RocksDB state-store provider (transformWithState refuses the
     * default HDFS-backed store) with changelog checkpointing: each commit
     * appends a delta instead of uploading a full RocksDB snapshot — the
     * right production setting for frequent small commits, and locally it
-    * removes a per-partition-per-batch snapshot copy. Both confs restored
-    * on exit. */
-  private def withRocksDb[T](s: SparkSession)(f: => T): T = {
-    val confs = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try f finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+    * removes a per-partition-per-batch snapshot copy. */
+  private val RocksDb = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   /** The image-ingest oracle (shared verbatim by the single-run gate and
     * the checkpoint-restart gate — exactly-once means identical output). */
@@ -739,7 +721,7 @@ object Streams {
     // far past the data span → exactly the distinct events come out. ----
     QueryDef("stream_dedup",
       "SELECT event_id, ts, user_id, event_type, value FROM events") { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = duplicatedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_dedup_ckpt")
       EventStreams.readEventStream(s, src, maxFilesPerTrigger = 2)
@@ -748,7 +730,6 @@ object Streams {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .drainToMemory("g_stream_dedup", ckpt)
-      }
     },
 
     // ---- BOUNDED-STATE streaming dedup (dropDuplicatesWithinWatermark):
@@ -761,7 +742,7 @@ object Streams {
     // keyed on event_id alone (the production dedup-by-id shape). ----
     QueryDef("stream_dedup_within_wm",
       "SELECT event_id, ts, user_id, event_type, value FROM events") { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = duplicatedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_dwm_ckpt")
       EventStreams.readEventStream(s, src, maxFilesPerTrigger = 2)
@@ -770,7 +751,6 @@ object Streams {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
         .drainToMemory("g_stream_dwm", ckpt)
-      }
     },
 
     // ---- WATERMARK-DRIVEN windowed aggregation in append mode: tumbling
@@ -784,7 +764,7 @@ object Streams {
         |  CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY window_start, event_type""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = sentinelEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_wm_ckpt")
       // data in one batch, sentinel its own (mtime-later) batch: the
@@ -796,7 +776,6 @@ object Streams {
           "1 hour", "30 minutes")
         .drainToMemory("g_stream_wm", ckpt)
         .filter(col("event_type") =!= "sentinel")
-      }
     },
 
     // ---- CHAINED STATEFUL OPERATORS (Spark 3.4+/4 multi-stateful append
@@ -814,7 +793,7 @@ object Streams {
         |  CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
         |FROM events GROUP BY window_start, event_type""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = dualSentinelEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_chain_ckpt")
       // all data in one batch; the two sentinels stay their own batches
@@ -832,7 +811,6 @@ object Streams {
           col("n"), col("total_value"))
         .drainToMemory("g_stream_chain", ckpt)
         .filter(col("event_type") =!= "sentinel")
-      }
     },
 
     // ---- COMPLETE output mode: unwindowed running totals per event type —
@@ -848,7 +826,7 @@ object Streams {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value,
         |  CAST(MAX(ts) AS TIMESTAMP) AS last_ts
         |FROM events GROUP BY event_type""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_cagg_ckpt")
       EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
@@ -858,7 +836,6 @@ object Streams {
             .cast("decimal(18,2)").cast("double").as("total_value"),
           max(col("ts")).as("last_ts"))
         .drainToMemory("g_stream_cagg", ckpt, "complete")
-      }
     },
 
     // ---- stream-stream INTERVAL JOIN: purchases ⋈ same-user clicks in the
@@ -874,7 +851,7 @@ object Streams {
         |  ON p.event_type = 'purchase' AND c.event_type = 'click'
         |  AND c.user_id = p.user_id
         |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_ssj_ckpt")
       // one micro-batch for ALL data files (the join's emitted SET is
@@ -895,7 +872,6 @@ object Streams {
             col("c_ts") <= col("p_ts"))
         .select("user_id", "p_id", "c_id")
         .drainToMemory("g_stream_ssj", ckpt)
-      }
     },
 
     // ---- stream-stream LEFT OUTER interval join: like the inner interval
@@ -919,7 +895,7 @@ object Streams {
         |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         |  ON c.user_id = p.user_id
         |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 4) {
+      s.conf.set(StatePartitions, 4)
       val src = joinSentinelEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_soj_ckpt")
       // all 3 data files in ONE batch; the two sentinel files (stamped
@@ -941,7 +917,6 @@ object Streams {
         .select("user_id", "p_id", "c_id")
         .drainToMemory("g_stream_soj", ckpt)
         .filter(col("user_id") >= 0)
-      }
     },
 
     // ---- stream-stream FULL OUTER interval join: both unmatched sides
@@ -960,7 +935,7 @@ object Streams {
         |FULL JOIN (SELECT * FROM events WHERE event_type = 'click') c
         |  ON c.user_id = p.user_id
         |  AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 4) {
+      s.conf.set(StatePartitions, 4)
       val src = joinSentinelEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_foj_ckpt")
       // all 3 data files in ONE batch (see the left outer join note)
@@ -981,7 +956,6 @@ object Streams {
           col("p_id"), col("c_id"))
         .drainToMemory("g_stream_foj", ckpt)
         .filter(col("user_id") >= 0)
-      }
     },
 
     // ---- STREAM-STATIC broadcast join (stateless enrichment — the most
@@ -1020,7 +994,7 @@ object Streams {
         |FROM (SELECT user_id, ts, event_id, event_type, value,
         |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rnk
         |  FROM events) t WHERE rnk = 1""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_ups_ckpt")
       val store = scratch(s, dir, "stream_ups_store")
@@ -1058,7 +1032,6 @@ object Streams {
         .select(col("user_id").cast("long").as("user_id"), col("ts"),
           col("event_id").cast("long").as("event_id"),
           col("event_type"), col("value"))
-      }
     },
 
     // ---- stream-static ANTI join (incremental dedup against a HISTORICAL
@@ -1107,7 +1080,7 @@ object Streams {
         |SELECT s.* FROM sess s
         |LEFT JOIN last l ON s.user_id = l.user_id AND s.session_start = l.session_start
         |WHERE l.user_id IS NULL""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       import s.implicits._
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_sess_ckpt")
@@ -1118,7 +1091,6 @@ object Streams {
         .select(col("user_id"), col("session_start"), col("session_end"),
           col("n_events"),
           col("total_value").cast("decimal(18,2)").cast("double").as("total_value"))
-      }
     },
 
     // ---- transformWithState (Spark 4's arbitrary-stateful-processing
@@ -1129,8 +1101,8 @@ object Streams {
     // is order-insensitive within a batch; the oracle reconstructs the
     // same batches with a ROW_NUMBER over the identical order and the
     // identical integer thresholds (Scala's `(i+1)*n/3` = floor = `//`),
-    // then prefix-sums per user. The RocksDB provider conf is scoped to
-    // this gate and restored (transformWithState refuses the default
+    // then prefix-sums per user. The gate sets the RocksDB provider
+    // conf on its own session (transformWithState refuses the default
     // HDFS-backed store). ----
     // State partitioning: 2 (not the shared 8) — the keyed state is
     // per-user and tiny, and every extra partition is a whole RocksDB
@@ -1154,21 +1126,19 @@ object Streams {
         |  CAST(SUM(bn) OVER (PARTITION BY user_id ORDER BY bi) AS BIGINT) AS n_events,
         |  CAST(SUM(bc) OVER (PARTITION BY user_id ORDER BY bi) AS BIGINT) AS sum_cents
         |FROM c""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 2) {
+      s.conf.set(StatePartitions, 2)
+      RocksDb.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_tws_ckpt")
-      withRocksDb(s) {
-        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-          .as[EventStreams.Event]
-          .groupByKey(_.user_id)
-          .transformWithState(new EventStreams.RunningStatsProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF()
-          .drainToMemory("g_stream_tws", ckpt, "update")
-      }
-      }
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .as[EventStreams.Event]
+        .groupByKey(_.user_id)
+        .transformWithState(new EventStreams.RunningStatsProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
+        .drainToMemory("g_stream_tws", ckpt, "update")
     },
 
     // ---- transformWithState with MAP state (keyed sub-state): per user,
@@ -1201,21 +1171,19 @@ object Streams {
       // cost IS the store lifecycle — one RocksDB instance opened+committed
       // per micro-batch instead of two. Keyed output is partition-count-
       // insensitive.
-      withStatePartitions(s, 1) {
+      s.conf.set(StatePartitions, 1)
+      RocksDb.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_twsd_ckpt")
-      withRocksDb(s) {
-        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-          .as[EventStreams.Event]
-          .groupByKey(_.user_id)
-          .transformWithState(new EventStreams.DistinctTypesProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF()
-          .drainToMemory("g_stream_twsd", ckpt, "update")
-      }
-      }
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .as[EventStreams.Event]
+        .groupByKey(_.user_id)
+        .transformWithState(new EventStreams.DistinctTypesProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
+        .drainToMemory("g_stream_twsd", ckpt, "update")
     },
 
     // ---- transformWithState with EVENT-TIME TIMERS (round-7): session
@@ -1240,32 +1208,30 @@ object Streams {
         |  MAX(ts) AS session_last, CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_cents
         |FROM y GROUP BY user_id, sid""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 2) {
+      s.conf.set(StatePartitions, 2)
+      RocksDb.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       val src = dualSentinelEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_twst_ckpt")
-      withRocksDb(s) {
-        // Sentinels must REACH the watermark operator: a pre-watermark
-        // row filter pushes down into the scan and silently freezes the
-        // watermark (debugged this round: the last ~2.5 h of sessions'
-        // timers never fired). So sentinel rows flow through the
-        // processor — their null value coalesced for the typed encoder,
-        // their user -1 sessions dropped from the OUTPUT, where the
-        // filter cannot push through the stateful operator.
-        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-          .withWatermark("ts", "2 hours")
-          .withColumn("value", coalesce(col("value"), lit(0.0)))
-          .as[EventStreams.Event]
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new EventStreams.TimerSessionProcessor(30L * 60 * 1000000),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            org.apache.spark.sql.streaming.OutputMode.Append())
-          .toDF()
-          .filter(col("user_id") >= 0)
-          .drainToMemory("g_stream_twst", ckpt)
-      }
-      }
+      // Sentinels must REACH the watermark operator: a pre-watermark
+      // row filter pushes down into the scan and silently freezes the
+      // watermark (debugged this round: the last ~2.5 h of sessions'
+      // timers never fired). So sentinel rows flow through the
+      // processor — their null value coalesced for the typed encoder,
+      // their user -1 sessions dropped from the OUTPUT, where the
+      // filter cannot push through the stateful operator.
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .withWatermark("ts", "2 hours")
+        .withColumn("value", coalesce(col("value"), lit(0.0)))
+        .as[EventStreams.Event]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new EventStreams.TimerSessionProcessor(30L * 60 * 1000000),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          org.apache.spark.sql.streaming.OutputMode.Append())
+        .toDF()
+        .filter(col("user_id") >= 0)
+        .drainToMemory("g_stream_twst", ckpt)
     },
 
     // ---- STREAMING ANN SERVING (round-7): a stream of query vectors
@@ -1757,25 +1723,23 @@ object Streams {
          |  CAST(tus AS BIGINT) AS purchase_us,
          |  CAST(tus - chain_view AS BIGINT) AS span_us
          |FROM f""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 2) {
+      s.conf.set(StatePartitions, 2)
+      RocksDb.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_cep_ckpt")
-      withRocksDb(s) {
-        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-          .as[EventStreams.Event]
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new EventStreams.FunnelProcessor(Pipeline.FunnelWindowMicros),
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF()
-          .drainToMemory("g_stream_cep", ckpt, "update")
-          .select(col("user_id").cast("long").as("user_id"),
-            col("purchase_us").cast("long").as("purchase_us"),
-            col("span_us").cast("long").as("span_us"))
-      }
-      }
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .as[EventStreams.Event]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new EventStreams.FunnelProcessor(Pipeline.FunnelWindowMicros),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
+        .drainToMemory("g_stream_cep", ckpt, "update")
+        .select(col("user_id").cast("long").as("user_id"),
+          col("purchase_us").cast("long").as("purchase_us"),
+          col("span_us").cast("long").as("span_us"))
     },
 
     // ---- STREAMING A/B READOUT (round-10): the experiment metrics
@@ -1836,22 +1800,21 @@ object Streams {
     // on user_id per batch, matrix-sized output aggregate. ----
     QueryDef("stream_retention_cohorts",
       Pipeline.eventsRetentionCohorts(graft.functions.DuckDialect)) { (s, dir) =>
-      withStatePartitions(s, 2) {
+      s.conf.set(StatePartitions, 2)
+      RocksDb.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_ret_ckpt")
-      withRocksDb(s) {
-        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-          .as[EventStreams.Event]
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new EventStreams.RetentionProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF()
-          .drainToMemory("g_stream_ret", ckpt, "update")
-          .createOrReplaceTempView("graft_ret_hits")
-      }
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .as[EventStreams.Event]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new EventStreams.RetentionProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
+        .drainToMemory("g_stream_ret", ckpt, "update")
+        .createOrReplaceTempView("graft_ret_hits")
       s.sql(
         """SELECT CAST((t0_us - g.g0) div 86400000000 AS BIGINT) AS cohort_day,
           |  CAST(age_day AS BIGINT) AS age_day,
@@ -1859,7 +1822,6 @@ object Streams {
           |FROM graft_ret_hits
           |CROSS JOIN (SELECT MIN(t0_us) AS g0 FROM graft_ret_hits) g
           |GROUP BY 1, 2""".stripMargin)
-      }
     },
 
     // ---- STREAMING SCD2 MAINTENANCE as CDC (round-10): the warehouse
@@ -1886,33 +1848,31 @@ object Streams {
         |SELECT 'close', CAST(user_id AS BIGINT), CAST(event_id AS BIGINT),
         |  event_type, value, CAST(tus AS BIGINT), CAST(nxt AS BIGINT)
         |FROM ev WHERE nxt IS NOT NULL""".stripMargin) { (s, dir) =>
-      withStatePartitions(s, 2) {
+      s.conf.set(StatePartitions, 2)
+      RocksDb.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_scd_ckpt")
       val out = scratch(s, dir, "stream_scd_out")
-      withRocksDb(s) {
-        // changes land in a batch-partitioned parquet sink (the replay-
-        // idempotent sinkBatch), NOT a memory sink: the change stream is
-        // corpus-sized, and a driver-materialized sink was the measured
-        // 10× bottleneck (2.6 → 16.9s; parquet sink: tracks batch volume)
-        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-          .as[EventStreams.Event]
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new EventStreams.ScdCdcProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF()
-          .drainBatches(ckpt, "update")((b, id) => b.sinkBatch(out, id))
-      }
+      // changes land in a batch-partitioned parquet sink (the replay-
+      // idempotent sinkBatch), NOT a memory sink: the change stream is
+      // corpus-sized, and a driver-materialized sink was the measured
+      // 10× bottleneck (2.6 → 16.9s; parquet sink: tracks batch volume)
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .as[EventStreams.Event]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new EventStreams.ScdCdcProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
+        .drainBatches(ckpt, "update")((b, id) => b.sinkBatch(out, id))
       s.read.parquet(out)
         .select(col("op"), col("user_id").cast("long").as("user_id"),
           col("event_id").cast("long").as("event_id"),
           col("event_type"), col("value"),
           col("valid_from_us").cast("long").as("valid_from_us"),
           col("valid_to_us").cast("long").as("valid_to_us"))
-      }
     },
 
     // ---- LATE-DATA ROUTING / DEAD-LETTER QUEUE (round-10): the
@@ -1983,25 +1943,23 @@ object Streams {
     // = the batch SQL verbatim. ----
     QueryDef("stream_anomaly",
       Pipeline.eventsAnomaly(graft.functions.DuckDialect)) { (s, dir) =>
-      withStatePartitions(s, 2) {
+      s.conf.set(StatePartitions, 2)
+      RocksDb.foreach { case (k, v) => s.conf.set(k, v) }
       import s.implicits._
       val src = stagedEventsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_anm_ckpt")
-      withRocksDb(s) {
-        EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
-          .as[EventStreams.Event]
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new EventStreams.AnomalyProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF()
-          .drainToMemory("g_stream_anom", ckpt, "update")
-          .select(col("event_id").cast("long").as("event_id"),
-            col("user_id").cast("long").as("user_id"),
-            col("value_cents").cast("long").as("value_cents"), col("zscore"))
-      }
-      }
+      EventStreams.readEventStream(s, src, maxFilesPerTrigger = 1)
+        .as[EventStreams.Event]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new EventStreams.AnomalyProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF()
+        .drainToMemory("g_stream_anom", ckpt, "update")
+        .select(col("event_id").cast("long").as("event_id"),
+          col("user_id").cast("long").as("user_id"),
+          col("value_cents").cast("long").as("value_cents"), col("zscore"))
     },
 
     // ---- STREAMING FREQUENCY SKETCH (round-10): count-min over the event
@@ -2196,7 +2154,7 @@ object Streams {
       // pipeline over a CORPUS THIRD, and 32-wide exchanges on a few
       // thousand rows ×3 batches are pure task-launch tax (same rationale
       // as the tws gates' state width)
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = stagedDocsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_ding_ckpt")
       val idxDir = scratch(s, dir, "stream_ding_idx")
@@ -2237,7 +2195,6 @@ object Streams {
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"),
           col("is_dup").cast("long").as("is_dup"))
-      }
     },
 
     // ---- STREAMING INGEST E2E (round-8): the production ingestion
@@ -2251,7 +2208,7 @@ object Streams {
     // band-key equi-join against the partition-pruned distinct-key store
     // (bandStoreProbe), quality is a pure Column predicate. ----
     QueryDef("stream_ingest_e2e", Pipeline.ingestE2eOracle) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val src = stagedDocsDir(s, dir)
       val ckpt = scratch(s, dir, "stream_ie2e_ckpt")
       val idxDir = scratch(s, dir, "stream_ie2e_idx")
@@ -2263,7 +2220,6 @@ object Streams {
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"), col("status"))
-      }
     },
 
     // ---- CHECKPOINT-RESTART / EXACTLY-ONCE (round-10, verdict item): the
@@ -2279,7 +2235,7 @@ object Streams {
     // StreamingSpec additionally asserts the band STORE equals the
     // single-run store (no dup keys, no loss). ----
     QueryDef("stream_ingest_restart", Pipeline.ingestE2eOracle) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val staged = stagedDocsDir(s, dir)
       val src = scratch(s, dir, "stream_irs_src")
       val ckpt = scratch(s, dir, "stream_irs_ckpt")
@@ -2293,7 +2249,6 @@ object Streams {
       s.read.parquet(out)
         .select(col("version").cast("long").as("version"),
           col("doc_id").cast("long").as("doc_id"), col("status"))
-      }
     },
 
     // ---- STREAMING LEARNED FILTER (round-9): the batch-trained quality
@@ -2645,49 +2600,48 @@ object Streams {
          |      UNION ALL SELECT 3, user_id, c FROM g3s) u""".stripMargin
     }
     QueryDef("stream_topk_hh", oracle) { (s, dir) =>
-      withStatePartitions(s, 8) {
-        val src = stagedEventsDir(s, dir)
-        val ckpt = scratch(s, dir, "stream_hh_ckpt")
-        val stateDir = scratch(s, dir, "stream_hh_state")
-        val out = scratch(s, dir, "stream_hh_out")
-        val schema = s.read.parquet(src).schema
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-          .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
-            val ss = bdf.sparkSession
-            bdf.createOrReplaceTempView("graft_hh_b")
-            // replay-safe state read: version v{batchId} is strictly
-            // earlier state — a replayed batch sees what its first
-            // attempt saw and overwrites its own outputs
-            val prev =
-              if (batchId == 0)
-                ss.sql("""SELECT CAST(NULL AS BIGINT) AS user_id,
-                         |  CAST(NULL AS BIGINT) AS c WHERE 1 = 0""".stripMargin)
-              else ss.read.parquet(s"$stateDir/v$batchId")
-            prev.createOrReplaceTempView("graft_hh_s")
-            ss.sql(
-              s"""WITH bc AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c
-                 |  FROM graft_hh_b GROUP BY user_id),
-                 |${mgStepCtes("bc", "graft_hh_s", "g")}
-                 |SELECT user_id, c FROM gs""".stripMargin)
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$stateDir/v${batchId + 1}")
-            ss.read.parquet(s"$stateDir/v${batchId + 1}")
-              .createOrReplaceTempView("graft_hh_sn")
-            ss.sql(
-              s"""SELECT CAST(${batchId + 1} AS BIGINT) AS version,
-                 |  CAST(user_id AS BIGINT) AS user_id,
-                 |  CAST(c AS BIGINT) AS mg_count,
-                 |  CAST(ROW_NUMBER() OVER (ORDER BY c DESC, user_id) AS BIGINT) AS rnk
-                 |FROM graft_hh_sn""".stripMargin)
-              .coalesce(1).sinkBatch(out, batchId)
-          }
-        s.read.parquet(out)
-          .select(col("version").cast("long").as("version"),
-            col("user_id").cast("long").as("user_id"),
-            col("mg_count").cast("long").as("mg_count"),
-            col("rnk").cast("long").as("rnk"))
-      }
+      s.conf.set(StatePartitions, 8)
+      val src = stagedEventsDir(s, dir)
+      val ckpt = scratch(s, dir, "stream_hh_ckpt")
+      val stateDir = scratch(s, dir, "stream_hh_state")
+      val out = scratch(s, dir, "stream_hh_out")
+      val schema = s.read.parquet(src).schema
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(src)
+        .drainBatches(ckpt) { (bdf: DataFrame, batchId: Long) =>
+          val ss = bdf.sparkSession
+          bdf.createOrReplaceTempView("graft_hh_b")
+          // replay-safe state read: version v{batchId} is strictly
+          // earlier state — a replayed batch sees what its first
+          // attempt saw and overwrites its own outputs
+          val prev =
+            if (batchId == 0)
+              ss.sql("""SELECT CAST(NULL AS BIGINT) AS user_id,
+                       |  CAST(NULL AS BIGINT) AS c WHERE 1 = 0""".stripMargin)
+            else ss.read.parquet(s"$stateDir/v$batchId")
+          prev.createOrReplaceTempView("graft_hh_s")
+          ss.sql(
+            s"""WITH bc AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c
+               |  FROM graft_hh_b GROUP BY user_id),
+               |${mgStepCtes("bc", "graft_hh_s", "g")}
+               |SELECT user_id, c FROM gs""".stripMargin)
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$stateDir/v${batchId + 1}")
+          ss.read.parquet(s"$stateDir/v${batchId + 1}")
+            .createOrReplaceTempView("graft_hh_sn")
+          ss.sql(
+            s"""SELECT CAST(${batchId + 1} AS BIGINT) AS version,
+               |  CAST(user_id AS BIGINT) AS user_id,
+               |  CAST(c AS BIGINT) AS mg_count,
+               |  CAST(ROW_NUMBER() OVER (ORDER BY c DESC, user_id) AS BIGINT) AS rnk
+               |FROM graft_hh_sn""".stripMargin)
+            .coalesce(1).sinkBatch(out, batchId)
+        }
+      s.read.parquet(out)
+        .select(col("version").cast("long").as("version"),
+          col("user_id").cast("long").as("user_id"),
+          col("mg_count").cast("long").as("mg_count"),
+          col("rnk").cast("long").as("rnk"))
     }
   }
 
@@ -2747,7 +2701,7 @@ object Streams {
          |${vSel(1)} UNION ALL ${vSel(2)} UNION ALL ${vSel(3)}""".stripMargin
     }
     QueryDef("stream_kmeans_update", oracle) { (s, dir) =>
-      withStatePartitions(s, 8) {
+      s.conf.set(StatePartitions, 8)
       val d = graft.functions.SparkDialect
       val src = stagedEmbCorpusDir(s, dir)
       val ckpt = scratch(s, dir, "stream_smk_ckpt")
@@ -2810,7 +2764,6 @@ object Streams {
         .select(col("version").cast("long").as("version"),
           col("cid").cast("long").as("cid"),
           col("i").cast("long").as("i"), col("c").cast("long").as("c"))
-      }
     }
   }
 }

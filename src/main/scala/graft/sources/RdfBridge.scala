@@ -94,18 +94,19 @@ object RdfBridge {
   }
 
   /** One dictionary per staged bridge vocabulary, under the staging's own
-    * key (session, dataset): its driver map loads once and serves every
-    * gate of the session. */
+    * key (context, dataset): its driver map loads once and serves every
+    * gate of every session of the context. */
   private val dictionaries = new java.util.concurrent.ConcurrentHashMap[String, Dictionary]()
 
   /** Lexical dictionary for the bridge vocabulary — staged ONCE per
-    * (session, dataset) as a term-sorted parquet table, and returned as
-    * the same [[Dictionary]] instance on every call in that session. Query
-    * constants encode from its driver map, which the first encode loads
-    * (18,629 terms at sf0.01 and 186,029 at sf0.1, both under
-    * `Dictionary.LocalVocabularyMax`). Past that size each encode is a
-    * pushed-down point scan whose term-sorted row-group stats prune to a
-    * handful of pages. Decode joins read the staged table either way.
+    * (context, dataset) as a term-sorted parquet table. Its `entries` read
+    * that table in `spark`'s own session (with the staged schema, so the
+    * read starts no job), and every session of the context shares one
+    * driver map, which the first encode loads (18,629 terms at sf0.01 and
+    * 186,029 at sf0.1, both under `Dictionary.LocalVocabularyMax`). Past
+    * that size each encode is a pushed-down point scan whose term-sorted
+    * row-group stats prune to a handful of pages. Decode joins read the
+    * staged table either way.
     */
   def dictionary(spark: SparkSession, sfDir: String): Dictionary = {
     val kind = "dict_parquet"
@@ -114,8 +115,9 @@ object RdfBridge {
         .repartitionByRange(8, col("term")).sortWithinPartitions("term")
         .write.mode("overwrite").parquet(out)
     }
+    val rows = spark.read.schema("id INT, term STRING").parquet(path)
     dictionaries.computeIfAbsent(Tables.stagingKey(spark, sfDir, kind),
-      _ => Dictionary.fromDF(spark.read.parquet(path)))
+      _ => Dictionary.fromDF(rows)).over(rows)
   }
 
   /** The dictionary as a derived (unstaged) DataFrame: union of per-table

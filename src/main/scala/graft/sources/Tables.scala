@@ -40,18 +40,20 @@ object Tables {
       case _ => df
     }
 
-  /** Per-purpose scratch directory for IO round-trip gates and staged
-    * fixtures, under this JVM's own root
-    * `<tmpdir>/graft_scratch_<user>/jvm_<pid>`. Reused within the process
-    * (sinks write `mode=overwrite`). Per process, because every JVM of the
-    * host shares the tmpdir and a staging empties its directory before it
-    * builds, which must never hit a fixture another process is reading.
-    * The user part keeps two users apart on permissions. The first call of
-    * a process removes the roots of processes that are gone, so repeated
-    * Verify/Bench runs do not accumulate scratch.
+  /** The scratch directory `<tag>_<dataset tag>` of one gate's output,
+    * checkpoint or store for the dataset at `sfDir` — the one naming rule
+    * for scratch, so two inputs at once never share a directory. It lives
+    * under this JVM's own root `<tmpdir>/graft_scratch_<user>/jvm_<pid>`
+    * and is reused within the process (sinks write `mode=overwrite`). Per
+    * process, because every JVM of the host shares the tmpdir and a
+    * staging empties its directory before it builds, which must never hit
+    * a fixture another process is reading. The user part keeps two users
+    * apart on permissions. The first call of a process removes the roots of
+    * processes that are gone, so repeated Verify/Bench runs do not
+    * accumulate scratch.
     */
-  def scratchDir(name: String): String = {
-    val p = scratchRoot.resolve(name)
+  def scratchDir(sfDir: String, tag: String): String = {
+    val p = scratchRoot.resolve(s"${tag}_${datasetTag(sfDir)}")
     java.nio.file.Files.createDirectories(p.getParent)
     p.toString
   }
@@ -87,35 +89,37 @@ object Tables {
 
   private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, Staging]()
 
-  /** The dataset part of a staging's key and directory: the sanitized
-    * dataset path plus an md5 fingerprint of the RAW path — sanitization
-    * alone aliases distinct paths ('/a/b' vs '/a_b'), which would silently
-    * reuse the wrong dataset's staged fixture. */
+  /** The dataset part of a scratch directory's name and of a staging's
+    * key: the sanitized dataset path plus an md5 fingerprint of the RAW
+    * path — sanitization alone aliases distinct paths ('/a/b' vs '/a_b'),
+    * which would silently reuse the wrong dataset's directory. */
   private def datasetTag(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9_.-]", "_") + "_" +
       graft.plans.Layouts.rawFingerprint(sfDir)
 
-  /** The memo key of one staging: (session, kind, dataset). Values opened
+  /** The context part of a staging's key and directory. */
+  private def contextTag(spark: SparkSession): String =
+    spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9_.-]", "_")
+
+  /** The memo key of one staging: (context, kind, dataset). Values opened
     * over a staged directory once per staging (the bridge dictionary) use
     * the same key. */
   private[sources] def stagingKey(spark: SparkSession, sfDir: String, kind: String): String =
-    s"${System.identityHashCode(spark)}/$kind/${datasetTag(sfDir)}"
+    s"${contextTag(spark)}/$kind/${datasetTag(sfDir)}"
 
   /** Memoized fixture staging: `build` populates a scratch directory once
-    * per (session, dataset, kind); later calls reuse it. Gates whose input
-    * is an on-disk fixture (a TSV dictionary, a deliberately fragmented
-    * parquet dir) stage it through here so repeated invocations — and in
-    * particular the timed bench runs after the untimed warmup pass — measure
-    * the operator, not its fixture construction. The directory is emptied
-    * before `build` runs, so builders may append. Reentrant: `build` may
-    * itself call `staged` for another kind.
+    * per (context, dataset, kind); later calls, from any session of the
+    * context, reuse it. Gates whose input is an on-disk fixture (a TSV
+    * dictionary, a deliberately fragmented parquet dir) stage it through
+    * here so repeated invocations — and in particular the timed bench runs
+    * after the untimed warmup pass — measure the operator, not its fixture
+    * construction. The directory is emptied before `build` runs, so
+    * builders may append. Reentrant: `build` may itself call `staged` for
+    * another kind.
     */
   def staged(spark: SparkSession, sfDir: String, kind: String)(build: String => Unit): String =
     stagedDirs.computeIfAbsent(stagingKey(spark, sfDir, kind), _ => new Staging(() => {
-      // one directory per key: a session staging a dataset again never
-      // rewrites files that another session's DataFrames (or a memoized
-      // RdfBridge.dictionary) still list
-      val dir = scratchDir(s"staged_${kind}_${datasetTag(sfDir)}_${System.identityHashCode(spark)}")
+      val dir = scratchDir(sfDir, s"staged_${kind}_${contextTag(spark)}")
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       build(dir)

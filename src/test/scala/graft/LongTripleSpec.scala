@@ -51,7 +51,7 @@ class LongTripleSpec extends SparkTestBase {
   }
 
   test("long text IO round-trips ids beyond Int range") {
-    val tmp = graft.sources.Tables.scratchDir("long_text_io")
+    val tmp = graft.sources.Tables.scratchDir(sf, "long_text_io")
     TripleIO.writeText(longTriples, tmp)
     val back = TripleIO.readTextLong(spark, tmp)
     assert(back.schema.fields.forall(_.dataType == LongType))

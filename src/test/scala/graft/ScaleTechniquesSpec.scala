@@ -113,7 +113,7 @@ class ScaleTechniquesSpec extends SparkTestBase {
     val n = 4096
     val df = (0 until n).map(i => (i % 64, (i * 2654435761L % n).toInt % 64))
       .toDF("x", "y")
-    val out = graft.sources.Tables.scratchDir("spec_zorder")
+    val out = graft.sources.Tables.scratchDir(sf, "spec_zorder")
     graft.plans.Layouts.writeZOrdered(df, "x", "y", out, numFiles = 8, bits = 6)
     val files = scala.util.Using.resource(
         java.nio.file.Files.list(java.nio.file.Paths.get(out)))(
@@ -131,8 +131,8 @@ class ScaleTechniquesSpec extends SparkTestBase {
   }
 
   test("compaction rewrites a fragmented directory into the target file count") {
-    val in = graft.sources.Tables.scratchDir("spec_compact_in")
-    val out = graft.sources.Tables.scratchDir("spec_compact_out")
+    val in = graft.sources.Tables.scratchDir(sf, "spec_compact_in")
+    val out = graft.sources.Tables.scratchDir(sf, "spec_compact_out")
     val events = graft.sources.Tables.load(spark, sf, "events")
       .select("event_id", "user_id", "value")
     events.repartition(32).write.mode("overwrite").parquet(in)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkTestBase {
 
   private lazy val textDir: String = {
-    val tmp = Tables.scratchDir("dsv2_spec")
+    val tmp = Tables.scratchDir(sf, "dsv2_spec")
     TripleIO.writeText(RdfBridge.triples(spark, sf), tmp)
     tmp
   }
@@ -41,7 +41,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("graft-triples: malformed lines are skipped like readText's null filter") {
-    val tmp = Tables.scratchDir("dsv2_corrupt")
+    val tmp = Tables.scratchDir(sf, "dsv2_corrupt")
     val p = new java.io.File(tmp); p.mkdirs()
     val f = new java.io.PrintWriter(s"$tmp/part-00000")
     f.println("1 2 3"); f.println("not a triple"); f.println("4 5"); f.println("6 7 8")
@@ -53,7 +53,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("graft-triples streaming: one file per micro-batch, batch-equivalent result") {
     // stage 3 small name-ordered files
-    val tmp = Tables.scratchDir("dsv2_stream_spec")
+    val tmp = Tables.scratchDir(sf, "dsv2_stream_spec")
     val d = new java.io.File(tmp); d.mkdirs()
     Seq(0, 1, 2).foreach { i =>
       val w = new java.io.PrintWriter(s"$tmp/f0$i.txt")
@@ -74,7 +74,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("graft-triples write: V2 round-trip, overwrite truncates, commit leaves no temps") {
-    val tmp = Tables.scratchDir("dsv2_write_spec")
+    val tmp = Tables.scratchDir(sf, "dsv2_write_spec")
     val in = RdfBridge.triples(spark, sf)
     in.write.format("graft-triples").mode("overwrite").save(tmp)
     // write twice: overwrite must truncate, not double
@@ -92,7 +92,7 @@ class SourcesSpec extends SparkTestBase {
     // process f01/f02; then drop in f00 (sorts BEFORE processed files) and
     // f03; restart from the checkpoint. Index-based offsets would shift and
     // replay f01 (or skip f03); name-mark offsets process exactly f03.
-    val tmp = Tables.scratchDir("dsv2_restart_spec")
+    val tmp = Tables.scratchDir(sf, "dsv2_restart_spec")
     val d = new java.io.File(tmp)
     if (d.exists()) d.listFiles().foreach(_.delete())
     d.mkdirs()
@@ -126,7 +126,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("graft-triples write: append mode never renames onto a prior job's files") {
-    val tmp = Tables.scratchDir("dsv2_append_spec")
+    val tmp = Tables.scratchDir(sf, "dsv2_append_spec")
     val ad = new java.io.File(tmp)
     if (ad.exists()) { ad.listFiles().foreach(_.delete()); ad.delete() }
     val in = RdfBridge.triples(spark, sf).limit(100)

@@ -339,9 +339,9 @@ class StreamingSpec extends SparkTestBase {
     assert(restart.exceptAll(single).isEmpty && single.exceptAll(restart).isEmpty,
       "restarted pipeline must emit exactly the single-run statuses")
     val st1 = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_ie2e_idx")).select("bk").persist()
+      graft.sources.Tables.scratchDir(sf, "stream_ie2e_idx")).select("bk").persist()
     val st2 = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_irs_idx")).select("bk").persist()
+      graft.sources.Tables.scratchDir(sf, "stream_irs_idx")).select("bk").persist()
     assert(st2.count() == st2.distinct().count(), "store holds no duplicate keys")
     assert(st1.exceptAll(st2).isEmpty && st2.exceptAll(st1).isEmpty,
       "band store after restart must equal the single-run store")
@@ -354,9 +354,9 @@ class StreamingSpec extends SparkTestBase {
     assert(restart.exceptAll(single).isEmpty && single.exceptAll(restart).isEmpty,
       "restarted upsert must serve exactly the single-run results")
     val st1 = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_annu_idx")).select("nid").persist()
+      graft.sources.Tables.scratchDir(sf, "stream_annu_idx")).select("nid").persist()
     val st2 = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_anr_idx")).select("nid").persist()
+      graft.sources.Tables.scratchDir(sf, "stream_anr_idx")).select("nid").persist()
     assert(st2.count() == st2.distinct().count(),
       "no vector appended twice across the restart")
     assert(st1.exceptAll(st2).isEmpty && st2.exceptAll(st1).isEmpty,
@@ -416,10 +416,10 @@ class StreamingSpec extends SparkTestBase {
       single.exceptAll(restarted).isEmpty,
       "no replayed version-1 statuses, no lost arrivals")
     val s1 = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_img_idx"))
+      graft.sources.Tables.scratchDir(sf, "stream_img_idx"))
       .select("bk", "ah", "al")
     val s2 = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_imr_idx"))
+      graft.sources.Tables.scratchDir(sf, "stream_imr_idx"))
       .select("bk", "ah", "al")
     assert(s2.exceptAll(s1).isEmpty && s1.exceptAll(s2).isEmpty,
       "the compacted band store equals the single run's")
@@ -460,9 +460,9 @@ class StreamingSpec extends SparkTestBase {
     val ok = out.filter(col("route") === "ok").count()
     assert(late > 0, "out-of-order staging must produce late rows")
     val dlq = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_dlq_side"))
+      graft.sources.Tables.scratchDir(sf, "stream_dlq_side"))
     val okd = spark.read.parquet(
-      graft.queries.Streams.scratchDir(sf, "stream_dlq_ok"))
+      graft.sources.Tables.scratchDir(sf, "stream_dlq_ok"))
     assert(dlq.count() == late && okd.count() == ok,
       "each route's sink holds exactly its rows")
     assert(late + ok == spark.read.parquet(s"$sf/events.parquet").count(),
@@ -604,7 +604,17 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("duplicatedEventsDir: two fresh stagings list one arrival order") {
-    def staging() = arrival(graft.queries.Streams.duplicatedEventsDir(spark.newSession(), sf))
+    // two dataset paths holding the same events table: each is a staging of
+    // its own, built from scratch
+    def staging() = {
+      val ds = Files.createTempDirectory("graft_dup_staging")
+      Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"), ds.resolve("events.parquet"))
+      try {
+        val dir = graft.queries.Streams.duplicatedEventsDir(spark, ds.toString)
+        assert(dir.contains(ds.getFileName.toString))
+        arrival(dir)
+      } finally org.apache.hadoop.fs.FileUtil.fullyDelete(ds.toFile)
+    }
     val first = staging()
     assert(first == staging())
     // every chunk in time order, then its duplicate in the same order, so

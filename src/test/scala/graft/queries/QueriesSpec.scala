@@ -161,7 +161,7 @@ class QueriesSpec extends SparkTestBase {
     import spark.implicits._
     // doc1 owns the shared 4-gram "cc dd ee ff" (lowest doc_id); doc2's
     // occurrence covers its positions 2..5; doc3 shares nothing
-    val dir = graft.sources.Tables.scratchDir("scrub_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "scrub_fixture")
     Seq(
       (1L, "aa bb cc dd ee ff", "en", "s0", 0L),
       (2L, "zz yy cc dd ee ff xx", "en", "s0", 0L),
@@ -508,7 +508,7 @@ class QueriesSpec extends SparkTestBase {
     // batch as 7) copies 7 → flagged WITHIN the batch against the lower
     // id; doc 5 is unique → clean. Doc 3 arrives first → clean.
     val copied = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val dir = graft.sources.Tables.scratchDir("ingest_dedup_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "ingest_dedup_fixture")
     Seq(
       (3L, copied, "en", "s0", 0L),
       (5L, "one two three four five six seven eight nine ten", "en", "s0", 0L),
@@ -674,7 +674,7 @@ class QueriesSpec extends SparkTestBase {
     // round 2 pairs: aa+a = 3, ab = 1     → merge aaa; aaa → [aaa]
     // round 3 pairs: ab = 1               → merge ab
     // round 4: no pairs left → no row (empty-argmax round is a no-op)
-    val dir = graft.sources.Tables.scratchDir("bpe_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "bpe_fixture")
     Seq((1L, "aaa aaa", "en", "s0", 0L), (2L, "aaa ab", "en", "s0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -688,7 +688,7 @@ class QueriesSpec extends SparkTestBase {
 
     // overlap tiling: aaaa with top pair aa must tile as [aa][aa], not
     // merge the middle overlap — 3 matches in one run, odd offsets win
-    val dir2 = graft.sources.Tables.scratchDir("bpe_overlap_fixture")
+    val dir2 = graft.sources.Tables.scratchDir(sf, "bpe_overlap_fixture")
     Seq((1L, "aaaa aaaa aaaa", "en", "s0", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
@@ -728,7 +728,7 @@ class QueriesSpec extends SparkTestBase {
       (194L, vec(0, 0.02f, 3), 0),  // entry, slightly farther
       (300L, vec(7, 0.01f, 8), 1),  // filler family on another axis
       (301L, vec(7, 0.02f, 9), 1))
-    val dir = graft.sources.Tables.scratchDir("graph_search_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "graph_search_fixture")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = SparkEntry.queries("sim_graph_search")(spark, dir)
@@ -791,7 +791,7 @@ class QueriesSpec extends SparkTestBase {
       // tie, so the chain is valid
       (15L, t(0), 5L, "view", 0.0, ""), (16L, t(0), 5L, "click", 0.0, ""),
       (17L, t(60), 5L, "purchase", 0.0, ""))
-    val dir = graft.sources.Tables.scratchDir("funnel_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "funnel_fixture")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = SparkEntry.queries("events_funnel_windowed")(spark, dir)
@@ -815,7 +815,7 @@ class QueriesSpec extends SparkTestBase {
       (7L, y, "en", "s0", 0L),     // batch 1: would band-match X — must be ok
       (8L, good, "en", "s0", 0L),  // batch 2: dup of 4
       (5L, "tiny text", "en", "s0", 0L)) // batch 2: quality reject
-    val dir = graft.sources.Tables.scratchDir("ingest_e2e_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "ingest_e2e_fixture")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // premise: X and Y DO share an LSH band (Y embeds X's full token run),
@@ -839,7 +839,7 @@ class QueriesSpec extends SparkTestBase {
     // shared SELECTED fingerprint (the winnowing theorem); build two docs
     // whose only commonality is exactly such a run
     val shared = "q1 q2 q3 q4 q5 q6 q7"
-    val dir = graft.sources.Tables.scratchDir("winnow_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "winnow_fixture")
     Seq(
       (1L, s"aa bb cc dd ee $shared ff gg hh ii", "en", "s0", 0L),
       (2L, s"zz yy xx ww $shared vv uu tt ss rr", "en", "s0", 0L),
@@ -869,7 +869,7 @@ class QueriesSpec extends SparkTestBase {
     // a HALF-OPEN point-in-time probe must see exactly one version per
     // instant — the documented contract (the closed-interval probe would
     // double-count at the tie)
-    val dir = graft.sources.Tables.scratchDir("scd2_tie_fixture")
+    val dir = graft.sources.Tables.scratchDir(sf, "scd2_tie_fixture")
     Seq(
       (10L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "a", 1.0, "{}"),
       (11L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "b", 2.0, "{}"),

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 
 /** The staging primitive's contract: one eager job per staged relation, a
   * lineage-free view, and no hand-rolled copy of it elsewhere — nor of the
-  * streaming drain, `Streams.drain`. */
+  * streaming drain, `Streams.drain`, nor of the per-run session that
+  * `QueryDef` gives every gate. */
 class StageSpec extends SparkTestBase {
 
   test("Stage.view runs one job per call and registers the checkpointed relation") {
@@ -22,13 +23,13 @@ class StageSpec extends SparkTestBase {
       3L * (0 until 1000).sum)
   }
 
-  /** Every Scala source under `queries` as (file name, lines), comment lines
-    * blanked so line numbers still match. */
-  private def querySources: Seq[(String, Vector[String])] = {
-    val dir = new java.io.File("src/main/scala/graft/queries")
+  /** Every Scala source under `src/main/scala/graft/<pkg>` as (file name,
+    * lines), comment lines blanked so line numbers still match. */
+  private def sources(pkg: String, atLeast: Int): Seq[(String, Vector[String])] = {
+    val dir = new java.io.File(s"src/main/scala/graft/$pkg")
     val files = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".scala")).toSeq
-    assert(files.length >= 6, s"source guard found no sources under ${dir.getAbsolutePath}")
+    assert(files.length >= atLeast, s"source guard found no sources under ${dir.getAbsolutePath}")
     files.map { f =>
       f.getName -> java.nio.file.Files.readAllLines(f.toPath).asScala.toVector.map { l =>
         val t = l.trim
@@ -36,6 +37,14 @@ class StageSpec extends SparkTestBase {
       }
     }
   }
+
+  private def querySources = sources("queries", 6)
+
+  /** The `file:line` of every line of `code` that contains one of `bad`. */
+  private def offending(code: Seq[(String, Vector[String])], bad: String*): Seq[String] =
+    code.flatMap { case (name, lines) =>
+      lines.indices.collect { case i if bad.exists(lines(i).contains) => s"$name:${i + 1}" }
+    }
 
   test("no hand-rolled localCheckpoint + temp-view pair outside Stage") {
     val offenders = querySources.filter(_._1 != "Stage.scala").flatMap { case (name, code) =>
@@ -62,5 +71,17 @@ class StageSpec extends SparkTestBase {
     }
     assert(offenders.isEmpty,
       s"drain through Streams.drain instead: ${offenders.mkString(", ")}")
+  }
+
+  test("no gate saves and restores a SQL conf: each run owns its session") {
+    val offenders = offending(querySources, "conf.unset(", "conf.getOption(")
+    assert(offenders.isEmpty,
+      s"set the conf on the run's own session instead: ${offenders.mkString(", ")}")
+  }
+
+  test("no memo keyed on a session's identity hash") {
+    val offenders = offending(sources("sources", 4) ++ sources("plans", 3), "identityHashCode")
+    assert(offenders.isEmpty,
+      s"key the memo on the context instead: ${offenders.mkString(", ")}")
   }
 }

@@ -6,7 +6,8 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-/** `Tables.staged`: memoized once per key, and reentrant. */
+/** `Tables.staged`: memoized once per key, and reentrant; `Tables.scratchDir`:
+  * one directory per (tag, dataset). */
 class TablesSpec extends SparkTestBase {
 
   test("Tables.staged: a build may stage other kinds, enough to resize the memo") {
@@ -73,11 +74,18 @@ class TablesSpec extends SparkTestBase {
     }
   }
 
-  test("scratch lives under a root of this process; each session stages its own directory") {
-    assert(Tables.scratchDir("x").contains(s"/jvm_${ProcessHandle.current.pid}/"))
+  test("scratch lives under a root of this process; a fresh session reuses the context's staging") {
+    assert(Tables.scratchDir(sf, "x").contains(s"/jvm_${ProcessHandle.current.pid}/"))
     val ds = s"tables_spec_sessions_${System.nanoTime()}"
-    val a = Tables.staged(spark, ds, "k")(_ => ())
-    val b = Tables.staged(spark.newSession(), ds, "k")(_ => ())
-    assert(a != b)
+    var builds = 0
+    val a = Tables.staged(spark, ds, "k")(_ => builds += 1)
+    val b = Tables.staged(spark.newSession(), ds, "k")(_ => builds += 1)
+    assert(a == b && builds == 1)
+  }
+
+  test("scratchDir: one directory per dataset, also for paths that sanitize alike") {
+    assert(Tables.scratchDir(sf, "t") != Tables.scratchDir(sf.replace("sf0.001", "sf0.01"), "t"))
+    assert(Tables.scratchDir("/a/b", "t") != Tables.scratchDir("/a_b", "t"))
+    assert(Tables.scratchDir("/a/b", "t") == Tables.scratchDir("/a/b", "t"))
   }
 }
