@@ -219,6 +219,134 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("property: random BGP groups match an in-memory evaluator on both store layouts") {
+    // a required BGP over the fixture predicates, at most one OPTIONAL /
+    // MINUS / FILTER [NOT] EXISTS group or second UNION arm, and an
+    // optional FILTER of =, != and BOUND atoms under &&/||; the Spark
+    // answer (a bag of rows over the visible variables) equals a
+    // solution-mapping evaluator over the edge list, on both store layouts
+    val ids = SparqlSpec.terms.map(_.swap).toMap
+    val nodes = SparqlSpec.terms.map(_._2).filterNot(_.startsWith(":")) :+ "zzz"
+    val node: Gen[graft.sparql.Term] = Gen.frequency(
+      3 -> Gen.oneOf("x", "y", "z").map(Variable(_)), 2 -> Gen.oneOf(nodes).map(Constant(_)))
+    val pattern = for {
+      s <- node; p <- Gen.oneOf(":p1", ":p2", ":p3", ":loop"); o <- node
+    } yield TriplePattern(s, Constant(p), o)
+    val bgp = Gen.choose(1, 3).flatMap(Gen.listOfN(_, pattern))
+    // a FILTER atom: (variable, op, right-hand side); op "bound" ignores it
+    val atom = for {
+      v <- Gen.oneOf("x", "y", "z")
+      op <- Gen.oneOf("=", "!=", "bound")
+      rhs <- Gen.oneOf(Gen.oneOf("x", "y", "z").map(Variable(_)),
+        Gen.oneOf(nodes).map(Constant(_)))
+    } yield (v, op, rhs)
+    // OR of ANDs, 1-3 atoms: the subset's precedence with no parentheses
+    val filter = Gen.option(Gen.choose(1, 3).flatMap(Gen.listOfN(_, atom))
+      .flatMap(as => Gen.listOfN(as.length - 1, Gen.oneOf(true, false)).map { ands =>
+        as.tail.zip(ands).foldLeft(Seq(Seq(as.head))) {
+          case (ors, (a, true)) => ors.init :+ (ors.last :+ a)
+          case (ors, (a, false)) => ors :+ Seq(a)
+        }
+      }))
+    val genCase = for {
+      req <- bgp
+      kind <- Gen.oneOf("", "OPTIONAL", "MINUS", "EXISTS", "NOT EXISTS", "UNION")
+      grp <- bgp.map(_.take(2))
+      f <- filter
+    } yield (req, kind, grp, f)
+
+    type Sol = Map[String, Int]
+    def vars(ps: Seq[TriplePattern]) =
+      ps.flatMap(p => Seq(p.s, p.o)).collect { case Variable(v) => v }.toSet
+    def scan(p: TriplePattern): Seq[Sol] = SparqlSpec.edges.flatMap { case (s, q, o) =>
+      Seq(p.s -> s, p.p -> q, p.o -> o).foldLeft(Option(Map.empty[String, Int])) {
+        case (Some(m), (Constant(l), id)) => if (ids.get(l).contains(id)) Some(m) else None
+        case (Some(m), (Variable(v), id)) => if (m.get(v).forall(_ == id)) Some(m + (v -> id)) else None
+        case _ => None
+      }
+    }
+    def compatible(a: Sol, b: Sol) = a.forall { case (k, v) => b.get(k).forall(_ == v) }
+    def join(l: Seq[Sol], r: Seq[Sol]) = for { a <- l; b <- r if compatible(a, b) } yield a ++ b
+    def eval(ps: Seq[TriplePattern]): Seq[Sol] = ps.map(scan).foldLeft(Seq(Map.empty[String, Int]))(join)
+    // SPARQL three-valued logic: None is an expression error
+    def holds(m: Sol, a: (String, String, graft.sparql.Term)): Option[Boolean] = a match {
+      case (v, "bound", _) => Some(m.contains(v))
+      case (v, op, rhs) =>
+        val r = rhs match {
+          case Variable(w) => m.get(w)
+          case Constant(l) => Some(ids.getOrElse(l, Int.MinValue))
+          case other => throw new IllegalStateException(s"unexpected $other")
+        }
+        for (x <- m.get(v); y <- r) yield (x == y) == (op == "=")
+    }
+    def and(l: Option[Boolean], r: Option[Boolean]) =
+      if (l.contains(false) || r.contains(false)) Some(false) else for (a <- l; b <- r) yield a && b
+    def or(l: Option[Boolean], r: Option[Boolean]) =
+      if (l.contains(true) || r.contains(true)) Some(true) else for (a <- l; b <- r) yield a || b
+    def render(t: graft.sparql.Term) = t match {
+      case Variable(v) => s"?$v"
+      case Constant(l) if l.startsWith(":") => l
+      case Constant(l) => s"'$l'"
+      case other => throw new IllegalStateException(s"unexpected $other")
+    }
+    def group(ps: Seq[TriplePattern]) =
+      ps.map(p => s"${render(p.s)} ${render(p.p)} ${render(p.o)}").mkString(" . ")
+
+    val (engine, triples) = SparqlSpec.fixture(spark)
+    val stores = Seq(engine.registerSingleTable(triples), engine.registerSplitTables(triples))
+    forSamples(genCase, 60) { case (req, kind, grp, f) =>
+      val visible = if (kind == "OPTIONAL" || kind == "UNION") vars(req ++ grp) else vars(req)
+      // FILTER atoms range over visible variables; a UNION body is arms only
+      val fil = f.filter(_ => kind != "UNION")
+        .map(_.map(_.filter { case (v, _, rhs) =>
+          visible(v) && (rhs match {
+            case Variable(w) => visible(w)
+            case _ => true
+          })
+        }).filter(_.nonEmpty)).filter(_.nonEmpty)
+      val solutions = kind match {
+        case "UNION" => eval(req) ++ eval(grp)
+        case "OPTIONAL" =>
+          val right = eval(grp)
+          eval(req).flatMap { a =>
+            val ext = right.filter(compatible(a, _)).map(a ++ _)
+            if (ext.isEmpty) Seq(a) else ext
+          }
+        case "MINUS" =>
+          val right = eval(grp)
+          eval(req).filterNot(a => right.exists(b =>
+            compatible(a, b) && a.keySet.intersect(b.keySet).nonEmpty))
+        case "EXISTS" | "NOT EXISTS" =>
+          val right = eval(grp)
+          eval(req).filter(a => right.exists(compatible(a, _)) == (kind == "EXISTS"))
+        case _ => eval(req)
+      }
+      val expected = solutions.filter(m => fil.forall(ors =>
+        ors.map(_.map(holds(m, _)).reduce(and)).reduce(or).contains(true)))
+      val cols = visible.toSeq.sorted
+      val rows = expected.map(m => cols.map(m.get))
+      val filterText = fil.fold("")(ors => " FILTER(" + ors.map(_.map {
+        case (v, "bound", _) => s"BOUND(?$v)"
+        case (v, op, rhs) => s"?$v $op ${render(rhs)}"
+      }.mkString(" && ")).mkString(" || ") + ")")
+      val body = kind match {
+        case "" => group(req)
+        case "UNION" => s"{ ${group(req)} } UNION { ${group(grp)} }"
+        case "EXISTS" | "NOT EXISTS" => s"${group(req)} . FILTER $kind { ${group(grp)} }"
+        case k => s"${group(req)} . $k { ${group(grp)} }"
+      }
+      val query = s"SELECT * WHERE { $body$filterText }"
+      stores.foreach { reg =>
+        val df = reg.sparql(query)
+        assert(df.columns.filterNot(_.startsWith("__")).toSeq == cols, query)
+        val got = df.collect().toSeq.map(r => cols.map(c =>
+          Option(r.getAs[Any](c)).map(_.asInstanceOf[Int])))
+        def bag(xs: Seq[Seq[Option[Int]]]) = xs.groupBy(identity).view.mapValues(_.size).toMap
+        assert(bag(got) == bag(rows), query)
+      }
+    }
+  }
+
   test("property: dictionary encode is the inverse of the pair set") {
     forSamples(Gen.mapOf(Gen.zip(Gen.choose(1, 1000000), term)), 5) { m0 =>
         // distinct ids AND distinct terms (a dictionary is a bijection)
