@@ -23,6 +23,11 @@ object Rdf {
   private def engine(s: SparkSession, dir: String): QueryEngine =
     new QueryEngine(s, RdfBridge.dictionary(s, dir))
 
+  /** The bridge triples on the subject-keyed sign-split persisted layout,
+    * the store most gates query. */
+  private def splitStore(s: SparkSession, dir: String): QueryEngine =
+    engine(s, dir).registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+
   /** The decoded-value gates' store: the bridge plus one `:val` (-47)
     * triple per customer whose object is its nation key as a bare numeral
     * term, id -(nationkey + 900000000), so id order is the reverse of value
@@ -172,8 +177,7 @@ object Rdf {
     // The neg→pos→neg chain (customer→order→part) exercises both tables;
     // Positive/Negative are partition-pruned scans of ONE persisted table. ----
     QueryDef("rdf_q2_split", cte + q2Sql) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sql(q2Sql)
     },
 
@@ -195,8 +199,7 @@ object Rdf {
         |UNION ALL
         |SELECT Subject AS s, Predicate AS p, Object AS o FROM Negative
         |WHERE Object = (SELECT MIN(Object) FROM Negative WHERE Predicate = -21)""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sql(
           """SELECT Subject AS s, Predicate AS p, Object AS o FROM Positive
             |WHERE Object = (SELECT MIN(Object) FROM Negative WHERE Predicate = -21)
@@ -214,8 +217,7 @@ object Rdf {
         |  AND Object = (SELECT MIN(Object) FROM Negative
         |                WHERE Subject = (SELECT MIN(Subject) FROM Negative WHERE Predicate = -2)
         |                  AND Predicate = -2)""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sql(
           """SELECT Subject AS s, Predicate AS p, Object AS o FROM Negative
             |WHERE Subject = (SELECT MIN(Subject) FROM Negative WHERE Predicate = -2)
@@ -238,8 +240,7 @@ object Rdf {
       // TEXT construction — a user supplies this), not query execution state
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o ?p2 WHERE { 'cust_$minCust' :placed ?o . ?o :contains ?p2 }")
     },
 
@@ -264,8 +265,7 @@ object Rdf {
       val minCust = orders.agg(min(col("o_custkey"))).head().getLong(0)
       val minOrder = orders.filter(col("o_custkey") === minCust)
         .agg(min(col("o_orderkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(
           s"""SELECT ?o ?p2 WHERE { 'cust_$minCust' :placed ?o .
              | ?o :contains ?p2 . FILTER(?o = 'order_$minOrder') } LIMIT 1000000""".stripMargin)
@@ -278,8 +278,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT DISTINCT Object AS n FROM triples
           |WHERE Predicate = -31""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT DISTINCT ?n WHERE { ?c :in_nation ?n }")
     },
 
@@ -292,8 +291,7 @@ object Rdf {
         """SELECT Object AS n, CAST(NULL AS INTEGER) AS p FROM triples WHERE Predicate = -31
           |UNION ALL
           |SELECT CAST(NULL AS INTEGER) AS n, Object AS p FROM triples WHERE Predicate = -13""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?n ?p WHERE { { ?c :in_nation ?n } UNION { ?o :contains ?p } }")
     },
 
@@ -311,8 +309,7 @@ object Rdf {
           |ORDER BY 'order_' || CAST(Subject - 1 AS VARCHAR) DESC,
           |  'part_' || CAST((-Object) - 500000000 AS VARCHAR) ASC
           |LIMIT 200 OFFSET 100""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?o ?p WHERE { ?o :contains ?p } ORDER BY DESC(?o) ?p LIMIT 200 OFFSET 100")
     },
 
@@ -348,8 +345,7 @@ object Rdf {
           |ORDER BY cnt DESC,
           |  'nation_' || CAST(Object - 2000000000 AS VARCHAR) ASC
           |LIMIT 10""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?n (COUNT(?c) AS ?cnt) WHERE { ?c :in_nation ?n } " +
           "GROUP BY ?n ORDER BY DESC(?cnt) ?n LIMIT 10")
     },
@@ -364,8 +360,7 @@ object Rdf {
           |FROM (SELECT * FROM triples WHERE Predicate = -31) t1
           |LEFT JOIN (SELECT * FROM triples WHERE Predicate = -2) t2
           |  ON t2.Subject = t1.Subject""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c ?o WHERE { ?c :in_nation ?n . OPTIONAL { ?c :placed ?o } }")
     },
 
@@ -376,8 +371,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT Object AS n, CAST(COUNT(Subject) AS BIGINT) AS cnt
           |FROM triples WHERE Predicate = -31 GROUP BY Object""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?n (COUNT(?c) AS ?cnt) WHERE { ?c :in_nation ?n } GROUP BY ?n")
     },
 
@@ -391,8 +385,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT Object AS s, CAST(COUNT(DISTINCT Subject) AS BIGINT) AS nparts
           |FROM triples WHERE Predicate = -21 GROUP BY Object""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?s (COUNT(DISTINCT ?p) AS ?nparts) WHERE { ?p :supplied_by ?s } GROUP BY ?s")
     },
 
@@ -409,8 +402,7 @@ object Rdf {
           |                    AND x.Object = CAST(-((SELECT MIN(l_partkey) FROM lineitem) + 500000000) AS INTEGER))""".stripMargin) { (s, dir) =>
       val minPart = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_partkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?c ?o WHERE { ?c :placed ?o . MINUS { ?o :contains 'part_$minPart' } }")
     },
 
@@ -421,8 +413,7 @@ object Rdf {
         """SELECT Subject AS c, Object AS n FROM triples
           |WHERE Predicate = -31
           |  AND Object IN (2000000000, 2000000001, 2000000002)""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c ?n WHERE { ?c :in_nation ?n . " +
           "VALUES ?n { 'nation_0' 'nation_1' 'nation_2' } }")
     },
@@ -439,8 +430,7 @@ object Rdf {
           |                AND x.Object = CAST(-((SELECT MIN(l_partkey) FROM lineitem) + 500000000) AS INTEGER))""".stripMargin) { (s, dir) =>
       val minPart = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_partkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT ?c ?o WHERE { ?c :placed ?o .
                    | FILTER EXISTS { ?o :contains 'part_$minPart' } }""".stripMargin)
     },
@@ -452,8 +442,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT Subject AS c, Object AS o2, CAST(2000000000 AS INTEGER) AS tag
           |FROM triples WHERE Predicate = -2""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c ?o2 ?tag WHERE { ?c :placed ?o . " +
           "BIND(?o AS ?o2) . BIND('nation_0' AS ?tag) }")
     },
@@ -469,8 +458,7 @@ object Rdf {
         |  AND Object - 1 <= (SELECT MIN(o_orderkey) + 20 FROM orders)""".stripMargin) { (s, dir) =>
       val minK = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_orderkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT ?c ?okey WHERE { ?c :placed ?o .
                    | BIND(?o - 1 AS ?okey) FILTER(?okey <= ${minK + 20}) }""".stripMargin)
     },
@@ -494,8 +482,7 @@ object Rdf {
         |WHERE t1.Predicate = -2""".stripMargin) { (s, dir) =>
       val minPart = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_partkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT DISTINCT ?c ?v WHERE { ?c :placed ?o .
                    | OPTIONAL { ?o :contains 'part_$minPart' . 'part_$minPart' :supplied_by ?s }
                    | BIND(COALESCE(?s, ?o) AS ?v) }""".stripMargin)
@@ -514,8 +501,7 @@ object Rdf {
         |SELECT Subject AS c, Object AS n,
         |       CAST(CASE WHEN Object - 2000000000 > 12 THEN 1 ELSE 0 END AS BIGINT) AS flag
         |FROM triples WHERE Predicate = -31""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("""SELECT ?c ?n ?flag WHERE { ?c :in_nation ?n .
                   | BIND(?n - 2000000000 AS ?k)
                   | BIND(IF(?k > 12, 1, 0) AS ?flag) }""".stripMargin)
@@ -541,8 +527,7 @@ object Rdf {
       val lo = cust.orderBy(col("c_custkey").asc).select("c_custkey", "c_nationkey").head()
       val hi = cust.orderBy(col("c_custkey").desc).select("c_custkey", "c_nationkey").head()
       val wrongNation = (lo.getInt(1) + 1) % 25
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT ?c ?n WHERE { ?c :in_nation ?n .
                    | VALUES (?c ?n) { ('cust_${lo.getLong(0)}' 'nation_${lo.getInt(1)}')
                    |  ('cust_${hi.getLong(0)}' 'nation_${hi.getInt(1)}')
@@ -569,8 +554,7 @@ object Rdf {
       // solution matches both rows (the bag join would emit it twice while
       // the OR-oracle emits it once)
       val otherNation = (lo.getInt(1) + 1) % 25
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT ?c ?n WHERE { ?c :in_nation ?n .
                    | VALUES (?c ?n) { ('cust_${lo.getLong(0)}' 'nation_${lo.getInt(1)}')
                    |  (UNDEF 'nation_$otherNation') } }""".stripMargin)
@@ -582,8 +566,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT DISTINCT Subject, Predicate, Object FROM triples
           |WHERE Predicate = -31""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("CONSTRUCT WHERE { ?c :in_nation ?n }")
     },
 
@@ -596,8 +579,7 @@ object Rdf {
           |    AND Predicate = -2) AS result""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"ASK { 'cust_$minCust' :placed ?o }")
     },
 
@@ -608,8 +590,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT DISTINCT Object AS Subject, -2 AS Predicate, Subject AS Object
           |FROM triples WHERE Predicate = -2""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("CONSTRUCT { ?o :placed ?c } WHERE { ?c :placed ?o }")
     },
 
@@ -620,8 +601,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT Subject AS s, Object AS o FROM triples
           |WHERE Predicate NOT IN (-2, -13, -31)""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?s ?o WHERE { ?s !(:placed|:contains|:in_nation) ?o }")
     },
 
@@ -636,8 +616,7 @@ object Rdf {
           |   OR Object = CAST((SELECT MIN(o_orderkey) FROM orders) + 1 AS INTEGER)""".stripMargin) { (s, dir) =>
       val minOrder = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_orderkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"DESCRIBE 'order_$minOrder'")
     },
 
@@ -655,8 +634,7 @@ object Rdf {
           |   OR t.Object IN (SELECT node FROM ids)""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"DESCRIBE ?o WHERE { 'cust_$minCust' :placed ?o }")
     },
 
@@ -668,8 +646,7 @@ object Rdf {
         """SELECT Subject AS c, MIN(Object) AS first_order, MAX(Object) AS last_order,
           |  CAST(COUNT(Object) AS BIGINT) AS n
           |FROM triples WHERE Predicate = -2 GROUP BY Subject""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c (MIN(?o) AS ?first_order) (MAX(?o) AS ?last_order) " +
           "(COUNT(?o) AS ?n) WHERE { ?c :placed ?o } GROUP BY ?c")
     },
@@ -683,8 +660,7 @@ object Rdf {
         """SELECT Subject AS c, MIN(Object) AS some_order,
           |  CAST(COUNT(*) AS BIGINT) AS n
           |FROM triples WHERE Predicate = -2 GROUP BY Subject""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c (SAMPLE(?o) AS ?some_order) (COUNT(*) AS ?n) " +
           "WHERE { ?c :placed ?o } GROUP BY ?c")
     },
@@ -710,8 +686,7 @@ object Rdf {
       // case, exercised here through a gate.
       val minPart = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_partkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT ?c ?o WHERE { ?c :placed ?o .
                    | OPTIONAL { ?o :contains 'part_$minPart' . 'part_$minPart' :supplied_by ?s }
                    | FILTER(!BOUND(?s)) }""".stripMargin)
@@ -733,8 +708,7 @@ object Rdf {
           |WHERE t1.Predicate = -2""".stripMargin) { (s, dir) =>
       val minPart = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_partkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT ?o ?p2 WHERE { ?c :placed ?o .
                    | OPTIONAL { ?o :contains ?p2 . FILTER(?p2 = 'part_$minPart') } }""".stripMargin)
     },
@@ -746,8 +720,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT Subject AS c, AVG(Object) AS avg_o, MIN(Object) AS any_o
           |FROM triples WHERE Predicate = -2 GROUP BY Subject""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c (AVG(?o) AS ?avg_o) (SAMPLE(?o) AS ?any_o) " +
           "WHERE { ?c :placed ?o } GROUP BY ?c")
     },
@@ -761,8 +734,7 @@ object Rdf {
         """SELECT Subject AS c, CAST(COUNT(Object) AS BIGINT) AS n
           |FROM triples WHERE Predicate = -2 GROUP BY Subject
           |HAVING COUNT(Object) > 12""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c (COUNT(?o) AS ?n) WHERE { ?c :placed ?o } " +
           "GROUP BY ?c HAVING (COUNT(?o) > 12)")
     },
@@ -776,8 +748,7 @@ object Rdf {
         """SELECT Subject AS c,
           |  string_agg(CAST(Object AS VARCHAR), ',' ORDER BY Object) AS orders
           |FROM triples WHERE Predicate = -2 GROUP BY Subject""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c (GROUP_CONCAT(?o) AS ?orders) WHERE { ?c :placed ?o } GROUP BY ?c")
     },
 
@@ -797,8 +768,7 @@ object Rdf {
           |SELECT CAST(node AS INTEGER) AS o FROM reach""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'cust_$minCust' (:placed|:contains|:supplied_by)+ ?o }")
     },
 
@@ -823,8 +793,7 @@ object Rdf {
           |WHERE d BETWEEN 2 AND 3""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'cust_$minCust' (:placed|:contains|:supplied_by){2,3} ?o }")
     },
 
@@ -841,8 +810,7 @@ object Rdf {
           |  AND t1.Predicate = -2 AND t2.Predicate = -13""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?p2 WHERE { 'cust_$minCust' :placed/:contains ?p2 }")
     },
 
@@ -860,8 +828,7 @@ object Rdf {
           |  AND t2.Predicate = -2""".stripMargin) { (s, dir) =>
       val minPart = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_partkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?c WHERE { 'part_$minPart' ^:contains/^:placed ?c }")
     },
 
@@ -881,8 +848,7 @@ object Rdf {
           |SELECT CAST(node AS INTEGER) AS o FROM seed""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'cust_$minCust' (:placed|:contains|:supplied_by)* ?o }")
     },
 
@@ -898,8 +864,7 @@ object Rdf {
           |  AND Subject = CAST(-(1000 + (SELECT MIN(o_custkey) FROM orders)) AS INTEGER)""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'cust_$minCust' :placed? ?o }")
     },
 
@@ -921,8 +886,7 @@ object Rdf {
           |SELECT CAST(node AS INTEGER) AS o FROM reach""".stripMargin) { (s, dir) =>
       val minOrd = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_orderkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'order_$minOrd' (!(:placed|:in_nation))+ ?o }")
     },
 
@@ -947,8 +911,7 @@ object Rdf {
           |SELECT CAST(node AS INTEGER) AS o FROM reach""".stripMargin) { (s, dir) =>
       val minPart = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_partkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'part_$minPart' (^:contains|:supplied_by)+ ?o }")
     },
 
@@ -968,8 +931,7 @@ object Rdf {
       val orders = graft.sources.Tables.load(s, dir, "orders")
       val Seq(minK, maxK) = orders.agg(min(col("o_orderkey")), max(col("o_orderkey")))
         .head().toSeq.map(_.asInstanceOf[Long])
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"""SELECT ?c ?o WHERE { ?c :placed ?o .
                    | FILTER(?o > 'order_${minK + 10}' && ?o <= 'order_${minK + 1000}'
                    |   || ?o = 'order_$maxK') }""".stripMargin)
@@ -1001,8 +963,7 @@ object Rdf {
         |SELECT Subject AS c, Object AS n FROM triples
         |WHERE Predicate = -31
         |  AND (Object IN (2000000003, 2000000011) OR Object = 2000000019)""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("""SELECT ?c ?n WHERE { ?c :in_nation ?n .
                   | FILTER(?n IN ('nation_3', 'nation_11', 'nation_nosuch')
                   |   || ?n NOT IN ('nation_0','nation_1','nation_2','nation_3','nation_4',
@@ -1021,8 +982,7 @@ object Rdf {
         """SELECT Subject AS c, Object AS n FROM triples
           |WHERE Predicate = -31
           |  AND (Object - 2000000000) IN (10, 11, 12)""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c ?n WHERE { ?c :in_nation ?n . " +
           "FILTER(regex(?n, '^nation_1[0-2]$')) }")
     },
@@ -1039,8 +999,7 @@ object Rdf {
           |SELECT Subject AS c, Object AS n FROM named
           |WHERE starts_with(nm, 'nation_1')
           |  AND contains(nm, '2') AND length(nm) = 9""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c ?n WHERE { ?c :in_nation ?n . " +
           "FILTER(STRSTARTS(STR(?n), 'nation_1')) " +
           "FILTER(CONTAINS(STR(?n), '2')) " +
@@ -1173,8 +1132,7 @@ object Rdf {
           |      FROM triples WHERE Predicate = -2 GROUP BY Subject) g
           |  ON g.Subject = t.Subject
           |WHERE t.Predicate = -31""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?c ?n ?nat WHERE { ?c :in_nation ?nat . " +
           "{ SELECT ?c (COUNT(?o) AS ?n) WHERE { ?c :placed ?o } GROUP BY ?c } }")
     },
@@ -1197,8 +1155,7 @@ object Rdf {
           |SELECT CAST(node AS INTEGER) AS o FROM reach""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'cust_$minCust' (:placed/:contains)+ ?o }")
     },
 
@@ -1220,8 +1177,7 @@ object Rdf {
           |SELECT CAST(node AS INTEGER) AS o FROM reach""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?o WHERE { 'cust_$minCust' :placed/(:contains|:supplied_by)+ ?o }")
     },
 
@@ -1237,8 +1193,7 @@ object Rdf {
           |  UNION
           |  SELECT r.root, e.Object FROM reach r JOIN edges e ON e.Subject = r.node)
           |SELECT CAST(root AS INTEGER) AS s, CAST(node AS INTEGER) AS o FROM reach""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?s ?o WHERE { ?s (:placed|:contains)+ ?o }")
     },
 
@@ -1254,8 +1209,7 @@ object Rdf {
           |UNION ALL
           |SELECT CAST(-(c_custkey + 1000) AS INTEGER),
           |  CAST(c_nationkey + 2000000000 AS INTEGER) FROM customer""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql("SELECT ?s ?o WHERE { { ?s :supplied_by+ ?o } UNION { ?s :in_nation ?o } }")
     },
 
@@ -1275,8 +1229,7 @@ object Rdf {
           |SELECT CAST(node AS INTEGER) AS s FROM reach""".stripMargin) { (s, dir) =>
       val minSupp = graft.sources.Tables.load(s, dir, "lineitem")
         .agg(min(col("l_suppkey"))).head().getLong(0)
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .sparql(s"SELECT ?s WHERE { ?s (:placed|:contains|:supplied_by)+ 'supp_$minSupp' }")
     },
 
@@ -1289,8 +1242,7 @@ object Rdf {
         """SELECT t1.Subject AS c, t2.Object AS n
           |FROM triples t1 JOIN triples t2 ON t2.Subject = t1.Subject
           |WHERE t1.Predicate = -2 AND t2.Predicate = -31""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .registerQuadsPersisted(RdfBridge.quads(s, dir), dir)
         .sparql("SELECT ?c ?n WHERE { GRAPH :placed { ?c ?p ?o } . ?c :in_nation ?n }")
     },
@@ -1302,8 +1254,7 @@ object Rdf {
       RdfBridge.oracleCte +
         """SELECT Predicate AS g, CAST(COUNT(*) AS BIGINT) AS n
           |FROM triples GROUP BY Predicate""".stripMargin) { (s, dir) =>
-      engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      splitStore(s, dir)
         .registerQuadsPersisted(RdfBridge.quads(s, dir), dir)
         .sparql("SELECT ?g (COUNT(*) AS ?n) WHERE { GRAPH ?g { ?s ?p ?o } } GROUP BY ?g")
     },
@@ -1540,8 +1491,7 @@ object Rdf {
           |  AND t1.Predicate = -2 AND t2.Predicate = -13""".stripMargin) { (s, dir) =>
       val minCust = graft.sources.Tables.load(s, dir, "orders")
         .agg(min(col("o_custkey"))).head().getLong(0)
-      val decoded = engine(s, dir)
-        .registerSplitTablesPersisted(RdfBridge.triples(s, dir), dir, Layouts.BySubject)
+      val decoded = splitStore(s, dir)
         .sparqlDecoded(s"SELECT ?o ?p2 WHERE { 'cust_$minCust' :placed ?o . ?o :contains ?p2 }")
       val out = graft.sources.Tables.scratchDir(dir, "rdf_lifecycle")
       graft.sources.TripleIO.writeText(decoded, out)

@@ -36,13 +36,6 @@ object BgpPlanner {
   final case class SingleTable(df: DataFrame) extends Store
   final case class SplitTables(positive: DataFrame, negative: DataFrame) extends Store
 
-  /** All atoms of a FILTER condition tree. */
-  private def filterLeaves(e: FilterExpr): Seq[FilterCond] = e match {
-    case FilterLeaf(c) => Seq(c)
-    case FilterAnd(l, r) => filterLeaves(l) ++ filterLeaves(r)
-    case FilterOr(l, r) => filterLeaves(l) ++ filterLeaves(r)
-  }
-
   /** Every triple of `store`: the sign-split pair scans as its union. */
   private def allTriples(store: Store): DataFrame = store match {
     case SingleTable(df) => df
@@ -96,14 +89,14 @@ object BgpPlanner {
         .distinct()
     }
     // Encode every constant — pattern terms, path predicates, AND filter
-    // right-hand sides — in one dictionary round-trip (single pushed-down
-    // isin scan, not one scan per term).
+    // right-hand sides — in one `encodeTerms` call: a lookup in the
+    // dictionary's driver map while the vocabulary fits under
+    // `Dictionary.LocalVocabularyMax`, one pushed-down isin scan past it.
     val constants = ((query.patterns ++ query.optionals.flatten ++ query.unionArms.flatten ++
       query.constructTemplate ++ query.minuses.flatten ++ query.existsFilters.flatMap(_._1) ++
       query.graphGroups.flatMap(_._2))
       .flatMap(p => Seq(p.s, p.p, p.o)) ++
-      (query.filters ++ query.optionalFilters.flatten ++
-        query.filterExprs.flatMap(filterLeaves))
+      (query.filters ++ query.optionalFilters.flatten).flatMap(_.leaves)
         // regex patterns / string-function args are raw strings, not
         // dictionary terms
         .filterNot(c => FilterOp.isLexical(c.op))
@@ -123,96 +116,6 @@ object BgpPlanner {
     }.distinct
     val enc: Map[String, Int] = dict.encodeTerms(constants)
 
-    // One pattern, in any group: a property path plans through [[planPath]]
-    // over every triple (a path crosses entity classes, so it spans both
-    // sign tables); a negated property set plans as an ordinary scan over a
-    // hidden predicate variable post-filtered with NOT isin (an unknown
-    // negated term excludes nothing — it cannot occur in the data, so the
-    // pattern matches every predicate, per SPARQL semantics).
-    def planGroupPattern(st: Store)(p: TriplePattern, idx: Int): DataFrame =
-      p.p match {
-        case PathTerm(NegSet(preds)) =>
-          // the `__path` prefix keeps the synthetic predicate variable out
-          // of star projections; it is dropped before the joins regardless
-          val v = s"__pathneg$idx"
-          val ids = preds.flatMap(enc.get)
-          val base = planPattern(TriplePattern(p.s, Variable(v), p.o), idx, st, enc)
-          (if (ids.isEmpty) base else base.filter(!col(v).isin(ids: _*))).drop(v)
-        case PathTerm(path) => planPath(p.s, path, p.o, allTriples(st), enc)
-        case _ => planPattern(p, idx, st, enc)
-      }
-
-    // Required patterns join in a fixed order: scans, negated property
-    // sets, closures, then sequence paths.
-    def joinRank(p: TriplePattern): Int = p.p match {
-      case PathTerm(NegSet(_)) => 1
-      case PathTerm(PathSeq(_) | Rep(PathSeq(_), _, _)) => 3
-      case PathTerm(_) => 2
-      case _ => 0
-    }
-    val planned = query.patterns.sortBy(joinRank).zipWithIndex.map {
-      case (p, i) => planGroupPattern(store)(p, i)
-    }
-
-    // Join patterns left-to-right on shared variables; disjoint patterns
-    // cross-join (correct per SPARQL semantics, logged as a scale hazard).
-    def joinGroup(dfs: Seq[DataFrame]): DataFrame = dfs.reduceLeft { (acc, next) =>
-      val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq.sorted
-      if (shared.isEmpty) acc.crossJoin(next)
-      else acc.join(next, shared, "inner")
-    }
-    // GRAPH groups (named graphs): a bound graph term filters the quad
-    // store to that graph (a point predicate Catalyst pushes into the
-    // scan — with a graph-partitioned quad layout this is partition
-    // pruning) and the patterns plan as ordinary triple patterns over the
-    // filtered store; a graph VARIABLE plans each pattern as a QUAD
-    // pattern carrying the graph column as a binding — all patterns of
-    // one group share the variable, so "same graph" is the ordinary
-    // shared-variable equi-join.
-    val graphPlanned = query.graphGroups.zipWithIndex.flatMap {
-      case ((gTerm, pats), gi) =>
-        val q = quads.getOrElse(throw new IllegalArgumentException(
-          "GRAPH requires a registered quad store"))
-        (gTerm: @unchecked) match {
-          case Constant(l) =>
-            val sub = enc.get(l) match {
-              case Some(id) => q.filter(col(TripleSchema.graph) === lit(id))
-              case None => q.limit(0) // unknown graph holds nothing
-            }
-            val st = SingleTable(sub.select(col(TripleSchema.subject),
-              col(TripleSchema.predicate), col(TripleSchema.objekt)))
-            pats.zipWithIndex.map { case (p, i) =>
-              planGroupPattern(st)(p, 300000 * (gi + 1) + i) }
-          case Variable(gv) =>
-            pats.zipWithIndex.map { case (p, i) =>
-              require(!p.p.isInstanceOf[PathTerm],
-                s"unsupported property path inside GRAPH ?$gv: $p")
-              planPattern(p, 300000 * (gi + 1) + i, SingleTable(q), enc, graph = Some(gv)) }
-        }
-    }
-    // Subqueries (SPARQL 1.1 SubSelect): each plans RECURSIVELY as a full
-    // query — aggregates, modifiers and all — and its projected columns
-    // join the enclosing group like any other pattern relation (shared
-    // variables ⇒ equi-join; none ⇒ cross join per SPARQL semantics).
-    val subDfs = query.subqueries.map(sq => plan(sq, store, dict, quads))
-    // Top-level UNION (SPARQL Union): each arm is its own BGP join plan;
-    // arms are combined with bag semantics, and a variable unbound in an
-    // arm pads to null — `unionByName(allowMissingColumns)` gives exactly
-    // the SPARQL multiset-union-with-null-padding, and each arm stays an
-    // independently optimized subtree (filters pushed per arm).
-    val required =
-      if (query.unionArms.isEmpty) joinGroup(planned ++ graphPlanned ++ subDfs)
-      else query.unionArms.zipWithIndex.map { case (arm, a) =>
-        joinGroup(arm.zipWithIndex.map { case (p, i) =>
-          planGroupPattern(store)(p, 100000 * (a + 1) + i)
-        })
-      }.reduceLeft(_.unionByName(_, allowMissingColumns = true))
-
-    // OPTIONAL groups: each planned as its own BGP, then LEFT-joined to the
-    // accumulated result on the shared variables (SPARQL LeftJoin) — rows
-    // without a match keep the optional variables null. Using-column join
-    // keeps the left side's binding for shared variables, which is exactly
-    // the compatible-mapping semantics.
     // Variables whose value is a NUMBER (BIND arithmetic results), not a
     // dictionary id: comparisons against numeric literals apply to them
     // directly. Every other variable holds an encoded id, and a numeric
@@ -245,23 +148,30 @@ object BgpPlanner {
       case _ => false
     }
     def valCol(v: String): String = s"__val_$v"
-    def withDecodedVals(df: DataFrame, vars: Seq[String]): DataFrame =
+    def lexCol(v: String): String = s"__olex_$v"
+    // The one vocabulary join: for each variable of `vars` not yet decoded,
+    // `__val_<var>` binds its decoded number as above. With `sortKeys`,
+    // `__olex_<var>` also binds the decoded term of a non-numeric value
+    // (null for a number, which sorts by value, never lexically: "9" <
+    // "10"), the ORDER BY tie key.
+    def withDecoded(df: DataFrame, vars: Seq[String], sortKeys: Boolean = false): DataFrame =
       vars.distinct.filterNot(v => df.columns.contains(valCol(v)))
         .foldLeft(df) { (acc, v) =>
-          val idC = s"__vid_$v"
-          val numC = s"__vnum_$v"
-          val vocab = dict.entries.toDF(idC, "__vterm")
-            .select(col(idC), expr("try_cast(__vterm AS DOUBLE)").as(numC))
-          acc.join(vocab, acc(v) === col(idC), "left")
+          val (idC, numC) = (s"__vid_$v", s"__vnum_$v")
+          val vocab = dict.entries.toDF(idC, lexCol(v)).select(col(idC), col(lexCol(v)),
+            expr(s"try_cast(${lexCol(v)} AS DOUBLE)").as(numC))
+          val joined = acc.join(vocab, acc(v) === col(idC), "left")
             .withColumn(valCol(v),
               when(col(idC).isNull, col(v).cast("double")).otherwise(col(numC)))
-            .drop(idC, numC)
+          (if (sortKeys) joined.withColumn(lexCol(v),
+            when(col(valCol(v)).isNotNull, lit(null).cast("string")).otherwise(col(lexCol(v))))
+          else joined.drop(lexCol(v))).drop(idC, numC)
         }
 
-    // One FILTER atom as a Column predicate (everything except regex —
-    // string-function dictionary joins cannot compose inside an &&/||
-    // Column tree; numeric VALUE comparisons CAN, via the pre-joined
-    // `__val_<var>` column above).
+    // One FILTER atom as a Column predicate (everything except the lexical
+    // atoms — their dictionary joins cannot compose inside an &&/|| Column
+    // tree; numeric VALUE comparisons CAN, via the pre-joined `__val_<var>`
+    // column above).
     // Comparison RHS resolution: dictionary term → its encoded id (term
     // ordering = id ordering is the documented layout contract for ordered
     // term comparisons, matching the reference's id domain); bare numeric
@@ -306,12 +216,12 @@ object BgpPlanner {
               l.toLongOption match {
                 case Some(n) if !arithVars.contains(f.variable) =>
                   // decoded-value comparison over the pre-joined column
-                  // (see withDecodedVals) — a null value (non-numeric term
-                  // or unbound variable) is a type error: the comparison
+                  // (see withDecoded) — a null value (non-numeric term or
+                  // unbound variable) is a type error: the comparison
                   // yields null and the row drops under every operator
                   require(df.columns.contains(valCol(f.variable)),
                     s"internal: decoded-value column for ?${f.variable} " +
-                      "not pre-joined (withDecodedVals)")
+                      "not pre-joined (withDecoded)")
                   Some((col(valCol(f.variable)), lit(n.toDouble)))
                 case Some(n) =>
                   // BIND-arithmetic variable: already a number; int-width
@@ -325,119 +235,172 @@ object BgpPlanner {
           }
           sides match {
             case None => if (cmp == FilterNeq) lit(true) else lit(false)
-            case Some((x, r)) => cmp match {
-              case FilterEq => x === r
-              case FilterNeq => !(x === r)
-              case FilterLt => x < r
-              case FilterLe => x <= r
-              case FilterGt => x > r
-              case FilterGe => x >= r
-              case other => throw new IllegalStateException(s"unreachable: $other")
-            }
+            case Some((x, r)) => compare(cmp, x, r)
           }
       }
     }
 
-    def applyFilter(df: DataFrame, f: FilterCond): DataFrame = {
-      // [!]regex / [!]STRSTARTS / [!]STRENDS / [!]CONTAINS / STRLEN-cmp:
-      // the variable's DECODED lexical form satisfies the string predicate
-      // — planned as a semi-join (anti for the negated forms) against the
-      // predicate-filtered dictionary, so matching stays distributed and
-      // the predicate is evaluated once per VOCABULARY entry, not per
-      // solution row. No broadcast hint: a broad predicate can match a
-      // large id set — Catalyst/AQE picks the join side from size stats.
-      def lex = f.value.asInstanceOf[Constant].lexical
-      val term = col("__rx_term")
-      // (vocabulary predicate, plan as anti-join?) — STRLEN folds its
-      // comparison (including !=) into the predicate itself, so it always
-      // semi-joins
-      val dictPred: Option[(Column, Boolean)] = f.op match {
-        case FilterRegex => Some((term.rlike(lex), false))
-        case FilterNotRegex => Some((term.rlike(lex), true))
-        case FilterStrStarts => Some((term.startsWith(lex), false))
-        case FilterNotStrStarts => Some((term.startsWith(lex), true))
-        case FilterStrEnds => Some((term.endsWith(lex), false))
-        case FilterNotStrEnds => Some((term.endsWith(lex), true))
-        case FilterStrContains => Some((term.contains(lex), false))
-        case FilterNotStrContains => Some((term.contains(lex), true))
-        case FilterStrLen(cmp) =>
-          val n = lit(lex.toInt)
-          val len = length(term)
-          Some((cmp match {
-            case FilterEq => len === n
-            case FilterNeq => !(len === n)
-            case FilterLt => len < n
-            case FilterLe => len <= n
-            case FilterGt => len > n
-            case FilterGe => len >= n
-            case other => throw new IllegalStateException(s"unreachable: $other")
-          }, false))
-        case _ => None
-      }
-      dictPred match {
-        case Some((pred, negated)) =>
-          val ids = dict.entries.toDF("__rx_id", "__rx_term")
-            .filter(pred).select(col("__rx_id"))
-          val joinType = if (negated) "left_anti" else "left_semi"
-          // SPARQL error semantics: a null (OPTIONAL-unbound) variable is
-          // an expression error — the row drops under the positive AND the
-          // negated form (an anti join alone would keep nulls)
-          val base = if (negated) df.filter(col(f.variable).isNotNull) else df
-          base.join(ids, base(f.variable) === col("__rx_id"), joinType)
-        case None if needsValueCmp(f) =>
-          // decoded-value numeric comparison (see withDecodedVals): one
-          // left join against the numeric-cast vocabulary, predicate on
-          // the decoded column, helper column dropped after
-          val pre = withDecodedVals(df, Seq(f.variable))
-          pre.filter(condColumn(pre, f)).drop(valCol(f.variable))
-        case None => df.filter(condColumn(df, f))
-      }
+    // One FILTER tree over `df`. A lexical leaf ([!]regex, [!]STRSTARTS,
+    // [!]STRENDS, [!]CONTAINS, STRLEN-cmp) keeps the rows whose variable's
+    // DECODED lexical form satisfies the string predicate — planned as a
+    // semi-join (anti for the negated forms) against the predicate-filtered
+    // dictionary, so matching stays distributed and the predicate is
+    // evaluated once per VOCABULARY entry, not per solution row. No
+    // broadcast hint: a broad predicate can match a large id set —
+    // Catalyst/AQE picks the join side from size stats. Any other tree
+    // pre-joins the decoded-value column of each numeric-literal comparison
+    // leaf and filters on one Column tree, the helper columns dropped
+    // after. Catalyst pushes an equality on a single pattern's variable
+    // down into that pattern's scan (encoded point predicate), so a FILTER
+    // costs the same as writing the constant inside the pattern.
+    def applyFilter(df: DataFrame, e: FilterExpr): DataFrame = e match {
+      case FilterLeaf(f) if FilterOp.isLexical(f.op) =>
+        val lex = f.value.asInstanceOf[Constant].lexical
+        val term = col("__rx_term")
+        // (vocabulary predicate, plan as anti-join?) — STRLEN folds its
+        // comparison (including !=) into the predicate itself, so it always
+        // semi-joins
+        val (pred, negated) = (f.op: @unchecked) match {
+          case FilterRegex => (term.rlike(lex), false)
+          case FilterNotRegex => (term.rlike(lex), true)
+          case FilterStrStarts => (term.startsWith(lex), false)
+          case FilterNotStrStarts => (term.startsWith(lex), true)
+          case FilterStrEnds => (term.endsWith(lex), false)
+          case FilterNotStrEnds => (term.endsWith(lex), true)
+          case FilterStrContains => (term.contains(lex), false)
+          case FilterNotStrContains => (term.contains(lex), true)
+          case FilterStrLen(cmp) => (compare(cmp, length(term), lit(lex.toInt)), false)
+        }
+        val ids = dict.entries.toDF("__rx_id", "__rx_term")
+          .filter(pred).select(col("__rx_id"))
+        val joinType = if (negated) "left_anti" else "left_semi"
+        // SPARQL error semantics: a null (OPTIONAL-unbound) variable is an
+        // expression error — the row drops under the positive AND the
+        // negated form (an anti join alone would keep nulls)
+        val base = if (negated) df.filter(col(f.variable).isNotNull) else df
+        base.join(ids, base(f.variable) === col("__rx_id"), joinType)
+      case _ =>
+        val valVars = e.leaves.filter(needsValueCmp).map(_.variable).distinct
+        val pre = withDecoded(df, valVars)
+        def toCol(x: FilterExpr): Column = x match {
+          case FilterLeaf(c) => condColumn(pre, c)
+          case FilterAnd(l, r) => toCol(l) && toCol(r)
+          case FilterOr(l, r) => toCol(l) || toCol(r)
+        }
+        val out = pre.filter(toCol(e))
+        if (valVars.isEmpty) out else out.drop(valVars.map(valCol): _*)
     }
 
-    def applyFilterExpr(df: DataFrame, e: FilterExpr): DataFrame = {
-      // pre-join decoded-value columns for every numeric-literal
-      // comparison leaf, so value comparisons compose inside &&/||
-      def leaves(x: FilterExpr): Seq[FilterCond] = x match {
-        case FilterLeaf(c) => Seq(c)
-        case FilterAnd(l, r) => leaves(l) ++ leaves(r)
-        case FilterOr(l, r) => leaves(l) ++ leaves(r)
+    // Internal column names (`__exists_N` markers of fully bound patterns,
+    // `__pathnegN` predicate variables) take their N from one counter per
+    // plan call, so no two patterns of any groups share one.
+    var internal = 0
+    // One pattern, in any group: a property path plans through [[planPath]]
+    // over every triple (a path crosses entity classes, so it spans both
+    // sign tables); a negated property set plans as an ordinary scan over a
+    // hidden predicate variable post-filtered with NOT isin (an unknown
+    // negated term excludes nothing — it cannot occur in the data, so the
+    // pattern matches every predicate, per SPARQL semantics). With `graph`,
+    // a QUAD pattern binding the graph variable.
+    def pattern(st: Store, graph: Option[String])(p: TriplePattern): DataFrame = {
+      require(graph.isEmpty || !p.p.isInstanceOf[PathTerm],
+        s"unsupported property path inside GRAPH ?${graph.get}: $p")
+      internal += 1
+      p.p match {
+        case PathTerm(NegSet(preds)) =>
+          // the `__path` prefix keeps the synthetic predicate variable out
+          // of star projections; it is dropped before the joins regardless
+          val v = s"__pathneg$internal"
+          val ids = preds.flatMap(enc.get)
+          val base = planPattern(TriplePattern(p.s, Variable(v), p.o), internal, st, enc)
+          (if (ids.isEmpty) base else base.filter(!col(v).isin(ids: _*))).drop(v)
+        case PathTerm(path) => planPath(p.s, path, p.o, allTriples(st), enc)
+        case _ => planPattern(p, internal, st, enc, graph)
       }
-      val valVars = leaves(e).filter(needsValueCmp).map(_.variable).distinct
-      val pre = withDecodedVals(df, valVars)
-      def toCol(x: FilterExpr): Column = x match {
-        case FilterLeaf(c) => condColumn(pre, c)
-        case FilterAnd(l, r) => toCol(l) && toCol(r)
-        case FilterOr(l, r) => toCol(l) || toCol(r)
-      }
-      pre.filter(toCol(e)).drop(valVars.map(valCol): _*)
     }
+    // Patterns join in a fixed order: scans, negated property sets,
+    // closures, then sequence paths.
+    def joinRank(p: TriplePattern): Int = p.p match {
+      case PathTerm(NegSet(_)) => 1
+      case PathTerm(PathSeq(_) | Rep(PathSeq(_), _, _)) => 3
+      case PathTerm(_) => 2
+      case _ => 0
+    }
+    def shared(l: DataFrame, r: DataFrame): Seq[String] =
+      l.columns.toSet.intersect(r.columns.toSet).toSeq.sorted
+    // One group, of any kind (required, UNION arm, GRAPH, OPTIONAL, MINUS,
+    // EXISTS): its patterns ranked by `joinRank` and planned, then joined
+    // left to right on shared variables, `extra` relations last. Disjoint
+    // parts cross-join (correct per SPARQL semantics, a scale hazard).
+    def group(patterns: Seq[TriplePattern], st: Store = store,
+        graph: Option[String] = None, extra: Seq[DataFrame] = Nil): DataFrame =
+      (patterns.sortBy(joinRank).map(pattern(st, graph)) ++ extra).reduceLeft { (acc, next) =>
+        val on = shared(acc, next)
+        if (on.isEmpty) acc.crossJoin(next)
+        else acc.join(next, on, "inner")
+      }
 
+    // GRAPH groups (named graphs): a bound graph term filters the quad
+    // store to that graph (a point predicate Catalyst pushes into the
+    // scan — with a graph-partitioned quad layout this is partition
+    // pruning) and the patterns plan as ordinary triple patterns over the
+    // filtered store; a graph VARIABLE plans each pattern as a QUAD
+    // pattern carrying the graph column as a binding — all patterns of
+    // one group share the variable, so "same graph" is the ordinary
+    // shared-variable equi-join.
+    val graphDfs = query.graphGroups.map { case (gTerm, pats) =>
+      val q = quads.getOrElse(throw new IllegalArgumentException(
+        "GRAPH requires a registered quad store"))
+      (gTerm: @unchecked) match {
+        case Constant(l) =>
+          val sub = enc.get(l) match {
+            case Some(id) => q.filter(col(TripleSchema.graph) === lit(id))
+            case None => q.limit(0) // unknown graph holds nothing
+          }
+          group(pats, SingleTable(sub.select(col(TripleSchema.subject),
+            col(TripleSchema.predicate), col(TripleSchema.objekt))))
+        case Variable(gv) => group(pats, SingleTable(q), Some(gv))
+      }
+    }
+    // Subqueries (SPARQL 1.1 SubSelect): each plans RECURSIVELY as a full
+    // query — aggregates, modifiers and all — and its projected columns
+    // join the enclosing group like any other pattern relation (shared
+    // variables ⇒ equi-join; none ⇒ cross join per SPARQL semantics).
+    val subDfs = query.subqueries.map(sq => plan(sq, store, dict, quads))
+    // Top-level UNION (SPARQL Union): each arm is its own BGP join plan;
+    // arms are combined with bag semantics, and a variable unbound in an
+    // arm pads to null — `unionByName(allowMissingColumns)` gives exactly
+    // the SPARQL multiset-union-with-null-padding, and each arm stays an
+    // independently optimized subtree (filters pushed per arm).
+    val required =
+      if (query.unionArms.isEmpty) group(query.patterns, extra = graphDfs ++ subDfs)
+      else query.unionArms.map(group(_)).reduceLeft(_.unionByName(_, allowMissingColumns = true))
+
+    // OPTIONAL groups: each planned as its own BGP, then LEFT-joined to the
+    // accumulated result on the shared variables (SPARQL LeftJoin) — rows
+    // without a match keep the optional variables null. Using-column join
+    // keeps the left side's binding for shared variables, which is exactly
+    // the compatible-mapping semantics. Group-scoped FILTERs restrict the
+    // optional side BEFORE the left join (their variables are bound inside
+    // the group — subset rule), so Catalyst pushes constant equalities into
+    // the group's scans.
     val joined = query.optionals.zipWithIndex.foldLeft(required) {
       case (acc, (optPatterns, g)) =>
-        val optBase = joinGroup(optPatterns.zipWithIndex.map { case (p, i) =>
-          planGroupPattern(store)(p, 1000 * (g + 1) + i)
-        })
-        // group-scoped FILTERs restrict the optional side BEFORE the left
-        // join (their variables are bound inside the group — subset rule),
-        // so Catalyst pushes constant equalities into the group's scans
         val opt = query.optionalFilters.lift(g).getOrElse(Nil)
-          .foldLeft(optBase)(applyFilter)
-        val shared = acc.columns.toSet.intersect(opt.columns.toSet).toSeq.sorted
-        if (shared.isEmpty) acc.join(opt, lit(true), "left")
-        else acc.join(opt, shared, "left")
+          .foldLeft(group(optPatterns))(applyFilter)
+        val on = shared(acc, opt)
+        if (on.isEmpty) acc.join(opt, lit(true), "left")
+        else acc.join(opt, on, "left")
     }
 
     // MINUS (SPARQL negation): solutions compatible with the minus group on
     // the SHARED variables are removed — a left ANTI join. With no shared
     // variable no solution is minus-compatible (SPARQL spec), so the group
     // is a no-op.
-    val afterMinus = query.minuses.zipWithIndex.foldLeft(joined) {
-      case (acc, (mPats, g)) =>
-        val m = joinGroup(mPats.zipWithIndex.map { case (p, i) =>
-          planGroupPattern(store)(p, 500000 * (g + 1) + i)
-        })
-        val shared = acc.columns.toSet.intersect(m.columns.toSet).toSeq.sorted
-        if (shared.isEmpty) acc else acc.join(m, shared, "left_anti")
+    val afterMinus = query.minuses.foldLeft(joined) { (acc, mPats) =>
+      val m = group(mPats)
+      val on = shared(acc, m)
+      if (on.isEmpty) acc else acc.join(m, on, "left_anti")
     }
 
     // Variables bound by a REQUIRED pattern (every arm, for a union) are
@@ -466,20 +429,18 @@ object BgpPlanner {
     // keep the plain equi key (hash semi/anti join); the group side is
     // deduplicated on the shared variables so the null-tolerant probe
     // stays bounded by the distinct binding count.
-    val afterExists = query.existsFilters.zipWithIndex.foldLeft(afterMinus) {
-      case (acc, ((ePats, negated), g)) =>
-        val e = joinGroup(ePats.zipWithIndex.map { case (p, i) =>
-          planGroupPattern(store)(p, 700000 * (g + 1) + i)
-        })
-        val shared = acc.columns.toSet.intersect(e.columns.toSet).toSeq.sorted
+    val afterExists = query.existsFilters.foldLeft(afterMinus) {
+      case (acc, (ePats, negated)) =>
+        val e = group(ePats)
+        val on = shared(acc, e)
         val joinType = if (negated) "left_anti" else "left_semi"
-        if (shared.isEmpty) acc.join(e.limit(1), lit(true), joinType)
-        else if (shared.forall(nonNullVars.contains)) acc.join(e, shared, joinType)
+        if (on.isEmpty) acc.join(e.limit(1), lit(true), joinType)
+        else if (on.forall(nonNullVars.contains)) acc.join(e, on, joinType)
         else {
-          val probe = e.select(shared.map(col): _*).distinct()
-          val renamed = shared.foldLeft(probe)(
+          val probe = e.select(on.map(col): _*).distinct()
+          val renamed = on.foldLeft(probe)(
             (d, v) => d.withColumnRenamed(v, s"__ex_$v"))
-          val cond = shared.map { v =>
+          val cond = on.map { v =>
             if (nonNullVars.contains(v)) col(v) === col(s"__ex_$v")
             else col(v).isNull || col(v) === col(s"__ex_$v")
           }.reduce(_ && _)
@@ -621,12 +582,10 @@ object BgpPlanner {
           // IF: a null condition (error) nulls the whole expression —
           // when() without otherwise-on-null gives exactly that. A
           // numeric-literal condition on an id variable pre-joins its
-          // decoded value (withDecodedVals) so value semantics hold
-          // inside IF exactly as in FILTER.
+          // decoded value (withDecoded) so value semantics hold inside
+          // IF exactly as in FILTER.
           case BindIf(c, t, e) =>
-            val pre =
-              if (needsValueCmp(c)) withDecodedVals(acc, Seq(c.variable))
-              else acc
+            val pre = withDecoded(acc, Seq(c.variable).filter(_ => needsValueCmp(c)))
             pre.withColumn(alias,
                 when(condColumn(pre, c), operand(t))
                   .when(!condColumn(pre, c), operand(e)))
@@ -634,18 +593,12 @@ object BgpPlanner {
         }
     }
 
-    // FILTER conditions: plain Column predicates over the joined variable
-    // columns — Catalyst pushes an equality on a single pattern's variable
-    // down into that pattern's scan (encoded point predicate), so a FILTER
-    // costs the same as writing the constant inside the pattern. An unknown
-    // constant matches nothing: `=` → false, `!=` → true.
-    // Top-level FILTERs evaluate over the merged solution: BOUND/!BOUND on
-    // an OPTIONAL-bound variable are null predicates over the LeftJoin
-    // encoding (!BOUND = negation-as-failure, evaluated streaming above the
-    // join probe); constant equalities on required variables push into the
-    // pattern scans.
-    val filtered = query.filterExprs.foldLeft(
-      query.filters.foldLeft(withBinds)(applyFilter))(applyFilterExpr)
+    // FILTER trees, in source order, over the merged solution (see
+    // applyFilter): BOUND/!BOUND on an OPTIONAL-bound variable are null
+    // predicates over the LeftJoin encoding (!BOUND = negation-as-failure,
+    // evaluated streaming above the join probe); constant equalities on
+    // required variables push into the pattern scans.
+    val filtered = query.filters.foldLeft(withBinds)(applyFilter)
 
     // ASK: boolean existence — LocalLimit(1) stops each partition at the
     // first matching row, the count-over-limit aggregate folds to a single
@@ -690,57 +643,16 @@ object BgpPlanner {
           s"projected variables ${plainVars.mkString(",")} must appear in GROUP BY")
         // HAVING aggregates compute as hidden columns in the SAME hash
         // aggregate (no second pass), filter, then drop
-        val havingCols = query.havings.zipWithIndex.map { case (h, i) =>
-          val c = (h.fn, h.variable) match {
-            case ("COUNT", None) => count(lit(1))
-            case ("COUNT", Some(v)) => count(col(v))
-            case ("SUM", Some(v)) => sum(col(v))
-            case ("MIN", Some(v)) => min(col(v))
-            case ("MAX", Some(v)) => max(col(v))
-            case ("AVG", Some(v)) => avg(col(v))
-            case other => throw new IllegalArgumentException(s"unsupported HAVING aggregate: $other")
-          }
-          c.as(s"__having_$i")
-        }
-        val aggCols = query.countAggs.map { a =>
-          val c = (a.fn, a.variable, a.distinct) match {
-            case ("COUNT", None, _) => count(lit(1))
-            case ("COUNT", Some(v), false) => count(col(v))
-            case ("COUNT", Some(v), true) => countDistinct(col(v))
-            case ("SUM", Some(v), false) => sum(col(v))
-            case ("SUM", Some(v), true) => sum_distinct(col(v))
-            case ("MIN", Some(v), _) => min(col(v))
-            case ("MAX", Some(v), _) => max(col(v))
-            case ("AVG", Some(v), false) => avg(col(v))
-            // SPARQL SAMPLE returns an ARBITRARY value per group; picking
-            // MIN is a valid refinement that makes the result deterministic
-            // across partitionings and engines
-            case ("SAMPLE", Some(v), _) => min(col(v))
-            // GROUP_CONCAT with the default separator; the SPARQL spec
-            // leaves element order undefined — pinned to ascending value
-            // order (array_sort before join) for cross-engine determinism
-            case ("GROUP_CONCAT", Some(v), false) =>
-              array_join(transform(array_sort(collect_list(col(v))),
-                x => x.cast("string")), ",")
-            case other => throw new IllegalArgumentException(s"unsupported aggregate: $other")
-          }
-          c.as(a.alias)
-        } ++ havingCols
+        val aggCols = query.countAggs.map(a =>
+          aggregate(a.fn, a.variable, a.distinct).as(a.alias)) ++
+          query.havings.zipWithIndex.map { case (h, i) =>
+            aggregate(h.fn, h.variable, distinct = false).as(s"__having_$i") }
         val grouped =
           if (query.groupByVars.isEmpty) filtered.agg(aggCols.head, aggCols.tail: _*)
           else filtered.groupBy(query.groupByVars.map(col): _*)
             .agg(aggCols.head, aggCols.tail: _*)
         val kept = query.havings.zipWithIndex.foldLeft(grouped) {
-          case (df, (h, i)) =>
-            val c = col(s"__having_$i")
-            df.filter(h.op match {
-              case "<" => c < h.value
-              case "<=" => c <= h.value
-              case ">" => c > h.value
-              case ">=" => c >= h.value
-              case "=" => c === h.value
-              case "!=" => c =!= h.value
-            })
+          case (df, (h, i)) => df.filter(compare(h.op, col(s"__having_$i"), lit(h.value)))
         }
         kept.drop(query.havings.indices.map(i => s"__having_$i"): _*)
       }
@@ -772,37 +684,20 @@ object BgpPlanner {
     // model, as in FILTER), so it sorts among the numerics by its own
     // value; BIND-arithmetic variables are already plain numbers and sort
     // directly. Each ordering variable costs ONE left join against the
-    // vocabulary (broadcast-sized) before the sort — the same shape as
-    // withDecodedVals — and the helper columns drop right after, so with a
+    // vocabulary (broadcast-sized) before the sort — withDecoded, the same
+    // join FILTER uses — and the helper columns drop right after, so with a
     // LIMIT the plan is still join → TakeOrderedAndProject.
     // Variables that hold PLAIN NUMBERS, not encoded ids: BIND arithmetic
     // AND aggregate aliases (a COUNT/SUM value must never round-trip the
     // dictionary — a count that numerically collides with a real id would
     // "decode" to that id's term and sort lexically). They sort directly.
     val directSortVars: Set[String] = arithVars ++ query.countAggs.map(_.alias)
-    def lexCol(v: String): String = s"__olex_$v"
-    def withDecodedSortKeys(df: DataFrame, vars: Seq[String]): DataFrame =
-      vars.distinct.filterNot(directSortVars.contains)
-        .filterNot(v => df.columns.contains(valCol(v)))
-        .foldLeft(df) { (acc, v) =>
-          val idC = s"__oid_$v"
-          val vocab = dict.entries.toDF(idC, lexCol(v))
-            .withColumn(s"__onum_$v", expr(s"try_cast(${lexCol(v)} AS DOUBLE)"))
-          acc.join(vocab, acc(v) === col(idC), "left")
-            .withColumn(valCol(v),
-              when(col(idC).isNull, col(v).cast("double"))
-                .otherwise(col(s"__onum_$v")))
-            // a numeric term sorts by value, never lexically ("9" < "10")
-            .withColumn(lexCol(v),
-              when(col(valCol(v)).isNotNull, lit(null).cast("string"))
-                .otherwise(col(lexCol(v))))
-            .drop(idC, s"__onum_$v")
-        }
     val ordered =
       if (query.orderBy.isEmpty) modified
       else {
         val sortVars = query.orderBy.map(_._1)
-        val pre = withDecodedSortKeys(modified, sortVars)
+        val pre = withDecoded(modified, sortVars.filterNot(directSortVars.contains),
+          sortKeys = true)
         val keys = query.orderBy.flatMap { case (v, asc) =>
           val ks: Seq[Column] =
             if (directSortVars.contains(v)) Seq(col(v))
@@ -819,6 +714,41 @@ object BgpPlanner {
     val offsetted = query.offset.fold(ordered)(ordered.offset)
     query.limit.fold(offsetted)(offsetted.limit)
   }
+
+  /** `l op r` for the six comparison ops (FILTER, STRLEN and HAVING). */
+  private def compare(op: FilterOp, l: Column, r: Column): Column = op match {
+    case FilterEq => l === r
+    case FilterNeq => !(l === r)
+    case FilterLt => l < r
+    case FilterLe => l <= r
+    case FilterGt => l > r
+    case FilterGe => l >= r
+    case other => throw new IllegalStateException(s"not a comparison: $other")
+  }
+
+  /** An aggregate of the projection or of HAVING as its Column. */
+  private def aggregate(fn: String, v: Option[String], distinct: Boolean): Column =
+    (fn, v, distinct) match {
+      case ("COUNT", None, _) => count(lit(1))
+      case ("COUNT", Some(v), false) => count(col(v))
+      case ("COUNT", Some(v), true) => countDistinct(col(v))
+      case ("SUM", Some(v), false) => sum(col(v))
+      case ("SUM", Some(v), true) => sum_distinct(col(v))
+      case ("MIN", Some(v), _) => min(col(v))
+      case ("MAX", Some(v), _) => max(col(v))
+      case ("AVG", Some(v), false) => avg(col(v))
+      // SPARQL SAMPLE returns an ARBITRARY value per group; picking MIN is
+      // a valid refinement that makes the result deterministic across
+      // partitionings and engines
+      case ("SAMPLE", Some(v), _) => min(col(v))
+      // GROUP_CONCAT with the default separator; the SPARQL spec leaves
+      // element order undefined — pinned to ascending value order
+      // (array_sort before join) for cross-engine determinism
+      case ("GROUP_CONCAT", Some(v), false) =>
+        array_join(transform(array_sort(collect_list(col(v))),
+          x => x.cast("string")), ",")
+      case other => throw new IllegalArgumentException(s"unsupported aggregate: $other")
+    }
 
   /** A property-path pattern `s path o` → its solutions, DISTINCT
     * endpoints (SPARQL's path semantics), over `triples` (both sign tables:

@@ -128,10 +128,17 @@ final case class FilterCond(variable: String, op: FilterOp, value: Term,
 
 /** A FILTER condition tree: leaves are [[FilterCond]] atoms combined with
   * `&&` / `||` (SPARQL ConditionalAndExpression / ConditionalOrExpression;
-  * `&&` binds tighter, no parenthesized grouping in the subset). Single-atom
-  * filters stay plain [[FilterCond]]s in `BgpQuery.filters`.
+  * `&&` binds tighter, no parenthesized grouping in the subset). A
+  * single-atom filter is one [[FilterLeaf]].
   */
-sealed trait FilterExpr
+sealed trait FilterExpr {
+  /** The atoms of the tree, left to right. */
+  def leaves: Seq[FilterCond] = this match {
+    case FilterLeaf(c) => Seq(c)
+    case FilterAnd(l, r) => l.leaves ++ r.leaves
+    case FilterOr(l, r) => l.leaves ++ r.leaves
+  }
+}
 final case class FilterLeaf(cond: FilterCond) extends FilterExpr
 final case class FilterAnd(l: FilterExpr, r: FilterExpr) extends FilterExpr
 final case class FilterOr(l: FilterExpr, r: FilterExpr) extends FilterExpr
@@ -157,14 +164,6 @@ final case class BindCoalesce(terms: Seq[Term]) extends BindExpr
   */
 final case class BindIf(cond: FilterCond, thenT: Term, elseT: Term) extends BindExpr
 
-/** A basic graph pattern plus the query's projection (Nil = `*`), OPTIONAL
-  * pattern groups (each left-joined to the required patterns on shared
-  * variables, unmatched rows binding their variables to null), FILTER
-  * conditions, solution modifiers (ORDER BY / OFFSET / LIMIT / DISTINCT),
-  * and — mutually exclusive with `patterns` — top-level UNION arms
-  * (`{ bgp } UNION { bgp } ...`, bag semantics, variables not bound by an
-  * arm come out null).
-  */
 /** A SPARQL 1.1 aggregate in the projection:
   * `(COUNT([DISTINCT] ?v | *) AS ?alias)`, `(SUM([DISTINCT] ?v) AS ?alias)`,
   * `(MIN(?v) AS ?alias)`, `(MAX(?v) AS ?alias)`.
@@ -172,14 +171,25 @@ final case class BindIf(cond: FilterCond, thenT: Term, elseT: Term) extends Bind
 final case class CountAgg(variable: Option[String], distinct: Boolean,
     alias: String, fn: String = "COUNT")
 
-/** `HAVING (AGG(?v | *) op n)` — a post-aggregation group filter. */
-final case class HavingCond(fn: String, variable: Option[String], op: String,
+/** `HAVING (AGG(?v | *) op n)` — a post-aggregation group filter; `op` is
+  * one of the six comparisons.
+  */
+final case class HavingCond(fn: String, variable: Option[String], op: FilterOp,
     value: Long)
 
+/** A basic graph pattern plus the query's projection (Nil = `*`), OPTIONAL
+  * pattern groups (each left-joined to the required patterns on shared
+  * variables, unmatched rows binding their variables to null), FILTER
+  * condition trees (one per FILTER clause, applied in source order),
+  * solution modifiers (ORDER BY / OFFSET / LIMIT / DISTINCT), and —
+  * mutually exclusive with `patterns` — top-level UNION arms
+  * (`{ bgp } UNION { bgp } ...`, bag semantics, variables not bound by an
+  * arm come out null).
+  */
 final case class BgpQuery(
     projection: Seq[String],
     patterns: Seq[TriplePattern],
-    filters: Seq[FilterCond] = Nil,
+    filters: Seq[FilterExpr] = Nil,
     limit: Option[Int] = None,
     optionals: Seq[Seq[TriplePattern]] = Nil,
     distinct: Boolean = false,
@@ -189,7 +199,7 @@ final case class BgpQuery(
     groupByVars: Seq[String] = Nil,
     countAggs: Seq[CountAgg] = Nil,
     havings: Seq[HavingCond] = Nil,
-    optionalFilters: Seq[Seq[FilterCond]] = Nil, // aligned with `optionals`
+    optionalFilters: Seq[Seq[FilterExpr]] = Nil, // aligned with `optionals`
     binds: Seq[(BindExpr, String)] = Nil, // BIND(term|?var [op term] AS ?alias)
     // FILTER [NOT] EXISTS { bgp } groups: (patterns, negated)
     existsFilters: Seq[(Seq[TriplePattern], Boolean)] = Nil,
@@ -202,9 +212,6 @@ final case class BgpQuery(
     // unextended for that row)
     inlineValuesMulti: Seq[(Seq[String], Seq[Seq[Option[Constant]]])] = Nil,
     minuses: Seq[Seq[TriplePattern]] = Nil,
-    // compound FILTER condition trees (&&/||); single-atom filters stay in
-    // `filters`
-    filterExprs: Seq[FilterExpr] = Nil,
     // `{ SELECT … WHERE { … } … }` group graph patterns, parsed recursively;
     // each joins the enclosing solutions on its shared projected variables
     subqueries: Seq[BgpQuery] = Nil,
@@ -301,30 +308,20 @@ object SparqlParser {
         return BgpQuery(Nil, patterns, constructTemplate = tmpl)
       case _ =>
     }
-    // Trailing ValuesClause (the SPARQL-standard position, after the
-    // solution modifiers): strip it first — the greedy body regex below
-    // would otherwise swallow its braces.
+    // Trailing ValuesClauses (the SPARQL-standard position, after the
+    // solution modifiers): strip them first, last to first — the greedy
+    // body regex below would otherwise swallow their braces.
     var work = normalized
-    val trailingValues = scala.collection.mutable.ListBuffer.empty[(String, Seq[Constant])]
-    val trailingRe = "(?i)VALUES\\s+\\?(\\w+)\\s*\\{([^{}]*)\\}\\s*$".r
-    val trailingMultiRe = "(?i)VALUES\\s*\\(([^()]*)\\)\\s*\\{([^{}]*)\\}\\s*$".r
-    val trailingValuesMulti =
-      scala.collection.mutable.ListBuffer.empty[(Seq[String], Seq[Seq[Option[Constant]]])]
+    val trailing = scala.collection.mutable.ListBuffer.empty[ValuesBlock]
+    val trailingRe = (valuesBlock + "\\s*$").r
     var more = true
-    while (more) {
-      (trailingRe.findFirstMatchIn(work), trailingMultiRe.findFirstMatchIn(work)) match {
-        case (Some(m), _) =>
-          val terms = tokenize(m.group(2).trim).toSeq.map(toTerm)
-          require(terms.nonEmpty && terms.forall(_.isInstanceOf[Constant]),
-            s"VALUES terms must be constants: ${m.group(2)}")
-          (m.group(1) -> terms.map(_.asInstanceOf[Constant])) +=: trailingValues
-          work = work.substring(0, m.start).trim
-        case (None, Some(m)) =>
-          parseValuesRows(m.group(1), m.group(2)) +=: trailingValuesMulti
-          work = work.substring(0, m.start).trim
-        case _ => more = false
-      }
+    while (more) trailingRe.findFirstMatchIn(work) match {
+      case Some(m) =>
+        parseValues(m) +=: trailing
+        work = work.substring(0, m.start).trim
+      case None => more = false
     }
+    val (trailingValues, trailingValuesMulti) = trailing.toList.partitionMap(identity)
     // body = up to the LAST closing brace (greedy — union arms contain
     // braces); tail = the solution-modifier clauses after it
     val re = "(?is)SELECT\\s+(.*?)\\s+WHERE\\s*\\{(.*)\\}(.*)".r
@@ -351,12 +348,12 @@ object SparqlParser {
           return BgpQuery(projection, Nil, Nil, limit, Nil, distinct,
             unionArms = arms, orderBy = orderBy, offset = offset,
             groupByVars = groupByVars, countAggs = countAggs,
-            havings = havings, inlineValues = trailingValues.toList,
+            havings = havings, inlineValues = trailingValues,
             // multi-variable trailing VALUES restrict a union exactly like
             // the single-variable form (the planner's withValuesMulti path
             // is union-aware) — dropping them here would silently return
             // the unrestricted union
-            inlineValuesMulti = trailingValuesMulti.toList)
+            inlineValuesMulti = trailingValuesMulti)
         }
         // Subqueries `{ SELECT … WHERE { … } … }` (SPARQL 1.1 SubSelect as a
         // GroupGraphPattern): extracted before every one-level group regex
@@ -367,21 +364,10 @@ object SparqlParser {
         val subqueries = subqRe.findAllMatchIn(rawBody).map(m => parse(m.group(1).trim)).toSeq
         val withoutSubq = subqRe.replaceAllIn(rawBody, " ")
         // VALUES blocks first (their braces hold constants, not patterns).
-        // Multi-variable form: `VALUES (?a ?b) { ('x' 'y') ... }` — rows of
-        // parenthesized tuples, one constant per variable.
-        val valuesMultiRe = "(?i)VALUES\\s*\\(([^()]*)\\)\\s*\\{([^{}]*)\\}".r
-        val inlineValuesMulti = valuesMultiRe.findAllMatchIn(withoutSubq)
-          .map(m => parseValuesRows(m.group(1), m.group(2))).toSeq
-        val withoutMultiValues = valuesMultiRe.replaceAllIn(withoutSubq, " ")
-        // Single-variable inline bindings per SPARQL 1.1 ValuesClause.
-        val valuesRe = "(?i)VALUES\\s+\\?(\\w+)\\s*\\{([^{}]*)\\}".r
-        val inlineValues = valuesRe.findAllMatchIn(withoutMultiValues).map { m =>
-          val terms = tokenize(m.group(2).trim).toSeq.map(toTerm)
-          require(terms.nonEmpty && terms.forall(_.isInstanceOf[Constant]),
-            s"VALUES terms must be constants: ${m.group(2)}")
-          m.group(1) -> terms.map(_.asInstanceOf[Constant])
-        }.toSeq
-        val withoutValues = valuesRe.replaceAllIn(withoutMultiValues, " ")
+        val valuesRe = valuesBlock.r
+        val (inlineValues, inlineValuesMulti) =
+          valuesRe.findAllMatchIn(withoutSubq).map(parseValues).toList.partitionMap(identity)
+        val withoutValues = valuesRe.replaceAllIn(withoutSubq, " ")
         // GRAPH groups (SPARQL named graphs): `GRAPH <term|?var> { bgp }` —
         // the term/variable names the graph, the patterns scope to it. Same
         // one-level brace shape as OPTIONAL/MINUS.
@@ -422,13 +408,7 @@ object SparqlParser {
         val optionalRe = "(?i)OPTIONAL\\s*\\{([^{}]*)\\}".r
         val optParsed = optionalRe.findAllMatchIn(withoutMinus).map { m =>
           val body = m.group(1)
-          val fs = filterRe.findAllMatchIn(body).map { c =>
-            parseFilterExpr(c.group(1)) match {
-              case FilterLeaf(fc) => fc
-              case _ => throw new IllegalArgumentException(
-                "compound FILTER (&&/||) is not supported inside OPTIONAL")
-            }
-          }.toSeq
+          val fs = filterRe.findAllMatchIn(body).map(c => parseFilterExpr(c.group(1))).toSeq
           (splitPatterns(filterRe.replaceAllIn(body, " "), fresh), fs)
         }.toSeq
         val optionals = optParsed.map(_._1)
@@ -488,12 +468,9 @@ object SparqlParser {
         }
         val withoutBind = bindRe.replaceAllIn(withoutIf, " ")
         // FILTER clauses: extract (they need no dot separator in SPARQL),
-        // then parse the remaining segments as triple patterns. Single-atom
-        // conditions stay plain FilterConds; &&/|| trees go to filterExprs.
-        val parsedFilters =
+        // then parse the remaining segments as triple patterns
+        val filters =
           filterRe.findAllMatchIn(withoutBind).map(m => parseFilterExpr(m.group(1))).toSeq
-        val filters = parsedFilters.collect { case FilterLeaf(c) => c }
-        val filterExprs = parsedFilters.filterNot(_.isInstanceOf[FilterLeaf])
         val body = filterRe.replaceAllIn(withoutBind, " ")
         val patterns = splitPatterns(body, fresh)
         require(patterns.nonEmpty || subqueries.nonEmpty || graphGroups.nonEmpty,
@@ -505,7 +482,7 @@ object SparqlParser {
           inlineValues = inlineValues ++ trailingValues,
           inlineValuesMulti = inlineValuesMulti ++ trailingValuesMulti,
           minuses = minuses, binds = binds, existsFilters = existsFilters,
-          filterExprs = filterExprs, subqueries = subqueries,
+          subqueries = subqueries,
           graphGroups = graphGroups)
       case _ => throw new IllegalArgumentException(s"unsupported SPARQL: $query")
     }
@@ -559,15 +536,15 @@ object SparqlParser {
     // integer literal (the SPARQL HavingClause restricted to the subset's
     // aggregate grammar)
     val havingRe = ("(?i)HAVING((?:\\s*\\(\\s*(?:COUNT|SUM|MIN|MAX|AVG)\\s*\\(\\s*" +
-      "(?:\\*|\\?\\w+)\\s*\\)\\s*(?:<=|>=|!=|=|<|>)\\s*-?\\d+\\s*\\))+)").r
+      s"(?:\\*|\\?\\w+)\\s*\\)\\s*(?:$comparisonRe)\\s*-?\\d+\\s*\\))+)").r
     val condRe = ("(?i)\\(\\s*(COUNT|SUM|MIN|MAX|AVG)\\s*\\(\\s*" +
-      "(\\*|\\?\\w+)\\s*\\)\\s*(<=|>=|!=|=|<|>)\\s*(-?\\d+)\\s*\\)").r
+      s"(\\*|\\?\\w+)\\s*\\)\\s*($comparisonRe)\\s*(-?\\d+)\\s*\\)").r
     val havings = havingRe.findFirstMatchIn(afterGroupBy).map { m =>
       condRe.findAllMatchIn(m.group(1)).map { c =>
         val v = if (c.group(2) == "*") None else Some(c.group(2).substring(1))
         require(v.isDefined || c.group(1).equalsIgnoreCase("COUNT"),
           s"${c.group(1)}(*) is not valid SPARQL")
-        HavingCond(c.group(1).toUpperCase, v, c.group(3), c.group(4).toLong)
+        HavingCond(c.group(1).toUpperCase, v, comparison(c.group(3)), c.group(4).toLong)
       }.toSeq
     }.getOrElse(Nil)
     val afterGroup = havingRe.replaceAllIn(afterGroupBy, " ")
@@ -598,11 +575,31 @@ object SparqlParser {
       .map(_.trim).filter(s => s.nonEmpty && s != ".").toSeq
       .flatMap(t => expandPattern(t, fresh))
 
-  /** Parse a multi-variable VALUES block: `(?a ?b)` vars + `('x' 'y') ...`
-    * rows. Variables must be distinct (SPARQL DataBlock grammar); every row
-    * carries one constant per variable.
+  /** One SPARQL 1.1 ValuesClause, single-variable (`VALUES ?v { 'x' … }`)
+    * or multi-variable (`VALUES (?a ?b) { ('x' 'y') … }`, rows of
+    * parenthesized tuples, one constant or UNDEF per variable).
     */
-  private def parseValuesRows(varText: String, rowText: String): (Seq[String], Seq[Seq[Option[Constant]]]) = {
+  private type ValuesBlock =
+    Either[(String, Seq[Constant]), (Seq[String], Seq[Seq[Option[Constant]]])]
+  private val valuesBlock =
+    "(?i)VALUES(?:\\s+\\?(\\w+)|\\s*\\(([^()]*)\\))\\s*\\{([^{}]*)\\}"
+
+  /** Parse one [[valuesBlock]] match. Variables must be distinct (SPARQL
+    * DataBlock grammar); every row carries one term per variable, and every
+    * term is a constant (or, in a multi-variable row, UNDEF).
+    */
+  private def parseValues(m: scala.util.matching.Regex.Match): ValuesBlock = {
+    def constant(t: String, text: String): Constant = toTerm(t) match {
+      case c: Constant => c
+      case _ => throw new IllegalArgumentException(s"VALUES terms must be constants: $text")
+    }
+    val rowText = m.group(3)
+    if (m.group(1) != null) {
+      val terms = tokenize(rowText.trim).toSeq
+      require(terms.nonEmpty, s"VALUES terms must be constants: $rowText")
+      return Left(m.group(1) -> terms.map(constant(_, rowText)))
+    }
+    val varText = m.group(2)
     val vars = "\\?(\\w+)".r.findAllMatchIn(varText).map(_.group(1)).toSeq
     require(vars.nonEmpty, s"VALUES needs variables: $varText")
     require(vars.distinct.size == vars.size,
@@ -610,18 +607,14 @@ object SparqlParser {
     val rows = "\\(([^()]*)\\)".r.findAllMatchIn(rowText).map { r =>
       val terms = tokenize(r.group(1).trim).toSeq.map {
         case u if u.equalsIgnoreCase("UNDEF") => None // per-row wildcard
-        case t => toTerm(t) match {
-          case c: Constant => Some(c)
-          case _ => throw new IllegalArgumentException(
-            s"VALUES row terms must be constants or UNDEF: ${r.group(1)}")
-        }
+        case t => Some(constant(t, r.group(1)))
       }
       require(terms.length == vars.length,
         s"VALUES row needs ${vars.length} terms: ${r.group(1)}")
       terms
     }.toSeq
     require(rows.nonEmpty, s"VALUES needs at least one row: $rowText")
-    vars -> rows
+    Right(vars -> rows)
   }
 
   /** One pattern text → its plain patterns, or one pattern whose predicate
@@ -797,8 +790,21 @@ object SparqlParser {
     FilterLeaf(parseFilter(cond))
   }
 
+  /** The six comparison tokens, longest first, as a regex alternation. */
+  private val comparisonRe = "!=|<=|>=|=|<|>"
+
+  /** A comparison token (FILTER, STRLEN and HAVING alike) as its op. */
+  private def comparison(token: String): FilterOp = token match {
+    case "=" => FilterEq
+    case "!=" => FilterNeq
+    case "<" => FilterLt
+    case "<=" => FilterLe
+    case ">" => FilterGt
+    case ">=" => FilterGe
+  }
+
   private def parseFilter(cond: String): FilterCond = {
-    val condRe = "\\?(\\w+)\\s*(!=|<=|>=|=|<|>)\\s*(.+)".r
+    val condRe = s"\\?(\\w+)\\s*($comparisonRe)\\s*(.+)".r
     val boundRe = "(?i)(!)?\\s*BOUND\\s*\\(\\s*\\?(\\w+)\\s*\\)".r
     // SPARQL regex strings are double-quoted; the subset's lexical forms are
     // single-quoted — accept either
@@ -814,7 +820,7 @@ object SparqlParser {
     val strFnRe = ("(?i)(!)?\\s*(STRSTARTS|STRENDS|CONTAINS)\\s*\\(\\s*" +
       "(?:STR\\s*\\(\\s*)?\\?(\\w+)\\s*\\)?\\s*,\\s*['\"]([^'\"]*)['\"]\\s*\\)").r
     val strLenRe = ("(?i)STRLEN\\s*\\(\\s*(?:STR\\s*\\(\\s*)?\\?(\\w+)" +
-      "\\s*\\)?\\s*\\)\\s*(!=|<=|>=|=|<|>)\\s*(\\d+)").r
+      s"\\s*\\)?\\s*\\)\\s*($comparisonRe)\\s*(\\d+)").r
     cond.trim match {
       case strFnRe(neg, fn, v, arg) =>
         val op = (fn.toUpperCase, neg == null) match {
@@ -827,16 +833,7 @@ object SparqlParser {
           case other => throw new IllegalStateException(s"unreachable: $other")
         }
         FilterCond(v, op, Constant(arg))
-      case strLenRe(v, op, n) =>
-        val cmp = op match {
-          case "=" => FilterEq
-          case "!=" => FilterNeq
-          case "<" => FilterLt
-          case "<=" => FilterLe
-          case ">" => FilterGt
-          case ">=" => FilterGe
-        }
-        FilterCond(v, FilterStrLen(cmp), Constant(n))
+      case strLenRe(v, op, n) => FilterCond(v, FilterStrLen(comparison(op)), Constant(n))
       case inRe(v, neg, listText) =>
         val terms = listText.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(toTerm)
         require(terms.nonEmpty, s"IN needs at least one term: $listText")
@@ -850,16 +847,7 @@ object SparqlParser {
         // the pattern is NOT a dictionary term — carried raw in the value
         FilterCond(v, if (neg == null) FilterRegex else FilterNotRegex,
           Constant(pattern))
-      case condRe(v, op, rhs) =>
-        val fop = op match {
-          case "=" => FilterEq
-          case "!=" => FilterNeq
-          case "<" => FilterLt
-          case "<=" => FilterLe
-          case ">" => FilterGt
-          case ">=" => FilterGe
-        }
-        FilterCond(v, fop, toTerm(rhs.trim))
+      case condRe(v, op, rhs) => FilterCond(v, comparison(op), toTerm(rhs.trim))
       case other => throw new IllegalArgumentException(
         "unsupported FILTER condition (subset is ?var =|!=|<|<=|>|>= term, " +
           "?var [NOT] IN (terms), [!]BOUND(?var), [!]regex(?var, 'pattern'), " +

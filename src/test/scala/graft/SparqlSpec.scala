@@ -292,8 +292,8 @@ class SparqlSpec extends SparkTestBase {
       "SELECT ?x ?y WHERE { ?x :p1 ?y . FILTER(?y = 'lit val') . ?y :p2 ?z . FILTER(?z != ?x) } LIMIT 7")
     assert(q.patterns.length == 2)
     assert(q.filters == Seq(
-      FilterCond("y", FilterEq, Constant("lit val")),
-      FilterCond("z", FilterNeq, Variable("x"))))
+      FilterLeaf(FilterCond("y", FilterEq, Constant("lit val"))),
+      FilterLeaf(FilterCond("z", FilterNeq, Variable("x")))))
     assert(q.limit.contains(7))
   }
 
@@ -307,7 +307,7 @@ class SparqlSpec extends SparkTestBase {
       SparqlParser.parse("SELECT ?x WHERE { ?x :p1 ?y . FILTER(isIRI(?y)) }"))
     // comparisons are supported since round 4 — they must parse
     assert(SparqlParser.parse("SELECT ?x WHERE { ?x :p1 ?y . FILTER(?y > 3) }")
-      .filters.head.op == FilterGt)
+      .filters.head.leaves.map(_.op) == Seq(FilterGt))
   }
 
   test("FILTER equality on constant narrows the BGP result") {
@@ -345,7 +345,7 @@ class SparqlSpec extends SparkTestBase {
     assert(q.patterns.length == 1)
     assert(q.optionals == Seq(Seq(
       TriplePattern(Variable("o"), Constant(":p3"), Variable("z")))))
-    assert(q.filters == Seq(FilterCond("s", FilterNeq, Constant("e"))))
+    assert(q.filters == Seq(FilterLeaf(FilterCond("s", FilterNeq, Constant("e")))))
   }
 
   test("OPTIONAL binds when matched, nulls when not (SPARQL LeftJoin)") {
@@ -1098,23 +1098,37 @@ class SparqlSpec extends SparkTestBase {
     // range conjunction ANDed into one pushable predicate
     assert(reg.sparql("SELECT ?o WHERE { ?s :p1 ?o . " +
       "FILTER(?o >= 'b' && ?o < 'f') }").collect().map(_.getInt(0)).toSeq == Seq(10))
-    // compound filters are rejected inside OPTIONAL (subset rule, loud)
-    intercept[IllegalArgumentException](SparqlParser.parse(
-      "SELECT ?s WHERE { ?s :p1 ?o . OPTIONAL { ?o :p2 ?x . FILTER(?x = 'g' && ?x != 'c') } }"))
+    // a compound filter inside OPTIONAL scopes to its group as one tree
+    assert(SparqlParser.parse(
+      "SELECT ?s WHERE { ?s :p1 ?o . OPTIONAL { ?o :p2 ?x . FILTER(?x = 'g' && ?x != 'c') } }")
+      .optionalFilters == Seq(Seq(FilterAnd(FilterLeaf(FilterCond("x", FilterEq, Constant("g"))),
+        FilterLeaf(FilterCond("x", FilterNeq, Constant("c")))))))
+  }
+
+  test("OPTIONAL with a compound FILTER restricts the optional side on both layouts") {
+    val (engine, triples) = fixture
+    // :p1 binds (a, b) and (e, f); :p2 from b reaches c, from f reaches g.
+    // The group keeps x = c only ('zzz' is absent), so e's row pads null.
+    val q = "SELECT ?s ?x WHERE { ?s :p1 ?o . " +
+      "OPTIONAL { ?o :p2 ?x . FILTER(?x = 'c' || ?x = 'zzz') } }"
+    Seq(engine.registerSingleTable(triples), engine.registerSplitTables(triples)).foreach { reg =>
+      val rows = reg.sparql(q).collect()
+        .map(r => (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getInt(1)))).toSet
+      assert(rows == Set((-5, Some(-7)), (6, None)))
+    }
   }
 
   test("FILTER parsing: quoted operators and parens do not split conditions") {
     // '||' inside a quoted lexical form must NOT split the disjunction
     val q = SparqlParser.parse(
       "SELECT ?x WHERE { ?x :p1 ?y . FILTER(?y = 'a || b' || ?y = 'c') }")
-    assert(q.filterExprs.length == 1)
-    val FilterOr(FilterLeaf(l), FilterLeaf(r)) = q.filterExprs.head: @unchecked
+    assert(q.filters.length == 1)
+    val FilterOr(FilterLeaf(l), FilterLeaf(r)) = q.filters.head: @unchecked
     assert(l.value == Constant("a || b") && r.value == Constant("c"))
     // '&&' inside a regex pattern stays part of the pattern
     val q2 = SparqlParser.parse(
       "SELECT ?x WHERE { ?x :p1 ?y . FILTER(regex(?y, 'a&&b')) }")
-    assert(q2.filters.head.op == FilterRegex &&
-      q2.filters.head.value == Constant("a&&b"))
+    assert(q2.filters == Seq(FilterLeaf(FilterCond("y", FilterRegex, Constant("a&&b")))))
   }
 
   test("FILTER regex matches the DECODED lexical form via dictionary join") {
