@@ -178,8 +178,9 @@ object BgpPlanner {
     // literal on an id-valued variable → DECODED-VALUE comparison (the
     // caller pre-joins `__val_<var>`); bare numeric literal on a
     // BIND-arithmetic variable → plain numeric comparison; unknown
-    // non-numeric term → SPARQL expression error: `!=` keeps the row
-    // (true), every other op drops it (false).
+    // non-numeric term → equal to no value: `!=` keeps the rows whose
+    // variable is bound (an unbound one is an expression error, as in
+    // FilterNotIn), every other op drops every row.
     def condColumn(df: DataFrame, f: FilterCond): Column = {
       require(df.columns.contains(f.variable),
         s"FILTER variable ?${f.variable} not bound " +
@@ -234,7 +235,7 @@ object BgpPlanner {
               }
           }
           sides match {
-            case None => if (cmp == FilterNeq) lit(true) else lit(false)
+            case None => if (cmp == FilterNeq) col(f.variable).isNotNull else lit(false)
             case Some((x, r)) => compare(cmp, x, r)
           }
       }

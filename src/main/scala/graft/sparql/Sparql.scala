@@ -1,12 +1,34 @@
 package graft.sparql
 
-/** Minimal SPARQL-subset AST.
+/** The SPARQL subset: its AST and its hand-written parser.
   *
-  * The reference parses with Jena (`/root/reference/src/main/java/com/github/nkoutroumanis/MyOpVisitorBase.java:48-52`)
-  * but only ever consumes basic graph patterns; Jena is unavailable offline,
-  * so the subset grammar — `SELECT <vars|*> WHERE { s p o . s p o . ... }` —
-  * is parsed by hand. Terms: `?var`, `'literal'` (quoted, may be
-  * `:`-prefixed), `<uri>` / `<a>` (angle-bracketed), or a bare prefixed name.
+  * The reference parses with Jena (`MyOpVisitorBase.java:48-52`) but only
+  * ever consumes basic graph patterns; Jena is unavailable offline,
+  * so the subset is parsed by hand, in two layers. [[Scan]] is the lexical
+  * layer: quoted literals (`'…'`, `"…"`) and `<…>` IRIs are opaque, so text
+  * inside them is never syntax and keeps its whitespace; whitespace runs
+  * collapse outside them; `{}` and `()` nest. [[SparqlParser]] reads the
+  * scanned items by this grammar (keywords in any case):
+  * {{{
+  * query    ::= prefix* ( SELECT [DISTINCT|REDUCED] proj WHERE where modifiers values*
+  *                      | ASK bgp | CONSTRUCT WHERE bgp | CONSTRUCT bgp WHERE bgp
+  *                      | DESCRIBE ?v WHERE bgp | DESCRIBE term )
+  * prefix   ::= PREFIX ns: <iri>
+  * where    ::= '{' (bgp (UNION bgp)+ | element*) '}'
+  * element  ::= triple ['.'] | OPTIONAL optional | MINUS bgp | GRAPH term bgp
+  *            | FILTER [NOT] EXISTS bgp | FILTER '(' [NOT] EXISTS bgp ')'
+  *            | FILTER '(' cond ')' | BIND '(' expr AS ?v ')' | values
+  *            | '{' SELECT proj WHERE where modifiers values* '}'
+  * optional ::= '{' (triple ['.'] | FILTER '(' cond ')')* '}'
+  * bgp      ::= '{' triple ('.' triple)* '}'
+  * values   ::= VALUES ?v '{' term* '}' | VALUES '(' ?v* ')' '{' ('(' term* ')')* '}'
+  * }}}
+  * So the WHERE group nests one level: OPTIONAL, MINUS, GRAPH, EXISTS and
+  * UNION arms hold triple patterns (OPTIONAL also FILTERs), a sub-SELECT a
+  * whole WHERE group. Any other nesting, such as OPTIONAL inside OPTIONAL
+  * or UNION beside patterns, fails naming the construct. Terms: `?var`,
+  * `'literal'` (may be `:`-prefixed), `<uri>` (reduced to its last
+  * segment), or a bare prefixed name; a predicate may be a property path.
   */
 sealed trait Term
 final case class Variable(name: String) extends Term
@@ -223,7 +245,123 @@ final case class BgpQuery(
     // the resources; the result is every triple mentioning any of them.
     describeWhere: Option[BgpQuery] = None)
 
+/** The lexical layer of the subset, and the only code that knows its rule:
+  * a `'…'` or `"…"` literal and a `<…>` IRI (no whitespace inside) are
+  * opaque, whitespace runs collapse to one space outside them, and `{}` and
+  * `()` nest. One left-to-right walk turns a text into its depth-0 items.
+  */
+private[sparql] object Scan {
+  sealed trait Item {
+    /** The item's text, whitespace collapsed outside literals and IRIs. */
+    def text: String
+    /** No whitespace separates this item from the one before it. */
+    def glued: Boolean
+  }
+  /** A run without whitespace or brackets; `opaque` for one literal or
+    * IRI. `||` and `&&` are atoms of their own. */
+  final case class Atom(text: String, opaque: Boolean, glued: Boolean) extends Item
+  /** A bracket pair and the items inside it. */
+  final case class Group(open: Char, items: List[Item], glued: Boolean) extends Item {
+    def text: String = s"$open${render(items)}${if (open == '{') '}' else ')'}"
+  }
+
+  /** A plain atom, upper-cased, so that keywords match in any case. */
+  object Word {
+    def unapply(i: Item): Option[String] = i match {
+      case Atom(t, false, _) => Some(t.toUpperCase)
+      case _ => None
+    }
+  }
+  /** The items inside a `{}` group ([[Braces]]) or a `()` one ([[Parens]]). */
+  final class Brackets(open: Char) {
+    def unapply(i: Item): Option[List[Item]] = i match {
+      case Group(`open`, items, _) => Some(items)
+      case _ => None
+    }
+  }
+  val Braces = new Brackets('{')
+  val Parens = new Brackets('(')
+
+  def render(items: Seq[Item]): String =
+    items.zipWithIndex.map { case (it, k) => if (k == 0 || it.glued) it.text else " " + it.text }.mkString
+
+  /** Each maximal run of glued items, rendered: the terms of a pattern. */
+  def terms(items: Seq[Item]): Seq[String] =
+    items.foldLeft(Vector.empty[String]) { (ts, it) =>
+      if (it.glued && ts.nonEmpty) ts.init :+ (ts.last + it.text) else ts :+ it.text
+    }
+
+  /** `items` cut at each plain atom `sep`. */
+  def split(items: List[Item], sep: String): List[List[Item]] =
+    items.foldRight(List(List.empty[Item])) {
+      case (Atom(`sep`, false, _), acc) => Nil :: acc
+      case (it, acc) => (it :: acc.head) :: acc.tail
+    }
+
+  /** `f` applied to the text of every plain atom, at every depth. */
+  def mapWords(items: List[Item])(f: String => String): List[Item] = items.map {
+    case Atom(t, false, g) => Atom(f(t), opaque = false, g)
+    case Group(o, is, g) => Group(o, mapWords(is)(f), g)
+    case a => a
+  }
+
+  /** The depth-0 items of `text`. A bracket that nothing balances is an
+    * ordinary character, so it reaches the parser inside a term. */
+  def apply(text: String): List[Item] = {
+    def iri(at: Int): Boolean = {
+      val end = text.indexWhere(c => c == '>' || c.isWhitespace || "<{}|^`\\\"'".contains(c), at + 1)
+      end > at && text.charAt(end) == '>'
+    }
+    var i = 0
+    // the items up to the closer at the head of `closers` (Nil at top
+    // level), which is consumed; None if the text ends first or a closer of
+    // an enclosing group comes first
+    def items(closers: List[Char]): Option[List[Item]] = {
+      val out = scala.collection.mutable.ListBuffer.empty[Item]
+      val word = new StringBuilder
+      var glued = false
+      def emit(item: Boolean => Item): Unit = { out += item(glued); glued = true }
+      def flush(): Unit = if (word.nonEmpty) { emit(Atom(word.toString, opaque = false, _)); word.clear() }
+      var result: Option[List[Item]] = null
+      while (result == null) {
+        if (i == text.length) {
+          flush()
+          result = if (closers.isEmpty) Some(out.toList) else None
+        } else {
+          val c = text.charAt(i)
+          i += 1
+          c match {
+            case _ if c.isWhitespace => flush(); glued = false
+            case '{' | '(' =>
+              val from = i
+              items((if (c == '{') '}' else ')') :: closers) match {
+                case Some(inner) => flush(); emit(Group(c, inner, _))
+                case None => i = from; word += c
+              }
+            case '}' | ')' if closers.headOption.contains(c) => flush(); result = Some(out.toList)
+            case '}' | ')' if closers.contains(c) => result = None
+            case '\'' | '"' | '<' if c != '<' || iri(i - 1) =>
+              val end = text.indexOf(if (c == '<') '>' else c, i)
+              if (end < 0) throw new IllegalArgumentException(s"unterminated $c in: $text")
+              flush()
+              emit(Atom(text.substring(i - 1, end + 1), opaque = true, _))
+              i = end + 1
+            case '|' | '&' if i < text.length && text.charAt(i) == c =>
+              flush()
+              emit(Atom(s"$c$c", opaque = false, _))
+              i += 1
+            case _ => word += c
+          }
+        }
+      }
+      result
+    }
+    items(Nil).get
+  }
+}
+
 object SparqlParser {
+  import Scan.{Atom, Braces, Item, Parens, Word, render}
 
   /** Parse the SPARQL subset. Unlike the reference — whose visitor keeps only
     * the LAST pattern of a multi-pattern BGP (static field overwritten per
@@ -231,260 +369,212 @@ object SparqlParser {
     * multi-hop BGPs expressible (the generalization called for in SURVEY §2.3).
     */
   def parse(query: String): BgpQuery = {
-    // Fresh-variable supply for path rewrites (sequence `:p/:q`, inverse
-    // `^:p`): names carry the reserved `__path` prefix so the planner's
-    // star projection hides them (SPARQL path-internal variables are not
-    // visible bindings). Local to this parse call — deterministic,
-    // race-free.
-    var freshN = 0
-    def fresh(): String = { freshN += 1; s"__path$freshN" }
-    // PREFIX declarations: remember the mappings, strip the clauses, and
-    // expand declared `ns:local` names to `<uri+local>` (which the term
-    // normalizer then reduces to its last segment, consistent with the
-    // URI rule). Undeclared prefixed names (e.g. the default `:p` forms
-    // the dictionary stores verbatim) pass through untouched.
-    val prefixRe = "(?i)PREFIX\\s+(\\w*):\\s*<([^>]*)>\\s*".r
-    val rawNorm = query.trim.replaceAll("\\s+", " ")
-    val prefixes = prefixRe.findAllMatchIn(rawNorm)
-      .map(m => m.group(1) -> m.group(2)).toMap
-    val normalized = expandPrefixes(
-      prefixRe.replaceAllIn(rawNorm, " ").trim, prefixes)
-    // ASK: boolean existence of any solution (no projection/modifiers)
-    val askRe = "(?is)ASK\\s*\\{(.*)\\}\\s*".r
-    normalized match {
-      case askRe(body) =>
-        val patterns = splitPatterns(body, fresh)
-        require(patterns.nonEmpty, "empty BGP")
-        return BgpQuery(Nil, patterns, ask = true)
-      case _ =>
+    val (prefixes, items) = prologue(Scan(query), Map.empty)
+    val expanded = if (prefixes.isEmpty) items else Scan.mapWords(items)(expandPrefixes(_, prefixes))
+    def bgp(b: List[Item], context: String, fresh: () => String = freshSupply()) = {
+      val ps = group(b, fresh, context).patterns
+      require(ps.nonEmpty, "empty BGP")
+      ps
     }
-    // DESCRIBE ?v WHERE { bgp }: the WHERE group selects the resources to
-    // describe — parsed as an inner SELECT ?v query and planned as a
-    // semi-join of the triple store against its distinct bindings.
-    val descVarRe = "(?is)DESCRIBE\\s+\\?(\\w+)\\s+WHERE\\s*\\{(.*)\\}\\s*".r
-    normalized match {
-      case descVarRe(v, body) =>
-        val patterns = splitPatterns(body, fresh)
-        require(patterns.nonEmpty, "empty BGP")
-        require(patterns.exists(p => Seq(p.s, p.p, p.o).contains(Variable(v))),
-          s"DESCRIBE variable ?$v is not bound by the WHERE group")
-        return BgpQuery(Nil, Nil,
-          describeWhere = Some(BgpQuery(Seq(v), patterns)))
-      case _ =>
-    }
-    // DESCRIBE <term>: every triple mentioning the resource (the subset's
-    // concise-bounded-description — subject OR object position)
-    // greedy term capture: quoted lexical forms may contain spaces (the
-    // dictionary supports multi-word terms)
-    val descRe = "(?i)DESCRIBE\\s+(.+?)\\s*".r
-    normalized match {
-      case descRe(term) =>
-        require(!term.startsWith("?"),
+    expanded match {
+      // ASK: boolean existence of any solution (no projection/modifiers)
+      case Word("ASK") :: Braces(b) :: Nil => BgpQuery(Nil, bgp(b, "ASK"), ask = true)
+      // DESCRIBE ?v WHERE { bgp }: the WHERE group selects the resources to
+      // describe — parsed as an inner SELECT ?v query and planned as a
+      // semi-join of the triple store against its distinct bindings.
+      case Word("DESCRIBE") :: Atom(v, false, _) :: Word("WHERE") :: Braces(b) :: Nil
+          if v.matches("\\?\\w+") =>
+        val patterns = bgp(b, "DESCRIBE")
+        require(patterns.exists(p => Seq(p.s, p.p, p.o).contains(Variable(v.tail))),
+          s"DESCRIBE variable $v is not bound by the WHERE group")
+        BgpQuery(Nil, Nil, describeWhere = Some(BgpQuery(Seq(v.tail), patterns)))
+      // DESCRIBE <term>: every triple mentioning the resource (the subset's
+      // concise-bounded-description — subject OR object position)
+      case Word("DESCRIBE") :: term if term.nonEmpty =>
+        require(!term.head.text.startsWith("?"),
           "DESCRIBE ?var needs a WHERE group in the subset")
-        return BgpQuery(Nil, Nil,
-          describeTerm = Some(Constant(graft.core.Dictionary.normalizeTerm(term))))
-      case _ =>
-    }
-    // CONSTRUCT WHERE { bgp }: the SPARQL 1.1 shorthand — template ==
-    // pattern group. Plain triples only per the grammar: parsing WITHOUT a
-    // fresh-variable supply makes any path syntax fail loudly instead of
-    // being rewritten into triples the template could not have contained.
-    val consWhereRe = "(?is)CONSTRUCT\\s+WHERE\\s*\\{(.*)\\}\\s*".r
-    normalized match {
-      case consWhereRe(body) =>
-        val patterns = splitPatterns(body)
-        require(patterns.nonEmpty, "empty BGP")
-        return BgpQuery(Nil, patterns, constructTemplate = patterns)
-      case _ =>
-    }
-    // CONSTRUCT: template triples instantiated per solution (set semantics)
-    val consRe = "(?is)CONSTRUCT\\s*\\{(.*?)\\}\\s*WHERE\\s*\\{(.*)\\}\\s*".r
-    normalized match {
-      case consRe(template, body) =>
-        val tmpl = splitPatterns(template)
-        val patterns = splitPatterns(body, fresh)
+        BgpQuery(Nil, Nil,
+          describeTerm = Some(Constant(graft.core.Dictionary.normalizeTerm(render(term)))))
+      // CONSTRUCT WHERE { bgp }: the SPARQL 1.1 shorthand — template ==
+      // pattern group. Plain triples only per the grammar: parsing WITHOUT a
+      // fresh-variable supply makes any path syntax fail loudly instead of
+      // being rewritten into triples the template could not have contained.
+      case Word("CONSTRUCT") :: Word("WHERE") :: Braces(b) :: Nil =>
+        val patterns = bgp(b, "CONSTRUCT", null)
+        BgpQuery(Nil, patterns, constructTemplate = patterns)
+      // CONSTRUCT: template triples instantiated per solution (set semantics)
+      case Word("CONSTRUCT") :: Braces(t) :: Word("WHERE") :: Braces(b) :: Nil =>
+        val tmpl = triples(t, "CONSTRUCT template")
         require(tmpl.nonEmpty, "empty CONSTRUCT template")
-        require(patterns.nonEmpty, "empty BGP")
-        return BgpQuery(Nil, patterns, constructTemplate = tmpl)
-      case _ =>
-    }
-    // Trailing ValuesClauses (the SPARQL-standard position, after the
-    // solution modifiers): strip them first, last to first — the greedy
-    // body regex below would otherwise swallow their braces.
-    var work = normalized
-    val trailing = scala.collection.mutable.ListBuffer.empty[ValuesBlock]
-    val trailingRe = (valuesBlock + "\\s*$").r
-    var more = true
-    while (more) trailingRe.findFirstMatchIn(work) match {
-      case Some(m) =>
-        parseValues(m) +=: trailing
-        work = work.substring(0, m.start).trim
-      case None => more = false
-    }
-    val (trailingValues, trailingValuesMulti) = trailing.toList.partitionMap(identity)
-    // body = up to the LAST closing brace (greedy — union arms contain
-    // braces); tail = the solution-modifier clauses after it
-    val re = "(?is)SELECT\\s+(.*?)\\s+WHERE\\s*\\{(.*)\\}(.*)".r
-    work match {
-      case re(proj, rawBody, tail) =>
-        val up = proj.trim.toUpperCase
-        val modifierLen =
-          if (up.startsWith("DISTINCT ")) "DISTINCT ".length
-          else if (up.startsWith("REDUCED ")) "REDUCED ".length
-          else 0
-        // REDUCED permits (without requiring) duplicate elimination —
-        // implementing it as DISTINCT is conformant and deterministic
-        val distinct = modifierLen > 0
-        val projTerms = proj.trim.substring(modifierLen)
-        val (projection, countAggs) = parseProjection(projTerms.trim)
-        val (orderBy, limit, offset, groupByVars, havings) = parseModifiers(tail.trim)
-        // Top-level UNION: the whole body is `{ bgp } UNION { bgp } ...`
-        // (checked exhaustively, so OPTIONAL/FILTER extraction below never
-        // misreads an arm's braces).
-        if (rawBody.matches("(?is)\\s*\\{[^{}]*\\}(\\s*UNION\\s*\\{[^{}]*\\})+\\s*")) {
-          val arms = "\\{([^{}]*)\\}".r.findAllMatchIn(rawBody)
-            .map(m => splitPatterns(m.group(1), fresh)).toSeq
-          require(arms.forall(_.nonEmpty), "empty UNION arm")
-          return BgpQuery(projection, Nil, Nil, limit, Nil, distinct,
-            unionArms = arms, orderBy = orderBy, offset = offset,
-            groupByVars = groupByVars, countAggs = countAggs,
-            havings = havings, inlineValues = trailingValues,
-            // multi-variable trailing VALUES restrict a union exactly like
-            // the single-variable form (the planner's withValuesMulti path
-            // is union-aware) — dropping them here would silently return
-            // the unrestricted union
-            inlineValuesMulti = trailingValuesMulti)
-        }
-        // Subqueries `{ SELECT … WHERE { … } … }` (SPARQL 1.1 SubSelect as a
-        // GroupGraphPattern): extracted before every one-level group regex
-        // below — their nested WHERE braces would defeat those — and parsed
-        // RECURSIVELY as full queries (aggregates/modifiers included). One
-        // nesting level in the subset (a subquery cannot hold a subquery).
-        val subqRe = "(?is)\\{\\s*(SELECT\\s+[^{}]*\\{[^{}]*\\}[^{}]*)\\}".r
-        val subqueries = subqRe.findAllMatchIn(rawBody).map(m => parse(m.group(1).trim)).toSeq
-        val withoutSubq = subqRe.replaceAllIn(rawBody, " ")
-        // VALUES blocks first (their braces hold constants, not patterns).
-        val valuesRe = valuesBlock.r
-        val (inlineValues, inlineValuesMulti) =
-          valuesRe.findAllMatchIn(withoutSubq).map(parseValues).toList.partitionMap(identity)
-        val withoutValues = valuesRe.replaceAllIn(withoutSubq, " ")
-        // GRAPH groups (SPARQL named graphs): `GRAPH <term|?var> { bgp }` —
-        // the term/variable names the graph, the patterns scope to it. Same
-        // one-level brace shape as OPTIONAL/MINUS.
-        val graphRe = "(?i)GRAPH\\s+('[^']*'|\\S+)\\s*\\{([^{}]*)\\}".r
-        val graphGroups = graphRe.findAllMatchIn(withoutValues).map { m =>
-          (toTerm(m.group(1)), splitPatterns(m.group(2), fresh))
-        }.toSeq
-        graphGroups.foreach { case (_, pats) =>
-          require(pats.nonEmpty, "empty GRAPH group") }
-        val withoutGraph = graphRe.replaceAllIn(withoutValues, " ")
-        // FILTER [NOT] EXISTS groups FIRST (their brace blocks sit inside
-        // FILTER parens — extracting them before the plain-group regexes
-        // keeps those from misreading the braces). Unlike MINUS, EXISTS
-        // correlates on shared variables AND applies with none shared.
-        // Both SPARQL 1.1 grammar forms: `FILTER EXISTS { … }` (Constraint
-        // ::= BuiltInCall, no parens — the primary form) and the
-        // parenthesized `FILTER(EXISTS { … })`; the optional paren pair is
-        // consumed together (greedy), never leaving a dangling `)`.
-        val existsRe = "(?i)FILTER\\s*(?:\\(\\s*)?(NOT\\s+)?EXISTS\\s*\\{([^{}]*)\\}(?:\\s*\\))?".r
-        val existsFilters = existsRe.findAllMatchIn(withoutGraph).map { m =>
-          (splitPatterns(m.group(2), fresh), m.group(1) != null)
-        }.toSeq
-        val withoutExists = existsRe.replaceAllIn(withoutGraph, " ")
-        // MINUS groups (negation): remove solutions compatible with the
-        // minus pattern on shared variables.
-        val minusRe = "(?i)MINUS\\s*\\{([^{}]*)\\}".r
-        val minuses = minusRe.findAllMatchIn(withoutExists)
-          .map(m => splitPatterns(m.group(1), fresh)).toSeq
-        val withoutMinus = minusRe.replaceAllIn(withoutExists, " ")
-        // FILTER grammar: up to two nesting levels inside the parens —
-        // BOUND(?v) is one, STRSTARTS(STR(?v), 'x') is two
-        val filterRe = ("(?i)FILTER\\s*\\(\\s*" +
-          "((?:[^()]|\\((?:[^()]|\\([^()]*\\))*\\))*?)\\s*\\)").r
-        // OPTIONAL groups next (their braces enclose plain BGPs — no
-        // nesting in the subset). A FILTER INSIDE the group scopes to the
-        // group: it restricts the optional side BEFORE the left join
-        // (subset rule: its variables must be bound inside the group).
-        val optionalRe = "(?i)OPTIONAL\\s*\\{([^{}]*)\\}".r
-        val optParsed = optionalRe.findAllMatchIn(withoutMinus).map { m =>
-          val body = m.group(1)
-          val fs = filterRe.findAllMatchIn(body).map(c => parseFilterExpr(c.group(1))).toSeq
-          (splitPatterns(filterRe.replaceAllIn(body, " "), fresh), fs)
-        }.toSeq
-        val optionals = optParsed.map(_._1)
-        val optionalFilters = optParsed.map(_._2)
-        val withoutOpt = optionalRe.replaceAllIn(withoutMinus, " ")
-        // BIND clauses: `BIND(term AS ?alias)` / `BIND(?var AS ?alias)` —
-        // extracted like FILTER (no dot separator required); the alias
-        // becomes a visible binding evaluated after the pattern joins.
-        // an optional single arithmetic step (`?x + 1`, `?a - ?b`, `?x * 3`)
-        // makes the alias a computed integer binding; `/` is rejected (the
-        // xsd:decimal division result has no home in the id domain)
-        // BIND(COALESCE(t1, t2, …) AS ?alias) — arguments are plain terms
-        // (quoted lexicals with commas/parens are outside the subset);
-        // extracted before the generic form so `\S+?` never eats a call.
-        val bindCoalesceRe =
-          "(?i)BIND\\s*\\(\\s*COALESCE\\s*\\(([^()]*)\\)\\s+AS\\s+\\?(\\w+)\\s*\\)".r
-        val coalesceBinds = bindCoalesceRe.findAllMatchIn(withoutOpt).map { m =>
-          val terms = m.group(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(toTerm)
-          require(terms.nonEmpty, "COALESCE needs at least one argument")
-          (BindCoalesce(terms): BindExpr, m.group(2))
-        }.toSeq
-        val withoutCoalesce = bindCoalesceRe.replaceAllIn(withoutOpt, " ")
-        // BIND(IF(cond, then, else) AS ?alias) — cond is one FILTER atom
-        // (one paren level allowed for BOUND(?v)); then/else are terms.
-        val bindIfRe = ("(?i)BIND\\s*\\(\\s*IF\\s*\\(\\s*((?:[^(),]|\\([^()]*\\))+?)\\s*," +
-          "\\s*([^(),]+?)\\s*,\\s*([^(),]+?)\\s*\\)\\s+AS\\s+\\?(\\w+)\\s*\\)").r
-        val ifBinds = bindIfRe.findAllMatchIn(withoutCoalesce).map { m =>
-          val cond = parseFilter(m.group(1).trim)
-          require(!FilterOp.isLexical(cond.op) &&
-              cond.op != FilterIn && cond.op != FilterNotIn,
-            "IF condition subset is ?var cmp term and [!]BOUND(?var)")
-          (BindIf(cond, toTerm(m.group(2)), toTerm(m.group(3))): BindExpr, m.group(4))
-        }.toSeq
-        val withoutIf = bindIfRe.replaceAllIn(withoutCoalesce, " ")
-        val bindRe = ("(?i)BIND\\s*\\(\\s*('[^']*'|\\S+?)" +
-          "(?:\\s*([+*/-])\\s*('[^']*'|\\S+?))?\\s+AS\\s+\\?(\\w+)\\s*\\)").r
-        val plainBinds = bindRe.findAllMatchIn(withoutIf).map { m =>
-          val expr: BindExpr =
-            if (m.group(2) == null) BindTerm(toTerm(m.group(1)))
-            else {
-              require(m.group(2) != "/",
-                "unsupported BIND operator '/' (subset is + - *)")
-              BindArith(toTerm(m.group(1)), m.group(2).head, toTerm(m.group(3)))
-            }
-          (expr, m.group(4))
-        }.toSeq
-        // SPARQL evaluates BIND in pattern order: a later BIND may
-        // reference any earlier alias (arithmetic feeding IF as much as
-        // IF feeding arithmetic). The three extraction passes ran over
-        // progressively stripped text, so restore SOURCE order by each
-        // alias's `AS ?alias` position (aliases are unique — the planner
-        // rejects rebinding).
-        val binds = (coalesceBinds ++ ifBinds ++ plainBinds).sortBy {
-          case (_, alias) =>
-            ("(?i)AS\\s+\\?" + java.util.regex.Pattern.quote(alias) + "\\b").r
-              .findFirstMatchIn(withoutOpt).map(_.start).getOrElse(Int.MaxValue)
-        }
-        val withoutBind = bindRe.replaceAllIn(withoutIf, " ")
-        // FILTER clauses: extract (they need no dot separator in SPARQL),
-        // then parse the remaining segments as triple patterns
-        val filters =
-          filterRe.findAllMatchIn(withoutBind).map(m => parseFilterExpr(m.group(1))).toSeq
-        val body = filterRe.replaceAllIn(withoutBind, " ")
-        val patterns = splitPatterns(body, fresh)
-        require(patterns.nonEmpty || subqueries.nonEmpty || graphGroups.nonEmpty,
-          "empty BGP")
-        BgpQuery(projection, patterns, filters, limit,
-          optionals, distinct, orderBy = orderBy, offset = offset,
-          groupByVars = groupByVars, countAggs = countAggs, havings = havings,
-          optionalFilters = optionalFilters,
-          inlineValues = inlineValues ++ trailingValues,
-          inlineValuesMulti = inlineValuesMulti ++ trailingValuesMulti,
-          minuses = minuses, binds = binds, existsFilters = existsFilters,
-          subqueries = subqueries,
-          graphGroups = graphGroups)
+        BgpQuery(Nil, bgp(b, "CONSTRUCT"), constructTemplate = tmpl)
+      case Word("SELECT") :: rest => select(rest, query)
       case _ => throw new IllegalArgumentException(s"unsupported SPARQL: $query")
+    }
+  }
+
+  /** The patterns of a group that may hold only triples, such as an update
+    * template or a DATA block: property paths are not triples there. */
+  private[sparql] def triples(items: List[Item], context: String): Seq[TriplePattern] =
+    group(items, null, context).patterns
+
+  /** Fresh-variable supply for path rewrites (sequence `:p/:q`, inverse
+    * `^:p`): names carry the reserved `__path` prefix so the planner's star
+    * projection hides them (SPARQL path-internal variables are not visible
+    * bindings). One per query or sub-select — deterministic, race-free.
+    */
+  private def freshSupply(): () => String = {
+    var n = 0
+    () => { n += 1; s"__path$n" }
+  }
+
+  private val prefixDeclRe = "(\\w*):".r
+
+  /** PREFIX declarations at the head of the query, as a map, and the items
+    * after them. */
+  @scala.annotation.tailrec
+  private def prologue(items: List[Item], prefixes: Map[String, String])
+      : (Map[String, String], List[Item]) = items match {
+    case Word("PREFIX") :: Atom(prefixDeclRe(ns), false, _) :: Atom(iri, true, _) :: rest
+        if iri.startsWith("<") =>
+      prologue(rest, prefixes + (ns -> iri.substring(1, iri.length - 1)))
+    case _ => (prefixes, items)
+  }
+
+  /** `SELECT [DISTINCT|REDUCED] proj WHERE { … } modifiers VALUES…`, the
+    * items after SELECT; sub-selects parse the same way. */
+  private def select(items: List[Item], query: String): BgpQuery = {
+    val (proj, where) = items.span { case Word("WHERE") => false; case _ => true }
+    val (body, tail) = where match {
+      case _ :: Braces(b) :: t if proj.nonEmpty => (b, t)
+      case _ => throw new IllegalArgumentException(s"unsupported SPARQL: $query")
+    }
+    // REDUCED permits (without requiring) duplicate elimination —
+    // implementing it as DISTINCT is conformant and deterministic
+    val distinct = proj.head match {
+      case Word("DISTINCT" | "REDUCED") => true
+      case _ => false
+    }
+    val (projection, countAggs) = parseProjection(render(if (distinct) proj.tail else proj))
+    // ValuesClauses after the solution modifiers (the SPARQL-standard
+    // position) join those written inside the group
+    val (modifiers, values) = tail.span { case Word("VALUES") => false; case _ => true }
+    val (orderBy, limit, offset, groupByVars, havings) = parseModifiers(render(modifiers))
+    val q = trailingValues(values, group(body, freshSupply(), "WHERE"))
+    require(q.unionArms.nonEmpty || q.patterns.nonEmpty || q.subqueries.nonEmpty ||
+      q.graphGroups.nonEmpty, "empty BGP")
+    q.copy(projection = projection, limit = limit, distinct = distinct, orderBy = orderBy,
+      offset = offset, groupByVars = groupByVars, countAggs = countAggs, havings = havings)
+  }
+
+  /** The ValuesClauses after the solution modifiers, added to `q`. */
+  @scala.annotation.tailrec
+  private def trailingValues(items: List[Item], q: BgpQuery): BgpQuery = items match {
+    case Nil => q
+    case Word("VALUES") :: spec :: Braces(rows) :: rest => trailingValues(rest, withValues(q, spec, rows))
+    case _ => throw new IllegalArgumentException(s"unsupported solution modifiers: ${render(items)}")
+  }
+
+  /** A group body split at depth 0, in source order, into its elements:
+    * (construct, items). A triple's items run to a `.` or to the next
+    * construct; the other elements come from [[construct]].
+    */
+  private def elements(items: List[Item]): List[(String, List[Item])] = {
+    @scala.annotation.tailrec
+    def go(rest: List[Item], triple: List[Item], out: List[(String, List[Item])])
+        : List[(String, List[Item])] = {
+      def done = if (triple.isEmpty) out else ("TRIPLE", triple.reverse) :: out
+      rest match {
+        case Nil => done.reverse
+        case Atom(".", false, _) :: t => go(t, Nil, done)
+        // a bracket or operator glued to a term is part of it: `:p{2}`
+        case item :: t if item.glued && triple.nonEmpty => go(t, item :: triple, out)
+        case item :: t => construct(rest) match {
+          case Some((element, after)) => go(after, Nil, element :: done)
+          case None => go(t, item :: triple, out)
+        }
+      }
+    }
+    go(items, Nil, Nil)
+  }
+
+  /** The construct that `items` starts with, if any, and the items after
+    * it. FILTER, OPTIONAL, MINUS and EXISTS carry the items inside their
+    * brackets, GRAPH its term and then those, VALUES its variable spec and
+    * then its rows, a sub-SELECT its items, UNION its arm groups.
+    */
+  private def construct(items: List[Item]): Option[((String, List[Item]), List[Item])] = {
+    @scala.annotation.tailrec
+    def arms(rest: List[Item], acc: List[Item]): (List[Item], List[Item]) = rest match {
+      case Word("UNION") :: (b @ Braces(_)) :: t => arms(t, b :: acc)
+      case _ => (acc.reverse, rest)
+    }
+    items match {
+      case Word(k @ ("OPTIONAL" | "MINUS")) :: Braces(b) :: t => Some((k -> b, t))
+      case Word("GRAPH") :: (g: Atom) :: Braces(b) :: t => Some(("GRAPH" -> (g :: b), t))
+      // FILTER [NOT] EXISTS, with or without the parentheses
+      case Word("FILTER") :: Word("EXISTS") :: Braces(b) :: t => Some(("EXISTS" -> b, t))
+      case Word("FILTER") :: Word("NOT") :: Word("EXISTS") :: Braces(b) :: t =>
+        Some(("NOT EXISTS" -> b, t))
+      case Word("FILTER") :: Parens(Word("EXISTS") :: Braces(b) :: Nil) :: t =>
+        Some(("EXISTS" -> b, t))
+      case Word("FILTER") :: Parens(Word("NOT") :: Word("EXISTS") :: Braces(b) :: Nil) :: t =>
+        Some(("NOT EXISTS" -> b, t))
+      case Word(k @ ("FILTER" | "BIND")) :: Parens(c) :: t => Some((k -> c, t))
+      case Word("VALUES") :: spec :: Braces(b) :: t => Some(("VALUES" -> (spec :: b), t))
+      case Braces(b @ (Word("SELECT") :: _)) :: t => Some(("SELECT" -> b.tail, t))
+      case (b @ Braces(_)) :: t =>
+        val (as, after) = arms(t, List(b))
+        Some(("UNION" -> as, after))
+      case _ => None
+    }
+  }
+
+  /** One group: its elements folded into a [[BgpQuery]] in source order.
+    * `context` names the enclosing construct: WHERE admits every element,
+    * OPTIONAL triples and FILTERs, any other context triples only; a UNION
+    * is the whole group or nothing.
+    */
+  private def group(items: List[Item], fresh: () => String, context: String): BgpQuery = {
+    val parts = elements(items)
+    parts.foldLeft(BgpQuery(Nil, Nil)) { case (q, (kind, body)) =>
+      require(kind == "TRIPLE" || context == "WHERE" || context == "OPTIONAL" && kind == "FILTER",
+        s"$kind inside $context is outside the subset")
+      def patterns(b: List[Item], ctx: String) = group(b, fresh, ctx).patterns
+      kind match {
+        case "TRIPLE" => q.copy(patterns = q.patterns ++ expandPattern(body, fresh))
+        case "OPTIONAL" =>
+          // A FILTER INSIDE the group scopes to the group: it restricts the
+          // optional side BEFORE the left join (subset rule: its variables
+          // must be bound inside the group).
+          val o = group(body, fresh, "OPTIONAL")
+          q.copy(optionals = q.optionals :+ o.patterns,
+            optionalFilters = q.optionalFilters :+ o.filters)
+        // MINUS removes solutions compatible on shared variables; EXISTS
+        // correlates on shared variables AND applies with none shared
+        case "MINUS" => q.copy(minuses = q.minuses :+ patterns(body, kind))
+        case "EXISTS" | "NOT EXISTS" =>
+          q.copy(existsFilters = q.existsFilters :+ (patterns(body, kind) -> (kind != "EXISTS")))
+        // `GRAPH <term|?var> { bgp }`: the term or variable names the graph,
+        // the patterns scope to it
+        case "GRAPH" =>
+          val pats = patterns(body.tail, kind)
+          require(pats.nonEmpty, "empty GRAPH group")
+          q.copy(graphGroups = q.graphGroups :+ (toTerm(body.head.text) -> pats))
+        case "FILTER" => q.copy(filters = q.filters :+ parseFilterExpr(body))
+        // BIND in pattern order: a later BIND may reference an earlier alias
+        case "BIND" => q.copy(binds = q.binds :+ parseBind(render(body)))
+        case "VALUES" => withValues(q, body.head, body.tail)
+        // a sub-select joins the enclosing solutions on its shared
+        // projected variables; parsed as a full query (aggregates and
+        // modifiers included)
+        case "SELECT" => q.copy(subqueries = q.subqueries :+ select(body, render(body)))
+        case "UNION" =>
+          require(body.length > 1, s"a nested group without UNION is outside the subset: ${render(body)}")
+          require(parts.length == 1, s"UNION next to other patterns is outside the subset: ${render(items)}")
+          val arms = body.collect { case Braces(b) => patterns(b, "UNION arm") }
+          require(arms.forall(_.nonEmpty), "empty UNION arm")
+          q.copy(unionArms = arms)
+      }
     }
   }
 
@@ -564,76 +654,98 @@ object SparqlParser {
     (orderBy, limit, offset, groupByVars, havings)
   }
 
-  /** Split a brace-free pattern group on dots DELIMITED BY WHITESPACE (or
-    * line end) and outside quotes — dots inside <uri>s or quoted literals
-    * don't split. With a `fresh` variable supply, predicate positions may be
-    * property paths (see [[expandPattern]]; `fresh = null` in CONSTRUCT
-    * templates, where paths are not triples).
+  /** One SPARQL 1.1 ValuesClause added to `q`: single-variable
+    * (`VALUES ?v { 'x' … }`) or multi-variable (`VALUES (?a ?b) { ('x' 'y')
+    * … }`, rows of parenthesized tuples, one constant or UNDEF per
+    * variable). Variables must be distinct (SPARQL DataBlock grammar);
+    * every row carries one term per variable, and every term is a constant
+    * (or, in a multi-variable row, UNDEF).
     */
-  private def splitPatterns(body: String, fresh: () => String = null): Seq[TriplePattern] =
-    body.split("\\s+\\.(?=\\s|$)(?=(?:[^']*'[^']*')*[^']*$)")
-      .map(_.trim).filter(s => s.nonEmpty && s != ".").toSeq
-      .flatMap(t => expandPattern(t, fresh))
-
-  /** One SPARQL 1.1 ValuesClause, single-variable (`VALUES ?v { 'x' … }`)
-    * or multi-variable (`VALUES (?a ?b) { ('x' 'y') … }`, rows of
-    * parenthesized tuples, one constant or UNDEF per variable).
-    */
-  private type ValuesBlock =
-    Either[(String, Seq[Constant]), (Seq[String], Seq[Seq[Option[Constant]]])]
-  private val valuesBlock =
-    "(?i)VALUES(?:\\s+\\?(\\w+)|\\s*\\(([^()]*)\\))\\s*\\{([^{}]*)\\}"
-
-  /** Parse one [[valuesBlock]] match. Variables must be distinct (SPARQL
-    * DataBlock grammar); every row carries one term per variable, and every
-    * term is a constant (or, in a multi-variable row, UNDEF).
-    */
-  private def parseValues(m: scala.util.matching.Regex.Match): ValuesBlock = {
+  private def withValues(q: BgpQuery, spec: Item, rows: List[Item]): BgpQuery = {
     def constant(t: String, text: String): Constant = toTerm(t) match {
       case c: Constant => c
       case _ => throw new IllegalArgumentException(s"VALUES terms must be constants: $text")
     }
-    val rowText = m.group(3)
-    if (m.group(1) != null) {
-      val terms = tokenize(rowText.trim).toSeq
-      require(terms.nonEmpty, s"VALUES terms must be constants: $rowText")
-      return Left(m.group(1) -> terms.map(constant(_, rowText)))
+    val rowText = render(rows)
+    spec match {
+      case Atom(v, false, _) if v.matches("\\?\\w+") =>
+        val terms = Scan.terms(rows)
+        require(terms.nonEmpty, s"VALUES terms must be constants: $rowText")
+        q.copy(inlineValues = q.inlineValues :+ (v.tail -> terms.map(constant(_, rowText))))
+      case Parens(vs) =>
+        val vars = "\\?(\\w+)".r.findAllMatchIn(render(vs)).map(_.group(1)).toSeq
+        require(vars.nonEmpty, s"VALUES needs variables: ${spec.text}")
+        require(vars.distinct.size == vars.size,
+          s"duplicate VALUES variables: ${vars.mkString(", ")}")
+        val tuples = rows.map {
+          case Parens(r) =>
+            val terms = Scan.terms(r).map {
+              case u if u.equalsIgnoreCase("UNDEF") => None // per-row wildcard
+              case t => Some(constant(t, render(r)))
+            }
+            require(terms.length == vars.length,
+              s"VALUES row needs ${vars.length} terms: ${render(r)}")
+            terms
+          case other => throw new IllegalArgumentException(
+            s"VALUES row must be a parenthesized tuple: ${other.text}")
+        }
+        require(tuples.nonEmpty, s"VALUES needs at least one row: $rowText")
+        q.copy(inlineValuesMulti = q.inlineValuesMulti :+ (vars -> tuples))
+      case _ => throw new IllegalArgumentException(s"unsupported VALUES clause: ${spec.text}")
     }
-    val varText = m.group(2)
-    val vars = "\\?(\\w+)".r.findAllMatchIn(varText).map(_.group(1)).toSeq
-    require(vars.nonEmpty, s"VALUES needs variables: $varText")
-    require(vars.distinct.size == vars.size,
-      s"duplicate VALUES variables: ${vars.mkString(", ")}")
-    val rows = "\\(([^()]*)\\)".r.findAllMatchIn(rowText).map { r =>
-      val terms = tokenize(r.group(1).trim).toSeq.map {
-        case u if u.equalsIgnoreCase("UNDEF") => None // per-row wildcard
-        case t => Some(constant(t, r.group(1)))
-      }
-      require(terms.length == vars.length,
-        s"VALUES row needs ${vars.length} terms: ${r.group(1)}")
-      terms
-    }.toSeq
-    require(rows.nonEmpty, s"VALUES needs at least one row: $rowText")
-    Right(vars -> rows)
   }
 
-  /** One pattern text → its plain patterns, or one pattern whose predicate
+  // BIND(COALESCE(t1, t2, …) AS ?alias): arguments are plain terms (quoted
+  // lexicals with commas/parens are outside the subset)
+  private val bindCoalesceRe = "(?i)COALESCE\\s*\\(([^()]*)\\)\\s+AS\\s+\\?(\\w+)".r
+  // BIND(IF(cond, then, else) AS ?alias): cond is one FILTER atom (one
+  // paren level allowed for BOUND(?v)); then/else are terms
+  private val bindIfRe = ("(?i)IF\\s*\\(\\s*((?:[^(),]|\\([^()]*\\))+?)\\s*," +
+    "\\s*([^(),]+?)\\s*,\\s*([^(),]+?)\\s*\\)\\s+AS\\s+\\?(\\w+)").r
+  // BIND(term AS ?alias), with an optional single arithmetic step (`?x + 1`,
+  // `?a - ?b`, `?x * 3`) that makes the alias a computed integer binding;
+  // `/` is rejected (the xsd:decimal division result has no home in the id
+  // domain)
+  private val bindRe = "(?i)('[^']*'|\\S+?)(?:\\s*([+*/-])\\s*('[^']*'|\\S+?))?\\s+AS\\s+\\?(\\w+)".r
+
+  /** The text inside `BIND( … )` → (expression, alias). The alias becomes a
+    * visible binding evaluated after the pattern joins. */
+  private def parseBind(text: String): (BindExpr, String) = text match {
+    case bindCoalesceRe(args, alias) =>
+      val terms = args.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(toTerm)
+      require(terms.nonEmpty, "COALESCE needs at least one argument")
+      (BindCoalesce(terms), alias)
+    case bindIfRe(c, thenT, elseT, alias) =>
+      val cond = parseFilter(c.trim)
+      require(!FilterOp.isLexical(cond.op) &&
+          cond.op != FilterIn && cond.op != FilterNotIn,
+        "IF condition subset is ?var cmp term and [!]BOUND(?var)")
+      (BindIf(cond, toTerm(thenT), toTerm(elseT)), alias)
+    case bindRe(l, null, _, alias) => (BindTerm(toTerm(l)), alias)
+    case bindRe(l, op, r, alias) =>
+      require(op != "/", "unsupported BIND operator '/' (subset is + - *)")
+      (BindArith(toTerm(l), op.head, toTerm(r)), alias)
+    case _ => throw new IllegalArgumentException(s"unsupported BIND: $text")
+  }
+
+  /** One triple's items → its plain patterns, or one pattern whose predicate
     * is a [[PathTerm]]. A lone `^name` swaps subject and object; a sequence
     * of single names, each optionally `^`-inverted, chains n plain patterns
     * through n-1 fresh intermediate variables, so it plans as one static
-    * join. Without a fresh-variable supply (CONSTRUCT templates) any path
-    * syntax fails: a path is not a triple.
+    * join. Without a fresh-variable supply (templates) any path syntax
+    * fails: a path is not a triple.
     */
-  private def expandPattern(text: String, fresh: () => String): Seq[TriplePattern] = {
-    val toks = tokenize(text)
-    require(toks.length == 3, s"triple pattern needs 3 terms, got ${toks.length} in: $text")
+  private def expandPattern(items: List[Item], fresh: () => String): Seq[TriplePattern] = {
+    val toks = Scan.terms(items)
+    require(toks.length == 3,
+      s"triple pattern needs 3 terms, got ${toks.length} in: ${render(items)}")
     val p = toks(1)
+    def pattern(s: String, pred: Term, o: String) = TriplePattern(toTerm(s), pred, toTerm(o))
     // quoted literals and raw URIs are lexical forms, never path syntax
     if ("?'<".contains(p.head) || !p.exists(c => "/|+*?^!(){}".contains(c)))
-      return Seq(parsePattern(text))
+      return Seq(pattern(toks(0), toTerm(p), toks(2)))
     def unsupported = new IllegalArgumentException(s"unsupported property path: $p")
     if (fresh == null) throw unsupported
-    def pattern(s: String, pred: Term, o: String) = TriplePattern(toTerm(s), pred, toTerm(o))
     val path = parsePath(p)
     val chain = path match {
       case PathSeq(ps) if ps.forall(singleLink) => ps
@@ -752,42 +864,16 @@ object SparqlParser {
     path
   }
 
-  /** Split on a two-character operator (`||` / `&&`) at paren depth 0 and
-    * outside single quotes.
+  /** One FILTER constraint's items → its condition tree: `||` at lowest
+    * precedence, `&&` above it (the SPARQL ConditionalOr/ConditionalAnd
+    * nesting), atoms at the leaves. No parenthesized grouping in the subset.
     */
-  private def splitTop(s: String, sep: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { inQuote = !inQuote; cur += c; i += 1 }
-      else if (inQuote) { cur += c; i += 1 }
-      else if (c == '(') { depth += 1; cur += c; i += 1 }
-      else if (c == ')') { depth -= 1; cur += c; i += 1 }
-      else if (depth == 0 && i + 1 < s.length && s.substring(i, i + 2) == sep) {
-        out += cur.toString; cur.clear(); i += 2
-      }
-      else { cur += c; i += 1 }
+  private def parseFilterExpr(items: List[Item]): FilterExpr = Scan.split(items, "||") match {
+    case List(one) => Scan.split(one, "&&") match {
+      case List(atom) => FilterLeaf(parseFilter(render(atom)))
+      case ands => ands.map(parseFilterExpr).reduceLeft(FilterAnd.apply)
     }
-    out += cur.toString
-    out.toSeq
-  }
-
-  /** One FILTER constraint → its condition tree: `||` at lowest precedence,
-    * `&&` above it (the SPARQL ConditionalOr/ConditionalAnd nesting), atoms
-    * at the leaves. No parenthesized grouping in the subset.
-    */
-  private def parseFilterExpr(cond: String): FilterExpr = {
-    val orParts = splitTop(cond, "||")
-    if (orParts.length > 1)
-      return orParts.map(parseFilterExpr).reduceLeft(FilterOr.apply)
-    val andParts = splitTop(cond, "&&")
-    if (andParts.length > 1)
-      return andParts.map(parseFilterExpr).reduceLeft(FilterAnd.apply)
-    FilterLeaf(parseFilter(cond))
+    case ors => ors.map(parseFilterExpr).reduceLeft(FilterOr.apply)
   }
 
   /** The six comparison tokens, longest first, as a regex alternation. */
@@ -856,61 +942,22 @@ object SparqlParser {
     }
   }
 
-  private[sparql] def parsePattern(text: String): TriplePattern = {
-    val toks = tokenize(text)
-    require(toks.length == 3, s"triple pattern needs 3 terms, got ${toks.length} in: $text")
-    TriplePattern(toTerm(toks(0)), toTerm(toks(1)), toTerm(toks(2)))
-  }
+  private val prefixedNameRe = "(\\w*):(\\w+)".r
 
-  /** Expand declared `ns:local` prefixed names OUTSIDE quoted literals and
-    * angle-bracketed URIs (a quoted `'ns:x'` is a lexical form, not a
-    * prefixed name). The replacement is the NORMALIZED form — the last
-    * segment of `uri+local`, exactly what `<uri+local>` would reduce to —
-    * so names inside property-path syntax (`ex:p/ex:q`, `ex:p+`, `!ex:p`)
-    * stay plain tokens the path grammar still recognizes.
+  /** Expand declared `ns:local` prefixed names in one plain atom (quoted
+    * `'ns:x'` lexical forms and IRIs are opaque atoms, never expanded). The
+    * replacement is the NORMALIZED form — the last segment of `uri+local`,
+    * exactly what `<uri+local>` would reduce to — so names inside
+    * property-path syntax (`ex:p/ex:q`, `ex:p+`, `!ex:p`) stay plain tokens
+    * the path grammar still recognizes. Undeclared prefixed names (e.g. the
+    * default `:p` forms the dictionary stores verbatim) pass through.
     */
-  private def expandPrefixes(text: String, prefixes: Map[String, String]): String = {
-    if (prefixes.isEmpty) return text
-    val nameRe = "(\\w*):(\\w+)".r
-    def expandRun(run: String): String =
-      nameRe.replaceAllIn(run, m => prefixes.get(m.group(1)) match {
-        case Some(uri) => java.util.regex.Matcher.quoteReplacement(
-          graft.core.Dictionary.normalizeTerm(s"<$uri${m.group(2)}>"))
-        case None => java.util.regex.Matcher.quoteReplacement(m.matched)
-      })
-    val out = new StringBuilder
-    val run = new StringBuilder
-    var inQuote = false
-    var inAngle = false
-    def flush(): Unit = { out ++= expandRun(run.toString); run.clear() }
-    text.foreach {
-      case '\'' => if (!inAngle) { if (!inQuote) flush(); inQuote = !inQuote; if (inQuote) out += '\'' else { out ++= run; run.clear(); out += '\'' } } else run += '\''
-      case c if inQuote => out += c
-      case '<' => flush(); inAngle = true; run += '<'
-      case '>' if inAngle => run += '>'; out ++= run; run.clear(); inAngle = false
-      case c => run += c
-    }
-    if (inQuote) out ++= run else flush()
-    out.toString
-  }
-
-  /** Split on spaces outside single quotes (lexical forms may contain spaces,
-    * as the reference dictionary's do — `PartitionQueryingSubject.java:66`'s
-    * limit-2 split implies multi-word terms).
-    */
-  private def tokenize(s: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    s.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case c if c == ' ' && !inQuote =>
-        if (cur.nonEmpty) { out += cur.toString; cur.clear() }
-      case c => cur += c
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.toArray
-  }
+  private def expandPrefixes(word: String, prefixes: Map[String, String]): String =
+    prefixedNameRe.replaceAllIn(word, m => java.util.regex.Matcher.quoteReplacement(
+      prefixes.get(m.group(1)) match {
+        case Some(uri) => graft.core.Dictionary.normalizeTerm(s"<$uri${m.group(2)}>")
+        case None => m.matched
+      }))
 
   private[sparql] def toTerm(tok: String): Term =
     if (tok.startsWith("?")) Variable(tok.substring(1))

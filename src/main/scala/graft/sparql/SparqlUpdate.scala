@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Dictionary, TripleSchema}
 import graft.operators.QueryEngine
+import graft.sparql.Scan.{Atom, Braces, Item, Word, render}
 
 /** SPARQL 1.1 Update over an immutable triple snapshot — Spark-first
   * semantics: every update form is a declarative transformation of the
@@ -31,6 +32,10 @@ import graft.operators.QueryEngine
   *    from the dictionary are pre-assigned fresh ids so derivation can mint
   *    new vocabulary.
   *
+  * An update text reads through the query parser's scanner ([[Scan]]), so
+  * IRIs and quoted literals stay whole, and each DATA block or template
+  * through its group function, which admits triples only there.
+  *
   * The store is a BAG like the reference's (duplicate triples permitted);
   * INSERT does not dedup against existing rows — CONSTRUCT's internal
   * distinct only dedups the derived set itself.
@@ -40,33 +45,38 @@ object SparqlUpdate {
   final case class UpdatedStore(triples: DataFrame, dict: Dictionary)
 
   def apply(spark: SparkSession, triples: DataFrame, dict: Dictionary,
-      update: String): UpdatedStore = {
-    val insertDataRe = "(?is)^\\s*INSERT\\s+DATA\\s*\\{(.*)\\}\\s*$".r
-    val deleteDataRe = "(?is)^\\s*DELETE\\s+DATA\\s*\\{(.*)\\}\\s*$".r
-    val deleteWhereRe = "(?is)^\\s*DELETE\\s+WHERE\\s*\\{(.*)\\}\\s*$".r
-    val insertWhereRe = "(?is)^\\s*INSERT\\s*\\{(.*?)\\}\\s*WHERE\\s*\\{(.*)\\}\\s*$".r
-    val modifyRe =
-      "(?is)^\\s*DELETE\\s*\\{(.*?)\\}\\s*INSERT\\s*\\{(.*?)\\}\\s*WHERE\\s*\\{(.*)\\}\\s*$".r
-    // 1.1 Modify with the InsertClause omitted: `DELETE { tpl } WHERE
-    // { bgp }` — distinct from `DELETE WHERE` (which has no template and
-    // removes the pattern's own matches). Matched AFTER deleteWhereRe, so
-    // the brace right after DELETE is what disambiguates.
-    val deleteModifyRe =
-      "(?is)^\\s*DELETE\\s*\\{(.*?)\\}\\s*WHERE\\s*\\{(.*)\\}\\s*$".r
-    update match {
-      case insertDataRe(body) => insertData(spark, triples, dict, body)
-      case deleteDataRe(body) => deleteGround(spark, triples, dict, body)
-      case deleteWhereRe(body) => deleteWhere(triples, dict, body)
-      case modifyRe(dtpl, itpl, body) =>
-        deleteInsertWhere(spark, triples, dict, dtpl, itpl, body)
-      case deleteModifyRe(dtpl, body) =>
-        deleteInsertWhere(spark, triples, dict, dtpl, "", body)
-      case insertWhereRe(tpl, body) => insertWhere(spark, triples, dict, tpl, body)
-      case other => throw new IllegalArgumentException(
-        "unsupported update (subset is INSERT DATA, DELETE DATA, " +
-          s"DELETE WHERE, INSERT {tpl} WHERE {bgp}, DELETE {tpl} WHERE {bgp}, " +
-          s"DELETE {tpl} INSERT {tpl} WHERE {bgp}, WITH <g> + modify via " +
-          s"applyQuads): $other")
+      update: String): UpdatedStore = Scan(update) match {
+    case Word("INSERT") :: Word("DATA") :: Braces(b) :: Nil =>
+      insertData(spark, triples, dict, ground(b, "INSERT DATA"))
+    case Word("DELETE") :: Word("DATA") :: Braces(b) :: Nil =>
+      deleteGround(triples, dict, ground(b, "DELETE DATA"))
+    case Word("DELETE") :: Word("WHERE") :: Braces(b) :: Nil =>
+      deleteWhere(triples, dict, SparqlParser.triples(b, "DELETE WHERE"))
+    // INSERT-only plans as a CONSTRUCT, ahead of the Modify forms' shared
+    // binding pass (which WITH uses for it)
+    case Word("INSERT") :: Braces(tpl) :: Word("WHERE") :: Braces(body) :: Nil =>
+      insertWhere(spark, triples, dict, tpl, body)
+    case Modify(dtpl, itpl, body) => deleteInsertWhere(spark, triples, dict, dtpl, itpl, body)
+    case _ => throw new IllegalArgumentException(
+      "unsupported update (subset is INSERT DATA, DELETE DATA, " +
+        s"DELETE WHERE, INSERT {tpl} WHERE {bgp}, DELETE {tpl} WHERE {bgp}, " +
+        s"DELETE {tpl} INSERT {tpl} WHERE {bgp}, WITH <g> + modify via " +
+        s"applyQuads): $update")
+  }
+
+  /** The modify forms as (DELETE template, INSERT template, WHERE group),
+    * an omitted template empty: `DELETE {d} INSERT {i} WHERE {w}`, the 1.1
+    * `DELETE {d} WHERE {w}` (distinct from `DELETE WHERE`, which has no
+    * template and removes the pattern's own matches), and
+    * `INSERT {i} WHERE {w}`.
+    */
+  private object Modify {
+    def unapply(items: List[Item]): Option[(List[Item], List[Item], List[Item])] = items match {
+      case Word("DELETE") :: Braces(d) :: Word("INSERT") :: Braces(i) :: Word("WHERE") :: Braces(w) :: Nil =>
+        Some((d, i, w))
+      case Word("DELETE") :: Braces(d) :: Word("WHERE") :: Braces(w) :: Nil => Some((d, Nil, w))
+      case Word("INSERT") :: Braces(i) :: Word("WHERE") :: Braces(w) :: Nil => Some((Nil, i, w))
+      case _ => None
     }
   }
 
@@ -84,23 +94,12 @@ object SparqlUpdate {
     */
   def applyQuads(spark: SparkSession, quads: DataFrame, dict: Dictionary,
       update: String): UpdatedQuadStore = {
-    val withRe = "(?is)^\\s*WITH\\s+(\\S+)\\s+(.*)$".r
-    val modifyRe =
-      "(?is)^\\s*DELETE\\s*\\{(.*?)\\}\\s*INSERT\\s*\\{(.*?)\\}\\s*WHERE\\s*\\{(.*)\\}\\s*$".r
-    val deleteModifyRe =
-      "(?is)^\\s*DELETE\\s*\\{(.*?)\\}\\s*WHERE\\s*\\{(.*)\\}\\s*$".r
-    val insertWhereRe = "(?is)^\\s*INSERT\\s*\\{(.*?)\\}\\s*WHERE\\s*\\{(.*)\\}\\s*$".r
-    val (gLex, rest) = update match {
-      case withRe(g, r) => (g, r)
-      case other => throw new IllegalArgumentException(
-        s"applyQuads takes a WITH <graph>-scoped modify: $other")
-    }
-    val (dtpl, itpl, body) = rest match {
-      case modifyRe(d, i, b) => (d, i, b)
-      case deleteModifyRe(d, b) => (d, "", b)
-      case insertWhereRe(i, b) => ("", i, b)
-      case other => throw new IllegalArgumentException(
-        s"WITH scopes a modify form (DELETE/INSERT/WHERE): $other")
+    val (gLex, dtpl, itpl, body) = Scan(update) match {
+      case Word("WITH") :: (g: Atom) :: Modify(d, i, w) => (g.text, d, i, w)
+      case Word("WITH") :: _ => throw new IllegalArgumentException(
+        s"WITH scopes a modify form (DELETE/INSERT/WHERE): $update")
+      case _ => throw new IllegalArgumentException(
+        s"applyQuads takes a WITH <graph>-scoped modify: $update")
     }
     // the graph term itself may be new vocabulary
     val gTerm = SparqlParser.toTerm(gLex)
@@ -119,27 +118,13 @@ object SparqlUpdate {
   }
 
   /** Ground triples of a DATA block — every term must be a constant. */
-  private def groundPatterns(body: String): Seq[TriplePattern] = {
-    val pats = splitTriples(body).map(SparqlParser.parsePattern)
+  private def ground(block: List[Item], context: String): Seq[TriplePattern] = {
+    val pats = SparqlParser.triples(block, context)
     pats.foreach { p =>
       require(Seq(p.s, p.p, p.o).forall(_.isInstanceOf[Constant]),
         s"DATA blocks take ground triples only: $p")
     }
     pats
-  }
-
-  /** Split a block body on '.' outside single-quoted lexical forms. */
-  private def splitTriples(body: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    body.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case '.' if !inQuote => out += cur.toString; cur.clear()
-      case c => cur += c
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
   private def lex(t: Term): String = t.asInstanceOf[Constant].lexical
@@ -163,8 +148,7 @@ object SparqlUpdate {
   }
 
   private def insertData(spark: SparkSession, triples: DataFrame,
-      dict: Dictionary, body: String): UpdatedStore = {
-    val pats = groundPatterns(body)
+      dict: Dictionary, pats: Seq[TriplePattern]): UpdatedStore = {
     val (enc, newDict) = encodeMinting(dict,
       pats.flatMap(p => Seq(p.s, p.p, p.o)).map(lex))
     import spark.implicits._
@@ -173,9 +157,8 @@ object SparqlUpdate {
     UpdatedStore(triples.unionAll(rows), newDict)
   }
 
-  private def deleteGround(spark: SparkSession, triples: DataFrame,
-      dict: Dictionary, body: String): UpdatedStore = {
-    val pats = groundPatterns(body)
+  private def deleteGround(triples: DataFrame, dict: Dictionary,
+      pats: Seq[TriplePattern]): UpdatedStore = {
     val enc = dict.encodeTerms(pats.flatMap(p => Seq(p.s, p.p, p.o)).map(lex))
     // a triple with an unknown term cannot exist in the store — no-op
     val conds = pats.flatMap { p =>
@@ -189,8 +172,7 @@ object SparqlUpdate {
   }
 
   private def deleteWhere(triples: DataFrame, dict: Dictionary,
-      body: String): UpdatedStore = {
-    val pats = splitTriples(body).map(SparqlParser.parsePattern)
+      pats: Seq[TriplePattern]): UpdatedStore = {
     require(pats.length == 1,
       "DELETE WHERE subset takes exactly one triple pattern " +
         "(multi-pattern deletion instantiates over join solutions)")
@@ -230,7 +212,7 @@ object SparqlUpdate {
     * driver work.
     */
   private def deleteInsertWhere(spark: SparkSession, triples: DataFrame,
-      dict: Dictionary, dtpl: String, itpl: String, body: String): UpdatedStore = {
+      dict: Dictionary, dtpl: List[Item], itpl: List[Item], body: List[Item]): UpdatedStore = {
     val (dels, ins, newDict) = modifyParts(spark, triples, dict, dtpl, itpl, body)
     val key = Seq(TripleSchema.subject, TripleSchema.predicate, TripleSchema.objekt)
     val kept = dels.map(d => triples.join(d, key, "left_anti")).getOrElse(triples)
@@ -243,10 +225,10 @@ object SparqlUpdate {
     * grammar's `DELETE {tpl} WHERE` / `DELETE {} INSERT {tpl} WHERE`
     * forms) — an empty template contributes no deletions/insertions. */
   private def modifyParts(spark: SparkSession, triples: DataFrame,
-      dict: Dictionary, dtpl: String, itpl: String, body: String)
+      dict: Dictionary, dtpl: List[Item], itpl: List[Item], body: List[Item])
       : (Option[DataFrame], Option[DataFrame], Dictionary) = {
-    val dPats = splitTriples(dtpl).map(SparqlParser.parsePattern)
-    val iPats = splitTriples(itpl).map(SparqlParser.parsePattern)
+    val dPats = SparqlParser.triples(dtpl, "DELETE template")
+    val iPats = SparqlParser.triples(itpl, "INSERT template")
     require(dPats.nonEmpty || iPats.nonEmpty,
       "modify takes at least one non-empty template")
     // mint ids for BOTH templates' constants before planning (a fresh
@@ -256,7 +238,7 @@ object SparqlUpdate {
     val (enc, newDict) = encodeMinting(dict, consts)
     val bindings = new QueryEngine(spark, newDict)
       .registerSplitTables(triples)
-      .sparql(s"SELECT * WHERE { $body }")
+      .sparql(s"SELECT * WHERE { ${render(body)} }")
       .localCheckpoint()
     val vars = (dPats ++ iPats).flatMap(p => Seq(p.s, p.p, p.o))
       .collect { case Variable(v) => v }.distinct
@@ -278,14 +260,14 @@ object SparqlUpdate {
   }
 
   private def insertWhere(spark: SparkSession, triples: DataFrame,
-      dict: Dictionary, tpl: String, body: String): UpdatedStore = {
+      dict: Dictionary, tpl: List[Item], body: List[Item]): UpdatedStore = {
     // template constants may be new vocabulary — mint ids BEFORE planning
-    val tplConsts = splitTriples(tpl).map(SparqlParser.parsePattern)
+    val tplConsts = SparqlParser.triples(tpl, "INSERT template")
       .flatMap(p => Seq(p.s, p.p, p.o)).collect { case Constant(l) => l }
     val (_, newDict) = encodeMinting(dict, tplConsts)
     val constructed = new QueryEngine(spark, newDict)
       .registerSplitTables(triples)
-      .sparql(s"CONSTRUCT { $tpl } WHERE { $body }")
+      .sparql(s"CONSTRUCT { ${render(tpl)} } WHERE { ${render(body)} }")
     UpdatedStore(triples.unionAll(constructed), newDict)
   }
 }

@@ -32,6 +32,15 @@ class PropertySpec extends AnyFunSuite {
   private val term: Gen[String] =
     Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString).suchThat(_.nonEmpty)
 
+  /** Literal lexical forms: everything but a quote, so they hold spaces,
+    * tabs and their runs, brackets, operators and keywords. Inside `'…'`
+    * none of that is syntax. */
+  private val literal: Gen[String] = Gen.nonEmptyListOf(Gen.frequency(
+    4 -> Gen.alphaNumChar.map(_.toString),
+    3 -> Gen.oneOf(" ", "\t", "  ", "{", "}", "(", ")", ".", ",", "|", "&", "!", "=", "<", ">", "?"),
+    1 -> Gen.oneOf("FILTER", "OPTIONAL", "BIND", "GRAPH", "MINUS", "VALUES", "PREFIX", "UNION",
+      "LIMIT"))).map(_.mkString)
+
   test("property: normalizeTerm is idempotent on its own output") {
     forSamples(term, 200) { t =>
       val once = Dictionary.normalizeTerm(t)
@@ -48,7 +57,7 @@ class PropertySpec extends AnyFunSuite {
   test("property: generated BGPs render to SPARQL and parse back") {
     val genTerm: Gen[graft.sparql.Term] = Gen.oneOf(
       Gen.identifier.suchThat(_.nonEmpty).map(v => Variable(v)),
-      term.map(Constant(_)))
+      literal.map(Constant(_)))
     val genPattern = for { s <- genTerm; p <- genTerm; o <- genTerm }
       yield TriplePattern(s, p, o)
     val genBgp = Gen.nonEmptyListOf(genPattern).map(ps => BgpQuery(Nil, ps.take(5)))
@@ -72,7 +81,7 @@ class PropertySpec extends AnyFunSuite {
     // LIMIT-OFFSET / HAVING never corrupt the pattern list they decorate
     val genVar = Gen.identifier.suchThat(_.nonEmpty)
     val genCase = for {
-      v1 <- genVar; v2 <- genVar.suchThat(_ != v1); lit <- term
+      v1 <- genVar; v2 <- genVar.suchThat(_ != v1); lit <- literal
       limit <- Gen.choose(1, 99)
       pick <- Gen.choose(0, 4)
     } yield (v1, v2, lit, limit, pick)
@@ -90,9 +99,9 @@ class PropertySpec extends AnyFunSuite {
       assert(q.patterns == Seq(TriplePattern(Variable(v1), Constant(":p"), Variable(v2))),
         s"patterns corrupted by clause case $pick")
       pick match {
-        case 0 => assert(q.filters.nonEmpty)
+        case 0 => assert(q.filters == Seq(FilterLeaf(FilterCond(v2, FilterEq, Constant(lit)))))
         case 1 => assert(q.binds == Seq((BindTerm(Variable(v2)), s"${v2}_alias")))
-        case 2 => assert(q.inlineValues.nonEmpty)
+        case 2 => assert(q.inlineValues == Seq(v2 -> Seq(Constant(lit))))
         case 3 => assert(q.limit.contains(limit) && q.offset.contains(limit))
         case 4 => assert(q.havings.nonEmpty && q.groupByVars == Seq(v1))
       }

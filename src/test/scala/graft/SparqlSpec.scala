@@ -372,6 +372,18 @@ class SparqlSpec extends SparkTestBase {
     assert(neq == 0)
   }
 
+  test("FILTER != against a term absent from the dictionary drops unbound rows on both layouts") {
+    val (engine, triples) = fixture
+    // 'zzz' is in no triple: ?z != 'zzz' holds for every BOUND ?z, and an
+    // unbound ?z is an expression error, exactly as for a known term
+    val q = "SELECT ?s ?z WHERE { ?s :p2 ?o . OPTIONAL { ?o :p3 ?z } FILTER(?z != 'zzz') }"
+    Seq(engine.registerSingleTable(triples), engine.registerSplitTables(triples)).foreach { reg =>
+      val rows = reg.sparql(q).collect()
+        .map(r => (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getInt(1)))).toSeq
+      assert(rows == Seq((10, Some(20))))
+    }
+  }
+
   test("LIMIT caps the result set size exactly") {
     val (engine, triples) = fixture
     val reg = engine.registerSingleTable(triples)

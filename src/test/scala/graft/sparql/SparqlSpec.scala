@@ -34,6 +34,39 @@ class SparqlSpec extends SparkTestBase {
     assert(q.patterns.head.s == Constant(":node_376609000_1451606409000_-9.15947_38.70289"))
   }
 
+  test("parser: quoted text is opaque — syntax and whitespace inside a literal stay literal") {
+    def only(lit: String) = {
+      val q = SparqlParser.parse(s"SELECT * WHERE { ?s :p '$lit' }")
+      assert(q == BgpQuery(Nil, Seq(TriplePattern(Variable("s"), Constant(":p"), Constant(lit)))))
+    }
+    Seq("FILTER(?s = 1)", "OPTIONAL { ?s :q ?o }", "BIND(?s AS ?t)", "GRAPH g { ?s :q ?o }",
+      "PREFIX ex: <http://ex.org/>", "a  b", "a\tb", "x}y", "a . b", "VALUES ?s { 1 }")
+      .foreach(only)
+    val opt = SparqlParser.parse("SELECT * WHERE { ?s :p ?o OPTIONAL { ?o :q 'x}y' } }")
+    assert(opt.optionals == Seq(Seq(TriplePattern(Variable("o"), Constant(":q"), Constant("x}y")))))
+    val values = SparqlParser.parse("SELECT * WHERE { ?s :p ?o VALUES ?o { 'a}' 'b  c' } }")
+    assert(values.inlineValues == Seq("o" -> Seq(Constant("a}"), Constant("b  c"))))
+    val filter = SparqlParser.parse("SELECT * WHERE { ?s :p ?o FILTER(?o = ')(') }")
+    assert(filter.filters == Seq(FilterLeaf(FilterCond("o", FilterEq, Constant(")(")))))
+  }
+
+  test("parser: constructs in source order, nesting outside the subset names the construct") {
+    val q = SparqlParser.parse("SELECT * WHERE { BIND(1 AS ?a) ?s :p ?o . " +
+      "BIND(COALESCE(?o, 2) AS ?b) BIND(IF(?a = 1, 3, 4) AS ?c) BIND(?a + 1 AS ?d) }")
+    assert(q.binds.map(_._2) == Seq("a", "b", "c", "d"))
+    def rejected(query: String, message: String) = {
+      val e = intercept[IllegalArgumentException](SparqlParser.parse(query))
+      assert(e.getMessage.contains(message), e.getMessage)
+    }
+    rejected("SELECT * WHERE { ?s :p ?o OPTIONAL { ?o :q ?z OPTIONAL { ?z :r ?w } } }",
+      "OPTIONAL inside OPTIONAL")
+    rejected("SELECT * WHERE { ?s :p ?o . { ?s :q ?z } UNION { ?s :r ?z } }",
+      "UNION next to other patterns")
+    rejected("SELECT * WHERE { ?s :p ?o MINUS { ?s :q ?z FILTER(?z = 1) } }",
+      "FILTER inside MINUS")
+    rejected("SELECT * WHERE { ?s :p 'open }", "unterminated '")
+  }
+
   // tiny in-memory triple store: (1,10,2) (2,11,3) (-5,10,1) (1,12,1) dup row
   private def fixture = {
     import spark.implicits._
@@ -97,5 +130,36 @@ class SparqlSpec extends SparkTestBase {
     val a = mkEngine(split = false).sparql(q).collect().map(r => (r.getInt(0), r.getInt(1))).sorted
     val b = mkEngine(split = true).sparql(q).collect().map(r => (r.getInt(0), r.getInt(1))).sorted
     assert(a.sameElements(b))
+  }
+
+  /** Every line of the Scala sources under `src/main/scala/graft/sparql`
+    * as (file, line number, code), comment lines dropped. */
+  private def sparqlSources: Seq[(String, Int, String)] = {
+    val files = Option(new java.io.File("src/main/scala/graft/sparql").listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".scala")).toSeq
+    assert(files.length >= 3, "source guard found no sources under src/main/scala/graft/sparql")
+    files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).zipWithIndex.collect {
+        case (l, i) if !Seq("*", "/*", "//").exists(l.trim.startsWith) => (f.getName, i + 1, l)
+      }.toSeq
+    }
+  }
+
+  test("no brace regex or quote-tracking loop outside the scanner") {
+    val code = sparqlSources
+    // the scanner: `object Scan` up to the closing brace at column 0
+    val scan = code.filter(_._1 == "Sparql.scala").map(c => (c._2, c._3))
+    val start = scan.find(_._2.contains("object Scan")).map(_._1)
+    assert(start.isDefined, "the scanner is missing")
+    val end = scan.find(c => c._1 > start.get && c._2 == "}").map(_._1).get
+    def inScan(file: String, line: Int) = file == "Sparql.scala" && line >= start.get && line <= end
+    val offenders = code.collect {
+      case (f, i, l) if {
+        val bare = l.replace("\\", "")
+        bare.contains("[^{}]") || bare.contains("{(.*)}") || bare.contains("{(.*?)}") ||
+          !inScan(f, i) && (l.contains("'\\''") || l.contains("inQuote"))
+      } => s"$f:$i"
+    }
+    assert(offenders.isEmpty, s"scan through Scan instead: ${offenders.mkString(", ")}")
   }
 }

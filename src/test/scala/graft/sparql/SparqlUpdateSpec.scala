@@ -5,7 +5,8 @@ import graft.core.{Dictionary, TripleSchema}
 import graft.sources.RdfBridge
 
 /** Fresh ids minted by INSERT DATA: from max(max id, 0) + 1, never the
-  * variable sentinel, never wrapped. */
+  * variable sentinel, never wrapped; and update texts read through the
+  * query parser's scanner, so IRIs and literals stay whole. */
 class SparqlUpdateSpec extends SparkTestBase {
 
   private def empty = {
@@ -52,5 +53,23 @@ class SparqlUpdateSpec extends SparkTestBase {
       Map(":minted" -> (max + 1), "fresh_node" -> (max + 2)) ++ dict.encodeTerms(Seq("cust_3")))) == 0)
     assert(u.dict.maxId.contains(max + 2))
     assert(u.dict.entries.count() == dict.entries.count() + 2)
+  }
+
+  test("INSERT DATA takes dotted IRIs whole") {
+    val u = SparqlUpdate(spark, empty, Dictionary.fromPairs(spark, Nil),
+      "INSERT DATA { <http://ex.org/s> <p> 'o' . 'a' ':p' 'b' }")
+    assert(u.dict.encodeTerms(Seq("s", "p", "o", "a", ":p", "b")) ==
+      Map("s" -> 1, "p" -> 2, "o" -> 3, "a" -> 4, ":p" -> 5, "b" -> 6))
+    assert(rows(u.triples) == Seq((1, 2, 3), (4, 5, 6)))
+  }
+
+  test("a DELETE/INSERT template literal may hold a closing brace and a keyword") {
+    import spark.implicits._
+    val store = Seq((1, 2, 3)).toDF(TripleSchema.subject, TripleSchema.predicate, TripleSchema.objekt)
+    val dict = Dictionary.fromPairs(spark, Seq(1 -> "a", 2 -> ":p", 3 -> "b"))
+    val u = SparqlUpdate(spark, store, dict,
+      "DELETE { ?x ':p' ?y } INSERT { ?x ':note' 'a} WHERE {b' } WHERE { ?x :p ?y }")
+    assert(u.dict.encodeTerms(Seq(":note", "a} WHERE {b")) == Map(":note" -> 4, "a} WHERE {b" -> 5))
+    assert(rows(u.triples) == Seq((1, 4, 5)))
   }
 }
